@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from ..registry import query
 from ..tables import table
@@ -541,6 +541,36 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Arrow-batched 5-gram stats (guide §4.2): transform/array_distinct over
+# arrays are CodegenFallback (interpreted, one expression-tree walk per
+# element); the A/B at sf0.1 measured this batch-Python set-build at
+# 0.26 s vs 0.39 s for the JVM HOF on identical outputs. Tokenization
+# matches F.split(text, ' ') exactly: str.split(' ') keeps empty tokens
+# from doubled/leading/trailing spaces just like Spark's regex split with
+# limit -1. A NULL text (None, or NaN once pandas has seen a missing
+# value) counts as the empty string — NaN is truthy, so `t or ""` would
+# call .split on a float. Only the text column crosses the boundary;
+# ratio and verdict stay JVM-side.
+# (a DataType, not a DDL string: parsing DDL needs a live SparkContext,
+# and this decorator runs at import)
+@F.pandas_udf(
+    T.StructType(
+        [
+            T.StructField("n_ngrams", T.LongType()),
+            T.StructField("n_distinct_ngrams", T.LongType()),
+        ]
+    )
+)
+def _gram5_stats(texts: pd.Series) -> pd.DataFrame:
+    ns, ds = [], []
+    for t in texts:
+        w = t.split(" ") if isinstance(t, str) else [""]
+        n = len(w) - 4
+        ns.append(n)
+        ds.append(len({tuple(w[i : i + 5]) for i in range(n)}))
+    return pd.DataFrame({"n_ngrams": ns, "n_distinct_ngrams": ds})
+
+
 @query(
     "ngram_repetition_quality",
     """
@@ -577,28 +607,10 @@ def ngram_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer/double expressions on the returned counts. Contrast
     cross-document dedup (`dedup_minhash_lsh`), which is where the
     shuffles rightly live."""
-    # Arrow-batched 5-gram stats (guide §4.2): transform/array_distinct
-    # over arrays are CodegenFallback (interpreted, one expression-tree
-    # walk per element); the A/B at sf0.1 measured this batch-Python
-    # set-build at 0.26 s vs 0.39 s for the JVM HOF on identical
-    # outputs. Tokenization matches F.split(text, ' ') exactly:
-    # str.split(' ') keeps empty tokens from doubled/leading/trailing
-    # spaces just like Spark's regex split with limit -1. Only the text
-    # column crosses the boundary; ratio and verdict stay JVM-side.
-    @F.pandas_udf("struct<n_ngrams:bigint,n_distinct_ngrams:bigint>")
-    def gram5_stats(texts: pd.Series) -> pd.DataFrame:
-        ns, ds = [], []
-        for t in texts:
-            w = (t or "").split(" ")
-            n = len(w) - 4
-            ns.append(n)
-            ds.append(len({tuple(w[i : i + 5]) for i in range(n)}))
-        return pd.DataFrame({"n_ngrams": ns, "n_distinct_ngrams": ds})
-
     d = table(spark, sf_dir, "documents")
     words = F.split("text", " ")
     d = d.select("doc_id", "text").filter(F.size(words) >= 5)
-    g2 = d.select("doc_id", gram5_stats("text").alias("s")).select(
+    g2 = d.select("doc_id", _gram5_stats("text").alias("s")).select(
         "doc_id", "s.n_ngrams", "s.n_distinct_ngrams"
     )
     dup = 1.0 - F.col("n_distinct_ngrams").cast("double") / F.col("n_ngrams").cast(

@@ -5139,9 +5139,15 @@ def translate(ch_sql: str) -> str:
 # FROM..TO spine — degenerate presentation case, documented deviation).
 #
 # Scale: ClickHouse runs this as a single-threaded transform over the
-# initiator's merged sorted stream; the unpartitioned lead() window
-# here is the same single-stream shape but carries ONLY the sort key
-# (one narrow column), and the final order is a range-partitioned sort.
+# initiator's merged sorted stream. The lowering is one pass over the
+# query under the fill: one window (per group when grouped) yields each
+# row's neighbouring keys, and one explode per row emits the row and the
+# fills that follow it (plus the head fill on the first row). The
+# ungrouped window is the same single-stream shape and carries the whole
+# output row, not just the key; in return the query under the fill runs
+# once (it used to run up to four times: the union branch, the key
+# window and a min/max bounds aggregate each for FROM and TO), and the
+# final ORDER BY rides the window's single partition.
 # ORDER BY [g1, g2, ...,] k [ASC|DESC] WITH FILL ... — group(1) is the
 # OPTIONAL list of leading bare sort keys (no fill of their own, no
 # modifiers): ClickHouse's FillingTransform restarts whenever a
@@ -5160,7 +5166,7 @@ _WITH_FILL_TAIL = re.compile(
 
 # working-column names the fill machinery introduces; user columns with
 # these names would make the internal selects ambiguous
-_FILL_RESERVED = {"_v", "_nxt", "_filled"}
+_FILL_RESERVED = {"_v", "_nxt", "_prv"}
 
 _FILL_DEFAULTABLE = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -5274,8 +5280,7 @@ def _apply_with_fill(spark: SparkSession, sql: str) -> DataFrame:
                 "ascending WITH FILL FROM cannot be greater than TO"
             )
 
-    order_cols = ", ".join(groups + [col])
-    d = spark.sql(translate(sql[: m.start()] + f" ORDER BY {order_cols}"))
+    d = spark.sql(translate(sql[: m.start()]))
     if col not in d.columns:
         raise UnsupportedClickHouseSQL(
             "WITH FILL key must be a select-list column"
@@ -5316,11 +5321,25 @@ def _apply_with_fill(spark: SparkSession, sql: str) -> DataFrame:
         # negate in BIGINT working space: unary minus keeps the input
         # type, so a narrow key at its type minimum (byte -128, ...)
         # would ARITHMETIC_OVERFLOW under Spark 4's default ANSI mode;
-        # _finish casts back to the declared type after re-negation
+        # the key is cast back to the declared type after re-negation
         d = d.withColumn(col, -(F.col(col).cast("bigint")))
         lo = -lo if lo is not None else None
         hi = -hi if hi is not None else None
         step = -step
+
+    if clash := [n for n in d.columns if n.lower() in _FILL_RESERVED]:
+        raise UnsupportedClickHouseSQL(
+            f"WITH FILL select-list columns collide with the rewrite's "
+            f"working columns {sorted(_FILL_RESERVED)}: {clash} — alias them"
+        )
+    gset = {g.lower() for g in groups}
+    bad = [
+        c for c in interp if c not in d.columns or c == col or c.lower() in gset
+    ]
+    if bad:
+        raise UnsupportedClickHouseSQL(
+            f"INTERPOLATE columns must be non-sort select-list columns: {bad}"
+        )
 
     c, v = F.col(col), F.col("_v")
     if is_int:
@@ -5330,119 +5349,56 @@ def _apply_with_fill(spark: SparkSession, sql: str) -> DataFrame:
         fwd = lambda e, k: F.date_add(e, k)  # noqa: E731
         seq_step = F.expr(f"INTERVAL {step} DAY")
 
-    # per-gap sequences restarting at each existing value; with leading
-    # group keys the lead() window partitions per group (ClickHouse's
-    # FillingTransform restarts whenever a non-fill sort column changes)
-    gsel = [F.col(g) for g in groups]
-    lead_w = (
-        Window.partitionBy(*groups).orderBy("_v") if groups else Window.orderBy("_v")
+    # ONE pass over d: a window per group (ClickHouse's FillingTransform
+    # restarts whenever a non-fill sort column changes) materializes the
+    # neighbouring keys — Spark rejects window expressions inside a
+    # generator — and each row then explodes into itself, the head fill
+    # FROM .. k-1 (on the group's first non-NULL key: NULLs sort first,
+    # so that is the row whose lag is NULL) and the gap-or-tail fill
+    # k+step .. coalesce(next, TO)-1. Fill keys never equal the row's
+    # key (head ones are below it, gap ones above), so comparing the
+    # exploded key with it tells the three kinds of rows apart. The
+    # `when` guards keep illegal sequence boundaries from evaluating.
+    # In DESC mode the working key is BIGINT (negated space).
+    fields, arr_t = d.schema.fields, T.ArrayType(T.LongType() if desc else dt)
+    w = Window.partitionBy(*groups).orderBy(col) if groups else Window.orderBy(col)
+    d = d.withColumn("_nxt", F.lead(c).over(w)).withColumn("_prv", F.lag(c).over(w))
+    parts = [F.array(c)]
+    if lo is not None:
+        head = F.col("_prv").isNull() & (c > lo)  # NULL when c is NULL
+        parts.append(F.when(head, F.sequence(F.lit(lo), fwd(c, -1), seq_step)))
+    end = F.col("_nxt") if hi is None else F.coalesce("_nxt", F.lit(hi))
+    parts.append(
+        F.when(end > fwd(c, step), F.sequence(fwd(c, step), fwd(end, -1), seq_step))
     )
-    keys = d.select(*gsel, c.alias("_v")).withColumn(
-        "_nxt", F.lead("_v").over(lead_w)
-    )
-    fill_keys = keys.where(F.col("_nxt") > fwd(v, step)).select(
-        *gsel,
+    d = d.select(
+        "*",
         F.explode(
-            F.sequence(fwd(v, step), fwd(F.col("_nxt"), -1), seq_step)
+            F.concat(*[F.coalesce(p.cast(arr_t), F.array().cast(arr_t)) for p in parts])
         ).alias("_v"),
     )
-    if lo is not None or hi is not None:
-        bounds = d.agg(F.min(c).alias("_mn"), F.max(c).alias("_mx"))
-        if lo is not None:  # head: lo, lo+step, ... while < min
-            fill_keys = fill_keys.unionByName(
-                bounds.where(F.col("_mn") > lo).select(
-                    F.explode(
-                        F.sequence(F.lit(lo), F.col("_mn") - 1, seq_step)
-                    ).alias("_v")
-                )
-            )
-        if hi is not None:  # tail: max+step, ... while < hi (TO excl.)
-            fill_keys = fill_keys.unionByName(
-                bounds.where(F.col("_mx") + step < hi).select(
-                    F.explode(
-                        F.sequence(
-                            F.col("_mx") + step, F.lit(hi - 1), seq_step
-                        )
-                    ).alias("_v")
-                )
-            )
-    # in DESC mode the working key column is BIGINT (negated space) —
-    # fills must union against that type; _finish restores dt. Group
-    # columns carry THEIR group's value into the filled rows; every
-    # other non-sort column takes the CH type default.
-    work_dt = T.LongType() if desc else dt
-    gset = {g.lower() for g in groups}
-    fills = fill_keys.select(
-        *[
-            v.cast(work_dt).alias(f.name)
-            if f.name == col
-            else (
-                F.col(f.name)
-                if f.name.lower() in gset
-                else _ch_default_lit(f.dataType).alias(f.name)
-            )
-            for f in d.schema.fields
-        ]
-    )
-
-    def _finish(frame: DataFrame) -> DataFrame:
-        # NULLS LAST on the group keys: ClickHouse ORDER BY puts
-        # NULL/NaN last, Spark's default asc puts NULLs first — a
-        # nullable group column (left-join output) must not silently
-        # flip the presentation order
-        lead_order = [F.col(g).asc_nulls_last() for g in groups]
-        if desc:  # leave negated key space, present descending
-            return frame.withColumn(col, (-F.col(col)).cast(dt)).orderBy(
-                *lead_order, F.desc(col)
-            )
-        return frame.orderBy(*lead_order, col)
-
-    if not interp:
-        return _finish(d.unionByName(fills))
-
-    # INTERPOLATE (c1, c2, ...): filled rows carry the previous ORIGINAL
-    # row's value forward (CH's documented no-expression default);
-    # leading fills with no predecessor keep the type default. WITHIN a
-    # carry partition, fill keys never collide with original keys, so
-    # ORDER BY the sort key is a total order between originals and
-    # fills there (across groups keys CAN repeat — which is why the
-    # carry window partitions by the leading keys).
-    bad = [
-        c for c in interp if c not in d.columns or c == col or c.lower() in gset
-    ]
-    if bad:
-        raise UnsupportedClickHouseSQL(
-            f"INTERPOLATE columns must be non-sort select-list columns: {bad}"
-        )
-    if any(c.lower() == "_filled" for c in d.columns):
-        raise UnsupportedClickHouseSQL(
-            "INTERPOLATE beside a select-list column named _filled (the "
-            "rewrite's originals marker) — alias it"
-        )
-    u = d.withColumn("_filled", F.lit(False)).unionByName(
-        fills.withColumn("_filled", F.lit(True))
-    )
-    carry_w = (
-        Window.partitionBy(*groups).orderBy(col) if groups else Window.orderBy(col)
-    )
-    w = carry_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # group columns carry the row's value; INTERPOLATE columns carry it
+    # into the gap/tail fills (the previous original row in output order)
+    # and take the type default on head fills (no predecessor); every
+    # other column takes the CH type default on any fill. DESC leaves
+    # negated key space here.
+    is_orig, is_head = v.eqNullSafe(c), v < c
     out_cols = []
-    for f in d.schema.fields:
-        if f.name in interp:
-            carried = F.last(
-                F.when(~F.col("_filled"), F.col(f.name)), ignorenulls=True
-            ).over(w)
-            out_cols.append(
-                F.when(
-                    F.col("_filled"),
-                    F.coalesce(carried, _ch_default_lit(f.dataType)),
-                )
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-            )
-        else:
-            out_cols.append(F.col(f.name))
-    return _finish(u.select(*out_cols))
+    for f in fields:
+        x = F.col(f.name)
+        if f.name == col:
+            x = (-v).cast(dt) if desc else v
+        elif f.name in interp:
+            x = F.when(is_head, _ch_default_lit(f.dataType)).otherwise(x)
+        elif f.name.lower() not in gset:
+            x = F.when(is_orig, x).otherwise(_ch_default_lit(f.dataType))
+        out_cols.append(x.alias(f.name))
+    # NULLS LAST on the group keys: ClickHouse ORDER BY puts NULL/NaN
+    # last, Spark's default asc puts NULLs first — a nullable group
+    # column (left-join output) must not silently flip the presentation
+    # order
+    lead_order = [F.col(g).asc_nulls_last() for g in groups]
+    return d.select(*out_cols).orderBy(*lead_order, F.desc(col) if desc else col)
 
 
 # ---- FROM <table> FINAL (DDL-aware, ch_sql only) ----
@@ -7427,9 +7383,12 @@ def ch_dialect_with_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     min..max spine diverges from CH). Oracled against DuckDB's
     independent generate_series spine FULL OUTER join.
 
-    Scale: the fill window carries only the sort key; ClickHouse itself
-    runs WITH FILL as a single-threaded transform over the initiator's
-    merged sorted stream — single-stream parity, not a repo shuffle."""
+    Scale: one pass over the aggregate — one unpartitioned window hands
+    each bucket its neighbours and one explode emits the bucket plus the
+    fills after it, so the query under the fill runs once. The window
+    carries the whole (narrow) output row into one partition: the same
+    single-stream shape as ClickHouse's own FillingTransform over the
+    initiator's merged sorted stream."""
     return ch_sql(spark, sf_dir, _CH_WITH_FILL_QUERY)
 
 
@@ -7533,8 +7492,9 @@ def ch_dialect_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracled against DuckDB's independent spine-join +
     last_value IGNORE NULLS spelling.
 
-    Scale: same single-stream parity as the fill itself; the carry
-    window adds the listed columns to the one-column key stream."""
+    Scale: same single pass as the plain fill — the carry needs no
+    window of its own, because each gap fill is exploded from the
+    original row it follows and takes that row's value."""
     return ch_sql(spark, sf_dir, _CH_FILL_INTERP_QUERY)
 
 
@@ -7853,9 +7813,10 @@ def ch_dialect_with_fill_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket), which is what makes this oracle direction-sensitive rather
     than a re-sorted copy of the ascending one.
 
-    Scale: identical to the ascending fill — the gap window carries
-    only the (negated) sort key; single-stream parity with ClickHouse's
-    own FillingTransform."""
+    Scale: identical to the ascending fill in negated key space — one
+    window over the whole output row, one explode, the query under the
+    fill run once; single-stream parity with ClickHouse's own
+    FillingTransform."""
     return ch_sql(spark, sf_dir, _CH_WF_DESC_QUERY)
 
 

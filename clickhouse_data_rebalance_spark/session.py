@@ -11,9 +11,11 @@ fixtures and the DuckDB oracle, Arrow enabled for the Pandas-UDF paths.
 from __future__ import annotations
 
 import atexit
+import logging
 import os
 import shutil
 import tempfile
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -21,6 +23,10 @@ from pyspark.sql import SparkSession
 # module-level so repeated tune_session calls stay one-zip-per-context.
 # (sc.environment is meant for executor env vars — don't repurpose it.)
 _shipped_app_ids: set[str] = set()
+# sessions whose tune_session outcome has been logged (one line each)
+_tuned_sessions: weakref.WeakSet = weakref.WeakSet()
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "clickhouse_data_rebalance_spark") -> SparkSession:
@@ -37,6 +43,7 @@ def get_spark(app_name: str = "clickhouse_data_rebalance_spark") -> SparkSession
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
     spark = builder.getOrCreate()
@@ -81,7 +88,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The driver hands us a session we didn't build; pin the confs that
     affect result correctness (timezone) and plan quality (AQE) that are
     runtime-mutable. Static confs (driver memory, master) are left alone.
+    Every step is best effort; the first call on a session logs one line
+    naming what was applied and what was skipped, and why.
     """
+    applied, skipped, failed = [], [], []
     try:
         # r16: an externally-built session usually arrives with the 200
         # default — on the driver's small local[N] that is 200 near-empty
@@ -100,15 +110,18 @@ def tune_session(spark: SparkSession) -> SparkSession:
         # to ~2 for its lifetime is far worse than leaving the stock
         # default; local mode is the only place defaultParallelism is a
         # trustworthy proxy for the session's true width at tune time.
-        cores = max(spark.sparkContext.defaultParallelism, 1)
-        if (
-            spark.sparkContext.master.startswith("local")
-            and spark.conf.get("spark.sql.shuffle.partitions") == "200"
-            and cores < 200
-        ):
+        sc = spark.sparkContext
+        cores = max(sc.defaultParallelism, 1)
+        width = spark.conf.get("spark.sql.shuffle.partitions")
+        if not sc.master.startswith("local"):
+            skipped.append(f"shuffle width ({sc.master} is not a local master)")
+        elif width != "200" or cores >= 200:
+            skipped.append(f"shuffle width (kept {width}, not the stock default)")
+        else:
             spark.conf.set("spark.sql.shuffle.partitions", str(cores))
-    except Exception:
-        pass  # Connect session without sparkContext, or non-mutable conf
+            applied.append(f"spark.sql.shuffle.partitions={cores}")
+    except Exception as e:  # Connect session without sparkContext
+        failed.append(f"shuffle width ({type(e).__name__}: {e})")
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),
@@ -122,12 +135,22 @@ def tune_session(spark: SparkSession) -> SparkSession:
     ]:
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-mutable in this session build; best effort
+            applied.append(f"{k}={v}")
+        except Exception as e:  # non-mutable in this session build
+            failed.append(f"{k} ({type(e).__name__}: {e})")
     try:
         ship_package(spark)
-    except Exception:
-        pass  # e.g. Connect sessions without a SparkContext; best effort
+        applied.append("package zip shipped")
+    except Exception as e:  # e.g. Connect sessions without a SparkContext
+        failed.append(f"package zip ({type(e).__name__}: {e})")
+    if spark not in _tuned_sessions:
+        _tuned_sessions.add(spark)
+        # a swallowed exception is worth a WARNING; a skip by rule is not
+        (log.warning if failed else log.info)(
+            "tune_session applied: %s; skipped: %s",
+            ", ".join(applied) or "nothing",
+            "; ".join(skipped + failed) or "nothing",
+        )
     return spark
 
 

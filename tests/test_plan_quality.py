@@ -1245,6 +1245,24 @@ def test_with_fill_grouped_plan_partitions_by_group(spark):
     assert "hashpartitioning(g" in p, p
 
 
+def test_with_fill_runs_the_query_under_the_fill_once(spark):
+    """WITH FILL lowers to ONE pass over the query under the fill: one
+    scan of orders, no Union of fill branches, no min/max bounds
+    re-derivation, and no range-partition sampling — the ungrouped
+    window's single partition already satisfies the final ORDER BY.
+    INTERPOLATE rides the same window (no second carry window)."""
+
+    def executed(name):
+        df = registry.QUERIES[name](spark, SF_SMALL)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    p = executed("ch_dialect_with_fill")
+    assert p.count("FileScan parquet") == 1 and "orders.parquet" in p, p
+    assert "Union" not in p, p
+    assert "rangepartitioning" not in p, p
+    assert executed("ch_dialect_fill_interpolate").count("Window [") == 1
+
+
 def test_curate_flagship_reuses_dedup_exchange(spark):
     """corpus_curate_e2e's mixture-plan side and rank side both hang off
     the curated (gate+dedup+verdict) subtree — Spark's ReuseExchange

@@ -4771,6 +4771,103 @@ def test_with_fill_grouped_edge_regressions(spark):
         _apply_with_fill(spark, "SELECT _v, k FROM gfres_t ORDER BY _v, k WITH FILL")
 
 
+def _py_filling_transform(rows, lo, hi, step, desc, interp, grouped):
+    """Pure-Python model of the WITH FILL semantics the lowering claims
+    (ClickHouse's FillingTransform, per leading-key group): originals
+    pass through; the fill restarts at each existing non-NULL key
+    (k+step, ... while < next key); FROM (inclusive) fills up to the
+    group's first key, TO (exclusive) from its last; NULL keys take no
+    part in the walk. DESC is the same walk in negated key space. Fills
+    carry the group key, the type default (0 / '') in every other column,
+    and under INTERPOLATE (x) the x of the original row they follow —
+    head fills have none and take the default. Ungrouped, g is an
+    ordinary column and fills take its default ''."""
+    sgn = -1 if desc else 1
+    lo_w = None if lo is None else sgn * lo
+    hi_w = None if hi is None else sgn * hi
+    out = list(rows)
+    for g in {r[0] for r in rows}:
+        fg = g if grouped else ""
+        ks = sorted((sgn * k, x) for gg, k, x, _ in rows if gg == g and k is not None)
+        if not ks:
+            continue
+        if lo_w is not None:
+            out += [(fg, sgn * f, 0, "") for f in range(lo_w, ks[0][0], step)]
+        ends = [b for b, _ in ks[1:]] + [ks[-1][0] if hi_w is None else hi_w]
+        for (a, x), b in zip(ks, ends):
+            fills = range(a + step, b, step)
+            out += [(fg, sgn * f, x if interp else 0, "") for f in fills]
+    return out
+
+
+@st.composite
+def _fill_cases(draw):
+    desc, interp, grouped = draw(st.booleans()), draw(st.booleans()), draw(st.booleans())
+    key = st.one_of(st.none(), st.integers(-12, 12))
+    pairs = draw(
+        st.lists(
+            st.tuples(st.sampled_from("ab" if grouped else "a"), key),
+            max_size=8,
+            # under INTERPOLATE, which of two tied rows carries its value
+            # is arrival order — keep the non-NULL keys distinct there
+            unique_by=(lambda p: p if p[1] is not None else object())
+            if interp
+            else None,
+        )
+    )
+    rows = [(g, k, i + 1, f"r{i}") for i, (g, k) in enumerate(pairs)]
+    lo = hi = None
+    if not grouped:  # grouped FROM/TO refuses
+        lo, hi = draw(st.none() | st.integers(-16, 16)), draw(
+            st.none() | st.integers(-16, 16)
+        )
+        if lo is not None and hi is not None and (lo > hi) != desc:
+            lo, hi = hi, lo
+    return rows, lo, hi, draw(st.integers(1, 3)), desc, interp, grouped
+
+
+@settings(max_examples=30, deadline=None)
+@given(_fill_cases())
+def test_with_fill_matches_filling_transform_model(spark, case):
+    """The one-pass lowering (lead/lag first/last markers on one window)
+    against the pure-Python FillingTransform model on sparse keys with
+    NULLs, ties, FROM below/above the minimum, TO inside/beyond the
+    maximum, STEP > 1, DESC, INTERPOLATE and leading group keys: same
+    multiset of rows, presented in fill-key order within each group."""
+    from clickhouse_data_rebalance_spark.plans.ch_dialect import _apply_with_fill
+
+    rows, lo, hi, step, desc, interp, grouped = case
+    spark.createDataFrame(rows, "g string, k int, x int, y string").createOrReplaceTempView(
+        "fill_prop"
+    )
+    tail = (
+        ("DESC " if desc else "")
+        + "WITH FILL"
+        + (f" FROM {lo}" if lo is not None else "")
+        + (f" TO {hi}" if hi is not None else "")
+        + f" STEP {-step if desc else step}"
+        + (" INTERPOLATE (x)" if interp else "")
+    )
+    by = "g, k" if grouped else "k"
+    got = [
+        tuple(r)
+        for r in _apply_with_fill(
+            spark, f"SELECT g, k, x, y FROM fill_prop ORDER BY {by} {tail}"
+        ).collect()
+    ]
+    want = _py_filling_transform(rows, lo, hi, step, desc, interp, grouped)
+    key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731
+    assert sorted(got, key=key) == sorted(want, key=key), (rows, tail)
+
+    def pos(r):
+        # presentation: groups ascending, then the fill key in the walk's
+        # direction (Spark's NULL placement: first ascending, last DESC)
+        g, k = r[0] if grouped else "", r[1]
+        return (g, k is None, -(k or 0)) if desc else (g, k is not None, k or 0)
+
+    assert [pos(r) for r in got] == sorted(map(pos, want))
+
+
 def test_escape_whitelist_and_wave2_guards(spark):
     """ADVICE r14 quartet. (1) The divergent-escape guard is a
     WHITELIST: only escapes both literal parsers decode identically

@@ -156,3 +156,47 @@ def test_lsh_bucket_cap_bounds_degenerate_corpus(spark):
     assert (1000, 1001) in pairs  # genuine near-dup still found
     assert not any(a < 200 and b < 200 for a, b in pairs)  # degenerate block dropped
     assert 200 > MAX_LSH_BUCKET  # the fixture actually exercises the cap
+
+
+def test_gram5_stats_matches_jvm_form_on_edge_texts(spark):
+    """ngram_repetition_quality's Arrow 5-gram counter must agree with
+    the JVM form it replaced — size(split(text, ' ')) - 4 and the
+    distinct count of the 5-token slices — on the texts where the two
+    tokenizers could part ways: doubled, leading and trailing spaces
+    (empty tokens). A missing text reaches the UDF as None or, once
+    pandas has seen one, as NaN; both count as the empty string instead
+    of crashing on NaN.split."""
+    import pandas as pd
+
+    from clickhouse_data_rebalance_spark.operators.llm_text import _gram5_stats
+
+    texts = [
+        "a b c d e",
+        "a  b c d e f",
+        " a b c d e",
+        "a b c d e ",
+        "  a b  c d e  ",
+        "a b c d e a b c d e a",
+        "x x x x x x x x",
+        "",
+        "one",
+    ]
+    jvm = (
+        spark.createDataFrame([(t,) for t in texts], "text STRING")
+        .select(
+            (F.size(F.split("text", " ")) - 4).alias("n"),
+            F.expr(
+                "size(array_distinct(transform("
+                "sequence(0, greatest(size(split(text, ' ')) - 5, 0)), "
+                "i -> slice(split(text, ' '), i + 1, 5))))"
+            ).alias("d"),
+        )
+        .collect()
+    )
+    got = _gram5_stats.func(pd.Series(texts + [None, float("nan")]))
+    pairs = list(zip(got["n_ngrams"], got["n_distinct_ngrams"]))
+    # below five tokens there is no 5-gram: the count goes non-positive
+    # and the distinct count is zero (the query filters these rows out)
+    want = [(r["n"], r["d"] if r["n"] > 0 else 0) for r in jvm]
+    assert pairs[: len(texts)] == want
+    assert pairs[len(texts) :] == [want[texts.index("")]] * 2
