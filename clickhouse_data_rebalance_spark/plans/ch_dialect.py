@@ -1039,44 +1039,28 @@ def _check_split_sep_literal(sep: str, *, by_string: bool, name: str) -> None:
         )
 
 
-_TRANSLATE_HEAD = re.compile(r"\btranslate(UTF8)?\s*\(", re.I)
+_TRANSLATE_HEAD = re.compile(r"\b(translate(?:UTF8)?)\s*\(", re.I)
 
 
 def _rewrite_translate_family(sql: str) -> str:
-    """translate/translateUTF8 guard (r14 wave 2 — a silent same-name
-    collision): ClickHouse's translate requires CONSTANT same-length
-    ASCII from/to strings (one-to-one mapping; anything else is a CH
-    ERROR), and translateUTF8 requires constant same-code-point-length
-    strings. Spark's translate is code-point based AND deletes
-    characters when `to` is shorter — so an unvalidated pass-through
-    would silently run delete semantics CH rejects, and a multi-byte
-    `from` in bare translate would silently do what only translateUTF8
-    does in CH. Validated calls pass through (bare) or rename
-    (translateUTF8 -> translate): for equal-length literals the two
-    engines' mappings coincide exactly. Runs BEFORE every other rewrite
-    stage, so the case-fold lowerings' own emitted translate(...) text
-    (always equal-length ASCII literals) is never re-scanned."""
-    masked = _mask_literals(sql)
-    out: list[str] = []
-    pos = 0
-    m = _TRANSLATE_HEAD.search(masked)
-    while m:
-        name = "translateUTF8" if m.group(1) else "translate"
-        try:
-            i = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
+    """translate/translateUTF8 guard (a silent same-name collision):
+    ClickHouse's translate requires CONSTANT same-length ASCII from/to
+    strings (one-to-one mapping; anything else is a CH ERROR), and
+    translateUTF8 requires constant same-code-point-length strings.
+    Spark's translate is code-point based AND deletes characters when
+    `to` is shorter — so an unvalidated pass-through would silently run
+    delete semantics CH rejects, and a multi-byte `from` in bare
+    translate would silently do what only translateUTF8 does in CH.
+    Validated calls pass through (bare) or rename (translateUTF8 ->
+    translate): for equal-length literals the two engines' mappings
+    coincide exactly. Refuses past 32 nested levels."""
+
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) != 3:
             raise UnsupportedClickHouseSQL(
-                f"unbalanced parentheses in {name}()"
-            ) from None
-        raw_args = [
-            a.strip() for a in _split_top_level_args(sql[m.end() : i - 1])
-        ]
-        if len(raw_args) != 3:
-            raise UnsupportedClickHouseSQL(
-                f"{name} takes (s, from, to) — got {len(raw_args)} "
-                "argument(s)"
+                f"{name} takes (s, from, to) — got {len(args)} argument(s)"
             )
-        lits = [re.fullmatch(r"'([^']*)'", a) for a in raw_args[1:]]
+        lits = [re.fullmatch(r"'([^']*)'", a) for a in args[1:]]
         if not all(lits):
             raise UnsupportedClickHouseSQL(
                 f"{name} from/to must be string LITERALS (the ClickHouse "
@@ -1092,96 +1076,68 @@ def _rewrite_translate_family(sql: str) -> str:
                 "shorter — a silent divergence)"
             )
         if len(set(frm)) != len(frm):
-            # ADVICE r14: a duplicated from-char is not a verified-
-            # identical case — Spark's translate applies first-wins
-            # ('aa'->'xy' maps a->x) and ClickHouse's duplicate
-            # resolution is unverified here, so refuse rather than
-            # risk the silent same-name collision this guard exists
-            # to close
+            # a duplicated from-char is not a verified-identical case —
+            # Spark's translate applies first-wins ('aa'->'xy' maps
+            # a->x) and ClickHouse's duplicate resolution is unverified
+            # here, so refuse rather than risk the silent collision
             raise UnsupportedClickHouseSQL(
                 f"{name} 'from' contains duplicate characters — the "
                 "mapping must be one-to-one (Spark resolves "
                 "duplicates first-wins; CH behavior unverified) — "
                 "drop the duplicate from/to pairs"
             )
-        if name == "translate" and not (
-            frm.isascii() and to.isascii()
-        ):
+        if name == "translate" and not (frm.isascii() and to.isascii()):
             raise UnsupportedClickHouseSQL(
                 "bare translate is ASCII-only in ClickHouse — use "
                 "translateUTF8 for multi-byte mappings"
             )
-        # arg 0 may itself nest translate calls — recurse so the cursor
-        # jump past the outer close can't skip an unvalidated inner call
-        a0 = _rewrite_translate_family(raw_args[0])
-        out.append(sql[pos : m.start()])
-        out.append(f"translate({a0}, {raw_args[1]}, {raw_args[2]})")
-        pos = i
-        m = _TRANSLATE_HEAD.search(masked, i)
-    out.append(sql[pos:])
-    return "".join(out)
+        return f"translate({recurse(args[0])}, {args[1]}, {args[2]})"
+
+    return _rewrite_calls(
+        sql,
+        _TRANSLATE_HEAD,
+        emit,
+        max_depth=32,
+        too_deep="translate calls nested more than 32 levels deep — "
+        "precompute inner mappings as subquery/CTE columns",
+        name=lambda n: "translateUTF8" if len(n) > 9 else "translate",
+    )
 
 
 _SPLIT_HEAD = re.compile(r"\b(splitByChar|splitByString)\s*\(", re.I)
 
 
-def _rewrite_split_family(sql: str, depth: int = 0) -> str:
-    """splitByChar/splitByString lowering (r14 scanner upgrade of the
-    r13 table entry): ClickHouse splits on the LITERAL separator while
-    Spark's split takes a Java REGEX, so the separator is
-    \\Q...\\E-quoted at runtime via concat (Catalyst constant-folds it
-    for literal separators). The r13 form was a one-level _ARG table
-    entry, so any nested argument — splitByChar(',',
-    concatWithSeparator(...)), a guarded least() separator — fell
-    through to the residual REFUSAL; scanner-based (masked match, raw
-    splice, argument-first recursion, cursor past the emission) every
-    nesting depth now translates. Runs AFTER the _REWRITES table so
-    the ARRAY JOIN clause and the has/indexOf binder entries still see
-    the COMPACT splitBy* text their one-level _ARG can bind (the r13
-    ordering constraint, preserved by pass position instead of table
-    position); the emitted split()/concat() triggers nothing
-    downstream. The max_substrings 3-arg form refuses: its
-    truncation-vs-remainder semantics changed across ClickHouse
-    versions, so no single lowering is faithful."""
-    if depth > 32:
-        raise UnsupportedClickHouseSQL(
-            "splitBy* calls nested more than 32 levels deep — "
-            "precompute inner splits as subquery/CTE columns"
-        )
-    masked = _mask_literals(sql)
-    m = _SPLIT_HEAD.search(masked)
-    if not m:
-        return sql
-    out: list[str] = []
-    pos = 0
-    while m:
-        name = m.group(1)
-        by_string = name.lower() == "splitbystring"
-        try:
-            i = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
+def _rewrite_split_family(sql: str) -> str:
+    """splitByChar/splitByString lowering: ClickHouse splits on the
+    LITERAL separator while Spark's split takes a Java REGEX, so the
+    separator is \\Q...\\E-quoted at runtime via concat (Catalyst
+    constant-folds it for literal separators). The max_substrings 3-arg
+    form refuses: its truncation-vs-remainder semantics changed across
+    ClickHouse versions, so no single lowering is faithful. Refuses past
+    32 nested levels."""
+
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) != 2:
             raise UnsupportedClickHouseSQL(
-                f"unbalanced parentheses in {name}()"
-            ) from None
-        raw_args = [
-            a.strip() for a in _split_top_level_args(sql[m.end() : i - 1])
-        ]
-        if len(raw_args) != 2:
-            raise UnsupportedClickHouseSQL(
-                f"{name} with {len(raw_args)} argument(s) — the "
+                f"{name} with {len(args)} argument(s) — the "
                 "max_substrings form has version-divergent truncation "
                 "semantics in ClickHouse; take the 2-arg split and "
                 "slice(...) the result"
             )
-        sep = _rewrite_split_family(raw_args[0], depth + 1)
-        s = _rewrite_split_family(raw_args[1], depth + 1)
+        sep, s = recurse(args[0]), recurse(args[1])
+        by_string = name.lower() == "splitbystring"
         _check_split_sep_literal(sep, by_string=by_string, name=name)
-        out.append(sql[pos : m.start()])
-        out.append(f"split({s}, concat('\\\\Q', {sep}, '\\\\E'))")
-        pos = i
-        m = _SPLIT_HEAD.search(masked, i)
-    out.append(sql[pos:])
-    return "".join(out)
+        return f"split({s}, concat('\\\\Q', {sep}, '\\\\E'))"
+
+    return _rewrite_calls(
+        sql,
+        _SPLIT_HEAD,
+        emit,
+        max_depth=32,
+        too_deep="splitBy* calls nested more than 32 levels deep — "
+        "precompute inner splits as subquery/CTE columns",
+        name=str,
+    )
 
 
 def _count_substrings_repl(m: "re.Match[str]", raw: str) -> str:
@@ -3099,48 +3055,6 @@ def _split_top_level_args(s: str) -> list[str]:
     return args
 
 
-_MULTIIF_HEAD = re.compile(r"\bmultiIf\s*\(", re.I)
-
-
-def _rewrite_multiif(sql: str) -> str:
-    """Rewrite every `multiIf(c1, v1, c2, v2, ..., else)` to
-    `CASE WHEN c1 THEN v1 ... ELSE else END` with a balanced-paren scan
-    (arbitrary nesting — innermost occurrences rewritten first). CH
-    requires the trailing else, so an even argument count refuses.
-    Each pass removes exactly one occurrence, so the loop is bounded by
-    the occurrence count — no arbitrary nesting-depth cap (a wide
-    machine-generated SELECT with 50 sibling multiIfs is legal).
-    Occurrences are located on the literal-masked copy so a string like
-    'has multiIf(x, 1, 2) inside' is data, never rewritten."""
-    while True:
-        masked = _mask_literals(sql)
-        matches = list(_MULTIIF_HEAD.finditer(masked))
-        if not matches:
-            return sql
-        m = matches[-1]  # last occurrence = never contains another
-        start = m.end()  # just past the '('
-        try:
-            i = _scan_to_close(masked, start)
-        except UnsupportedClickHouseSQL:
-            raise UnsupportedClickHouseSQL(
-                "unbalanced multiIf parentheses"
-            ) from None
-        args = [a.strip() for a in _split_top_level_args(sql[start : i - 1])]
-        if len(args) < 3 or len(args) % 2 == 0:
-            raise UnsupportedClickHouseSQL(
-                "multiIf needs an odd argument count >= 3 "
-                "(cond, val, ..., else) — ClickHouse requires the else arm"
-            )
-        arms = "".join(
-            f" WHEN {args[k]} THEN {args[k + 1]}" for k in range(0, len(args) - 1, 2)
-        )
-        case = f"(CASE{arms} ELSE {args[-1]} END)"
-        sql = sql[: m.start()] + case + sql[i:]
-
-
-_LG_HEAD = re.compile(r"\b(least|greatest)\s*\(", re.I)
-
-
 def _scan_to_close(masked: str, start: int) -> int:
     """Index just past the ')' closing the '(' that precedes ``start``,
     scanning the literal-MASKED copy (masked literal contents carry no
@@ -3158,13 +3072,116 @@ def _scan_to_close(masked: str, start: int) -> int:
     return i
 
 
+def _calls(masked: str, head: "re.Pattern[str]", nested: bool = True):
+    """Yield ``(m, close)`` for each call ``head`` (a pattern ending in
+    the call's '(') matches on the literal-MASKED text: ``close`` is the
+    index just past the matching ')', or None when the call never
+    closes. ``nested=False`` resumes the search past each closed call,
+    so calls inside its arguments are not yielded."""
+    pos = 0
+    while m := head.search(masked, pos):
+        try:
+            close = _scan_to_close(masked, m.end())
+        except UnsupportedClickHouseSQL:
+            close = None
+        yield m, close
+        pos = m.end() if nested or close is None else close
+
+
+def _rewrite_calls(
+    sql: str,
+    head: "re.Pattern[str]",
+    emit,
+    *,
+    max_depth: int,
+    too_deep: str,
+    name=str.lower,
+    unbalanced: str = "unbalanced parentheses in {}()",
+) -> str:
+    """The one call-site rewriter behind the function-family passes.
+
+    Every call ``head`` matches (group 1 spells the function name) is
+    found on the literal-masked copy, so a call spelled inside a string
+    literal is data and never rewritten. Its arguments are split at the
+    top level and stripped from the RAW text, and the call is replaced by
+    ``emit(name(group 1), args, recurse)``. ``recurse(arg)`` rewrites one
+    argument the same way one level deeper; past ``max_depth`` levels it
+    refuses with ``too_deep``. The emission is spliced into the raw text
+    and the search resumes past the call, so emitted text — which may
+    spell the same function name — is never matched again. A call that
+    never closes refuses with ``unbalanced`` (formatted with the name)."""
+
+    def walk(sql: str, depth: int) -> str:
+        if depth > max_depth:
+            raise UnsupportedClickHouseSQL(too_deep)
+        out: list[str] = []
+        pos = 0
+        for m, close in _calls(_mask_literals(sql), head, nested=False):
+            fn = name(m.group(1))
+            if close is None:
+                raise UnsupportedClickHouseSQL(unbalanced.format(fn))
+            body = sql[m.end() : close - 1]
+            args = [a.strip() for a in _split_top_level_args(body)]
+            out.append(sql[pos : m.start()])
+            out.append(emit(fn, args, lambda a: walk(a, depth + 1)))
+            pos = close
+        out.append(sql[pos:])
+        return "".join(out)
+
+    return walk(sql, 0)
+
+
+def _null_guarded(fn: str, args: list[str]) -> str:
+    """``fn(args...)``, NULL when ANY argument is NULL (ClickHouse's
+    ordinary-function rule) — each argument is evaluated twice."""
+    checks = " OR ".join(f"({a}) IS NULL" for a in args)
+    call = f"{fn}({', '.join(f'({a})' for a in args)})"
+    return f"(CASE WHEN {checks} THEN NULL ELSE {call} END)"
+
+
+_MULTIIF_HEAD = re.compile(r"\b(multiIf)\s*\(", re.I)
+
+
+def _rewrite_multiif(sql: str) -> str:
+    """Rewrite every `multiIf(c1, v1, c2, v2, ..., else)` to
+    `(CASE WHEN c1 THEN v1 ... ELSE else END)`. CH requires the trailing
+    else, so an even argument count refuses. Refuses past 32 nested
+    levels (sibling calls are unbounded: a wide machine-generated SELECT
+    with 200 sibling multiIfs is legal)."""
+
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) < 3 or len(args) % 2 == 0:
+            raise UnsupportedClickHouseSQL(
+                "multiIf needs an odd argument count >= 3 "
+                "(cond, val, ..., else) — ClickHouse requires the else arm"
+            )
+        args = [recurse(a) for a in args]
+        arms = "".join(
+            f" WHEN {args[k]} THEN {args[k + 1]}" for k in range(0, len(args) - 1, 2)
+        )
+        return f"(CASE{arms} ELSE {args[-1]} END)"
+
+    return _rewrite_calls(
+        sql,
+        _MULTIIF_HEAD,
+        emit,
+        max_depth=32,
+        too_deep="multiIf calls nested more than 32 levels deep — "
+        "precompute inner branches as subquery/CTE columns",
+        unbalanced="unbalanced multiIf parentheses",
+    )
+
+
+_LG_HEAD = re.compile(r"\b(least|greatest)\s*\(", re.I)
+
+
 def _lg_leaves(name: str, arg: str) -> list[str]:
     # flatten SAME-function nesting: least(a, least(b, c)) has exactly
     # least(a, b, c)'s semantics in CH (min of all, NULL if any NULL),
     # and the pre-variadic ClickHouse idiom chains 2-arg calls — without
     # flattening, the guard's double-embedding grows 2^depth. Iterative
     # (explicit work stack): a machine-generated 1000-deep chain must
-    # flatten, not blow Python's recursion limit (review finding).
+    # flatten, not blow Python's recursion limit.
     head = re.compile(rf"{name}\s*\(", re.I)
     out: list[str] = []
     stack = [arg]
@@ -3182,152 +3199,96 @@ def _lg_leaves(name: str, arg: str) -> list[str]:
                 continue
             # a 1-arg same-name call is not valid CH — keep it intact
             # so it reaches Spark's loud arity error instead of being
-            # silently legalized by the flatten (review finding)
+            # silently legalized by the flatten
         out.append(a)
     return out
 
 
-def _rewrite_least_greatest(sql: str, depth: int = 0) -> str:
-    """NULL-propagation guard for least/greatest (r12): ClickHouse's
+def _rewrite_least_greatest(sql: str) -> str:
+    """NULL-propagation guard for least/greatest: ClickHouse's
     least/greatest are ordinary functions — ANY NULL argument makes the
     result NULL — while Spark's SKIP nulls and return the extreme of
     the non-null arguments (greatest(1, NULL) = 1). Same name, silently
-    different answers: exactly the position()/bracket-indexing collision
-    class. Each user-written call becomes
+    different answers. Each user-written call becomes
     `(CASE WHEN (a) IS NULL OR (b) IS NULL ... THEN NULL ELSE
     least((a), (b), ...) END)` — arguments are evaluated twice, both
-    row-local (CH users pass columns/arithmetic here). ADVICE r12
-    caveat: double evaluation means a NONDETERMINISTIC nullable
-    argument (e.g. `if(rand() < 0.5, NULL, x)`) can disagree between
-    the IS NULL check and the ELSE call, yielding non-NULL where CH's
-    single evaluation would give NULL or vice versa — documented in
-    MIGRATION.md (precompute such arguments as a subquery/CTE column);
-    not refused, because a name scan for rand/uuid-class functions
-    would also refuse the overwhelmingly common deterministic uses of
-    those names inside UNRELATED argument positions. SAME-function
-    nesting flattens first (identical CH semantics, kills the
-    2^depth growth on idiomatic 2-arg chains); MIXED nesting recurses
-    argument-first with an explicit cursor (the emitted ELSE call is
-    never re-matched) and refuses past depth 8, where the doubling
-    would make the emitted text megabytes. Later rewrite stages' OWN
-    least/greatest spellings (quantile index clamps, weighted
-    thresholds — all over provably non-null counts) run after this
-    stage and stay untouched. 1-argument calls keep their (recursed)
-    argument and pass to Spark's loud arity error."""
-    if depth > 8:
-        raise UnsupportedClickHouseSQL(
-            "least/greatest ALTERNATING more than 8 levels deep — the "
-            "NULL-propagation guard doubles per mixed level (same-name "
-            "chains flatten and never hit this); precompute inner "
-            "min/max steps as subquery/CTE columns and compose those"
-        )
-    masked = _mask_literals(sql)
-    m = _LG_HEAD.search(masked)
-    if not m:
-        return sql
-    out: list[str] = []
-    pos = 0
-    while m:
-        name = m.group(1).lower()
-        try:
-            i = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
-            raise UnsupportedClickHouseSQL(
-                f"unbalanced parentheses in {name}()"
-            ) from None
-        raw_args = [
-            a.strip() for a in _split_top_level_args(sql[m.end() : i - 1])
-        ]
-        out.append(sql[pos : m.start()])
-        if len(raw_args) < 2:
-            # not valid CH — arity-check BEFORE flattening (review
-            # finding: least(least(a, b)) must stay 1-arg and reach
-            # Spark's loud arity error, not be silently legalized);
-            # recurse the arg so any nested calls inside stay guarded
-            inner = [_rewrite_least_greatest(a, depth + 1) for a in raw_args]
-            out.append(f"{name}({', '.join(inner)})")
-        else:
-            leaves: list[str] = []
-            for a in raw_args:
-                leaves.extend(_lg_leaves(name, a))
-            args = [_rewrite_least_greatest(a, depth + 1) for a in leaves]
-            checks = " OR ".join(f"({a}) IS NULL" for a in args)
-            call = f"{name}({', '.join(f'({a})' for a in args)})"
-            out.append(f"(CASE WHEN {checks} THEN NULL ELSE {call} END)")
-        pos = i
-        m = _LG_HEAD.search(masked, i)
-    out.append(sql[pos:])
-    return "".join(out)
+    row-local (CH users pass columns/arithmetic here). Caveat: double
+    evaluation means a NONDETERMINISTIC nullable argument (e.g.
+    `if(rand() < 0.5, NULL, x)`) can disagree between the IS NULL check
+    and the ELSE call — documented in MIGRATION.md (precompute such
+    arguments as a subquery/CTE column); not refused, because a name
+    scan for rand/uuid-class functions would also refuse the common
+    deterministic uses of those names in UNRELATED argument positions.
+    SAME-function nesting flattens first (identical CH semantics, kills
+    the 2^depth growth on idiomatic 2-arg chains); MIXED nesting
+    refuses past 8 levels, where the doubling would make the emitted
+    text megabytes. Later rewrite stages' OWN least/greatest spellings
+    (quantile index clamps, weighted thresholds — all over provably
+    non-null counts) run after this stage and stay untouched. 1-argument
+    calls are not valid CH: they keep their (rewritten) argument — never
+    flattened — and pass to Spark's loud arity error."""
+
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) < 2:
+            return f"{name}({', '.join(recurse(a) for a in args)})"
+        leaves = [leaf for a in args for leaf in _lg_leaves(name, a)]
+        return _null_guarded(name, [recurse(a) for a in leaves])
+
+    return _rewrite_calls(
+        sql,
+        _LG_HEAD,
+        emit,
+        max_depth=8,
+        too_deep="least/greatest ALTERNATING more than 8 levels deep — the "
+        "NULL-propagation guard doubles per mixed level (same-name "
+        "chains flatten and never hit this); precompute inner "
+        "min/max steps as subquery/CTE columns and compose those",
+    )
 
 
-_CWS_HEAD = re.compile(
-    r"\bconcatWithSeparator(AssumeInjective)?\s*\(", re.I
-)
+_CWS_HEAD = re.compile(r"\b(concatWithSeparator)(?:AssumeInjective)?\s*\(", re.I)
 
 
-def _rewrite_concat_with_separator(sql: str, depth: int = 0) -> str:
-    """NULL-propagation guard for concatWithSeparator (r14 — VERDICT
-    r13 #4, the refusal-turned-translation). ClickHouse's
+def _rewrite_concat_with_separator(sql: str) -> str:
+    """NULL-propagation guard for concatWithSeparator. ClickHouse's
     ``concatWithSeparator(sep, a, b, ...)`` returns NULL when ANY
     argument (separator included) is NULL; Spark's ``concat_ws`` SKIPS
     NULL arguments and returns '' for an all-NULL tail — same shape,
-    silently different rows: the least/greatest class (r12, c484d7e),
-    variadic with a separator. Each user-written call becomes
-    ``(CASE WHEN (sep) IS NULL OR (a) IS NULL ... THEN NULL ELSE
-    concat_ws((sep), (a), ...) END)``. Arguments are evaluated twice,
-    both row-local — the documented least/greatest caveat
-    (nondeterministic nullable arguments belong in a subquery column,
-    MIGRATION.md). ``AssumeInjective`` is CH's GROUP-BY-elimination
-    hint, semantics identical — translated the same. Scanner-based
-    (masked match, raw splice, argument-first recursion, cursor past
-    the emission) so nesting cannot fall through half-rewritten; the
-    emitted ``concat_ws(`` never re-matches the head."""
-    if depth > 16:
-        raise UnsupportedClickHouseSQL(
-            "concatWithSeparator nested more than 16 levels deep — "
-            "precompute inner concatenations as subquery/CTE columns"
-        )
-    masked = _mask_literals(sql)
-    m = _CWS_HEAD.search(masked)
-    if not m:
-        return sql
-    out: list[str] = []
-    pos = 0
-    while m:
-        try:
-            i = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
-            raise UnsupportedClickHouseSQL(
-                "unbalanced parentheses in concatWithSeparator()"
-            ) from None
-        raw_args = [
-            a.strip() for a in _split_top_level_args(sql[m.end() : i - 1])
-        ]
-        if len(raw_args) < 2:
-            # CH itself requires a separator plus at least one piece;
-            # refuse loudly rather than legalize an arity CH rejects
+    silently different rows: the least/greatest class, variadic with a
+    separator. Each user-written call becomes ``(CASE WHEN (sep) IS NULL
+    OR (a) IS NULL ... THEN NULL ELSE concat_ws((sep), (a), ...) END)``.
+    Arguments are evaluated twice, both row-local — the documented
+    least/greatest caveat (nondeterministic nullable arguments belong in
+    a subquery column, MIGRATION.md). ``AssumeInjective`` is CH's
+    GROUP-BY-elimination hint, semantics identical — translated the
+    same. Refuses with fewer than two arguments (CH rejects that arity)
+    and past 16 nested levels, where the doubling makes the emitted text
+    megabytes."""
+
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) < 2:
             raise UnsupportedClickHouseSQL(
                 "concatWithSeparator needs a separator and at least "
                 "one argument"
             )
-        args = [
-            _rewrite_concat_with_separator(a, depth + 1) for a in raw_args
-        ]
-        checks = " OR ".join(f"({a}) IS NULL" for a in args)
-        call = f"concat_ws({', '.join(f'({a})' for a in args)})"
-        out.append(sql[pos : m.start()])
-        out.append(f"(CASE WHEN {checks} THEN NULL ELSE {call} END)")
-        pos = i
-        m = _CWS_HEAD.search(masked, i)
-    out.append(sql[pos:])
-    return "".join(out)
+        return _null_guarded("concat_ws", [recurse(a) for a in args])
+
+    return _rewrite_calls(
+        sql,
+        _CWS_HEAD,
+        emit,
+        max_depth=16,
+        too_deep="concatWithSeparator nested more than 16 levels deep — "
+        "precompute inner concatenations as subquery/CTE columns",
+        unbalanced="unbalanced parentheses in concatWithSeparator()",
+    )
 
 
 _SUBSTR_HEAD = re.compile(r"\b(substringUTF8|substring|substr|mid)\s*\(", re.I)
 
 
-def _rewrite_substring_family(sql: str, depth: int = 0) -> str:
-    """Byte-vs-char closure for the substring family (r13 — the
+def _rewrite_substring_family(sql: str) -> str:
+    """Byte-vs-char closure for the substring family (the
     length()/octet_length() silent-divergence class). ClickHouse's
     substring/substr/mid slice BYTES of a String (substringUTF8 is its
     character slicer); Spark's substring slices CHARACTERS — identical
@@ -3341,46 +3302,20 @@ def _rewrite_substring_family(sql: str, depth: int = 0) -> str:
     binary->string cast keeps bytes as-is). substringUTF8 lowers to
     Spark's own (character) substring.
 
-    Scanner-based like _rewrite_least_greatest — matches found on the
-    literal-masked copy, args spliced from RAW text, any nesting depth,
-    argument-first recursion with an explicit cursor so the emitted
-    ``substring(`` is never re-matched — because a regex-table entry's
-    one-level _ARG would let deep-nested calls FALL THROUGH and run
-    silently char-based, the exact divergence this pass closes.
-
     Refusals: wrong arity; a LITERAL offset 0 — Spark treats 0 as
     position 1 (measured) while MySQL-family engines return '' there,
     an engine-divergent edge no rewrite can make faithful (a runtime 0
     from an expression is undetectable textually — MIGRATION.md
-    documents the >= 1 / negative-from-end operand domain)."""
-    if depth > 32:
-        raise UnsupportedClickHouseSQL(
-            "substring calls nested more than 32 levels deep — "
-            "precompute inner slices as subquery/CTE columns"
-        )
-    masked = _mask_literals(sql)
-    m = _SUBSTR_HEAD.search(masked)
-    if not m:
-        return sql
-    out: list[str] = []
-    pos = 0
-    while m:
-        name = m.group(1).lower()
-        try:
-            i = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
-            raise UnsupportedClickHouseSQL(
-                f"unbalanced parentheses in {name}()"
-            ) from None
-        raw_args = [
-            a.strip() for a in _split_top_level_args(sql[m.end() : i - 1])
-        ]
-        if len(raw_args) not in (2, 3):
+    documents the >= 1 / negative-from-end operand domain); more than
+    32 nested levels."""
+
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) not in (2, 3):
             raise UnsupportedClickHouseSQL(
                 f"{name}() takes (string, offset[, length]) — got "
-                f"{len(raw_args)} argument(s)"
+                f"{len(args)} argument(s)"
             )
-        args = [_rewrite_substring_family(a, depth + 1) for a in raw_args]
+        args = [recurse(a) for a in args]
         if re.fullmatch(r"[+-]?0+", args[1]):
             raise UnsupportedClickHouseSQL(
                 "substring offset 0 is an engine-divergent edge (Spark "
@@ -3388,19 +3323,22 @@ def _rewrite_substring_family(sql: str, depth: int = 0) -> str:
                 "return '') — offsets are 1-based, negatives count from "
                 "the end"
             )
-        out.append(sql[pos : m.start()])
         if name == "substringutf8":
-            out.append(f"substring({', '.join(args)})")
-        else:
-            tail = f", {args[2]}" if len(args) == 3 else ""
-            out.append(
-                f"CAST(substring(CAST({args[0]} AS BINARY), "
-                f"{args[1]}{tail}) AS STRING)"
-            )
-        pos = i
-        m = _SUBSTR_HEAD.search(masked, i)
-    out.append(sql[pos:])
-    return "".join(out)
+            return f"substring({', '.join(args)})"
+        tail = f", {args[2]}" if len(args) == 3 else ""
+        return (
+            f"CAST(substring(CAST({args[0]} AS BINARY), "
+            f"{args[1]}{tail}) AS STRING)"
+        )
+
+    return _rewrite_calls(
+        sql,
+        _SUBSTR_HEAD,
+        emit,
+        max_depth=32,
+        too_deep="substring calls nested more than 32 levels deep — "
+        "precompute inner slices as subquery/CTE columns",
+    )
 
 
 _CASE_HEAD = re.compile(r"\b(lowerUTF8|upperUTF8|lower|upper)\s*\(", re.I)
@@ -3408,8 +3346,8 @@ _ASCII_UP = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _ASCII_LO = "abcdefghijklmnopqrstuvwxyz"
 
 
-def _rewrite_case_family(sql: str, depth: int = 0) -> str:
-    """ASCII-vs-Unicode closure for the case-folding family (r13, the
+def _rewrite_case_family(sql: str) -> str:
+    """ASCII-vs-Unicode closure for the case-folding family (the
     substring/length class): ClickHouse's bare lower/upper convert
     ASCII LATIN symbols ONLY (documented CH behavior — lower('ÄBC')
     keeps the Ä) while Spark's lower/upper fold full Unicode — same
@@ -3418,111 +3356,64 @@ def _rewrite_case_family(sql: str, depth: int = 0) -> str:
     lowerUTF8/upperUTF8 (CH's Unicode folders) lower to Spark's own
     lower/upper — documented caveat: both engines apply per-codepoint
     case mapping but exotic codepoints with locale/1:N mappings
-    (dotted İ, ligatures) may differ; MIGRATION.md records it.
+    (dotted İ, ligatures) may differ; MIGRATION.md records it. Refuses
+    any arity but one and past 32 nested levels."""
 
-    Scanner-based with an explicit cursor (argument-first recursion)
-    for the same reason as the substring pass: a one-level regex would
-    let nested calls fall through and run silently Unicode-folding, and
-    the lowerUTF8 -> lower emission must never be re-matched."""
-    if depth > 32:
-        raise UnsupportedClickHouseSQL(
-            "case-folding calls nested more than 32 levels deep — "
-            "precompute inner folds as subquery/CTE columns"
-        )
-    masked = _mask_literals(sql)
-    m = _CASE_HEAD.search(masked)
-    if not m:
-        return sql
-    out: list[str] = []
-    pos = 0
-    while m:
-        name = m.group(1).lower()
-        try:
-            i = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) != 1:
             raise UnsupportedClickHouseSQL(
-                f"unbalanced parentheses in {name}()"
-            ) from None
-        raw_args = [
-            a.strip() for a in _split_top_level_args(sql[m.end() : i - 1])
-        ]
-        if len(raw_args) != 1:
-            raise UnsupportedClickHouseSQL(
-                f"{name}() takes exactly one argument — got {len(raw_args)}"
+                f"{name}() takes exactly one argument — got {len(args)}"
             )
-        arg = _rewrite_case_family(raw_args[0], depth + 1)
-        out.append(sql[pos : m.start()])
+        arg = recurse(args[0])
         if name == "lower":
-            out.append(f"translate({arg}, '{_ASCII_UP}', '{_ASCII_LO}')")
-        elif name == "upper":
-            out.append(f"translate({arg}, '{_ASCII_LO}', '{_ASCII_UP}')")
-        elif name == "lowerutf8":
-            out.append(f"lower({arg})")
-        else:
-            out.append(f"upper({arg})")
-        pos = i
-        m = _CASE_HEAD.search(masked, i)
-    out.append(sql[pos:])
-    return "".join(out)
+            return f"translate({arg}, '{_ASCII_UP}', '{_ASCII_LO}')"
+        if name == "upper":
+            return f"translate({arg}, '{_ASCII_LO}', '{_ASCII_UP}')"
+        return f"{name.removesuffix('utf8')}({arg})"
+
+    return _rewrite_calls(
+        sql,
+        _CASE_HEAD,
+        emit,
+        max_depth=32,
+        too_deep="case-folding calls nested more than 32 levels deep — "
+        "precompute inner folds as subquery/CTE columns",
+    )
 
 
 _MEMBERSHIP_HEAD = re.compile(r"\b(has|indexOf)\s*\(", re.I)
 
 
-def _rewrite_membership(sql: str, depth: int = 0) -> str:
-    """NULL-as-a-value upgrade for has/indexOf (r13 wave 4, from the
-    name-only array_contains/array_position maps): ClickHouse processes
+def _rewrite_membership(sql: str) -> str:
+    """NULL-as-a-value semantics for has/indexOf: ClickHouse processes
     NULL AS A VALUE — has([NULL], NULL) = 1 and has([NULL, 1], 2) = 0
     where Spark's array_contains returns NULL in BOTH (NULL value; NULL
     element present but value absent); indexOf([1, NULL, 2], NULL) = 2
     where array_position(a, NULL) is NULL. The <=> lambdas spell CH's
     rule; the boolean-array array_position keeps CH's not-found 0
-    (measured). Scanner-based like the substring/case passes: the old
-    name-only rewrites matched at ANY nesting depth (has(arrayMap(...),
-    x) is an established composition), so the upgrade must too — a
-    one-level regex would refuse compositions that used to translate.
-    Runs BEFORE the rewrite table: the spliced argument text (arrayMap,
-    splitByChar, bracket arrays already lowered) is rewritten there."""
-    if depth > 32:
-        raise UnsupportedClickHouseSQL(
-            "has/indexOf calls nested more than 32 levels deep — "
-            "precompute inner lookups as subquery/CTE columns"
-        )
-    masked = _mask_literals(sql)
-    m = _MEMBERSHIP_HEAD.search(masked)
-    if not m:
-        return sql
-    out: list[str] = []
-    pos = 0
-    while m:
-        name = m.group(1).lower()
-        try:
-            i = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
+    (measured). Refuses any arity but two and past 32 nested levels."""
+
+    def emit(name: str, args: list[str], recurse) -> str:
+        if len(args) != 2:
             raise UnsupportedClickHouseSQL(
-                f"unbalanced parentheses in {name}()"
-            ) from None
-        raw_args = [
-            a.strip() for a in _split_top_level_args(sql[m.end() : i - 1])
-        ]
-        if len(raw_args) != 2:
-            raise UnsupportedClickHouseSQL(
-                f"{name}() takes (array, value) — got {len(raw_args)} "
-                "argument(s)"
+                f"{name}() takes (array, value) — got {len(args)} argument(s)"
             )
-        args = [_rewrite_membership(a, depth + 1) for a in raw_args]
-        out.append(sql[pos : m.start()])
+        arr, val = recurse(args[0]), recurse(args[1])
         if name == "has":
-            out.append(f"exists({args[0]}, cdr_h_ -> cdr_h_ <=> ({args[1]}))")
-        else:
-            out.append(
-                f"array_position(transform({args[0]}, "
-                f"cdr_ix_ -> cdr_ix_ <=> ({args[1]})), true)"
-            )
-        pos = i
-        m = _MEMBERSHIP_HEAD.search(masked, i)
-    out.append(sql[pos:])
-    return "".join(out)
+            return f"exists({arr}, cdr_h_ -> cdr_h_ <=> ({val}))"
+        return (
+            f"array_position(transform({arr}, "
+            f"cdr_ix_ -> cdr_ix_ <=> ({val})), true)"
+        )
+
+    return _rewrite_calls(
+        sql,
+        _MEMBERSHIP_HEAD,
+        emit,
+        max_depth=32,
+        too_deep="has/indexOf calls nested more than 32 levels deep — "
+        "precompute inner lookups as subquery/CTE columns",
+    )
 
 
 _IDX_BASE = re.compile(r"([A-Za-z_][\w]*(?:\.[A-Za-z_][\w]*)*)\s*$")
@@ -3871,15 +3762,15 @@ def _extract_group_index(pat: str) -> int:
 
 
 def _has_toplevel_comma_call(masked: str, name: str) -> bool:
-    # does any `name(...)` call carry a top-level comma? Composed from
-    # the shared scanners (review finding: no third hand-rolled copy)
-    for m in re.finditer(rf"\b{name}\s*\(", masked, re.I):
+    # does any well-formed `name(...)` call carry a top-level comma?
+    for m, close in _calls(masked, re.compile(rf"\b{name}\s*\(", re.I)):
         try:
-            i = _scan_to_close(masked, m.end())
-            if len(_split_top_level_args(masked[m.end() : i - 1])) > 1:
+            if close is not None and len(
+                _split_top_level_args(masked[m.end() : close - 1])
+            ) > 1:
                 return True
         except UnsupportedClickHouseSQL:
-            continue  # unbalanced tail — not a well-formed call
+            pass  # unbalanced brackets — not a well-formed call
     return False
 
 
@@ -4988,13 +4879,14 @@ def translate(ch_sql: str) -> str:
     # the table below
     out = _rewrite_substring_family(out)
     out = _rewrite_case_family(out)
+    # BEFORE the table: the has/indexOf argument text it splices
+    # (arrayMap, splitByChar) is rewritten there
     out = _rewrite_membership(out)
     for pat, repl in _REWRITES:
         out = _sub_outside_literals(pat, repl, out)
-    # AFTER the table: the ARRAY JOIN / has / indexOf entries above
-    # bind the COMPACT splitBy* text; the scanner then expands every
-    # remaining spelling at any nesting depth (r14 — the one-level
-    # table entry refused nested arguments)
+    # AFTER the table: its ARRAY JOIN entry binds the COMPACT splitBy*
+    # text; this pass then expands every remaining spelling at any
+    # nesting depth
     out = _rewrite_split_family(out)
     masked = _mask_literals(out)
     if re.search(r"\bWITH\s+TOTALS\b", masked, re.I):
@@ -5075,10 +4967,8 @@ def translate(ch_sql: str) -> str:
     # mapping form with NON-LITERAL from/to arrays — Spark's
     # same-named transform is the (array, lambda) higher-order
     # function, so passing through would be an opaque arity error
-    for _tm in re.finditer(r"\btransform\s*\(", masked, re.I):
-        try:
-            _ti = _scan_to_close(masked, _tm.end())
-        except UnsupportedClickHouseSQL:
+    for _tm, _ti in _calls(masked, re.compile(r"\btransform\s*\(", re.I)):
+        if _ti is None:
             continue
         if len(_split_top_level_args(masked[_tm.end() : _ti - 1])) >= 3:
             raise UnsupportedClickHouseSQL(

@@ -4,7 +4,9 @@
 #
 #   bash tools/round_checklist.sh
 #
-# 1. full pytest suite (unit + property + plan-quality + oracle diff)
+# 1. full pytest suite (unit + property + plan-quality + oracle diff),
+#    the same tier-1 command ROADMAP.md gives: all cores, a scratch
+#    spark.local.dir, a hard timeout and no pytest cache
 # 2. driver simulation from a plain session, cwd OUTSIDE the repo
 #    (exercises tune_session self-shipping; see .claude/skills/verify)
 # 3. bench + regression canary vs the last committed local bench
@@ -13,7 +15,9 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== 1/3 pytest =="
-python -m pytest tests/ -q
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+    timeout -k 10 2670 python -m pytest tests/ -q \
+    --continue-on-collection-errors -p no:cacheprovider
 
 echo "== 2/3 driver simulation =="
 if [ ! -f /tmp/drive_entry.py ]; then
