@@ -12,51 +12,49 @@ local/distributed tables and per-node DDL (ON CLUSTER fan-out, recreate-
 originals-on-new-shards): the catalog is cluster-global and a table's
 partitioning IS its shard layout. What remains semantically is:
 
-    rename aside → create empty target → hash re-scatter append → verify
-    → GC
+    recover → stage → verify → swap → GC
 
-with the same guarded, idempotent ordering the reference uses
-(EXISTS probes before renames, sharding_recreation.py:216-217, 236-237;
-IF NOT EXISTS creates, :72-96).
+The re-scattered copy is written to a versioned stage table while
+readers keep seeing the old data under the logical name; it goes live
+through `catalog.swap` (the reference's rename old aside → rename new
+into place → drop old, sharding_recreation.py:306-335) only after its
+row count matched the fan-in. Every catalog mutation goes through
+`plans.catalog`.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import Observation, SparkSession, functions as F
 
 from . import catalog as cat
 from .rebalance import rebalance
 
+# version token of the staged copy, ``{table}__v{_STAGE}``
+_STAGE = "stage"
+
 
 def _strip_scheme(path: str) -> str:
-    """``file:/tmp/x`` / ``hdfs://nn/x`` → path part, for same-dir checks."""
-    import re
-
-    return re.sub(r"^[a-z][a-z0-9+.-]*:(//[^/]*)?", "", path).rstrip("/")
+    """``file:/tmp/x`` / ``hdfs://nn/x`` → path part, for overlap checks."""
+    return re.sub(r"^[a-z][a-z0-9+.-]*:(//[^/]*)?", "", path)
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+def _overlaps(a: str, b: str) -> bool:
+    """Whether one directory equals or contains the other, compared by
+    path component: ``…/t2`` is not inside ``…/t``."""
+    pa, pb = ([c for c in _strip_scheme(p).split("/") if c] for p in (a, b))
+    n = min(len(pa), len(pb))
+    return pa[:n] == pb[:n]
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
     """Recursively delete ``path`` through the Hadoop FileSystem API —
     works for any scheme the cluster can write (local, HDFS, s3a, …),
     unlike shutil."""
-    fs, hpath = _hadoop_fs(spark, path)
-    fs.delete(hpath, True)
-
-
-def _ensure_dir(spark: SparkSession, path: str) -> None:
-    """mkdir -p: an external table whose LOCATION does not exist yet makes
-    every resolution between CREATE and first INSERT stat the missing dir
-    and log a FileNotFoundException at WARN — pre-create it instead."""
-    fs, hpath = _hadoop_fs(spark, path)
-    fs.mkdirs(hpath)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hpath, True)
 
 
 @dataclass
@@ -87,95 +85,60 @@ def resize_and_rebalance(
     keeping its logical name readable — the whole reference pipeline.
 
     Phase map (reference → here):
-      1-2  DDL introspection/rewrite  → schema taken from the catalog
-      3    create versioned locals    → create empty target table (IF NOT
-                                        EXISTS semantics via exists-probe)
-      4    rename old aside           → ALTER ... RENAME TO {t}__old
-      5    rename new into place      → ALTER ... RENAME TO {t}
-      6    versioned dist router      → not needed: the DataFrame scan of
-                                        the __old table IS the fan-in read
-      7    INSERT INTO ... SELECT *   → rebalance(): one hash shuffle,
-                                        append into the new table
-      8    DROP old                   → drop_versions() unless keep_old
+      1-2  DDL introspection/rewrite → the schema rides the stage's CTAS
+      3+7  versioned locals, INSERT  → stage: one CTAS of rebalance() into
+           INTO ... SELECT *           ``{t}__v{_STAGE}`` at ``{location}/{t}``
+      6    versioned dist router     → not needed: the scan of ``{t}`` IS
+                                       the fan-in read
+      4-5  rename old aside, new in  → ``catalog.swap``, only once the
+                                       staged row count equals the fan-in's
+      8    DROP old                  → inside ``swap`` unless keep_old
 
-    The non-atomic window between phases 4 and 5 exists in the reference
-    too (two separate cluster DDLs); both renames are metadata-only.
+    Readers see the old data until the swap. The logical name does not
+    resolve only between swap's two metadata-only renames (the reference
+    has the same window). The next call's ``recover_swap`` repairs a
+    driver that died there, and drops the stage or ``__old`` a dead
+    driver left behind; a ``__old`` kept by ``keep_old`` lives until then.
     """
-    if not cat.table_exists(spark, table_name):
-        raise ValueError(f"no such table: {table_name}")
-    oname = cat.old_name(table_name)
-    if cat.table_exists(spark, oname):
-        raise ValueError(f"{oname} already exists — previous run not GC'd")
-
-    src = spark.table(table_name)
-    schema_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in src.schema.fields
-    )
-
+    # ValueError when neither the table nor a swap's side tables exist;
+    # then drop what a dead driver left: an unverified stage, or the
+    # __old of a verified swap that was not yet GC'd
+    cat.recover_swap(spark, table_name, _STAGE)
+    cat.drop_versions(spark, table_name, [_STAGE])
+    cat.drop_versions(spark, table_name)
     target_loc = f"{location.rstrip('/')}/{table_name}"
     src_loc = (
         spark.sql(f"DESCRIBE FORMATTED {table_name}")
         .filter("col_name = 'Location'")
         .head()["data_type"]
-        .rstrip("/")
     )
-    if _strip_scheme(src_loc) == _strip_scheme(target_loc):
+    if _overlaps(src_loc, target_loc):
         raise ValueError(
-            f"target location {target_loc} is the CURRENT data location of "
-            f"{table_name} — pass a different `location` (the pipeline must "
-            "not clear the directory it is about to fan-in from)"
+            f"target location {target_loc} overlaps {src_loc}, the current "
+            f"data location of {table_name} — pass a `location` outside it "
+            "(the pipeline clears the target before the fan-in reads)"
         )
-    # phase 4: old aside (guarded — tableExists probe is the A11 analog)
-    spark.sql(f"ALTER TABLE {table_name} RENAME TO {oname}")
-    try:
-        # Guard before CREATE: an external-table CREATE ... LOCATION
-        # silently adopts any files already under the location (e.g. from
-        # a partially-failed earlier run), which would serve duplicate
-        # rows under the logical name after the INSERT — clear it first.
-        _delete_path(spark, target_loc)
-        _ensure_dir(spark, target_loc)
-        # phases 3+5 fused: create the empty target directly under the
-        # logical name (no intermediate versioned name needed — Spark has
-        # no per-shard DDL to stage)
-        spark.sql(
-            f"""CREATE TABLE IF NOT EXISTS {table_name} ({schema_ddl})
-                USING parquet LOCATION '{target_loc}'"""
+    # a table created over a path adopts the files already there (e.g. a
+    # crashed run's partial output) — clear it first
+    _delete_path(spark, target_loc)
+    # stage: fan-in scan, one hash shuffle, fan-out write (the reference's
+    # INSERT-SELECT, sharding_recreation.py:159-160); rows_before rides the
+    # fan-in as an Observation rather than a second pass over the table
+    obs = Observation("rebalance_fanin")
+    fan_in = spark.table(table_name).observe(obs, F.count(F.lit(1)).alias("n_rows"))
+    stage = cat.versioned_name(table_name, _STAGE)
+    rebalance(fan_in, n_shards, keys).write.option("path", target_loc).saveAsTable(stage)
+    rows_before = int(obs.get["n_rows"])
+    # verify what landed before any reader can see it
+    rows_after = spark.table(stage).count()
+    if rows_after != rows_before:
+        cat.drop_versions(spark, table_name, [_STAGE])
+        raise RuntimeError(
+            f"{stage} landed {rows_after} rows but the fan-in read "
+            f"{rows_before}; {table_name} is unchanged"
         )
-        # phase 7: THE rebalance — fan-in scan of old, one hash shuffle,
-        # fan-out append (sharding_recreation.py:159-160's INSERT-SELECT).
-        # rows_before rides the fan-in scan as an Observation instead of
-        # a separate count(): at 100 TB a dedicated pre-scan is a whole
-        # extra pass over the table purely for the invariant report
-        # (profiled at tools/profile_r07.md — VERDICT r6 #3)
-        from pyspark.sql import Observation
-
-        obs = Observation("rebalance_fanin")
-        fan_in = spark.table(oname).observe(
-            obs, F.count(F.lit(1)).alias("n_rows")
-        )
-        rebalance(fan_in, n_shards, keys).write.insertInto(table_name)
-        rows_before = int(obs.get["n_rows"])
-    except Exception:
-        # roll the rename back so the logical name still serves the data,
-        # and clean the half-written target location so a retry (or a
-        # later CREATE at the same location) cannot adopt partial files
-        if cat.table_exists(spark, table_name):
-            spark.sql(f"DROP TABLE {table_name}")
-        _delete_path(spark, target_loc)
-        spark.sql(f"ALTER TABLE {oname} RENAME TO {table_name}")
-        raise
-
-    rows_after = spark.table(table_name).count()
-    old_kept: str | None = oname
-    if not keep_old and rows_after == rows_before:
-        # phase 8: GC — only after the invariant holds
-        cat.drop_versions(spark, table_name)
-        old_kept = None
+    cat.swap(spark, table_name, _STAGE, keep_old=keep_old)
+    old_kept = cat.old_name(table_name) if keep_old else None
     return RebalanceReport(
-        table=table_name,
-        n_shards=n_shards,
-        keys=keys,
-        rows_before=rows_before,
-        rows_after=rows_after,
-        old_table=old_kept,
+        table_name, n_shards, keys, rows_before, rows_after, old_kept
     )

@@ -119,8 +119,8 @@ def insert_select_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table(spark, sf_dir, "orders")
     spark.sql("DROP TABLE IF EXISTS cdr_ins_orders")
     loc = os.path.join(_fresh_run_dir("ins_sel"), "cdr_ins_orders")
-    os.makedirs(loc, exist_ok=True)  # see pipeline._ensure_dir — silences
-    # the missing-LOCATION stat WARN between CREATE and first INSERT
+    os.makedirs(loc, exist_ok=True)  # a missing LOCATION is stat'ed, with
+    # a FileNotFoundException WARN, on every resolution before the INSERT
     spark.sql(
         f"""CREATE TABLE cdr_ins_orders
             (o_orderkey BIGINT, o_totalprice DOUBLE, o_orderstatus STRING)
@@ -147,7 +147,8 @@ _PIPELINE_ORACLE = f"""
 @query("rebalance_pipeline", _PIPELINE_ORACLE)
 def rebalance_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full 8-phase flow (sharding_recreation.py:306-335)
-    as one call: rename-aside → create → hash re-scatter → verify → GC.
+    as one call: hash re-scatter into a versioned stage table → verify its
+    row count → ``catalog.swap`` it into place → GC the old table.
     Invariants of the landed table must match the source exactly."""
     from .pipeline import resize_and_rebalance
 

@@ -146,7 +146,7 @@ DRIVER_ORDER: list[str] = [
     # GROUPING SETS lowering keeps C13 covered when grouping_sets
     # leaves). Sixteen 2+-green veterans leave for tier 2. Merge mapping
     # (COVERAGE.md §r10): table_swap_lifecycle + rebalance_shard_stats
-    # -> rebalance_pipeline (its rename-aside/create/swap/GC phases =
+    # -> rebalance_pipeline (its stage/swap/GC phases, on plans.catalog =
     # A5-A12/C36, its verify phase = C37), ch_dialect_limit_by ->
     # ch_dialect_limit_by_offset (same ROW_NUMBER plan + offset,
     # C15/C20), ch_dialect_brackets -> the 12-strong dialect block,

@@ -1,8 +1,9 @@
 """Empirical validation of the reference's CORE path — the
-rename-aside / create / INSERT-SELECT re-shard / verify / GC pipeline
-(`resize_and_rebalance`, sharding_recreation.py:159-160's INSERT-SELECT
-re-expressed as one hash shuffle) — at 10M rows, three orders of
-magnitude past the fixture's sf0.01 scan.
+stage / verify / swap / GC pipeline (`resize_and_rebalance`:
+sharding_recreation.py:159-160's INSERT-SELECT re-expressed as one hash
+shuffle into a versioned stage table, row-count-checked, then swapped in
+by `catalog.swap`) — at 10M rows, three orders of magnitude past the
+fixture's sf0.01 scan.
 
 What the fixture-scale tests cannot show and this one does:
   * CONTENT preservation beyond row counts: an order-independent
