@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from clickhouse_data_rebalance_spark import registry
 from clickhouse_data_rebalance_spark.session import get_spark
 from clickhouse_data_rebalance_spark.tables import load_tables
+from perfbench import host
 
 # Pinned cross-round comparable core (VERDICT r6 #5): the 31-query set
 # frozen at round 5. NEVER append here — cross-round `core_total`
@@ -169,6 +170,7 @@ def _cpu_calibration() -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    jif_pre = host.cpu_jiffies()
     cal_pre = _cpu_calibration()
     registry.load_all()
     spark = get_spark("cdr-bench")
@@ -198,6 +200,7 @@ def main() -> None:
     timings = {n: round(v, 3) for n, v in best.items()}
 
     cal_post = _cpu_calibration()
+    jif_post = host.cpu_jiffies()
     cal = round((cal_pre + cal_post) / 2, 3)
     total = round(sum(timings.values()), 3)
     out = {
@@ -223,6 +226,11 @@ def main() -> None:
         "cal_spin_sec": cal,
         "cal_spin_pre": cal_pre,
         "cal_spin_post": cal_post,
+        # host steal share over the whole run and the 1-min load at its
+        # end, from /proc: a host slow phase shows in steal, which the
+        # spin probe does not track (perfbench/README.md)
+        "host.steal_frac": round(host.steal_frac(jif_pre, jif_post), 4),
+        "host.loadavg": host.loadavg(),
         # r17 (VERDICT r16 #1): echo the EFFECTIVE execution shape so the
         # scaling contract is self-evident — the driver re-runs this bench
         # at a lower SPARK_GRAFT_CPUS and previously had no way to tell

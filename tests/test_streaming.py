@@ -231,3 +231,149 @@ def test_ckpt_reaper_is_ownership_aware(spark):
 
         for d in (live, unowned):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def _replay_batches(spark, queries):
+    """Run each registered query once and return, per memory-sink name,
+    the (batchId, sink rows) of every micro-batch its replay ran, read
+    from a StreamingQueryListener."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class BatchLog(StreamingQueryListener):
+        def __init__(self):
+            self.names, self.batches, self.done = {}, {}, set()
+
+        def onQueryStarted(self, event):
+            self.names[str(event.runId)] = event.name
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            name = self.names.get(str(p.runId))
+            self.batches.setdefault(name, []).append((p.batchId, p.sink.numOutputRows))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.add(self.names.get(str(event.runId)))
+
+    log = BatchLog()
+    spark.streams.addListener(log)
+    try:
+        for q in queries:
+            registry.QUERIES[q](spark, SF_SMALL).collect()
+        # listener events arrive asynchronously; a query's terminated event
+        # follows all of its progress events
+        deadline = time.monotonic() + 30
+        while len(log.done) < len(queries) and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(log)
+    return log.batches
+
+
+def test_finite_replays_run_only_batches_that_can_emit(spark):
+    """An eviction-only replay (dedup, inner stream-stream join) runs its
+    one data batch and no trailing no-data batch; a replay whose no-data
+    batch emits rows (append-mode window agg, outer join, state timeouts)
+    still runs it, and it still emits."""
+    batches = _replay_batches(
+        spark,
+        [
+            "stream_dedup_events",
+            "stream_stream_join",
+            "stream_watermark_counts",
+            "stream_stream_left_join",
+            "stream_session_timeout_state",
+        ],
+    )
+    for sink in ("stream_dedup_out", "stream_stream_join_out"):
+        assert [b for b, _ in batches[sink]] == [0], (sink, batches[sink])
+    for sink in (
+        "stream_watermark_out",
+        "stream_stream_left_join_out",
+        "stream_sess_timeout_out",
+    ):
+        rows = dict(batches[sink])
+        assert rows.get(1, 0) > 0, (sink, batches[sink])
+
+
+def test_replay_restores_session_confs(spark):
+    """The no-data-batch and state-width confs read the same after a
+    replay as before it, also when the stream raises; the failed replay's
+    checkpoint is removed."""
+    import glob
+    import os
+    import tempfile
+
+    import pytest
+
+    from clickhouse_data_rebalance_spark.streaming.stream_ops import (
+        events_stream,
+        run_to_memory,
+    )
+
+    keys = (
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.shuffle.partitions",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    streaming_dedup(spark, SF_SMALL)
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+    bad = events_stream(spark, SF_SMALL).select(
+        F.when(F.col("user_id") >= 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("user_id"))
+        .alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        run_to_memory(bad, "stream_raise_out", "append")
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    own = f"cdr_ckpt_stream_raise_out__pid{os.getpid()}_*"
+    assert not glob.glob(os.path.join(base, own))
+
+
+def test_state_width_is_capped_at_shuffle_width(spark):
+    from clickhouse_data_rebalance_spark.streaming.stream_ops import (
+        _stream_state_partitions,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for shuffle, width in (("2", "2"), ("16", "8")):
+            spark.conf.set(key, shuffle)
+            with _stream_state_partitions(spark):
+                assert spark.conf.get(key) == width
+            assert spark.conf.get(key) == shuffle
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_ckpt_dirs_share_one_exit_hook():
+    """Checkpoint dirs are cleaned at exit by one per-process hook, not
+    one callback per dir; the hook removes only this process's dirs."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    from clickhouse_data_rebalance_spark.streaming import stream_ops
+
+    before = atexit._ncallbacks()
+    mine = [stream_ops._ckpt_dir("cdr_ckpt_hook_") for _ in range(20)]
+    theirs = tempfile.mkdtemp(
+        prefix=f"cdr_ckpt_hook__pid{os.getppid()}_", dir=os.path.dirname(mine[0])
+    )
+    try:
+        assert atexit._ncallbacks() - before <= 1
+        stream_ops._remove_own_ckpts()
+        assert not any(os.path.exists(d) for d in mine)
+        assert os.path.exists(theirs), "another live process's dir"
+    finally:
+        shutil.rmtree(theirs, ignore_errors=True)
+        for d in mine:
+            shutil.rmtree(d, ignore_errors=True)
