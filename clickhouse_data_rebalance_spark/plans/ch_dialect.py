@@ -160,11 +160,11 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..tables import load_tables
+from ..tables import point_views
 
 
 class UnsupportedClickHouseSQL(ValueError):
@@ -5035,9 +5035,10 @@ def translate(ch_sql: str) -> str:
 # fills that follow it (plus the head fill on the first row). The
 # ungrouped window is the same single-stream shape and carries the whole
 # output row, not just the key; in return the query under the fill runs
-# once (it used to run up to four times: the union branch, the key
-# window and a min/max bounds aggregate each for FROM and TO), and the
-# final ORDER BY rides the window's single partition.
+# once, and the final ORDER BY rides the window's single partition.
+# The lowering is built as one Spark SQL text over the translated
+# query, so building it analyzes the query under the fill once for its
+# schema and the whole text once — no per-column DataFrame steps.
 # ORDER BY [g1, g2, ...,] k [ASC|DESC] WITH FILL ... — group(1) is the
 # OPTIONAL list of leading bare sort keys (no fill of their own, no
 # modifiers): ClickHouse's FillingTransform restarts whenever a
@@ -5064,25 +5065,30 @@ _FILL_DEFAULTABLE = (
 )
 
 
-def _ch_default_lit(dt):
-    """The ClickHouse type-default literal for a filled row's non-sort
-    column (CH fills with the type default, never NULL)."""
+def _ch_default_lit(dt) -> str:
+    """The ClickHouse type-default of a filled row's non-sort column as a
+    Spark SQL literal (CH fills with the type default, never NULL)."""
+    t = dt.simpleString()
     if isinstance(dt, _FILL_DEFAULTABLE):
-        return F.lit(0).cast(dt)
+        return f"CAST(0 AS {t})"
     if isinstance(dt, T.StringType):
-        return F.lit("")
+        return "''"
     if isinstance(dt, T.BooleanType):
-        return F.lit(False)
+        return "false"
     if isinstance(dt, T.DateType):
-        return F.lit("1970-01-01").cast(dt)
+        return f"CAST('1970-01-01' AS {t})"
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return F.lit("1970-01-01 00:00:00").cast(dt)
+        return f"CAST('1970-01-01 00:00:00' AS {t})"
     if isinstance(dt, T.ArrayType):
-        return F.array().cast(dt)
+        return f"CAST(array() AS {t})"
     raise UnsupportedClickHouseSQL(
         f"WITH FILL beside a {dt.simpleString()} column has no textual "
         "CH type default — use time_gap_fill"
     )
+
+
+def _quote_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _apply_with_fill(spark: SparkSession, sql: str) -> DataFrame:
@@ -5170,20 +5176,22 @@ def _apply_with_fill(spark: SparkSession, sql: str) -> DataFrame:
                 "ascending WITH FILL FROM cannot be greater than TO"
             )
 
-    d = spark.sql(translate(sql[: m.start()]))
-    if col not in d.columns:
+    inner = translate(sql[: m.start()])
+    schema = spark.sql(inner).schema
+    names = schema.names
+    if col not in names:
         raise UnsupportedClickHouseSQL(
             "WITH FILL key must be a select-list column"
         )
     fold = _ident_fold(spark)
-    d_cols = {fold(c) for c in d.columns}
+    d_cols = {fold(c) for c in names}
     bad_groups = [g for g in groups if fold(g) not in d_cols]
     if bad_groups:
         raise UnsupportedClickHouseSQL(
             f"grouped WITH FILL leading keys must be select-list "
             f"columns: {bad_groups}"
         )
-    dt = d.schema[col].dataType
+    dt = schema[col].dataType
     is_int = isinstance(
         dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
     )
@@ -5196,6 +5204,8 @@ def _apply_with_fill(spark: SparkSession, sql: str) -> DataFrame:
         raise UnsupportedClickHouseSQL(
             "integer FROM/TO on a date fill key — use STEP only"
         )
+    k = _quote_ident(col)
+    src = f"({inner}) _d"
     if desc:
         # the descending walk is the ascending one in NEGATED key space
         # (CH's FillingTransform restart/bound rules mirror exactly):
@@ -5212,83 +5222,93 @@ def _apply_with_fill(spark: SparkSession, sql: str) -> DataFrame:
         # type, so a narrow key at its type minimum (byte -128, ...)
         # would ARITHMETIC_OVERFLOW under Spark 4's default ANSI mode;
         # the key is cast back to the declared type after re-negation
-        d = d.withColumn(col, -(F.col(col).cast("bigint")))
+        negated = ", ".join(
+            f"-CAST({k} AS BIGINT) AS {k}" if n == col else _quote_ident(n)
+            for n in names
+        )
+        src = f"(SELECT {negated} FROM {src}) _n"
         lo = -lo if lo is not None else None
         hi = -hi if hi is not None else None
         step = -step
 
-    if clash := [n for n in d.columns if n.lower() in _FILL_RESERVED]:
+    if clash := [n for n in names if n.lower() in _FILL_RESERVED]:
         raise UnsupportedClickHouseSQL(
             f"WITH FILL select-list columns collide with the rewrite's "
             f"working columns {sorted(_FILL_RESERVED)}: {clash} — alias them"
         )
     gset = {g.lower() for g in groups}
     bad = [
-        c for c in interp if c not in d.columns or c == col or c.lower() in gset
+        c for c in interp if c not in names or c == col or c.lower() in gset
     ]
     if bad:
         raise UnsupportedClickHouseSQL(
             f"INTERPOLATE columns must be non-sort select-list columns: {bad}"
         )
 
-    c, v = F.col(col), F.col("_v")
     if is_int:
-        fwd = lambda e, k: e + k  # noqa: E731
-        seq_step = F.lit(step)
+        fwd = lambda e, n: f"({e} + {n})"  # noqa: E731
+        seq_step = str(step)
     else:
-        fwd = lambda e, k: F.date_add(e, k)  # noqa: E731
-        seq_step = F.expr(f"INTERVAL {step} DAY")
+        fwd = lambda e, n: f"date_add({e}, {n})"  # noqa: E731
+        seq_step = f"INTERVAL {step} DAY"
 
-    # ONE pass over d: a window per group (ClickHouse's FillingTransform
-    # restarts whenever a non-fill sort column changes) materializes the
-    # neighbouring keys — Spark rejects window expressions inside a
-    # generator — and each row then explodes into itself, the head fill
-    # FROM .. k-1 (on the group's first non-NULL key: NULLs sort first,
-    # so that is the row whose lag is NULL) and the gap-or-tail fill
-    # k+step .. coalesce(next, TO)-1. Fill keys never equal the row's
-    # key (head ones are below it, gap ones above), so comparing the
-    # exploded key with it tells the three kinds of rows apart. The
-    # `when` guards keep illegal sequence boundaries from evaluating.
-    # In DESC mode the working key is BIGINT (negated space).
-    fields, arr_t = d.schema.fields, T.ArrayType(T.LongType() if desc else dt)
-    w = Window.partitionBy(*groups).orderBy(col) if groups else Window.orderBy(col)
-    d = d.withColumn("_nxt", F.lead(c).over(w)).withColumn("_prv", F.lag(c).over(w))
-    parts = [F.array(c)]
+    # ONE pass over the query under the fill, as one SQL text: a window
+    # per group (ClickHouse's FillingTransform restarts whenever a
+    # non-fill sort column changes) materializes the neighbouring keys —
+    # Spark rejects window expressions inside a generator — and each row
+    # then explodes into itself, the head fill FROM .. k-1 (on the
+    # group's first non-NULL key: NULLs sort first, so that is the row
+    # whose lag is NULL) and the gap-or-tail fill k+step ..
+    # coalesce(next, TO)-1. Fill keys never equal the row's key (head
+    # ones are below it, gap ones above), so comparing the exploded key
+    # with it tells the three kinds of rows apart. The CASE guards keep
+    # illegal sequence boundaries from evaluating. In DESC mode the
+    # working key is BIGINT (negated space).
+    arr_t = f"array<{'bigint' if desc else dt.simpleString()}>"
+    part_by = f"PARTITION BY {', '.join(map(_quote_ident, groups))} " if groups else ""
+    over = f"OVER ({part_by}ORDER BY {k})"
+    parts = [f"array({k})"]
     if lo is not None:
-        head = F.col("_prv").isNull() & (c > lo)  # NULL when c is NULL
-        parts.append(F.when(head, F.sequence(F.lit(lo), fwd(c, -1), seq_step)))
-    end = F.col("_nxt") if hi is None else F.coalesce("_nxt", F.lit(hi))
+        parts.append(
+            f"CASE WHEN _prv IS NULL AND {k} > {lo} "  # NULL when k is NULL
+            f"THEN sequence({lo}, {fwd(k, -1)}, {seq_step}) END"
+        )
+    end = "_nxt" if hi is None else f"coalesce(_nxt, {hi})"
     parts.append(
-        F.when(end > fwd(c, step), F.sequence(fwd(c, step), fwd(end, -1), seq_step))
+        f"CASE WHEN {end} > {fwd(k, step)} "
+        f"THEN sequence({fwd(k, step)}, {fwd(end, -1)}, {seq_step}) END"
     )
-    d = d.select(
-        "*",
-        F.explode(
-            F.concat(*[F.coalesce(p.cast(arr_t), F.array().cast(arr_t)) for p in parts])
-        ).alias("_v"),
+    fills = ", ".join(
+        f"coalesce(CAST({p} AS {arr_t}), CAST(array() AS {arr_t}))" for p in parts
     )
     # group columns carry the row's value; INTERPOLATE columns carry it
     # into the gap/tail fills (the previous original row in output order)
     # and take the type default on head fills (no predecessor); every
     # other column takes the CH type default on any fill. DESC leaves
     # negated key space here.
-    is_orig, is_head = v.eqNullSafe(c), v < c
     out_cols = []
-    for f in fields:
-        x = F.col(f.name)
+    for f in schema.fields:
+        x = _quote_ident(f.name)
         if f.name == col:
-            x = (-v).cast(dt) if desc else v
+            x = f"CAST(-_v AS {dt.simpleString()})" if desc else "_v"
         elif f.name in interp:
-            x = F.when(is_head, _ch_default_lit(f.dataType)).otherwise(x)
+            x = f"CASE WHEN _v < {k} THEN {_ch_default_lit(f.dataType)} ELSE {x} END"
         elif f.name.lower() not in gset:
-            x = F.when(is_orig, x).otherwise(_ch_default_lit(f.dataType))
-        out_cols.append(x.alias(f.name))
+            x = f"CASE WHEN _v <=> {k} THEN {x} ELSE {_ch_default_lit(f.dataType)} END"
+        out_cols.append(f"{x} AS {_quote_ident(f.name)}")
     # NULLS LAST on the group keys: ClickHouse ORDER BY puts NULL/NaN
     # last, Spark's default asc puts NULLs first — a nullable group
     # column (left-join output) must not silently flip the presentation
-    # order
-    lead_order = [F.col(g).asc_nulls_last() for g in groups]
-    return d.select(*out_cols).orderBy(*lead_order, F.desc(col) if desc else col)
+    # order. The ORDER BY names resolve to the select list's output.
+    order = [f"{_quote_ident(g)} ASC NULLS LAST" for g in groups]
+    order.append(f"{k} DESC" if desc else k)
+    return spark.sql(
+        f"SELECT {', '.join(out_cols)} FROM ("
+        f"SELECT *, explode(concat({fills})) AS _v FROM ("
+        f"SELECT *, lead({k}) {over} AS _nxt, lag({k}) {over} AS _prv "
+        f"FROM {src}) _w) _e "
+        f"ORDER BY {', '.join(order)}"
+    )
 
 
 # ---- FROM <table> FINAL (DDL-aware, ch_sql only) ----
@@ -6101,10 +6121,10 @@ def _context_rewrites(
     spark: SparkSession, sql: str, ddls: list[str] | None
 ) -> str:
     """The ch_sql-only rewrite passes that need more than the query
-    text (views must already be registered): DDL-resolved FINAL,
+    text (views must already be pointed): DDL-resolved FINAL,
     schema-aware ASOF and ANY joins. Returns CH-dialect SQL with those
-    constructs lowered; WITH FILL (a DataFrame-op lowering, not a SQL
-    text) is left for the caller to dispatch."""
+    constructs lowered; WITH FILL (lowered from the schema of the query
+    under it) is left for the caller to dispatch."""
     table_ddls = [
         d for d in (ddls or []) if not re.search(r"\bCREATE\s+DICTIONARY\b", d, re.I)
     ]
@@ -6129,23 +6149,32 @@ def _context_rewrites(
     return sql
 
 
+def _point_views(
+    spark: SparkSession, sf_dir: str, sql: str, ddls: list[str] | None
+) -> None:
+    """Point the fixture views a ch_sql query reads at ``sf_dir``: the
+    names in its literal-masked text, and in its DDLs unmasked — a
+    dictionary names its source table in a literal."""
+    point_views(spark, sf_dir, _mask_literals(sql), *(ddls or []))
+
+
 def ch_sql(
     spark: SparkSession,
     sf_dir: str,
     sql: str,
     ddls: list[str] | None = None,
 ) -> DataFrame:
-    """Run a ClickHouse-dialect query against the test tables: registers
-    each table as a temp view, translates, executes Spark-side. Four
-    constructs bare :func:`translate` refuses are handled here with the
-    extra context they need: the simple-form ``ORDER BY ... WITH FILL``
-    tail (schema-aware — see :func:`_apply_with_fill`), ``FROM t
-    FINAL`` when the table's ClickHouse DDL is passed via ``ddls``
-    (engine-aware — see :func:`_apply_final`), and ``ASOF`` / ``ANY``
-    joins (schema-aware — see :func:`_apply_asof_join` /
+    """Run a ClickHouse-dialect query against the test tables: points the
+    fixture views the query names at ``sf_dir`` (:func:`_point_views`),
+    translates, executes Spark-side. Four constructs bare
+    :func:`translate` refuses are handled here with the extra context
+    they need: the simple-form ``ORDER BY ... WITH FILL`` tail
+    (schema-aware — see :func:`_apply_with_fill`), ``FROM t FINAL`` when
+    the table's ClickHouse DDL is passed via ``ddls`` (engine-aware —
+    see :func:`_apply_final`), and ``ASOF`` / ``ANY`` joins
+    (schema-aware — see :func:`_apply_asof_join` /
     :func:`_apply_any_join`)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    _point_views(spark, sf_dir, sql, ddls)
     sql = _context_rewrites(spark, sql, ddls)
     if re.search(r"\bWITH\s+FILL\b", _mask_literals(sql), re.I):
         return _apply_with_fill(spark, sql)
@@ -6161,17 +6190,18 @@ def ch_sql_text(
     """The exact Spark SQL :func:`ch_sql` would execute — for review,
     EXPLAIN, or pasting into a notebook (the migration-audit companion:
     a reference user can diff every rewrite before trusting it).
-    Registers the same temp views (the context rewrites read their
-    schemas). Refuses ``WITH FILL``, which lowers to DataFrame
-    operations rather than one SQL text."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    Points the same temp views (the context rewrites read their
+    schemas). Refuses ``WITH FILL``, whose text is built from the schema
+    of the query under the fill, so it exists only once that query runs
+    as a DataFrame."""
+    _point_views(spark, sf_dir, sql, ddls)
     sql = _context_rewrites(spark, sql, ddls)
     if re.search(r"\bWITH\s+FILL\b", _mask_literals(sql), re.I):
         raise UnsupportedClickHouseSQL(
-            "WITH FILL lowers to DataFrame operations (schema defaults, "
-            "gap sequences), not a single SQL text — run it via ch_sql "
-            "and inspect the DataFrame's plan instead"
+            "WITH FILL is lowered from the schema of the query under the "
+            "fill (key type, column defaults), known only once it runs as "
+            "a DataFrame — run it via ch_sql and inspect that DataFrame's "
+            "plan instead"
         )
     return translate(sql)
 
@@ -6636,8 +6666,7 @@ def ch_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the created table is partitioned as declared; the INSERT is
     an ordinary pushed-filter scan + partitioned write."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    point_views(spark, sf_dir, _CH_INSERT)
     spark.sql("DROP TABLE IF EXISTS cdr_ddl_demo")
     # a crashed prior run can leave files at the managed location, which
     # CREATE IF NOT EXISTS would silently adopt (the pipeline.py lesson)
@@ -7278,7 +7307,9 @@ def ch_dialect_with_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     fills after it, so the query under the fill runs once. The window
     carries the whole (narrow) output row into one partition: the same
     single-stream shape as ClickHouse's own FillingTransform over the
-    initiator's merged sorted stream."""
+    initiator's merged sorted stream. It is built as one Spark SQL text
+    over the translated aggregate (the aggregate analyzed once for its
+    schema, then the text once), with no Spark job."""
     return ch_sql(spark, sf_dir, _CH_WITH_FILL_QUERY)
 
 
@@ -7434,6 +7465,12 @@ _CH_FINAL_ORACLE = """
 """
 
 
+_CDR_STATE_VIEW = (
+    "CREATE OR REPLACE TEMP VIEW cdr_state AS "
+    "SELECT user_id, event_type, event_id AS ver, value FROM events"
+)
+
+
 @query("ch_dialect_final", _CH_FINAL_ORACLE)
 def ch_dialect_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``FROM t FINAL`` translated engine-aware: the table's verbatim
@@ -7448,12 +7485,8 @@ def ch_dialect_final(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the collapse is one hash-partitioned window on the sort key —
     the same single-shuffle shape as upsert_latest_wins; everything
     after it is ordinary pushed-down Spark SQL."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    spark.sql(
-        "CREATE OR REPLACE TEMP VIEW cdr_state AS "
-        "SELECT user_id, event_type, event_id AS ver, value FROM events"
-    )
+    point_views(spark, sf_dir, _CDR_STATE_VIEW)
+    spark.sql(_CDR_STATE_VIEW)
     return ch_sql(spark, sf_dir, _CH_FINAL_QUERY, ddls=[_CH_FINAL_DDL])
 
 
@@ -7500,6 +7533,14 @@ _CH_SUMMING_ORACLE = """
 """
 
 
+_CDR_TOTALS_VIEW = (
+    "CREATE OR REPLACE TEMP VIEW cdr_totals AS "
+    "SELECT l_suppkey, l_returnflag, "
+    "CAST(l_quantity AS DECIMAL(18,2)) AS qty, "
+    "CAST(l_extendedprice AS DECIMAL(18,2)) AS revenue FROM lineitem"
+)
+
+
 @query("ch_dialect_final_summing", _CH_SUMMING_ORACLE)
 def ch_dialect_final_summing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``FROM t FINAL`` on a SummingMergeTree: the collapse becomes a
@@ -7513,14 +7554,8 @@ def ch_dialect_final_summing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the collapse is one partial-aggregated hash shuffle on the
     sort key — strictly cheaper than the Replacing window (no per-row
     rank), and AQE coalesces the post-collapse side."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    spark.sql(
-        "CREATE OR REPLACE TEMP VIEW cdr_totals AS "
-        "SELECT l_suppkey, l_returnflag, "
-        "CAST(l_quantity AS DECIMAL(18,2)) AS qty, "
-        "CAST(l_extendedprice AS DECIMAL(18,2)) AS revenue FROM lineitem"
-    )
+    point_views(spark, sf_dir, _CDR_TOTALS_VIEW)
+    spark.sql(_CDR_TOTALS_VIEW)
     return ch_sql(spark, sf_dir, _CH_SUMMING_QUERY, ddls=[_CH_SUMMING_DDL])
 
 
@@ -7562,6 +7597,23 @@ _CH_ASOF_ORACLE = """
 """
 
 
+_CLICK_PURCHASE_VIEWS = (
+    "CREATE OR REPLACE TEMP VIEW clicks AS "
+    "SELECT event_id, user_id, ts, event_type FROM events "
+    "WHERE event_type IN ('click', 'view')",
+    "CREATE OR REPLACE TEMP VIEW purchases AS "
+    "SELECT user_id, ts, event_id, value FROM events "
+    "WHERE event_type = 'purchase'",
+)
+
+
+def _click_purchase_views(spark: SparkSession, sf_dir: str) -> None:
+    """The two event views the ASOF and ANY join demos read."""
+    point_views(spark, sf_dir, *_CLICK_PURCHASE_VIEWS)
+    for v in _CLICK_PURCHASE_VIEWS:
+        spark.sql(v)
+
+
 @query("ch_dialect_asof_join", _CH_ASOF_ORACLE)
 def ch_dialect_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse ``ASOF LEFT JOIN`` translated schema-aware: each
@@ -7578,18 +7630,7 @@ def ch_dialect_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — the native asof_join plan shape; the lateral-top-1
     spelling was measured to decorrelate into a BroadcastNestedLoopJoin
     domain join (O(|left| x |right|)) and is deliberately not used."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    spark.sql(
-        "CREATE OR REPLACE TEMP VIEW clicks AS "
-        "SELECT event_id, user_id, ts, event_type FROM events "
-        "WHERE event_type IN ('click', 'view')"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMP VIEW purchases AS "
-        "SELECT user_id, ts, event_id, value FROM events "
-        "WHERE event_type = 'purchase'"
-    )
+    _click_purchase_views(spark, sf_dir)
     return ch_sql(spark, sf_dir, _CH_ASOF_QUERY)
 
 
@@ -7642,18 +7683,7 @@ def ch_dialect_any_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly smaller than the join's own shuffle — and the joined right
     side shrinks to one row per key, which AQE then broadcasts when it
     fits."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    spark.sql(
-        "CREATE OR REPLACE TEMP VIEW clicks AS "
-        "SELECT event_id, user_id, ts, event_type FROM events "
-        "WHERE event_type IN ('click', 'view')"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMP VIEW purchases AS "
-        "SELECT user_id, ts, event_id, value FROM events "
-        "WHERE event_type = 'purchase'"
-    )
+    _click_purchase_views(spark, sf_dir)
     return ch_sql(spark, sf_dir, _CH_ANY_QUERY)
 
 

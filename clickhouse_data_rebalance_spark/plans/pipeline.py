@@ -57,6 +57,14 @@ def _delete_path(spark: SparkSession, path: str) -> None:
     hpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hpath, True)
 
 
+def _location(spark: SparkSession, table_name: str) -> str:
+    """The table's data location, picked from ``DESCRIBE FORMATTED``'s
+    rows in Python: the command's result is local, so collecting it runs
+    no Spark job (a DataFrame filter over it would run two)."""
+    rows = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
+    return next(r["data_type"] for r in rows if r["col_name"] == "Location")
+
+
 @dataclass
 class RebalanceReport:
     """What the pipeline did — returned, not logged, so callers can gate."""
@@ -107,11 +115,7 @@ def resize_and_rebalance(
     cat.drop_versions(spark, table_name, [_STAGE])
     cat.drop_versions(spark, table_name)
     target_loc = f"{location.rstrip('/')}/{table_name}"
-    src_loc = (
-        spark.sql(f"DESCRIBE FORMATTED {table_name}")
-        .filter("col_name = 'Location'")
-        .head()["data_type"]
-    )
+    src_loc = _location(spark, table_name)
     if _overlaps(src_loc, target_loc):
         raise ValueError(
             f"target location {target_loc} overlaps {src_loc}, the current "

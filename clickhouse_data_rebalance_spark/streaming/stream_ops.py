@@ -23,33 +23,41 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
 from ..session import shuffle_partitions
-from ..tables import normalize_events_ts, table
+from ..tables import normalize_events_ts, raw_schema, table
 from ..operators._util import dec_sum, sql_dec_sum
+
+
+def _replay(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Replay fixture ``name`` as a file-source stream, one file per
+    trigger, with the schema its file stores (``tables.raw_schema``: the
+    batch loader's cached read of the same file, so building the source
+    runs no Spark job)."""
+    # the fixture is a single parquet FILE — stream from the directory with
+    # a glob filter (the file source requires a directory basePath)
+    return (
+        spark.readStream.schema(raw_schema(spark, sf_dir, name))
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the events table as a file-source stream.
 
-    The stream schema is taken from a batch read of the SAME file (footer
-    only — no data scan), so whatever ts encoding the fixture carries
-    (nanos-as-long or timestamp[us]) the stream sees the same raw dtype as
-    batch, and the shared ``normalize_events_ts`` guard applies the same
-    conversion. Hardcoding a DDL here silently mis-read regenerated
-    fixtures (ts BIGINT read µs ints, div 1000 → 1970-era windows).
+    The stream schema is the batch loader's schema of the SAME file,
+    cached per (session, sf_dir) and refreshed when the file changes, so
+    whatever ts encoding the fixture carries (nanos-as-long or
+    timestamp[us]) the stream sees the same raw dtype as batch, and the
+    shared ``normalize_events_ts`` guard applies the same conversion.
+    Hardcoding a DDL here silently mis-read regenerated fixtures (ts
+    BIGINT read µs ints, div 1000 → 1970-era windows).
 
     ts is then cast to TIMESTAMP (LTZ): withWatermark rejects
     TIMESTAMP_NTZ event time. With the session timezone pinned to UTC the
     cast is value-preserving; outputs cast event-time columns back to NTZ
     (``_ntz``) so stream results stay dtype-identical with batch."""
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    # the fixture is a single parquet FILE — stream from the directory with
-    # a glob filter (the file source requires a directory basePath)
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _replay(spark, sf_dir, "events")
     return normalize_events_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -1137,13 +1145,7 @@ def stream_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(idx)
         )
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _replay(spark, sf_dir, "embeddings")
     ckpt = _ckpt_dir(f"cdr_ckpt_admit_{uuid.uuid4().hex[:8]}_")
     with _stream_state_partitions(spark):
         q = (
@@ -1181,13 +1183,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.llm_text import gopher_rules_filter
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _replay(spark, sf_dir, "documents")
     out_dir = tempfile.mkdtemp(prefix=f"cdr_stream_gate_{uuid.uuid4().hex[:8]}_")
     atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     sink = os.path.join(out_dir, "verdicts")

@@ -2,16 +2,18 @@
 
 Single entry point for all fixture access (SURVEY.md §7.0). Views are
 registered once per (session, sf_dir) and cached; switching sf_dir
-re-registers. Reads are plain ``spark.read.parquet`` so Catalyst keeps
-predicate pushdown / column pruning / vectorized scan on every query.
+re-registers, and ``point_views`` re-points just the views a query names.
+Reads are plain ``spark.read.parquet`` so Catalyst keeps predicate
+pushdown / column pruning / vectorized scan on every query.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from .session import tune_session
 
@@ -33,6 +35,9 @@ TABLE_NAMES = [
 BROADCAST_DIMS = {"region", "nation"}
 
 _loaded: dict[tuple[int, str], dict[str, DataFrame]] = {}
+# the same frames as read, before normalize_events_ts: their schemas are
+# the files' own, already resolved, so a stream source can reuse them
+_raw: dict[tuple[int, str], dict[str, DataFrame]] = {}
 # fixture fingerprint (mtime+size per file) captured when a cache entry
 # was built: a fixture regenerated UNDER THE SAME PATH mid-session (it
 # has happened between rounds) must invalidate the cached frames, whose
@@ -98,15 +103,16 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             return _loaded[key]
     tune_session(spark)
     fp = _fingerprint(sf_dir)
-    dfs = {}
+    dfs, raw = {}, {}
     for name in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        df = spark.read.parquet(path)
+        raw[name] = df = spark.read.parquet(path)
         if name == "events":
             df = normalize_events_ts(df)
         dfs[name] = df
         df.createOrReplaceTempView(name)
     _loaded[key] = dfs
+    _raw[key] = raw
     _fingerprints[key] = fp
     _active[sid] = sf_dir
     return dfs
@@ -116,3 +122,38 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # return the per-sf_dir frame directly (NOT spark.table(name): the
     # bare-name view may belong to a different sf_dir until re-pointed)
     return load_tables(spark, sf_dir)[name]
+
+
+_IDENT = re.compile(r"[A-Za-z_]\w*")
+
+
+def point_views(spark: SparkSession, sf_dir: str, *texts: str) -> None:
+    """Point the fixture views that ``texts`` name at ``sf_dir``'s frames.
+
+    Temp views are keyed by bare name, and anything may have re-pointed
+    one since ``load_tables`` registered it, so each named view is
+    registered again; views the texts do not name are left alone, since
+    each registration costs a py4j round trip. A name counts wherever
+    it appears as an identifier, case-insensitively: a column alias or a
+    string literal that spells a table name costs a spare registration,
+    never a missed one — pass literal-masked SQL to skip those. A view
+    over fixture tables (a helper view) reads whatever its tables' names
+    point at, so pass the helper's SQL too.
+    """
+    dfs = load_tables(spark, sf_dir)
+    named = {w.lower() for t in texts for w in _IDENT.findall(t)}
+    for name in TABLE_NAMES:
+        if name in named:
+            dfs[name].createOrReplaceTempView(name)
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet schema of fixture ``name`` as its file stores it (events
+    before ``normalize_events_ts``), from ``load_tables``' cache.
+
+    The frames' schemas were resolved when the cache entry was built, so
+    this runs no Spark job; a fixture rewritten under the same path
+    changes the fingerprint and rebuilds the entry.
+    """
+    load_tables(spark, sf_dir)
+    return _raw[(_session_id(spark), sf_dir)][name].schema

@@ -22,3 +22,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+def new_job_ids(spark, fn) -> list[int]:
+    """Run ``fn()`` under a fresh job group; return the ids of the Spark
+    jobs it launched, as the status tracker reports them."""
+    sc = spark.sparkContext
+    sc.setJobGroup("new_job_ids", "jobs launched by one call")
+    try:
+        fn()
+        return sorted(sc.statusTracker().getJobIdsForGroup("new_job_ids"))
+    finally:
+        for key in (
+            "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"
+        ):
+            sc.setLocalProperty(key, None)

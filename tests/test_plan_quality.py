@@ -1263,6 +1263,27 @@ def test_with_fill_runs_the_query_under_the_fill_once(spark):
     assert executed("ch_dialect_fill_interpolate").count("Window [") == 1
 
 
+def test_with_fill_is_one_window_one_generate_one_translate(spark, monkeypatch):
+    """The WITH FILL lowering is one SQL text over the query under the
+    fill: its executed plan holds exactly one Window (lead and lag share
+    it) and one Generate (one explode of the concatenated fills), and a
+    ch_sql call translates the query under the fill once."""
+    from clickhouse_data_rebalance_spark.plans import ch_dialect
+
+    translate, calls = ch_dialect.translate, []
+
+    def counting(sql):
+        calls.append(sql)
+        return translate(sql)
+
+    monkeypatch.setattr(ch_dialect, "translate", counting)
+    df = registry.QUERIES["ch_dialect_with_fill"](spark, SF_SMALL)
+    assert len(calls) == 1, calls
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("Window [") == 1, p
+    assert p.count("Generate ") == 1, p
+
+
 def test_curate_flagship_reuses_dedup_exchange(spark):
     """corpus_curate_e2e's mixture-plan side and rank side both hang off
     the curated (gate+dedup+verdict) subtree — Spark's ReuseExchange

@@ -4430,6 +4430,52 @@ def test_ch_sql_text_roundtrip(spark):
         assert "DataFrame" in str(e)
 
 
+def test_ch_sql_repoints_only_the_views_it_reads(spark, monkeypatch):
+    """ch_sql re-points the fixture views its query names — however they
+    were re-pointed since load_tables registered them — and no others;
+    the dialect demos whose helper views read fixture tables re-point
+    those tables before building the views."""
+    from clickhouse_data_rebalance_spark import registry
+    from clickhouse_data_rebalance_spark.plans.ch_dialect import ch_sql
+    from clickhouse_data_rebalance_spark.tables import load_tables
+
+    registry.load_all()
+    dfs = load_tables(spark, SF_SMALL)
+    n_orders = dfs["orders"].count()
+    # behind load_tables' back, as a test or notebook would
+    dfs["orders"].limit(3).createOrReplaceTempView("orders")
+    # record every temp view registered through a DataFrame from here on
+    names: list[str] = []
+    cls = type(dfs["orders"])
+    register = cls.createOrReplaceTempView
+
+    def spy(self, name):
+        names.append(name)
+        return register(self, name)
+
+    monkeypatch.setattr(cls, "createOrReplaceTempView", spy)
+    got = ch_sql(spark, SF_SMALL, "SELECT count(*) AS n FROM orders").collect()
+    assert got[0]["n"] == n_orders
+    assert names == ["orders"]
+    # a table name inside a string literal is data, not a read
+    names.clear()
+    ch_sql(spark, SF_SMALL, "SELECT 'lineitem' AS s FROM region")
+    assert names == ["region"]
+
+    for q, read in [
+        ("ch_ddl_roundtrip", "orders"),
+        ("ch_dialect_final", "events"),
+        ("ch_dialect_final_summing", "lineitem"),
+        ("ch_dialect_asof_join", "events"),
+        ("ch_dialect_any_join", "events"),
+    ]:
+        dfs[read].limit(0).createOrReplaceTempView(read)
+        names.clear()
+        df = registry.QUERIES[q](spark, SF_SMALL)
+        assert read in names, (q, names)
+        assert df.count() > 0, q
+
+
 def test_with_fill_desc_bounds_and_narrow_keys(spark):
     """Third-review regressions: direction-mismatched FROM/TO refuse
     (CH errors; silently emitting gap fills would change behavior) and

@@ -141,3 +141,15 @@ def test_crash_at_phase_boundary_recovers_on_rerun(spark, tmp_path, monkeypatch,
     assert len(files) == N_SHARDS
     assert _side_tables(spark, name) == []
     spark.sql(f"DROP TABLE {name}")
+
+
+def test_location_lookup_runs_no_spark_job(spark, tmp_path):
+    """The source location comes from DESCRIBE FORMATTED's local rows:
+    the lookup launches no Spark job and names the seeded directory."""
+    from .conftest import new_job_ids
+
+    _seed(spark, "pipe_loc", tmp_path / "seed")
+    found = []
+    assert new_job_ids(spark, lambda: found.append(pipeline._location(spark, "pipe_loc"))) == []
+    assert found[0].rstrip("/").endswith(str(tmp_path / "seed"))
+    spark.sql("DROP TABLE pipe_loc")

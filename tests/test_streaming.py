@@ -377,3 +377,56 @@ def test_ckpt_dirs_share_one_exit_hook():
         shutil.rmtree(theirs, ignore_errors=True)
         for d in mine:
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_replay_sources_build_without_a_spark_job(spark, tmp_path):
+    """Stream sources take the fixture's raw schema from the batch
+    loader's cache: building one runs no Spark job, the schema equals a
+    fresh read of the file, and a fixture rewritten under the same path
+    refreshes it."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, TimestampType
+
+    from clickhouse_data_rebalance_spark.streaming.stream_ops import (
+        _replay,
+        events_stream,
+    )
+    from clickhouse_data_rebalance_spark.tables import (
+        TABLE_NAMES,
+        load_tables,
+        raw_schema,
+    )
+
+    from .conftest import new_job_ids
+
+    load_tables(spark, SF_SMALL)
+    assert new_job_ids(spark, lambda: events_stream(spark, SF_SMALL)) == []
+    for name in ("embeddings", "documents"):
+        assert new_job_ids(spark, lambda: _replay(spark, SF_SMALL, name)) == []
+    for name in TABLE_NAMES:
+        fresh = spark.read.parquet(os.path.join(SF_SMALL, f"{name}.parquet")).schema
+        assert raw_schema(spark, SF_SMALL, name) == fresh, name
+
+    # the same fixtures under another path; then events.parquet is
+    # rewritten in place with nanosecond timestamps, which the session
+    # reads as longs (the other fixture vintage)
+    for name in TABLE_NAMES:
+        shutil.copy(os.path.join(SF_SMALL, f"{name}.parquet"), tmp_path)
+    sf = str(tmp_path)
+    events = os.path.join(sf, "events.parquet")
+    before = raw_schema(spark, sf, "events")["ts"].dataType
+    t = pq.read_table(events)
+    i = t.schema.get_field_index("ts")
+    pq.write_table(t.set_column(i, "ts", t["ts"].cast(pa.timestamp("ns"))), events)
+    try:
+        after = raw_schema(spark, sf, "events")
+        assert after == spark.read.parquet(events).schema
+        assert before != LongType() and after["ts"].dataType == LongType()
+        # normalize_events_ts still turns the long back into a timestamp
+        assert events_stream(spark, sf).schema["ts"].dataType == TimestampType()
+    finally:
+        load_tables(spark, SF_SMALL)  # point the views back
