@@ -155,7 +155,7 @@ def _cpu_calibration() -> float:
 
     Round-over-round bench totals have swung ±50% with IDENTICAL plans
     purely from driver-box hardware variance (r4→r5 A/B in
-    tools/bench_ab_r05.json: every session-level code toggle measured
+    tools/bench_ab_r05.json @ ff71c85: every session-level code toggle measured
     zero; the box's spin time fully explained the delta). Publishing the
     calibration constant with every run lets any two BENCH_r*.json files
     be compared hardware-normalized: query_sec / cal_spin_sec.
@@ -305,7 +305,7 @@ def _vs_prev(timings: dict, total: float, cal: float) -> dict:
     # committed local record (tools/bench_local_r{n}.json) — so one
     # unparseable driver artifact (r6) no longer skips a whole round
     # back (VERDICT r7 #2: r7 compared to r5 because BENCH_r06 was
-    # truncated while bench_local_r06.json held the full data)
+    # truncated while tools/bench_local_r06.json @ ff71c85 held the full data)
     # only rounds with a DRIVER artifact qualify (a committed local
     # record for the in-flight round must not become the comparison
     # target — same code, ratio ~1.0, no cross-round signal)

@@ -11,10 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
-def to_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
-
-
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),

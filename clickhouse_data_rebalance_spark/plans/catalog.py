@@ -23,7 +23,7 @@ runs once on the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
 def versioned_name(name: str, token: str) -> str:
@@ -153,11 +153,3 @@ def drop_versions(spark: SparkSession, name: str, tokens: list[str] | None = Non
             spark.sql(f"DROP TABLE {t}")
             dropped += 1
     return dropped
-
-
-def register_parquet(spark: SparkSession, name: str, path: str) -> DataFrame:
-    """Register an existing parquet dataset as a (temp view) table — the
-    analog of recreating originals so reads resolve (A8)."""
-    df = spark.read.parquet(path)
-    df.createOrReplaceTempView(name)
-    return df

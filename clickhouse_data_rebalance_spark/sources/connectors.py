@@ -4,9 +4,10 @@ The reference's only "sources" are ClickHouse system tables over SSH
 (sharding_recreation.py:275-298) and its sink is the server-side
 INSERT (:160). Spark-side, sources/sinks are first-class: parquet is
 the primary format (columnar, predicate pushdown, vectorized reader);
-csv/json/orc round-trips are provided for interchange; JDBC and
-lakehouse formats (Delta/Iceberg) need jars absent from this container,
-so they are stubbed behind import-tries with explicit errors.
+csv/json/orc round-trips are provided for interchange. Avro needs the
+external spark-avro module and refuses with an explicit error without
+it; JDBC and lakehouse formats (Delta/Iceberg) need jars and servers
+and have no wrapper here: use ``spark.read.jdbc`` or their packages.
 """
 
 from __future__ import annotations
@@ -136,30 +137,6 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("yr")
     )
-
-
-def jdbc_source(spark: SparkSession, url: str, dbtable: str, **options) -> DataFrame:
-    """JDBC connector — requires a driver jar on the classpath (absent in
-    this container)."""
-    try:
-        return (
-            spark.read.format("jdbc").options(url=url, dbtable=dbtable, **options).load()
-        )
-    except Exception as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "JDBC driver jar not available in this environment; add the driver "
-            "to spark.jars and retry"
-        ) from exc
-
-
-def delta_source(spark: SparkSession, path: str) -> DataFrame:
-    """Delta Lake connector stub — delta-spark jars not in this container."""
-    try:
-        return spark.read.format("delta").load(path)
-    except Exception as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "delta-spark not installed; add io.delta:delta-spark to spark.jars.packages"
-        ) from exc
 
 
 def avro_source(spark: SparkSession, path: str) -> DataFrame:

@@ -237,3 +237,30 @@ def test_pipeline_missing_table_raises(spark):
 
     with _pytest.raises(ValueError):
         resize_and_rebalance(spark, "no_such_tbl", 4, ["x"], location="/tmp/x")
+
+
+def test_catalog_introspection_list_and_ddl(spark, tmp_path):
+    """A1/A2, the reference's phase-1 introspection: a saved table is
+    listed, and its extracted DDL, run under a new name at a fresh
+    location, recreates the same schema."""
+    for t in ["tintro", "tintro_copy"]:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    src = spark.range(5).select(
+        F.col("id").alias("k"), F.col("id").cast("string").alias("s"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+    src.write.option("path", str(tmp_path / "tintro")).saveAsTable("tintro")
+    assert "tintro" in cat.list_tables(spark)
+
+    ddl = cat.show_create(spark, "tintro")
+    assert ddl.startswith("CREATE TABLE") and "tintro" in ddl
+    head, _, _ = ddl.partition("LOCATION")
+    copy_ddl = (
+        head.replace("tintro", "tintro_copy", 1)
+        + f"LOCATION '{tmp_path / 'tintro_copy'}'"
+    )
+    spark.sql(copy_ddl)
+    assert spark.table("tintro_copy").schema == spark.table("tintro").schema
+    assert spark.table("tintro_copy").count() == 0
+    for t in ["tintro", "tintro_copy"]:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")

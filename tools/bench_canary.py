@@ -8,7 +8,7 @@ regression is caught BEFORE commit instead of by diffing driver JSONs a
 round later.
 
 Hardware normalization: boxes differ ~1.5x between rounds with identical
-plans (see tools/bench_ab_r05.json). When both JSONs carry
+plans (see tools/bench_ab_r05.json @ ff71c85). When both JSONs carry
 ``cal_spin_sec`` (bench.py publishes it), times are scaled by the spin
 ratio first; without it the raw ratio is used and a warning printed.
 
@@ -34,9 +34,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def newest_reference() -> str:
-    # newest file that IS a bench record (side artifacts like
-    # bench_local_r09_anchor_runs.json sort after the record and carry
-    # no "queries" map — skip them)
+    # newest file that IS a bench record (side artifacts such as
+    # tools/bench_local_r09_anchor_runs.json @ ff71c85 sort after the
+    # record and carry no "queries" map — skip them)
     cands = sorted(glob.glob(os.path.join(REPO, "tools", "bench_local_r*.json")))
     for p in reversed(cands):
         try:
@@ -80,8 +80,8 @@ def main() -> None:
               "(cross-box runs may false-alarm)")
 
     # A flag requires BOTH the raw and the cal-normalized ratio above
-    # the threshold (r15, tools/ab_r15.md): the single-core spin and
-    # the 32-thread workload DECOUPLE — r14's box was 2x slower by
+    # the threshold (r15, tools/ab_r15.md @ ff71c85): the single-core
+    # spin and the 32-thread workload DECOUPLE — r14's box was 2x slower by
     # spin with flat raw times (raw-only would false-alarm), r15's box
     # turbos the spin while the workload holds (normalized-only
     # false-alarmed 8 queries whose raw times were all FASTER). A real
