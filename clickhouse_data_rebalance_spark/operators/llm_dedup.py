@@ -451,7 +451,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: `label` is the blocking key, so the pairwise cosine
     join is equi-partitioned per label group, never all-pairs. At corpus
     scale the same plan runs with the IVF cell assignment from
-    `build_ivf_index` (llm_similarity.py) as the blocking key — coarse
+    `_ivf_index_for` (llm_similarity.py) as the blocking key — coarse
     cells bound each group exactly like `label` does here."""
     from ..functions.vectors import norm, pair_cosine
 
@@ -491,7 +491,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB twin of the IVF cell assignment (llm_similarity.build_ivf_index):
+# DuckDB twin of the IVF cell assignment (llm_similarity._ivf_index_for):
 # seeds = the IVF_CLUSTERS lowest-vec_id vectors (cell number = seed rank),
 # cell = argmax cosine against the seeds, first-max tie-break — exactly the
 # pandas-UDF quantizer, so the oracle re-derives the same partition keys
@@ -542,7 +542,7 @@ def dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     convenience, but the IVF coarse quantizer exists for ANY embedding
     corpus, its cell count is a tuning knob (so block sizes are bounded
     by design), and the pairwise join reads the PERSISTED cell-partitioned
-    index from `build_ivf_index` — `cell` is a partition directory, not a
+    index from `_ivf_index_for` — `cell` is a partition directory, not a
     data column, so the self-join is equi-partitioned on a key the layout
     already materializes (and an incremental dedup of a new batch would
     partition-prune to the cells the batch actually touches)."""

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..registry import query
 from ..session import shuffle_partitions
-from ..tables import table
+from ..tables import derived_dir, memo, table
 from ..functions.vectors import cosine, norm, pair_cosine
 
 TOP_K = 10
@@ -234,7 +234,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- ANN variant 2: IVF (inverted file) with a PERSISTED index --------------
-# Build/probe split: `build_ivf_index` assigns every vector to a coarse-
+# Build/probe split: `_ivf_index_for` assigns every vector to a coarse-
 # quantizer cell and writes the corpus partitioned BY cell; the query path
 # only probes — a cell-filtered read that partition-prunes to the probed
 # directories. At 100 TB the build is a one-time (or incremental) job and
@@ -310,35 +310,6 @@ def _make_cell_udf(C):
     return cell_of
 
 
-def build_ivf_index(
-    e: DataFrame, index_path: str, n_clusters: int = IVF_CLUSTERS
-) -> None:
-    """Assign cells and persist the corpus partitioned by cell — the
-    write-once side of the index. One numpy matmul per Arrow batch; the
-    partitionBy layout is what lets probes prune directories."""
-    C = _ivf_seed_matrix(e, n_clusters)
-    cell_of = _make_cell_udf(C)
-    (
-        e.withColumn("cell", cell_of("embedding"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(index_path)
-    )
-
-
-def _ivf_src_fp(sf_dir: str, filename: str = "embeddings.parquet") -> str:
-    """Source fingerprint (mtime_ns:size) of a fixture table file — the
-    staleness key every on-disk/in-process cache in this module (and
-    llm_text's BM25 frame cache) derives from."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, filename))
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return "missing"
-
-
 def pinned_index_frame(spark: SparkSession, path: str) -> DataFrame:
     """Snapshot-pinned read of a persisted index generation: resolve the
     generation's concrete data FILES once, at pin time, and build the
@@ -347,7 +318,7 @@ def pinned_index_frame(spark: SparkSession, path: str) -> DataFrame:
     cell/bucket directories cannot change this frame's answers — the
     snapshot-isolation analog of the reference's rename swap
     (sharding_recreation.py:306-335) applied to index layout, and the
-    read-side contract the `_KEY`/generation markers exist for
+    read-side contract the per-generation `_KEY` directories exist for
     (VERDICT r8 #6). Partition pruning on the explicit file set is
     unchanged (plan-asserted in test_plan_quality).
 
@@ -397,33 +368,6 @@ _PIN_CACHE: "_collections.OrderedDict" = _collections.OrderedDict()
 _PIN_CACHE_MAX = 64
 
 
-def _gc_stale_indexes(sf_dir: str, src_fp: str) -> None:
-    """Prune index generations that can never be probed again: sibling
-    dirs under _IVF_ROOT whose _KEY records THIS corpus path with a
-    DIFFERENT source fingerprint (a regenerated fixture orphans the old
-    build — previously these accumulated forever), plus dirs with no
-    _KEY at all (pre-marker layouts; rebuilding is cheap and correct).
-    Dirs for other corpus paths or other (k, generation) variants of the
-    live fingerprint are kept."""
-    import os
-    import shutil
-
-    if not os.path.isdir(_IVF_ROOT):
-        return
-    for name in os.listdir(_IVF_ROOT):
-        d = os.path.join(_IVF_ROOT, name)
-        if not os.path.isdir(d):
-            continue
-        try:
-            recorded = open(os.path.join(d, "_KEY")).read()
-        except OSError:
-            shutil.rmtree(d, ignore_errors=True)
-            continue
-        parts = recorded.split("|")
-        if len(parts) >= 2 and parts[0] == sf_dir and parts[1] != src_fp:
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def _ivf_index_for(
     spark: SparkSession,
     sf_dir: str,
@@ -432,53 +376,25 @@ def _ivf_index_for(
 ) -> str:
     """Build the index for this corpus once; later queries reuse it.
 
-    The cache key fingerprints the SOURCE (embeddings.parquet mtime_ns +
-    size, mirroring tables._fingerprint) in addition to the path, the
-    cluster count, and the index GENERATION ("seed" = medoid-seeded
-    quantizer, "refined" = one-Lloyd-step k-means centroids from
-    `refined_centroids`): a fixture regenerated UNDER THE SAME PATH —
-    the exact drift that has burned prior rounds, and which survives
-    process restarts when the key is path-only — lands on a fresh index
-    directory and triggers a rebuild instead of silently probing stale
-    cells. Each build writes its key to `_KEY` and GCs siblings of the
-    same corpus with dead fingerprints."""
-    import hashlib
-    import os
+    A `tables.derived_dir` of embeddings.parquet per cluster count and
+    GENERATION: "seed" (medoid-seeded quantizer), "refined" (one-Lloyd-
+    step k-means centroids from `refined_centroids`) or "pq" (seed cells
+    plus 8-bit PQ codes: the IVF-PQ layout, whose ADC probes read the
+    16-byte code column, never the vectors). Every generation writes the
+    corpus partitioned by the cell of the very matrix `_ivf_centroids`
+    serves the probes, so probe ranking and layout cannot disagree."""
+    quantizer = "seed" if generation == "pq" else generation
 
-    src_fp = _ivf_src_fp(sf_dir)
-    key = f"{sf_dir}|{src_fp}|k={n_clusters}|gen={generation}"
-    path = os.path.join(_IVF_ROOT, hashlib.md5(key.encode()).hexdigest()[:16])
-    _gc_stale_indexes(sf_dir, src_fp)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        e = table(spark, sf_dir, "embeddings")
-        if generation == "seed":
-            build_ivf_index(e, path, n_clusters)
-        elif generation == "refined":
-            C1n = _ivf_centroids(spark, sf_dir, n_clusters, "refined")
-            cell_of = _make_cell_udf(C1n)
-            (
-                e.withColumn("cell", cell_of("embedding"))
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(path)
-            )
-        elif generation == "pq":
-            # seed cells + 8-bit PQ codes: the IVF-PQ layout — ADC
-            # probes read the 16-byte code column, never the vectors
-            cell_of = _make_cell_udf(_ivf_seed_matrix(e, n_clusters))
-            enc = _make_pq_codes_udf(_ann_pq_codebook(spark, sf_dir))
-            (
-                e.withColumn("cell", cell_of("embedding"))
-                .withColumn("pq_codes", enc("embedding"))
-                .write.mode("overwrite")
-                .partitionBy("cell")
-                .parquet(path)
-            )
-        else:
-            raise ValueError(f"unknown IVF index generation: {generation!r}")
-        with open(os.path.join(path, "_KEY"), "w") as f:
-            f.write(key)
-    return path
+    def build(path: str) -> None:
+        cell_of = _make_cell_udf(_ivf_centroids(spark, sf_dir, n_clusters, quantizer))
+        df = table(spark, sf_dir, "embeddings").withColumn("cell", cell_of("embedding"))
+        if generation == "pq":
+            cb = _pq_codebook(spark, sf_dir, ANN_PQ_K, ANN_PQ_M, ANN_PQ_SUB)
+            df = df.withColumn("pq_codes", _make_pq_codes_udf(cb)("embedding"))
+        df.write.mode("overwrite").partitionBy("cell").parquet(path)
+
+    spec = f"k={n_clusters}|gen={generation}"
+    return derived_dir(_IVF_ROOT, sf_dir, "embeddings.parquet", spec, build)
 
 
 def rebuild_ivf_index(
@@ -628,9 +544,6 @@ def refined_centroids(
     return C
 
 
-_CENTROID_CACHE: dict = {}
-
-
 def _ivf_centroids(
     spark: SparkSession,
     sf_dir: str,
@@ -638,30 +551,25 @@ def _ivf_centroids(
     generation: str = "seed",
 ):
     """Row-normalized (K, dim) quantizer matrix for a generation — the
-    SAME matrix the matching index build partitioned by, so probe
-    ranking and cell layout can never disagree.
+    one source of the matrix every index build, admission and probe
+    assigns cells with.
 
-    Memoized per (corpus path, source fingerprint, k, generation): the
-    matrix is index METADATA (K·dim floats) that every probe needs, and
-    without the memo each probe call re-ran a Spark collect job for it —
-    measured ~0.3 s per query, pure overhead on the hot path. The
-    fingerprint key gives the same staleness guarantee as the index
-    cache: a regenerated corpus misses and recomputes."""
+    Memoized per corpus fingerprint (`tables.memo`): the matrix is index
+    METADATA (K·dim floats) that every probe needs, and without the memo
+    each probe call re-ran a Spark collect job for it — measured ~0.3 s
+    per query, pure overhead on the hot path."""
     import numpy as np
 
-    key = (sf_dir, _ivf_src_fp(sf_dir), n_clusters, generation)
-    hit = _CENTROID_CACHE.get(key)
-    if hit is not None:
-        return hit
-    if generation == "seed":
-        C = _ivf_seed_matrix(table(spark, sf_dir, "embeddings"), n_clusters)
-    elif generation == "refined":
-        C1 = refined_centroids(spark, sf_dir, n_clusters)
-        C = C1 / np.maximum(np.linalg.norm(C1, axis=1, keepdims=True), 1e-12)
-    else:
+    def compute():
+        if generation == "seed":
+            return _ivf_seed_matrix(table(spark, sf_dir, "embeddings"), n_clusters)
+        if generation == "refined":
+            C1 = refined_centroids(spark, sf_dir, n_clusters)
+            return C1 / np.maximum(np.linalg.norm(C1, axis=1, keepdims=True), 1e-12)
         raise ValueError(f"unknown IVF index generation: {generation!r}")
-    _CENTROID_CACHE[key] = C
-    return C
+
+    key = f"centroids|k={n_clusters}|gen={generation}"
+    return memo(sf_dir, "embeddings.parquet", key, compute)
 
 
 @query("ivf_kmeans_cells", _kmeans_oracle())
@@ -677,11 +585,7 @@ def ivf_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     is metadata, and re-assignment is the same one-matmul-per-batch
     pandas UDF the index build uses. An N-iteration refine is this in a
     loop; each iteration costs one corpus scan and no corpus shuffle."""
-    import numpy as np
-
-    C1 = refined_centroids(spark, sf_dir)
-    C1n = C1 / np.maximum(np.linalg.norm(C1, axis=1, keepdims=True), 1e-12)
-    cell_of = _make_cell_udf(C1n)
+    cell_of = _make_cell_udf(_ivf_centroids(spark, sf_dir, generation="refined"))
     idx = pinned_index_frame(spark, _ivf_index_for(spark, sf_dir))
     return (
         idx.select("vec_id", cell_of("embedding").alias("cell"))
@@ -795,7 +699,7 @@ def knn_join_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-cell-blocked pairwise variants: the corpus-scale blocking the
 # label-blocked queries' docstrings promise. The oracle re-derives the
 # quantizer (seeds = K lowest-vec_id vectors, argmax-cosine assignment,
-# first-max tie-break) exactly as `build_ivf_index` computes it — the
+# first-max tie-break) exactly as `_ivf_index_for` computes it — the
 # same cross-engine derivation `dedup_embedding_cosine_ivf` proved out.
 _IVF_ASSIGN_CTE = """
     WITH seeds AS (
@@ -837,7 +741,7 @@ def knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch k-NN join blocked by IVF CELL — the 100 TB form of
     `knn_join` (whose label key is a fixture convenience that goes
     quadratic the moment one label dominates). Reads the PERSISTED
-    cell-partitioned index from `build_ivf_index`: `cell` is a partition
+    cell-partitioned index from `_ivf_index_for`: `cell` is a partition
     directory, so the pairwise self-join is equi-partitioned on a key
     the layout already materializes, pair count is bounded by the sum of
     squared CELL sizes (a knob, via the cluster count), and the rank
@@ -1035,15 +939,20 @@ PQ_M, PQ_K, PQ_SUB = 4, 16, 16
 PQ_SCALE = 1 << 20
 
 
-def _pq_codebook(e: DataFrame):
-    """(M, K, PQ_SUB) int64-quantized codebook from the K lowest-vec_id
-    vectors — index metadata, a K-row collect (not a data path)."""
+def _pq_codebook(spark: SparkSession, sf_dir: str, k: int, m: int, sub: int):
+    """(m, k, sub) int64-quantized codebook from the k lowest-vec_id
+    vectors (fewer on a smaller corpus) — index metadata, a k-row
+    collect (not a data path), memoized per corpus fingerprint."""
     import numpy as np
 
-    rows = e.orderBy("vec_id").select("embedding").limit(PQ_K).collect()
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    Q = np.floor(X * PQ_SCALE).astype(np.int64)  # (K, dim)
-    return Q.reshape(PQ_K, PQ_M, PQ_SUB).transpose(1, 0, 2).copy()
+    def compute():
+        e = table(spark, sf_dir, "embeddings")
+        rows = e.orderBy("vec_id").select("embedding").limit(k).collect()
+        X = np.array([r["embedding"] for r in rows], dtype=np.float64)
+        Q = np.floor(X * PQ_SCALE).astype(np.int64)  # (k, dim)
+        return Q.reshape(len(X), m, sub).transpose(1, 0, 2).copy()
+
+    return memo(sf_dir, "embeddings.parquet", f"pq_codebook|k={k}|m={m}|sub={sub}", compute)
 
 
 def _make_pq_udf(cb):
@@ -1136,7 +1045,7 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     refinement would drop in exactly as `ivf_kmeans_cells` does for
     the coarse quantizer."""
     e = table(spark, sf_dir, "embeddings")
-    enc = _make_pq_udf(_pq_codebook(e))
+    enc = _make_pq_udf(_pq_codebook(spark, sf_dir, PQ_K, PQ_M, PQ_SUB))
     d = e.select("vec_id", enc("embedding").alias("pq"))
     return d.select(
         "vec_id",
@@ -1174,27 +1083,6 @@ ANN_PQ_M = 16
 ANN_PQ_K = 256
 ANN_PQ_SUB = EMBED_DIM // ANN_PQ_M
 PQ_SHORTLIST = 128
-
-_PQ_CB_CACHE: dict = {}
-
-
-def _ann_pq_codebook(spark: SparkSession, sf_dir: str):
-    """(M, K, SUB) int64 search-grade codebook — index metadata (a
-    K-row collect, same class as the IVF seed matrix), memoized per
-    corpus fingerprint like `_ivf_centroids`."""
-    import numpy as np
-
-    key = (sf_dir, _ivf_src_fp(sf_dir))
-    hit = _PQ_CB_CACHE.get(key)
-    if hit is not None:
-        return hit
-    e = table(spark, sf_dir, "embeddings")
-    rows = e.orderBy("vec_id").select("embedding").limit(ANN_PQ_K).collect()
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    Q = np.floor(X * PQ_SCALE).astype(np.int64)  # (kk, dim)
-    cb = Q.reshape(len(X), ANN_PQ_M, ANN_PQ_SUB).transpose(1, 0, 2).copy()
-    _PQ_CB_CACHE[key] = cb
-    return cb
 
 
 def _make_pq_codes_udf(cb):
@@ -1257,7 +1145,7 @@ def ann_pq_topk(
     qn = qv / np.linalg.norm(qv)
     probe = [int(c) for c in np.argsort(-(C @ qn))[:n_probes]]
 
-    cb = _ann_pq_codebook(spark, sf_dir)
+    cb = _pq_codebook(spark, sf_dir, ANN_PQ_K, ANN_PQ_M, ANN_PQ_SUB)
     Qq = np.floor(qv * PQ_SCALE).astype(np.int64).reshape(ANN_PQ_M, ANN_PQ_SUB)
     ipt = np.einsum("ms,mks->mk", Qq, cb)  # (M, K) query-dot tables
     nt = (cb**2).sum(axis=2)  # (M, K) reconstructed |x|^2 tables
@@ -1515,13 +1403,10 @@ def ivf_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a rebuild. The quantizer is FROZEN (same seed matrix that built the
 # index: reassigning the corpus is exactly the full rebuild this op
 # exists to avoid); the batch's rows append into their assigned cell
-# partitions only, and the generation marker bumps so probes can pin a
+# partitions only, into a new generation directory so probes can pin a
 # layout. The admitted batch models re-arrivals: every base vector with
 # vec_id % 100 == 3 returns under a new id (+ the data-derived offset).
 ADMIT_MOD, ADMIT_REM = 100, 3
-
-
-_ADMIT_OFFSET_CACHE: dict = {}
 
 
 def admit_id_offset(spark: SparkSession, sf_dir: str) -> int:
@@ -1530,21 +1415,23 @@ def admit_id_offset(spark: SparkSession, sf_dir: str) -> int:
     corpus size (a fixed constant breaks the moment real ids reach it;
     the repo's own 1M-vector scale test sits exactly at the old
     1_000_000 boundary). One MAX aggregate, memoized per corpus
-    fingerprint (a plain int — session-independent, safe to cache) so
-    the admit/compact/accounting call sites don't each pay a scan."""
-    key = (sf_dir, _ivf_src_fp(sf_dir))
-    hit = _ADMIT_OFFSET_CACHE.get(key)
-    if hit is not None:
-        return hit
-    e = table(spark, sf_dir, "embeddings")
-    mx = e.agg(F.max("vec_id")).collect()[0][0]
-    off = int(mx) + 1 if mx is not None else 1  # empty corpus: offset 1
-    _ADMIT_OFFSET_CACHE[key] = off
-    return off
+    fingerprint (`tables.memo`) so the admit/compact/accounting call
+    sites don't each pay a scan."""
+
+    def compute() -> int:
+        mx = table(spark, sf_dir, "embeddings").agg(F.max("vec_id")).collect()[0][0]
+        return int(mx) + 1 if mx is not None else 1  # empty corpus: offset 1
+
+    return memo(sf_dir, "embeddings.parquet", "admit_id_offset", compute)
 
 
-def admit_batch_into_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Append the arriving batch into the cell layout at ``path``.
+def admit_batch_into_index(
+    spark: SparkSession, sf_dir: str, path: str, arriving: DataFrame | None = None
+) -> None:
+    """Append the arriving batch into the cell layout at ``path``:
+    the admit subset of ``arriving`` (default: the whole corpus; a
+    stream passes each micro-batch), re-keyed past `admit_id_offset`
+    and assigned cells by the frozen seed quantizer.
 
     Spark's ``mode("append").partitionBy("cell")`` writes files ONLY
     under the cell directories present in the batch — untouched cell
@@ -1552,11 +1439,12 @@ def admit_batch_into_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     file-level invariant test_ivf_admit_touches_only_batch_cells pins).
     At 100 TB a 0.1%-of-corpus batch touching 1/10th of the cells costs
     one batch-sized write, not an index rewrite."""
-    e = table(spark, sf_dir, "embeddings")
+    if arriving is None:
+        arriving = table(spark, sf_dir, "embeddings")
     offset = admit_id_offset(spark, sf_dir)
-    cell_of = _make_cell_udf(_ivf_seed_matrix(e))
+    cell_of = _make_cell_udf(_ivf_centroids(spark, sf_dir))
     batch = (
-        e.filter(F.col("vec_id") % ADMIT_MOD == ADMIT_REM)
+        arriving.filter(F.col("vec_id") % ADMIT_MOD == ADMIT_REM)
         .select(
             (F.col("vec_id") + offset).alias("vec_id"),
             "embedding",
@@ -1601,28 +1489,15 @@ def _admit_cell_accounting(idx: DataFrame, offset: int) -> DataFrame:
 
 
 def _admitted_index_for(spark: SparkSession, sf_dir: str) -> str:
-    """One-time: clone the seed-generation index at file level (test
-    isolation — production appends in place; the clone keeps the shared
-    seed index pristine for the other registered probes), admit the
-    batch, bump the generation marker. Idempotent per (corpus
-    fingerprint, k) exactly like `_ivf_index_for`."""
-    import hashlib
-    import os
-    import shutil
-
-    seed_path = _ivf_index_for(spark, sf_dir)
-    src_fp = _ivf_src_fp(sf_dir)
-    key = f"{sf_dir}|{src_fp}|k={IVF_CLUSTERS}|gen=admitted"
-    path = os.path.join(_IVF_ROOT, hashlib.md5(key.encode()).hexdigest()[:16])
-    if not os.path.exists(os.path.join(path, "_ADMITTED")):
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.copytree(seed_path, path)
-        admit_batch_into_index(spark, sf_dir, path)
-        with open(os.path.join(path, "_KEY"), "w") as f:
-            f.write(key)
-        with open(os.path.join(path, "_ADMITTED"), "w") as f:
-            f.write("generation=admitted")  # the bump, post-append
-    return path
+    """One-time: clone the seed-generation index (test isolation —
+    production appends in place; the clone keeps the shared seed index
+    pristine for the other registered probes) and admit the batch into
+    the clone — a `tables.derived_dir` generation of the seed."""
+    return derived_dir(
+        _IVF_ROOT, sf_dir, "embeddings.parquet", f"k={IVF_CLUSTERS}|gen=admitted",
+        lambda path: admit_batch_into_index(spark, sf_dir, path),
+        base=_ivf_index_for(spark, sf_dir),
+    )
 
 
 _IVF_ADMIT_ORACLE = (
@@ -1692,20 +1567,10 @@ def compact_ivf_cells(spark: SparkSession, path: str, cells: list[int]) -> None:
 
 
 def _compacted_index_for(spark: SparkSession, sf_dir: str) -> str:
-    """One-time: clone the ADMITTED generation, compact its fragmented
-    (batch-touched) cells, bump the generation marker."""
-    import hashlib
-    import os
-    import shutil
+    """One-time: clone the ADMITTED generation and compact its
+    fragmented (batch-touched) cells."""
 
-    admitted = _admitted_index_for(spark, sf_dir)
-    src_fp = _ivf_src_fp(sf_dir)
-    key = f"{sf_dir}|{src_fp}|k={IVF_CLUSTERS}|gen=compacted"
-    path = os.path.join(_IVF_ROOT, hashlib.md5(key.encode()).hexdigest()[:16])
-    if not os.path.exists(os.path.join(path, "_COMPACTED")):
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.copytree(admitted, path)
-        os.remove(os.path.join(path, "_ADMITTED"))
+    def build(path: str) -> None:
         offset = admit_id_offset(spark, sf_dir)
         touched = [
             int(r["cell"])
@@ -1716,11 +1581,11 @@ def _compacted_index_for(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         ]
         compact_ivf_cells(spark, path, touched)
-        with open(os.path.join(path, "_KEY"), "w") as f:
-            f.write(key)
-        with open(os.path.join(path, "_COMPACTED"), "w") as f:
-            f.write("generation=compacted")
-    return path
+
+    return derived_dir(
+        _IVF_ROOT, sf_dir, "embeddings.parquet", f"k={IVF_CLUSTERS}|gen=compacted",
+        build, base=_admitted_index_for(spark, sf_dir),
+    )
 
 
 _IVF_COMPACT_ORACLE = (

@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from ..registry import query
-from ..tables import table
+from ..tables import derived_dir, memo, table
 from ..functions.text import BPE_ISH_RE, LANG_MARKERS, fingerprint, marker_count, tokens
 from .llm_similarity import pinned_index_frame
 from ._util import sql_hex_bigint
@@ -1036,7 +1036,7 @@ _BM25_TERM_SQL = (
 # memoized slim frame per (SESSION, corpus path, fingerprint, terms):
 # repeated invocations — bench best-of-N, hybrid fusion, the driver
 # suite — reuse ONE persisted projection instead of leaking a fresh
-# cached copy per call. Unlike _CENTROID_CACHE (session-independent
+# cached copy per call. Unlike `tables.memo` values (session-independent
 # numpy), these entries hold DataFrames, which die with their
 # SparkSession — the session id in the key prevents a stopped-context
 # hit (same reason tables.load_tables keys by _session_id). Stale
@@ -1050,11 +1050,10 @@ def _bm25_per_frame(spark: SparkSession, sf_dir: str, terms: tuple):
     per-doc dl + tf per term via rowwise higher-order ``filter`` (no
     explode, no shuffle), stats (N, Σdl, per-term df) as ONE
     metadata-sized global aggregate."""
-    from ..tables import _session_id
-    from .llm_similarity import _ivf_src_fp
+    from ..tables import _session_id, source_fp
 
     sid = _session_id(spark)
-    fp = _ivf_src_fp(sf_dir, "documents.parquet")
+    fp = source_fp(sf_dir, "documents.parquet")
     key = (sid, sf_dir, fp, terms)
     hit = _BM25_FRAME_CACHE.get(key)
     if hit is not None:
@@ -1375,69 +1374,44 @@ def _bm25_index_for(spark: SparkSession, sf_dir: str) -> str:
     (bucket, word, doc_id, tf, dl), termstats (bucket, word, df), meta
     (n, sdl). One explode + one grouped exchange at build time — the
     cost the probe path never pays again."""
-    import hashlib
     import os
 
-    from .llm_similarity import _ivf_src_fp
+    def build(path: str) -> None:
+        d = table(spark, sf_dir, "documents")
+        toks = d.select(
+            "doc_id",
+            F.size(tokens("text")).cast("bigint").alias("dl"),
+            F.explode(tokens(F.lower(F.col("text")))).alias("word"),
+        )
+        postings = (
+            toks.groupBy("word", "doc_id", "dl")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+            .withColumn("bucket", _bm25_bucket_col(F.col("word")))
+        )
+        (
+            postings.repartition(BM25_BUCKETS, "bucket")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(os.path.join(path, "postings"))
+        )
+        termstats = (
+            spark.read.parquet(os.path.join(path, "postings"))
+            .groupBy("bucket", "word")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+        )
+        (
+            termstats.repartition(BM25_BUCKETS, "bucket")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(os.path.join(path, "termstats"))
+        )
+        d.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(F.size(tokens("text")).cast("bigint")).alias("sdl"),
+        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "meta"))
 
-    fp = _ivf_src_fp(sf_dir, "documents.parquet")
-    key = f"{sf_dir}|{fp}|bm25|b={BM25_BUCKETS}"
-    path = os.path.join(_BM25_IDX_ROOT, hashlib.md5(key.encode()).hexdigest()[:16])
-    # GC dead generations for this corpus (same discipline as the IVF
-    # root's _gc_stale_indexes): a regenerated fixture must not strand
-    # unreachable index dirs forever
-    if os.path.isdir(_BM25_IDX_ROOT):
-        import shutil
-
-        for name in os.listdir(_BM25_IDX_ROOT):
-            d = os.path.join(_BM25_IDX_ROOT, name)
-            if not os.path.isdir(d):
-                continue  # stray file: not ours to delete (IVF GC rule)
-            try:
-                recorded = open(os.path.join(d, "_BUILT")).read()
-            except OSError:
-                shutil.rmtree(d, ignore_errors=True)
-                continue
-            parts = recorded.split("|")
-            if len(parts) >= 2 and parts[0] == sf_dir and parts[1] != fp:
-                shutil.rmtree(d, ignore_errors=True)
-    if os.path.exists(os.path.join(path, "_BUILT")):
-        return path
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.size(tokens("text")).cast("bigint").alias("dl"),
-        F.explode(tokens(F.lower(F.col("text")))).alias("word"),
-    )
-    postings = (
-        toks.groupBy("word", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .withColumn("bucket", _bm25_bucket_col(F.col("word")))
-    )
-    (
-        postings.repartition(BM25_BUCKETS, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
-    termstats = (
-        spark.read.parquet(os.path.join(path, "postings"))
-        .groupBy("bucket", "word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
-    (
-        termstats.repartition(BM25_BUCKETS, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "termstats"))
-    )
-    d.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.size(tokens("text")).cast("bigint")).alias("sdl"),
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "meta"))
-    with open(os.path.join(path, "_BUILT"), "w") as f:
-        f.write(key)
-    return path
+    spec = f"bm25|b={BM25_BUCKETS}"
+    return derived_dir(_BM25_IDX_ROOT, sf_dir, "documents.parquet", spec, build)
 
 
 @query("bm25_inverted_topk", _BM25_ORACLE)
@@ -1717,9 +1691,14 @@ BM25_ADMIT_MOD, BM25_ADMIT_REM = 100, 3
 
 
 def _bm25_doc_offset(spark: SparkSession, sf_dir: str) -> int:
-    d = table(spark, sf_dir, "documents")
-    mx = d.agg(F.max("doc_id")).collect()[0][0]
-    return int(mx) + 1 if mx is not None else 1
+    """1 + max doc_id, memoized per corpus fingerprint like the IVF
+    twin `admit_id_offset`."""
+
+    def compute() -> int:
+        mx = table(spark, sf_dir, "documents").agg(F.max("doc_id")).collect()[0][0]
+        return int(mx) + 1 if mx is not None else 1
+
+    return memo(sf_dir, "documents.parquet", "bm25_doc_offset", compute)
 
 
 def bm25_admit_batch(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -1778,28 +1757,13 @@ def bm25_admit_batch(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 def _bm25_admitted_index_for(spark: SparkSession, sf_dir: str) -> str:
     """One-time: clone the base inverted index (test isolation —
-    production appends in place), admit the batch, mark the
-    generation."""
-    import hashlib
-    import os
-    import shutil
-
-    from .llm_similarity import _ivf_src_fp
-
-    base = _bm25_index_for(spark, sf_dir)
-    fp = _ivf_src_fp(sf_dir, "documents.parquet")
-    key = f"{sf_dir}|{fp}|bm25|b={BM25_BUCKETS}|gen=admitted"
-    path = os.path.join(_BM25_IDX_ROOT, hashlib.md5(key.encode()).hexdigest()[:16])
-    if not os.path.exists(os.path.join(path, "_ADMITTED")):
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.copytree(base, path)
-        os.remove(os.path.join(path, "_BUILT"))
-        bm25_admit_batch(spark, sf_dir, path)
-        with open(os.path.join(path, "_BUILT"), "w") as f:
-            f.write(key)
-        with open(os.path.join(path, "_ADMITTED"), "w") as f:
-            f.write("generation=admitted")
-    return path
+    production appends in place) and admit the batch into the clone —
+    a `tables.derived_dir` generation of the base."""
+    return derived_dir(
+        _BM25_IDX_ROOT, sf_dir, "documents.parquet", f"bm25|b={BM25_BUCKETS}|gen=admitted",
+        lambda path: bm25_admit_batch(spark, sf_dir, path),
+        base=_bm25_index_for(spark, sf_dir),
+    )
 
 
 _BM25_ADMIT_ORACLE = f"""

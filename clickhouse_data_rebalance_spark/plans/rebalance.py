@@ -131,11 +131,3 @@ def compact_parquet(
     out.write.mode("overwrite").parquet(dst_path)
     return out
 
-
-def insert_select(
-    spark: SparkSession, dst_table: str, select_sql: str, overwrite: bool = False
-) -> None:
-    """C39: INSERT INTO … SELECT between registered tables — the literal
-    shape of the reference's rebalance query (sharding_recreation.py:160)."""
-    mode = "OVERWRITE TABLE" if overwrite else "INTO"
-    spark.sql(f"INSERT {mode} {dst_table} {select_sql}")

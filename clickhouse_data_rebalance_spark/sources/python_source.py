@@ -419,9 +419,8 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit in miniature); write() streams the iterator, state per task
     is one open file handle."""
     import json
-    import shutil as _shutil
-    import tempfile as _tempfile
 
+    from ..streaming.stream_ops import _ckpt_dir
     from ..tables import table as _table
 
     tune_session(spark)
@@ -430,10 +429,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(_make_jsonl_sink())
         _registered_sessions.add(key)
     n = _table(spark, sf_dir, "nation")
-    out_dir = _tempfile.mkdtemp(prefix="cdr_jsonl_sink_")
-    import atexit as _atexit
-
-    _atexit.register(_shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = _ckpt_dir("cdr_ckpt_jsonl_sink_")
     n.write.format("jsonlines_sink").option("path", out_dir).mode(
         "append"
     ).save()

@@ -169,13 +169,14 @@ def _ckpt_dir(prefix: str) -> str:
     Lifecycle: callers rmtree the dir once their query terminates (it is
     dead weight in RAM on tmpfs). Each dir embeds its creator's PID, and
     ONE atexit hook per process, ``_remove_own_ckpts``, removes whatever
-    of this process's dirs remain — error paths, and
-    statestore_introspection's lazily read checkpoint — so a long session
-    does not pile up one exit callback per replay. Orphaned siblings are
-    reaped opportunistically — the same no-accumulation rule the IVF
-    index GC applies — but only when their owner is DEAD: age alone must
-    never delete a checkpoint a live process still reads (e.g. a >1 h
-    sibling session's active stream).
+    of this process's dirs remain — error paths, and dirs a lazily read
+    result lives in (statestore_introspection's checkpoint, the files
+    the stream and sink queries return a frame over) — so a long session
+    does not pile up one exit callback per call. Orphaned siblings are
+    reaped opportunistically — the same no-accumulation rule as the index
+    GC in ``tables.derived_dir`` — but only when their owner is DEAD: age
+    alone must never delete a checkpoint a live process still reads (e.g.
+    a >1 h sibling session's active stream).
     """
     for stale in glob.glob(os.path.join(_CKPT_BASE, "cdr_ckpt_*__pid*_*")):
         try:
@@ -537,7 +538,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never overwrites the files it is reading — the same new-version-
     # then-swap discipline as plans/catalog.py, and no managed-table
     # location that a dead session could leave behind to be adopted
-    root = tempfile.mkdtemp(prefix=f"cdr_upsert_{uuid.uuid4().hex[:8]}_")
+    root = _ckpt_dir("cdr_ckpt_upsert_state_")
     state: dict[str, str] = {}
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
@@ -1094,7 +1095,7 @@ def _ivf_admit_stream_oracle() -> str:
 def stream_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVF index admission: the arriving embedding stream's
     admit subset (vec_id % ADMIT_MOD == ADMIT_REM, re-keyed) is appended
-    into a cell-partitioned index clone per MICRO-BATCH via foreachBatch
+    into the cell layout per MICRO-BATCH via foreachBatch
     — the always-on form of the `ivf_index_admit` daily job. The
     quantizer stays frozen (broadcast seed matrix closed over by the
     batch function); each micro-batch write touches only its own cells.
@@ -1102,7 +1103,8 @@ def stream_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Must hash-match `ivf_index_admit`'s ORACLE verbatim: a stream≡batch
     equivalence on a stateful INDEX sink — final physical layout counts
     equal the batch-derived base+batch arithmetic no matter how the
-    stream was micro-batched.
+    stream was micro-batched. Each micro-batch appends into a delta
+    layout beside the seed index; the accounting reads seed ∪ delta.
 
     Scale: per-batch cost is batch-sized (assign matmul + append);
     index size never enters. Checkpointing makes replays idempotent-ish
@@ -1112,38 +1114,19 @@ def stream_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..operators.llm_similarity import (
-        ADMIT_MOD,
-        ADMIT_REM,
         _admit_cell_accounting,
         _ivf_index_for,
-        _ivf_seed_matrix,
-        _make_cell_udf,
+        admit_batch_into_index,
         admit_id_offset,
+        pinned_index_frame,
     )
 
-    seed = _ivf_index_for(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix=f"cdr_stream_admit_{uuid.uuid4().hex[:8]}_")
-    idx = os.path.join(root, "idx")
-    shutil.copytree(seed, idx)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-
-    e = table(spark, sf_dir, "embeddings")
+    seed = pinned_index_frame(spark, _ivf_index_for(spark, sf_dir))
     offset = admit_id_offset(spark, sf_dir)
-    cell_of = _make_cell_udf(_ivf_seed_matrix(e))
+    delta = os.path.join(_ckpt_dir("cdr_ckpt_admit_delta_"), "idx")
 
     def admit(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.filter(F.col("vec_id") % ADMIT_MOD == ADMIT_REM)
-            .select(
-                (F.col("vec_id") + offset).alias("vec_id"),
-                "embedding",
-                "label",
-            )
-            .withColumn("cell", cell_of("embedding"))
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(idx)
-        )
+        admit_batch_into_index(spark, sf_dir, delta, batch)
 
     stream = _replay(spark, sf_dir, "embeddings")
     ckpt = _ckpt_dir(f"cdr_ckpt_admit_{uuid.uuid4().hex[:8]}_")
@@ -1159,7 +1142,7 @@ def stream_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared accounting (llm_similarity._admit_cell_accounting): the
     # stream and batch paths report through ONE copy of the arithmetic,
     # so the common oracle can never drift against a silent fork
-    return _admit_cell_accounting(spark.read.parquet(idx), offset)
+    return _admit_cell_accounting(seed.unionByName(spark.read.parquet(delta)), offset)
 
 
 def _gopher_stream_oracle() -> str:
@@ -1184,9 +1167,7 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.llm_text import gopher_rules_filter
 
     stream = _replay(spark, sf_dir, "documents")
-    out_dir = tempfile.mkdtemp(prefix=f"cdr_stream_gate_{uuid.uuid4().hex[:8]}_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    sink = os.path.join(out_dir, "verdicts")
+    sink = os.path.join(_ckpt_dir("cdr_ckpt_gate_out_"), "verdicts")
 
     # reuse the BATCH operator's expression tree per micro-batch
     # (llm_text.gopher_verdicts — ONE copy of the rules): the

@@ -5,12 +5,18 @@ registered once per (session, sf_dir) and cached; switching sf_dir
 re-registers, and ``point_views`` re-points just the views a query names.
 Reads are plain ``spark.read.parquet`` so Catalyst keeps predicate
 pushdown / column pruning / vectorized scan on every query.
+
+It also owns the fixture fingerprint and with it the one rule for state
+derived from a fixture file: ``memo`` for in-process values and
+``derived_dir`` for persisted directories such as the ANN/BM25 indexes.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructType
@@ -49,15 +55,77 @@ _fingerprints: dict[tuple[int, str], tuple] = {}
 _active: dict[int, str] = {}
 
 
+def source_fp(sf_dir: str, filename: str) -> str:
+    """Fingerprint (``mtime_ns:size``) of one fixture file, ``"missing"``
+    when absent: the staleness key of every cache derived from it."""
+    try:
+        st = os.stat(os.path.join(sf_dir, filename))
+        return f"{st.st_mtime_ns}:{st.st_size}"
+    except OSError:
+        return "missing"
+
+
 def _fingerprint(sf_dir: str) -> tuple:
-    fp = []
-    for name in TABLE_NAMES:
+    return tuple(source_fp(sf_dir, f"{name}.parquet") for name in TABLE_NAMES)
+
+
+# ---- state derived from one fixture file ----------------------------------
+# A value or directory computed from a fixture file is keyed by the file's
+# path and fingerprint, so a fixture regenerated under the same path misses
+# every entry built from the old one. Values are session-independent (numpy
+# matrices, ints); directories persist across processes.
+_MEMO: dict[tuple[str, str, str], object] = {}
+_KEY = "_KEY"
+
+
+def memo(sf_dir: str, filename: str, key: str, compute):
+    """``compute()`` once per (``sf_dir``, fingerprint of ``filename``,
+    ``key``) in this process."""
+    k = (sf_dir, source_fp(sf_dir, filename), key)
+    if k not in _MEMO:
+        _MEMO[k] = compute()
+    return _MEMO[k]
+
+
+def derived_dir(root: str, sf_dir: str, filename: str, spec: str, build, base=None) -> str:
+    """Directory under ``root`` holding the ``spec`` state derived from
+    ``sf_dir``'s ``filename``; built on first use, then reused.
+
+    The key is ``sf_dir|fingerprint|spec`` and the directory name its md5
+    prefix. The directory counts as built only once its ``_KEY`` file,
+    written last, exists: a build that died half way is never served.
+    With ``base`` (another derived directory) the new one starts as a copy
+    of it, minus its ``_KEY``, and ``build(path)`` changes that copy in
+    place; without, ``build(path)`` creates ``path``. ``build`` must not
+    call ``derived_dir`` after it has started writing into ``path``: each
+    call first deletes, under ``root``, every directory without a
+    ``_KEY`` and every one whose ``_KEY`` names ``sf_dir`` with another
+    fingerprint — builds for a regenerated fixture and their clones.
+    """
+    fp = source_fp(sf_dir, filename)
+    key = f"{sf_dir}|{fp}|{spec}"
+    path = os.path.join(root, hashlib.md5(key.encode()).hexdigest()[:16])
+    names = os.listdir(root) if os.path.isdir(root) else []
+    for d in (os.path.join(root, n) for n in names):
+        if not os.path.isdir(d):
+            continue  # a stray file is not a derived directory
         try:
-            st = os.stat(os.path.join(sf_dir, f"{name}.parquet"))
-            fp.append((name, st.st_mtime_ns, st.st_size))
+            with open(os.path.join(d, _KEY)) as f:
+                recorded = f.read()
         except OSError:
-            fp.append((name, None, None))
-    return tuple(fp)
+            recorded = None
+        if recorded is None or (
+            recorded.startswith(f"{sf_dir}|") and not recorded.startswith(f"{sf_dir}|{fp}|")
+        ):
+            shutil.rmtree(d, ignore_errors=True)
+    if not os.path.exists(os.path.join(path, _KEY)):
+        if base is not None:
+            shutil.copytree(base, path, ignore=shutil.ignore_patterns(_KEY))
+        build(path)
+        with open(os.path.join(path, _KEY), "w") as f:
+            f.write(key)
+    return path
+
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

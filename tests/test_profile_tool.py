@@ -1,5 +1,5 @@
-"""Smoke test of ``tools/profile.py``: one record per query, the build and
-collect layers kept apart, and nothing written into the repository."""
+"""Smoke test of ``tools/layer_profile.py``: one record per query, the
+build and collect layers kept apart, and nothing written into the repository."""
 
 from __future__ import annotations
 
@@ -35,7 +35,7 @@ def test_profile_tool_one_record_per_query(tmp_path):
     }
     before = _tree(ROOT)
     run = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "profile.py"), *QUERIES],
+        [sys.executable, os.path.join(ROOT, "tools", "layer_profile.py"), *QUERIES],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0, run.stderr[-3000:]
@@ -54,3 +54,11 @@ def test_profile_tool_one_record_per_query(tmp_path):
         assert r["catalyst_phases"]["analysis"] <= r["build_s"]
         assert r["collect_s"] >= 0
         assert r["job_totals"]["jobs"] >= 1
+
+
+def test_no_tool_shadows_the_standard_library():
+    """``python tools/X.py`` puts ``tools/`` first on ``sys.path``, so a
+    tool named like a standard-library module replaces that module for
+    every import in the process, pyspark's included."""
+    stems = {f[:-3] for f in os.listdir(os.path.join(ROOT, "tools")) if f.endswith(".py")}
+    assert not stems & sys.stdlib_module_names

@@ -793,6 +793,69 @@ def test_ivf_index_invalidates_on_fixture_swap(spark, tmp_path):
     assert live == [os.path.basename(third)]
 
 
+def test_derived_store_lifecycle_on_both_index_roots(spark, tmp_path):
+    """The IVF and BM25 index roots share one lifecycle
+    (tables.derived_dir): a dir or clone left without `_KEY` is rebuilt,
+    never served; a regenerated source gets a new base dir, and the old
+    base goes together with its admitted/compacted clones; dirs of other
+    corpora stay. The in-process memos recompute on the new fingerprint."""
+    import shutil
+
+    from clickhouse_data_rebalance_spark import tables
+    from clickhouse_data_rebalance_spark.operators import llm_similarity as sim
+    from clickhouse_data_rebalance_spark.operators import llm_text as txt
+
+    fix = tmp_path / "sf_store"
+    shutil.copytree(SF_SMALL, fix)
+    os.chmod(fix, 0o755)
+    for f in fix.iterdir():
+        os.chmod(f, 0o644)
+    sf = str(fix)
+    other = sim._ivf_index_for(spark, SF_SMALL)
+
+    def gens():
+        return (
+            [sim._ivf_index_for(spark, sf), sim._admitted_index_for(spark, sf),
+             sim._compacted_index_for(spark, sf)],
+            [txt._bm25_index_for(spark, sf), txt._bm25_admitted_index_for(spark, sf)],
+        )
+
+    token = tables.memo(sf, "embeddings.parquet", "test_token", object)
+    offset = sim.admit_id_offset(spark, sf)
+    ivf, bm25 = gens()
+    n_seed = spark.read.parquet(ivf[0]).count()
+    n_admitted = spark.read.parquet(ivf[1]).count()
+    assert n_admitted > n_seed
+
+    # a build that died before its _KEY: rebuilt in place, not served
+    for d in (ivf[1], bm25[0], bm25[1]):
+        os.remove(os.path.join(d, "_KEY"))
+        open(os.path.join(d, "half_built"), "w").close()
+    assert gens() == (ivf, bm25)
+    for d in ivf + bm25:
+        assert os.path.exists(os.path.join(d, "_KEY"))
+        assert not os.path.exists(os.path.join(d, "half_built"))
+    assert spark.read.parquet(ivf[1]).count() == n_admitted
+
+    # regenerate both sources under the same path, without the max id
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet").toPandas()
+    emb = emb[emb.vec_id != emb.vec_id.max()]
+    emb.to_parquet(f"{sf}/embeddings.parquet", index=False)
+    docs = spark.read.parquet(f"{sf}/documents.parquet").toPandas()
+    docs.iloc[:-1].to_parquet(f"{sf}/documents.parquet", index=False)
+
+    assert tables.memo(sf, "embeddings.parquet", "test_token", object) is not token
+    assert sim.admit_id_offset(spark, sf) == int(emb.vec_id.max()) + 1 != offset
+    ivf2, bm25_2 = gens()
+    assert not set(ivf2) & set(ivf) and not set(bm25_2) & set(bm25)
+    for d in ivf + bm25:
+        assert not os.path.exists(d), f"stale generation {d} survived"
+    assert spark.read.parquet(ivf2[0]).count() == len(emb)
+    meta = spark.read.parquet(os.path.join(bm25_2[0], "meta")).collect()[0]
+    assert meta["n"] == len(docs) - 1
+    assert os.path.exists(os.path.join(other, "_KEY")), "another corpus's index was GC'd"
+
+
 def test_ivf_refined_generation(spark):
     """VERDICT r5 #3: the k-means refinement must be CONSUMED — the
     refined index is a distinct persisted layout that coexists with the

@@ -430,3 +430,27 @@ def test_replay_sources_build_without_a_spark_job(spark, tmp_path):
         assert events_stream(spark, sf).schema["ts"].dataType == TimestampType()
     finally:
         load_tables(spark, SF_SMALL)  # point the views back
+
+
+def test_query_temp_dirs_need_no_exit_callback_per_call(spark):
+    """Queries that stage files for a lazily read result take their dirs
+    from ``_ckpt_dir``: a repeated call adds no exit callback and leaves
+    no dir behind outside the PID-tagged ones the single exit hook
+    removes."""
+    import atexit
+    import os
+    import tempfile
+
+    def leftovers():
+        tmp = tempfile.gettempdir()
+        return {n for n in os.listdir(tmp) if n.startswith("cdr_") and "__pid" not in n}
+
+    for name in (
+        "stream_index_admit", "stream_quality_gate", "sink_python_datasource",
+        "stream_upsert_sink",
+    ):
+        registry.QUERIES[name](spark, SF_SMALL).collect()
+        hooks, dirs = atexit._ncallbacks(), leftovers()
+        registry.QUERIES[name](spark, SF_SMALL).collect()
+        assert atexit._ncallbacks() == hooks, f"{name} registered an exit callback"
+        assert leftovers() == dirs, f"{name} left {leftovers() - dirs}"

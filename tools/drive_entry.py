@@ -2,10 +2,12 @@
 entry vs its DuckDB oracle at sf0.01 (full value compare). Run from /tmp.
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -23,7 +25,7 @@ rows2 = e.entry(spark).collect()
 assert len(rows2) == 6, "entry() re-entrancy failed"
 print(f"entry(): {len(rows)} rows, re-entrant OK", flush=True)
 
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 from oracle_harness import compare, duck_connection  # noqa: E402
 
 SF = "/root/testdata/sf0.01"

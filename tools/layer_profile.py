@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-layer profile of registered queries: one JSON line per query.
 
-    python tools/profile.py [query ...]     (default: bench.HEADLINE)
+    python tools/layer_profile.py [query ...]     (default: bench.HEADLINE)
 
 Runs each query three times, interleaved over the whole list like
 ``bench.py``, on ``bench.py``'s session shape (``$SPARK_GRAFT_SF_DIR``,
@@ -37,9 +37,7 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# replace, not prepend: this script's own directory on the path would
-# shadow the standard library's ``profile``, which pyspark imports
-sys.path[0] = ROOT
+sys.path.insert(0, ROOT)
 
 from perfbench import tracing  # noqa: E402
 

@@ -23,11 +23,8 @@ SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-l
     --continue-on-collection-errors -p no:cacheprovider
 
 echo "== 2/4 driver simulation =="
-if [ ! -f /tmp/drive_entry.py ]; then
-    echo "regenerate /tmp/drive_entry.py per .claude/skills/verify/SKILL.md" >&2
-    exit 1
-fi
-(cd /tmp && timeout 900 python /tmp/drive_entry.py | tail -2)
+drive="$PWD/tools/drive_entry.py"
+(cd /tmp && timeout 900 python "$drive" | tail -2)
 
 echo "== 3/4 bench canary =="
 python tools/bench_canary.py
