@@ -955,34 +955,43 @@ def _pq_codebook(spark: SparkSession, sf_dir: str, k: int, m: int, sub: int):
     return memo(sf_dir, "embeddings.parquet", f"pq_codebook|k={k}|m={m}|sub={sub}", compute)
 
 
+def _pq_assign(Q, cb):
+    """PQ-encode the int64 fixed-point vectors ``Q`` (n, M*SUB) against
+    the (M, K, SUB) codebook ``cb``: one (n, K) exact int64 distance
+    matrix per subspace. Returns the (n, M) codes and each vector's
+    summed squared distance to its codes. ``np.argmin`` returns the
+    FIRST minimum, so ties break to the lowest codebook index — the
+    oracles' ``ROW_NUMBER(ORDER BY d, cb_idx)``."""
+    import numpy as np
+
+    M, _, SUB = cb.shape
+    Q = Q.reshape(len(Q), M, SUB)
+    codes = np.empty((len(Q), M), dtype=np.int64)
+    err = np.zeros(len(Q), dtype=np.int64)
+    for m in range(M):
+        d = ((Q[:, m, None, :] - cb[m][None, :, :]) ** 2).sum(axis=2)
+        codes[:, m] = np.argmin(d, axis=1)
+        err += d[np.arange(len(Q)), codes[:, m]]
+    return codes, err
+
+
+def _pq_fixed_point(emb: pd.Series):
+    """An Arrow batch of embeddings as an (n, dim) int64 matrix,
+    ``floor(x * PQ_SCALE)`` per component."""
+    import numpy as np
+
+    return np.floor(np.stack(emb.to_numpy()).astype(np.float64) * PQ_SCALE).astype(np.int64)
+
+
 def _make_pq_udf(cb):
-    """Vectorized PQ encoder: one (batch, K) int64 distance matrix per
-    subspace per Arrow batch. np.argmin returns the FIRST minimum —
-    ties break to the lowest codebook index, same as the oracle's
-    ROW_NUMBER(ORDER BY d, cb_idx)."""
+    """Vectorized PQ encoder (``_pq_assign`` per Arrow batch): the
+    M = 4 codes and the reconstruction error."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<c0: long, c1: long, c2: long, c3: long, err: long>")
     def pq_encode(emb: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        Q = np.floor(X * PQ_SCALE).astype(np.int64).reshape(len(X), PQ_M, PQ_SUB)
-        codes = np.empty((len(X), PQ_M), dtype=np.int64)
-        err = np.zeros(len(X), dtype=np.int64)
-        for m in range(PQ_M):
-            d = ((Q[:, m, None, :] - cb[m][None, :, :]) ** 2).sum(axis=2)
-            codes[:, m] = np.argmin(d, axis=1)
-            err += d[np.arange(len(X)), codes[:, m]]
-        return pd.DataFrame(
-            {
-                "c0": codes[:, 0],
-                "c1": codes[:, 1],
-                "c2": codes[:, 2],
-                "c3": codes[:, 3],
-                "err": err,
-            }
-        )
+        codes, err = _pq_assign(_pq_fixed_point(emb), cb)
+        return pd.DataFrame({**{f"c{m}": codes[:, m] for m in range(PQ_M)}, "err": err})
 
     return pq_encode
 
@@ -1086,24 +1095,14 @@ PQ_SHORTLIST = 128
 
 
 def _make_pq_codes_udf(cb):
-    """Vectorized 8-bit PQ encoder: per Arrow batch, one (batch, K)
-    int64 distance matrix per subspace; np.argmin's first-minimum rule
-    ties to the lowest codebook index (deterministic)."""
+    """Vectorized 8-bit PQ encoder (``_pq_assign`` per Arrow batch): the
+    code array alone."""
     from pyspark.sql.functions import pandas_udf
-
-    M, _, SUB = cb.shape
 
     @pandas_udf("array<int>")
     def pq_codes(emb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        X = np.stack(emb.to_numpy()).astype(np.float64)
-        Q = np.floor(X * PQ_SCALE).astype(np.int64).reshape(len(X), M, SUB)
-        codes = np.empty((len(X), M), dtype=np.int32)
-        for m in range(M):
-            d = ((Q[:, m, None, :] - cb[m][None, :, :]) ** 2).sum(axis=2)
-            codes[:, m] = np.argmin(d, axis=1)
-        return pd.Series(list(codes))
+        codes, _ = _pq_assign(_pq_fixed_point(emb), cb)
+        return pd.Series(list(codes.astype("int32")))
 
     return pq_codes
 

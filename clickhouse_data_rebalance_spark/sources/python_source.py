@@ -244,45 +244,13 @@ def _drain_stream_to_memory(spark: SparkSession, name: str, n_rows: int):
     """Run the synthetic stream until all rows are ingested, then stop.
 
     availableNow snapshots only the FIRST chunk for a Simple stream
-    reader (measured), so a finite drain uses a processingTime trigger
-    and polls the sink count — harness plumbing; a production stream
-    just keeps running."""
-    import time as _time
-
-    from ..streaming.stream_ops import _ckpt_dir
+    reader (measured), so the drain polls the sink count on a
+    processingTime trigger (``_run_replay``'s ``until``) — harness
+    plumbing; a production stream just keeps running."""
+    from ..streaming.stream_ops import _run_replay
 
     df = spark.readStream.format("synthetic_events_stream").load()
-    # _ckpt_dir (not a raw mkdtemp): PID-tagged, atexit-backstopped, and
-    # reaped across dead processes — an exception or the 120 s deadline
-    # mid-drain no longer leaks the dir (ADVICE r6)
-    ckpt = _ckpt_dir("cdr_ckpt_pystream_")
-    q = None
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            if spark.table(name).count() >= n_rows:
-                break
-            _time.sleep(0.2)
-    finally:
-        # stop BEFORE removing the checkpoint: an exception mid-poll
-        # would otherwise leave the stream micro-batching against a
-        # deleted checkpointLocation for the rest of the session
-        import shutil as _shutil
-
-        if q is not None:
-            try:
-                q.stop()
-                q.awaitTermination(30)
-            except Exception:  # noqa: BLE001 - best-effort teardown
-                pass
-        _shutil.rmtree(ckpt, ignore_errors=True)
+    _run_replay(df, name, until=lambda: spark.table(name).count() >= n_rows)
     return spark.table(name)
 
 

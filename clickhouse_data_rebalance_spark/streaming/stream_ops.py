@@ -84,10 +84,9 @@ def _scoped_confs(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
-@contextmanager
-def _stream_state_partitions(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` to the state width for a
-    stream start: ``min(8, session.shuffle_partitions(spark))``.
+def _state_width(spark: SparkSession) -> dict[str, str]:
+    """The stream-start value of ``spark.sql.shuffle.partitions``:
+    ``min(8, session.shuffle_partitions(spark))``.
 
     Stateful operators pin their state-partition count from the shuffle
     setting at first checkpoint, and every micro-batch then opens and
@@ -102,12 +101,16 @@ def _stream_state_partitions(spark: SparkSession):
 
     Safe: the width decides how state is partitioned, never what a
     stream emits, and a stream restarted from its checkpoint keeps the
-    width recorded there. Restored afterwards so batch plans are
+    width recorded there. Scoped to the start, so batch plans are
     untouched.
     """
-    width = min(8, shuffle_partitions(spark))
-    with _scoped_confs(spark, {"spark.sql.shuffle.partitions": str(width)}):
-        yield
+    return {"spark.sql.shuffle.partitions": str(min(8, shuffle_partitions(spark)))}
+
+
+def _stream_state_partitions(spark: SparkSession):
+    """Scope ``_state_width`` around a stream started outside
+    ``_run_replay`` (a caller's own resumable stream)."""
+    return _scoped_confs(spark, _state_width(spark))
 
 
 # Analyzed-plan nodes that emit a row only for a new input row, so a
@@ -155,28 +158,27 @@ def _remove_own_ckpts() -> None:
 
 
 def _ckpt_dir(prefix: str) -> str:
-    """Checkpoint staging dir for the synchronous replay harness.
+    """Checkpoint staging dir for the synchronous replay harness, on
+    tmpfs (/dev/shm) when there is one, since a micro-batch writes dozens
+    of small state-store and log files. Nothing resumes from these dirs:
+    a replay's sink is a memory table or files its caller reads straight
+    away. A production stream checkpoints to durable shared storage
+    (HDFS/S3) under Spark's default checkpoint manager.
 
-    Prefers tmpfs (/dev/shm) over the disk-backed default temp dir: the
-    state store + commit log write dozens of small fsync'd files per
-    micro-batch, which dominates wall time for these finite replays on a
-    slow disk. Durability is irrelevant HERE by construction — the sink
-    is an in-memory table that dies with the session, so its checkpoint
-    can never be resumed across processes. A production streaming job
-    checkpoints to durable shared storage (S3/HDFS) instead; this helper
-    is harness plumbing, not the scale posture.
+    What a checkpoint costs here is a spawned process per file, not its
+    bytes: pip pyspark ships no native-hadoop library, so Hadoop's local
+    filesystem runs ``chmod`` for every file and directory it creates,
+    and Spark's default FileContext-based checkpoint manager also runs
+    ``readlink`` on every status check and rename (33–67 ms and 20 new
+    pids per atomic file write on local[4] and /dev/shm; 8–13 ms and 4
+    pids through ``_LOCAL_CKPT_MANAGER``, which ``_run_replay`` sets).
 
-    Lifecycle: callers rmtree the dir once their query terminates (it is
-    dead weight in RAM on tmpfs). Each dir embeds its creator's PID, and
-    ONE atexit hook per process, ``_remove_own_ckpts``, removes whatever
-    of this process's dirs remain — error paths, and dirs a lazily read
-    result lives in (statestore_introspection's checkpoint, the files
-    the stream and sink queries return a frame over) — so a long session
-    does not pile up one exit callback per call. Orphaned siblings are
-    reaped opportunistically — the same no-accumulation rule as the index
-    GC in ``tables.derived_dir`` — but only when their owner is DEAD: age
-    alone must never delete a checkpoint a live process still reads (e.g.
-    a >1 h sibling session's active stream).
+    Lifecycle: ``_run_replay`` removes the dir when its query ends or
+    raises. Each dir embeds its creator's PID; ONE atexit hook per
+    process, ``_remove_own_ckpts``, removes this process's remaining dirs
+    (those a lazily read result lives in), and a sibling is reaped only
+    when its owner is DEAD — age alone must never delete a checkpoint a
+    live process still reads.
     """
     for stale in glob.glob(os.path.join(_CKPT_BASE, "cdr_ckpt_*__pid*_*")):
         try:
@@ -191,48 +193,98 @@ def _ckpt_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=f"{prefix}_pid{os.getpid()}_", dir=_CKPT_BASE)
 
 
-def run_to_memory(agg: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Drive a streaming frame to completion synchronously; return the
-    materialized result table.
+# Spark's FileSystem-based checkpoint manager: an atomic write is a
+# create plus a rename, which is atomic on the local filesystems
+# ``_ckpt_dir`` uses. Spark's default, the FileContext-based manager,
+# serves filesystems whose FileSystem rename is not atomic.
+_LOCAL_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
-    Two rules keep a finite replay to the batches and task waves that can
-    change its result:
 
-    - State width: the start runs under ``_stream_state_partitions``, so
-      a batch's state stores run in one task wave.
+def _run_replay(
+    df: DataFrame,
+    name: str,
+    output_mode: str = "append",
+    *,
+    batch_fn=None,
+    until=None,
+    keep_checkpoint: bool = False,
+) -> str:
+    """Run the streaming frame ``df`` to the end of its input on a fresh
+    ``_ckpt_dir`` checkpoint and return the checkpoint path. Every stream
+    the package starts goes through here.
+
+    The sink is the memory table ``name``, or ``batch_fn`` through
+    ``foreachBatch``. The trigger is ``availableNow``, awaited to
+    termination. A source that ``availableNow`` cannot drain passes
+    ``until``: the stream then runs on a ``processingTime`` trigger until
+    ``until()`` holds (polled every 0.2 s, at most 120 s) and is stopped.
+
+    The start runs under one conf scope:
+
+    - State width (``_state_width``), so a batch's state stores run in
+      one task wave.
     - No eviction-only no-data batch. After the last data batch of a
-      watermarked stateful stream, Spark runs one more batch, with no
-      input, to advance the watermark. When every node of the analyzed
-      plan is in ``_EVICT_ONLY_NODES``, that batch cannot emit a row; it
-      only evicts state from a checkpoint that is deleted straight
-      afterwards, so the start runs with
+      watermarked stateful stream, Spark runs one input-less batch to
+      advance the watermark. When every analyzed-plan node is in
+      ``_EVICT_ONLY_NODES``, that batch only evicts state from a
+      checkpoint deleted straight afterwards, so the start sets
       ``spark.sql.streaming.noDataMicroBatches.enabled=false``. Any other
-      node — an append-mode Aggregate, an outer Join,
-      FlatMapGroups*WithState, anything unknown — keeps Spark's default,
-      because its no-data batch can emit rows.
+      node (append-mode Aggregate, outer Join, FlatMapGroups*WithState,
+      anything unknown) keeps Spark's default: its no-data batch can
+      emit rows.
+    - ``_LOCAL_CKPT_MANAGER``: 2 spawned processes per checkpoint file
+      instead of 10 (see ``_ckpt_dir``). A caller's own stream keeps
+      Spark's default.
 
-    Both confs are restored, and the checkpoint removed, even when the
-    stream raises.
+    The confs are restored, the stream stopped and the checkpoint removed
+    even when the stream raises. ``keep_checkpoint`` leaves the
+    checkpoint for a caller that reads it afterwards (the exit hook
+    removes it).
     """
-    spark = agg.sparkSession
-    confs = {}
-    if _plan_nodes(agg) <= _EVICT_ONLY_NODES:
+    spark = df.sparkSession
+    confs = {
+        **_state_width(spark),
+        "spark.sql.streaming.checkpointFileManagerClass": _LOCAL_CKPT_MANAGER,
+    }
+    if _plan_nodes(df) <= _EVICT_ONLY_NODES:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     ckpt = _ckpt_dir(f"cdr_ckpt_{name}_")
+    writer = df.writeStream.outputMode(output_mode).option("checkpointLocation", ckpt)
+    if batch_fn is None:
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(batch_fn)
+    q = None
     try:
-        with _stream_state_partitions(spark), _scoped_confs(spark, confs):
-            q = (
-                agg.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        with _scoped_confs(spark, confs):
+            if until is None:
+                q = writer.trigger(availableNow=True).start()
+                q.awaitTermination()
+            else:
+                q = writer.trigger(processingTime="0 seconds").start()
+                deadline = time.monotonic() + 120
+                while not until():
+                    # awaitTermination raises the stream's own error
+                    if q.awaitTermination(0.2) or time.monotonic() > deadline:
+                        raise RuntimeError(f"replay {name} stopped before its input ran out")
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+        # stop before the checkpoint goes: a stream left running would
+        # micro-batch against a deleted checkpoint for the whole session
+        if q is not None and q.isActive:
+            q.stop()
+        if not keep_checkpoint:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return ckpt
+
+
+def run_to_memory(agg: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Replay ``agg`` into the memory table ``name`` (``_run_replay``) and
+    return that table."""
+    _run_replay(agg, name, output_mode)
+    return agg.sparkSession.table(name)
 
 
 @query(
@@ -367,17 +419,7 @@ def mv_maintain(spark: SparkSession, sf_dir: str, dst_path: str) -> DataFrame:
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(dst_path)
 
-    ckpt = _ckpt_dir("cdr_ckpt_mv_")
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(_fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _run_replay(agg, "mv", "complete", batch_fn=_fold)
     return spark.read.parquet(dst_path)
 
 
@@ -531,8 +573,6 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     each merge touches |batch keys| + |target| rows. A lakehouse table
     with MERGE INTO would replace the overwrite; the collapse rule and
     the equivalence contract are unchanged."""
-    import uuid
-
     table(spark, sf_dir, "events")  # ensures session confs + package shipping
     # per-invocation state root; versioned subdirs (v{batch}) so a merge
     # never overwrites the files it is reading — the same new-version-
@@ -554,17 +594,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(new_path)
         state["path"] = new_path
 
-    ckpt = _ckpt_dir(f"cdr_ckpt_upsert_{uuid.uuid4().hex[:8]}_")
-    with _stream_state_partitions(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _run_replay(events_stream(spark, sf_dir), "upsert", batch_fn=merge_batch)
     return (
         spark.read.parquet(state["path"])
         .select(
@@ -997,20 +1027,10 @@ def statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     per state partition), no replay of the input stream — inspection
     cost is O(state), not O(history)."""
     table(spark, sf_dir, "events")
-    ckpt = _ckpt_dir("cdr_ckpt_ssread_")
     agg = events_stream(spark, sf_dir).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("cdr_ssread_out")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    ckpt = _run_replay(agg, "cdr_ssread_out", "complete", keep_checkpoint=True)
     st = spark.read.format("statestore").load(ckpt)
     value_field = st.schema["value"].dataType.names[0]
     return (
@@ -1111,8 +1131,6 @@ def stream_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the accounting level only if batches are exactly-once — a
     production sink would stage per-batch files and commit via manifest
     (same discipline as stream_upsert_sink's version flip)."""
-    import uuid
-
     from ..operators.llm_similarity import (
         _admit_cell_accounting,
         _ivf_index_for,
@@ -1128,16 +1146,7 @@ def stream_index_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     def admit(batch: DataFrame, batch_id: int) -> None:
         admit_batch_into_index(spark, sf_dir, delta, batch)
 
-    stream = _replay(spark, sf_dir, "embeddings")
-    ckpt = _ckpt_dir(f"cdr_ckpt_admit_{uuid.uuid4().hex[:8]}_")
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(admit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_replay(_replay(spark, sf_dir, "embeddings"), "admit", batch_fn=admit)
 
     # shared accounting (llm_similarity._admit_cell_accounting): the
     # stream and batch paths report through ONE copy of the arithmetic,
@@ -1162,8 +1171,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Must hash-match `gopher_rules_filter`'s batch oracle VERBATIM —
     a third stream≡batch equivalence family (aggregations, index sink,
     and now a pure row gate) over a third fixture table."""
-    import uuid
-
     from ..operators.llm_text import gopher_rules_filter
 
     stream = _replay(spark, sf_dir, "documents")
@@ -1178,13 +1185,5 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         gopher_verdicts(batch).write.mode("append").parquet(sink)
 
-    ckpt = _ckpt_dir(f"cdr_ckpt_gate_{uuid.uuid4().hex[:8]}_")
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(gate)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_replay(stream, "gate", batch_fn=gate)
     return spark.read.parquet(sink).orderBy("doc_id")

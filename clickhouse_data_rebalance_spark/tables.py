@@ -99,8 +99,10 @@ def derived_dir(root: str, sf_dir: str, filename: str, spec: str, build, base=No
     place; without, ``build(path)`` creates ``path``. ``build`` must not
     call ``derived_dir`` after it has started writing into ``path``: each
     call first deletes, under ``root``, every directory without a
-    ``_KEY`` and every one whose ``_KEY`` names ``sf_dir`` with another
-    fingerprint — builds for a regenerated fixture and their clones.
+    ``_KEY``, every one whose ``_KEY`` names ``sf_dir`` with another
+    fingerprint — builds for a regenerated fixture and their clones — and
+    every one whose ``_KEY`` names an absolute ``sf_dir`` that no longer
+    exists (a deleted corpus, such as a test's temporary copy).
     """
     fp = source_fp(sf_dir, filename)
     key = f"{sf_dir}|{fp}|{spec}"
@@ -114,9 +116,14 @@ def derived_dir(root: str, sf_dir: str, filename: str, spec: str, build, base=No
                 recorded = f.read()
         except OSError:
             recorded = None
-        if recorded is None or (
-            recorded.startswith(f"{sf_dir}|") and not recorded.startswith(f"{sf_dir}|{fp}|")
-        ):
+        if recorded is None:
+            stale = True
+        elif recorded.startswith(f"{sf_dir}|"):
+            stale = not recorded.startswith(f"{sf_dir}|{fp}|")
+        else:
+            src = recorded.split("|", 1)[0]
+            stale = os.path.isabs(src) and not os.path.exists(src)
+        if stale:
             shutil.rmtree(d, ignore_errors=True)
     if not os.path.exists(os.path.join(path, _KEY)):
         if base is not None:

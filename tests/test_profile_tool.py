@@ -24,7 +24,9 @@ def _tree(root: str) -> dict[str, int]:
     return out
 
 
-def test_profile_tool_one_record_per_query(tmp_path):
+def _run_tool(tmp_path, queries: list[str]) -> dict[str, dict]:
+    """Run the tool on ``queries``; check it wrote nothing into the
+    repository and left no temp dir; return its records by query."""
     env = {
         **os.environ,
         "SPARK_GRAFT_SF_DIR": SF_SMALL,
@@ -35,7 +37,7 @@ def test_profile_tool_one_record_per_query(tmp_path):
     }
     before = _tree(ROOT)
     run = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "layer_profile.py"), *QUERIES],
+        [sys.executable, os.path.join(ROOT, "tools", "layer_profile.py"), *queries],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0, run.stderr[-3000:]
@@ -43,17 +45,33 @@ def test_profile_tool_one_record_per_query(tmp_path):
     assert not [p for p in os.listdir(tmp_path) if p.startswith("cdr-profile-")]
 
     recs = [json.loads(line) for line in run.stdout.splitlines() if line.startswith("{")]
-    assert [r["query"] for r in recs] == QUERIES
-    by = {r["query"]: r for r in recs}
+    assert [r["query"] for r in recs] == queries
+    return {r["query"]: r for r in recs}
+
+
+def test_profile_tool_one_record_per_query(tmp_path):
+    by = _run_tool(tmp_path, QUERIES)
     assert by["rebalance_pipeline"]["build_jobs"] >= 1
     assert by["ch_dialect_with_fill"]["build_jobs"] == 0
-    for r in recs:
+    for r in by.values():
         assert {"analysis", "optimization", "planning"} <= set(r["catalyst_phases"])
         # a frame is analyzed while it is built; a larger figure means a
         # later action re-measured the phase and stretched its span
         assert r["catalyst_phases"]["analysis"] <= r["build_s"]
         assert r["collect_s"] >= 0
         assert r["job_totals"]["jobs"] >= 1
+        assert "stream" not in r
+
+
+def test_profile_tool_reports_a_streams_batches_and_phases(tmp_path):
+    """A query whose build runs a stream reports its micro-batches and
+    the listener's per-phase durations."""
+    rec = _run_tool(tmp_path, ["stream_dedup_events"])["stream_dedup_events"]
+    stream = rec["stream"]
+    assert stream["batches"] == 1  # one data batch, no eviction-only batch
+    phases = stream["phase_ms"]
+    assert {"addBatch", "walCommit", "commitOffsets", "queryPlanning"} <= set(phases)
+    assert 0 < phases["addBatch"] <= phases["triggerExecution"]
 
 
 def test_no_tool_shadows_the_standard_library():

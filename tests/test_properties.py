@@ -856,6 +856,34 @@ def test_derived_store_lifecycle_on_both_index_roots(spark, tmp_path):
     assert os.path.exists(os.path.join(other, "_KEY")), "another corpus's index was GC'd"
 
 
+def test_derived_store_gc_drops_generations_of_deleted_corpora(tmp_path):
+    """A generation whose `_KEY` names a corpus directory that no longer
+    exists is deleted on the next `derived_dir` call; generations of
+    another corpus that still exists stay."""
+    import shutil
+
+    from clickhouse_data_rebalance_spark import tables
+
+    root = str(tmp_path / "root")
+    corpora = {}
+    for name in ("gone", "kept", "caller"):
+        d = tmp_path / name
+        d.mkdir()
+        (d / "src.parquet").write_bytes(name.encode())
+        corpora[name] = str(d)
+
+    def build(path):
+        os.makedirs(path)
+
+    gen = {n: tables.derived_dir(root, d, "src.parquet", "spec", build) for n, d in corpora.items()}
+    assert len(set(gen.values())) == 3
+    shutil.rmtree(corpora["gone"])
+    assert tables.derived_dir(root, corpora["caller"], "src.parquet", "spec", build) == gen["caller"]
+    assert not os.path.exists(gen["gone"])
+    assert os.path.exists(os.path.join(gen["kept"], "_KEY"))
+    assert os.path.exists(os.path.join(gen["caller"], "_KEY"))
+
+
 def test_ivf_refined_generation(spark):
     """VERDICT r5 #3: the k-means refinement must be CONSUMED — the
     refined index is a distinct persisted layout that coexists with the

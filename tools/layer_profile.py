@@ -20,7 +20,12 @@ query and step. A record holds:
   transfer; ``collect_s``: fastest collect minus ``noop_s``, floored at 0
   (on a tiny result the noop write's own commit costs more than the
   transfer);
-- ``exchanges`` and ``python_nodes`` in the final physical plan.
+- ``exchanges`` and ``python_nodes`` in the final physical plan;
+- ``stream``, for a query whose build runs a Structured Streaming
+  query: ``batches``, the micro-batches per pass, and ``phase_ms``, the
+  listener's ``durationMs`` per phase summed over them, per pass. A
+  stream's jobs run in its own job group, so the build step also
+  carries a job tag, which the query-started event records.
 
 The event log lives in a temporary directory removed at exit; the tool
 writes no file under the repository.
@@ -35,6 +40,7 @@ import shlex
 import sys
 import tempfile
 import time
+from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -70,6 +76,7 @@ def _profile(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
     for df in load_tables(spark, sf_dir).values():
         df.count()
     tracer = tracing.Tracer(spark, enabled=True)
+    sc = spark.sparkContext
     out = {q: {"wall": dict.fromkeys(STEPS, float("inf")), "phases": {}} for q in names}
     for _ in range(PASSES):
         for q in names:
@@ -78,7 +85,11 @@ def _profile(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
                 t0 = time.perf_counter()
                 with tracer.group(q, step):
                     if step == "build":
-                        df = registry.QUERIES[q](spark, sf_dir)
+                        sc.addJobTag(q)
+                        try:
+                            df = registry.QUERIES[q](spark, sf_dir)
+                        finally:
+                            sc.removeJobTag(q)
                     elif step == "collect":
                         df.collect()
                     else:
@@ -90,6 +101,25 @@ def _profile(spark, sf_dir: str, names: list[str]) -> dict[str, dict]:
                     for k, v in tracing.catalyst_phases(df).items():
                         rec["phases"][k] = min(rec["phases"].get(k, v), v)
                     rec["plan"] = _plan_counts(df)
+    return out
+
+
+def _stream_phases(log_dir: str) -> dict[str, list[dict]]:
+    """Per job tag: the ``durationMs`` of every micro-batch of the
+    streams started under it, from the event log's streaming events."""
+    (path,) = [p for p in (os.path.join(log_dir, f) for f in os.listdir(log_dir)) if os.path.isfile(p)]
+    tag_of, out = {}, defaultdict(list)
+    with open(path) as f:
+        for line in f:
+            if "StreamingQueryListener$Query" not in line:
+                continue
+            ev = json.loads(line)
+            if ev["Event"].endswith("$QueryStartedEvent") and ev.get("jobTags"):
+                tag_of[ev["runId"]] = ev["jobTags"][0]
+            elif ev["Event"].endswith("$QueryProgressEvent"):
+                p = ev["progress"]
+                if p["runId"] in tag_of:
+                    out[tag_of[p["runId"]]].append(p["durationMs"])
     return out
 
 
@@ -122,6 +152,7 @@ def main() -> None:
         finally:
             spark.stop()
         log = tracing.EventLog(events)
+        streams = _stream_phases(events)
 
     for q in names:
         rec = profiled[q]
@@ -130,6 +161,16 @@ def main() -> None:
         collect = tracing.job_totals(log.select(lambda j: j["group"] == f"{q}:collect"), cpus)
         per_pass = {k: v if k == "parallelism" else v / PASSES for k, v in collect.items()}
         exchanges, python_nodes = rec["plan"]
+        extra = {}
+        if streams.get(q):
+            phase_ms = defaultdict(float)
+            for batch in streams[q]:
+                for k, v in batch.items():
+                    phase_ms[k] += v / PASSES
+            extra["stream"] = {
+                "batches": len(streams[q]) / PASSES,
+                "phase_ms": {k: round(v, 1) for k, v in phase_ms.items()},
+            }
         print(json.dumps({
             "query": q,
             "build_s": round(wall["build"], 4),
@@ -140,6 +181,7 @@ def main() -> None:
             "collect_s": round(max(0.0, wall["collect"] - wall["noop"]), 4),
             "exchanges": exchanges,
             "python_nodes": python_nodes,
+            **extra,
         }), flush=True)
 
 
