@@ -150,15 +150,18 @@ top_k_per_group, `SAMPLE` -> sample_fraction, sketch-only quantile
 combinators (TDigest/BFloat16/Timing...) -> approx_quantiles /
 median_exact, hierarchy dictGets -> broadcast dim joins).
 
-The single-argument rewrites use non-nested argument matching; deeply
-nested calls inside a rewritten function should be pre-flattened (the
-translator raises rather than mistranslating when it cannot match).
+Function calls go through one name-keyed table (`_CALLS`) applied in
+one walk over the call sites, arguments first. Its templates bind only
+arguments at most one paren level deep; deeper calls inside such a
+function should be pre-flattened (the translator raises rather than
+mistranslating when it cannot bind them).
 """
 
 from __future__ import annotations
 
 import os
 import re
+import string
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -1140,16 +1143,40 @@ def _rewrite_split_family(sql: str) -> str:
     )
 
 
-def _count_substrings_repl(m: "re.Match[str]", raw: str) -> str:
-    """countSubstrings replacement: non-overlapping occurrence count as
-    the byte-length delta of replace() over the needle's byte length —
+# ---- the call table ----
+# translate()'s function-call stage is ONE walk over the call sites
+# (_rewrite_table_calls) that looks each ClickHouse name up here, keyed by
+# the lower-cased name. A value is one of:
+#   - a string that does not close, like "bround(" or "pow(2, ": it
+#     replaces the head `name(` and keeps the argument list as written —
+#     any arity, any nesting depth;
+#   - a template over the arguments, like "({0} != {1})", or a tuple of
+#     templates told apart by their arity; "current_date()" (no field)
+#     matches the empty call `today()` only;
+#   - an emitter: a function of the argument list returning the Spark
+#     text, or None to keep the call as written (wrong arity or argument
+#     shape).
+# Templates and emitters bind only calls whose every argument fits the
+# one-paren-level _ARG budget as the walk receives it; a call that fails
+# the budget or its arity keeps its text, calls inside its arguments are
+# still rewritten, and the residual checks in translate() refuse the
+# ClickHouse-only names left over. Arguments are rewritten before their
+# call, lose their leading whitespace and keep their trailing whitespace;
+# emitters strip both where they say so. Emitted text is never scanned
+# again, so no entry's output can be rewritten by another entry.
+
+
+def _count_substrings(args: list[str]) -> str | None:
+    """countSubstrings: non-overlapping occurrence count as the
+    byte-length delta of replace() over the needle's byte length —
     replace removes exactly CH's left-to-right non-overlapping matches.
     A LITERAL empty needle refuses (CH's empty-needle behavior is
     unverifiable here and the arithmetic would divide by zero); a
     runtime-empty needle yields NULL via the nullif divisor."""
-    h = raw[slice(*m.span(1))].strip()
-    n = raw[slice(*m.span(2))].strip()
-    if re.fullmatch(r"''", n):
+    if len(args) != 2:
+        return None
+    h, n = (a.strip() for a in args)
+    if n == "''":
         raise UnsupportedClickHouseSQL(
             "countSubstrings with an empty needle — count characters "
             "with length()/lengthUTF8() instead"
@@ -1160,8 +1187,8 @@ def _count_substrings_repl(m: "re.Match[str]", raw: str) -> str:
     )
 
 
-# ---- r14 wave 2 replacement callables (argument-duplicating guards;
-# the least/greatest row-local double-evaluation caveat applies) ----
+# argument-duplicating guards below carry the least/greatest row-local
+# double-evaluation caveat
 
 _B64_VALID = (
     "RLIKE '^(?:[A-Za-z0-9+/]{4})*"
@@ -1169,100 +1196,122 @@ _B64_VALID = (
 )
 
 
-def _base64_decode_repl(m: "re.Match[str]", raw: str, *, lenient: bool) -> str:
+def _base64_decode(lenient: bool):
     """base64Decode / tryBase64Decode: Spark's unbase64 silently decodes
     GARBAGE for invalid input (measured: unbase64('!!notb64!!') yields
     mojibake bytes) where ClickHouse THROWS (base64Decode) or returns ''
     (tryBase64Decode) — so validity is checked with the strict RFC 4648
     grammar first and the CH failure behavior spelled per form."""
-    x = raw[slice(*m.span(1))].strip()
-    decode = f"CAST(unbase64(({x})) AS STRING)"
-    fail = (
-        "''" if lenient
-        else "raise_error('base64Decode: invalid base64 input')"
-    )
-    return (
-        f"(CASE WHEN ({x}) IS NULL THEN NULL "
-        f"WHEN ({x}) {_B64_VALID} THEN {decode} ELSE {fail} END)"
-    )
+    fail = "''" if lenient else "raise_error('base64Decode: invalid base64 input')"
+
+    def emit(args: list[str]) -> str | None:
+        if len(args) != 1:
+            return None
+        x = args[0].strip()
+        return (
+            f"(CASE WHEN ({x}) IS NULL THEN NULL "
+            f"WHEN ({x}) {_B64_VALID} THEN CAST(unbase64(({x})) AS STRING) "
+            f"ELSE {fail} END)"
+        )
+
+    return emit
 
 
 _IPV4_OCTET = "(25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)"
 
 
-def _ipv4_string_to_num_repl(m: "re.Match[str]", raw: str) -> str:
+def _ipv4_string_to_num(suffix: str):
     """IPv4StringToNum[OrNull|OrZero]: exact dotted-quad integer
     arithmetic; validity = four 0-255 decimal octets (the regex also
     range-checks, so no octet can overflow the multiply). CH throws on
     invalid input for the bare form (raise_error here), NULL/0 for the
     Or-forms."""
-    suffix = (m.group(1) or "").lower()
-    s = raw[slice(*m.span(2))].strip()
-    valid = f"({s}) RLIKE '^{_IPV4_OCTET}(\\\\.{_IPV4_OCTET}){{3}}$'"
-    part = "CAST(element_at(split(({s}), '\\\\.'), {k}) AS BIGINT)"
-    num = " + ".join(
-        f"{part.format(s=s, k=k)} * {mul}" if mul > 1 else part.format(s=s, k=k)
-        for k, mul in ((1, 16777216), (2, 65536), (3, 256), (4, 1))
-    )
-    if suffix == "ornull":
-        return f"(CASE WHEN {valid} THEN {num} END)"
-    fail = "0" if suffix == "orzero" else (
-        "raise_error('IPv4StringToNum: invalid IPv4 string')"
-    )
-    return (
-        f"(CASE WHEN ({s}) IS NULL THEN NULL "
-        f"WHEN {valid} THEN {num} ELSE {fail} END)"
-    )
+
+    def emit(args: list[str]) -> str | None:
+        if len(args) != 1:
+            return None
+        s = args[0].strip()
+        valid = f"({s}) RLIKE '^{_IPV4_OCTET}(\\\\.{_IPV4_OCTET}){{3}}$'"
+        part = "CAST(element_at(split(({s}), '\\\\.'), {k}) AS BIGINT)"
+        num = " + ".join(
+            f"{part.format(s=s, k=k)} * {mul}" if mul > 1 else part.format(s=s, k=k)
+            for k, mul in ((1, 16777216), (2, 65536), (3, 256), (4, 1))
+        )
+        if suffix == "ornull":
+            return f"(CASE WHEN {valid} THEN {num} END)"
+        fail = "0" if suffix == "orzero" else (
+            "raise_error('IPv4StringToNum: invalid IPv4 string')"
+        )
+        return (
+            f"(CASE WHEN ({s}) IS NULL THEN NULL "
+            f"WHEN {valid} THEN {num} ELSE {fail} END)"
+        )
+
+    return emit
 
 
 _DATE_ADD_UNITS = frozenset(
     {"second", "minute", "hour", "day", "week", "month", "quarter", "year"}
 )
+_LITERAL_ARG = re.compile(r"'([^']*)'\s*")
+_UINT_ARG = re.compile(r"(\d+)\s*")
 
 
-def _date_add_quoted_repl(m: "re.Match[str]", raw: str) -> str:
+def _date_add_quoted(kind: str):
     """CH's quoted-unit date_add('day', n, x) — Spark's native 3-arg
     parser alias takes bare units only, so the quoted spelling died at
-    parse. Validates the raw unit and lowers to timestampadd (sub
-    negates n; month-end clamping agrees in both engines)."""
-    kind = raw[slice(*m.span(1))].lower()
-    unit = raw[slice(*m.span(2))].strip().lower()
-    n = raw[slice(*m.span(3))].strip()
-    x = raw[slice(*m.span(4))].strip()
-    if unit not in _DATE_ADD_UNITS:
-        raise UnsupportedClickHouseSQL(
-            f"date_{kind} unit {unit!r} — supported quoted units: "
-            "second/minute/hour/day/week/month/quarter/year"
-        )
-    amt = n if kind == "add" else f"-({n})"
-    return f"timestampadd({unit.upper()}, {amt}, {x})"
+    parse. Validates the unit and lowers to timestampadd (sub negates n;
+    month-end clamping agrees in both engines). Spark's own 2-arg
+    date_add and bare-unit forms are kept as written."""
+
+    def emit(args: list[str]) -> str | None:
+        lit = _LITERAL_ARG.fullmatch(args[0])
+        if len(args) != 3 or lit is None:
+            return None
+        unit = lit.group(1).strip().lower()
+        n, x = args[1].strip(), args[2].strip()
+        if unit not in _DATE_ADD_UNITS:
+            raise UnsupportedClickHouseSQL(
+                f"date_{kind} unit {unit!r} — supported quoted units: "
+                "second/minute/hour/day/week/month/quarter/year"
+            )
+        amt = n if kind == "add" else f"-({n})"
+        return f"timestampadd({unit.upper()}, {amt}, {x})"
+
+    return emit
 
 
 _TSOI_SECS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
+_TSOI_ARG = re.compile(r"INTERVAL\s+(\d+)\s+(second|minute|hour|day)s?\s*", re.I)
 
 
-def _to_start_of_interval_repl(m: "re.Match[str]", raw: str) -> str:
+def _to_start_of_interval(args: list[str]) -> str | None:
     """toStartOfInterval(x, INTERVAL n unit) for the FIXED-length
     sub-day units: epoch bucketing on CH's 1970-01-01 origin (same
     timezone precondition as the toStartOfFiveMinutes family —
     MIGRATION.md). week/month/quarter/year fall through to the
     toStartOf residual refusal (origin and calendar-walk conventions
     diverge)."""
-    x = raw[slice(*m.span(1))].strip()
-    n = int(raw[slice(*m.span(2))])
-    unit = raw[slice(*m.span(3))].lower()
+    iv = _TSOI_ARG.fullmatch(args[-1])
+    if len(args) != 2 or iv is None:
+        return None
+    x = args[0].strip()
+    n = int(iv.group(1))
     if n <= 0:
         raise UnsupportedClickHouseSQL(
             "toStartOfInterval needs a positive interval length"
         )
-    k = n * _TSOI_SECS[unit]
+    k = n * _TSOI_SECS[iv.group(2).lower()]
     return (
         f"timestamp_seconds(CAST(floor(unix_timestamp({x}) / {k}) * {k}"
         f" AS BIGINT))"
     )
 
 
-def _transform_map_repl(m: "re.Match[str]", raw: str) -> str:
+_ARRAY_LITERAL_ARG = re.compile(r"(?:array\(([^()]*)\)|\[([^\[\]]*)\])\s*", re.I)
+
+
+def _transform_map(args: list[str]) -> str | None:
     """CH's 3/4-arg transform(x, [from...], [to...][, default]) — the
     value-mapping form, a DIFFERENT function from Spark's same-named
     (array, lambda) transform — lowers to the CASE chain it denotes
@@ -1271,25 +1320,25 @@ def _transform_map_repl(m: "re.Match[str]", raw: str) -> str:
     branch — row-local multiple evaluation, the least/greatest caveat
     class. Non-literal from/to arrays refuse via the post-pass check
     in translate()."""
-    x = raw[slice(*m.span(1))].strip()
-    frm_body = raw[slice(*m.span(2))] if m.group(2) is not None else raw[slice(*m.span(3))]
-    to_body = raw[slice(*m.span(4))] if m.group(4) is not None else raw[slice(*m.span(5))]
-    default = raw[slice(*m.span(6))].strip() if m.group(6) else None
-    frm = [a.strip() for a in _split_top_level_args(frm_body) if a.strip()]
-    to = [a.strip() for a in _split_top_level_args(to_body) if a.strip()]
+    if len(args) not in (3, 4):
+        return None
+    shapes = [_ARRAY_LITERAL_ARG.fullmatch(_mask_literals(a)) for a in args[1:3]]
+    if not all(shapes):
+        return None
+    bodies = [a[slice(*m.span(m.lastindex))] for a, m in zip(args[1:3], shapes)]
+    frm, to = ([p.strip() for p in _split_top_level_args(b) if p.strip()] for b in bodies)
     if len(frm) != len(to) or not frm:
         raise UnsupportedClickHouseSQL(
             "transform(x, from, to[, default]) needs same-length "
             "non-empty from/to arrays (the ClickHouse contract)"
         )
-    arms = " ".join(
-        f"WHEN ({x}) = {f} THEN {t}" for f, t in zip(frm, to)
-    )
-    tail = default if default is not None else f"({x})"
+    x = args[0].strip()
+    arms = " ".join(f"WHEN ({x}) = {f} THEN {t}" for f, t in zip(frm, to))
+    tail = args[3].strip() if len(args) == 4 and args[3] else f"({x})"
     return f"(CASE {arms} ELSE {tail} END)"
 
 
-def _range_repl(m: "re.Match[str]", raw: str) -> str:
+def _range(args: list[str]) -> str | None:
     """range(end) / range(start, end[, step]) -> guarded sequence():
     CH's interval is half-open [start, end) and EMPTY when end <= start,
     while Spark's sequence(a, b) is inclusive and happily walks
@@ -1299,11 +1348,9 @@ def _range_repl(m: "re.Match[str]", raw: str) -> str:
     runtime step <= 0 is a CH error the text can't check). Deviation:
     CH errors on a negative bare end (UInt domain) where this yields []
     — documented in MIGRATION.md."""
-    args = [
-        raw[slice(*m.span(g))].strip()
-        for g in (1, 2, 3)
-        if m.group(g) is not None and raw[slice(*m.span(g))].strip()
-    ]
+    if len(args) > 3:
+        return None
+    args = [a.strip() for a in args if a.strip()]
     if not args:
         raise UnsupportedClickHouseSQL("range() needs 1-3 arguments")
     if len(args) == 1:
@@ -1330,9 +1377,8 @@ def _range_repl(m: "re.Match[str]", raw: str) -> str:
     )
 
 
-
-# r16 wave 5: accurateCast's contract is the RANGE-CHECKED cast — under
-# ANSI (the session default) Spark CAST errors on overflow exactly like
+# accurateCast's contract is the RANGE-CHECKED cast — under ANSI (the
+# session default) Spark CAST errors on overflow exactly like
 # accurateCast, and try_cast is the OrNull twin. Only types whose Spark
 # target enforces the SAME domain translate; UInt*/Decimal refuse (a
 # BIGINT cast would admit negatives CH rejects — the toUIntOrNull
@@ -1352,20 +1398,23 @@ _ACCURATE_CAST_TYPES = {
 }
 
 
-def _accurate_cast_repl(m: "re.Match[str]", raw: str) -> str:
-    or_null = bool(m.group(1))
-    expr = raw[slice(*m.span(2))].strip()
-    ch_type = raw[slice(*m.span(3))].strip()
-    target = _ACCURATE_CAST_TYPES.get(ch_type.lower())
-    if target is None:
-        raise UnsupportedClickHouseSQL(
-            f"accurateCast to {ch_type!r} — only types with a same-domain "
-            "Spark target translate (Int8/16/32/64, Float32/64, String, "
-            "Date, DateTime, Bool); UInt widths would admit negatives "
-            "ClickHouse rejects"
-        )
-    fn = "try_cast" if or_null else "CAST"
-    return f"{fn}(({expr}) AS {target})"
+def _accurate_cast(fn: str):
+    def emit(args: list[str]) -> str | None:
+        lit = _LITERAL_ARG.fullmatch(args[-1])
+        if len(args) != 2 or lit is None:
+            return None
+        ch_type = lit.group(1).strip()
+        target = _ACCURATE_CAST_TYPES.get(ch_type.lower())
+        if target is None:
+            raise UnsupportedClickHouseSQL(
+                f"accurateCast to {ch_type!r} — only types with a same-domain "
+                "Spark target translate (Int8/16/32/64, Float32/64, String, "
+                "Date, DateTime, Bool); UInt widths would admit negatives "
+                "ClickHouse rejects"
+            )
+        return f"{fn}(({args[0].strip()}) AS {target})"
+
+    return emit
 
 
 # CH toIntervalX(n) -> Spark's interval constructors: day-and-finer
@@ -1384,117 +1433,206 @@ _TO_INTERVAL_FORMS = {
 }
 
 
-def _to_interval_repl(m: "re.Match[str]", raw: str) -> str:
-    unit = m.group(1).lower()
-    expr = raw[slice(*m.span(2))].strip()
-    return _TO_INTERVAL_FORMS[unit].format(expr)
-
-
-
-def _refuse_empty_needle(m: "re.Match[str]", raw: str) -> str:
-    raise UnsupportedClickHouseSQL(
-        "replaceOne with an empty needle — engine-defined; concat the "
-        "prefix explicitly if insertion is intended"
+def _replace_one(args: list[str]) -> str | None:
+    """First-occurrence replace: instr/substr CASE — encoding-agnostic
+    as an operation (the RESULT of replacing the first occurrence is the
+    same whether positions are counted in bytes or chars, as long as
+    instr, substr and length all count characters); the haystack
+    evaluates four times, row-local. A LITERAL empty needle refuses:
+    Spark's instr(s, '') is 1 (the lowering would insert at the start)
+    while CH's empty-pattern behavior is engine-defined — the
+    countSubstrings empty-needle precedent."""
+    if len(args) >= 3 and re.fullmatch(r"''\s*", args[1]):
+        raise UnsupportedClickHouseSQL(
+            "replaceOne with an empty needle — engine-defined; concat the "
+            "prefix explicitly if insertion is intended"
+        )
+    if len(args) != 3:
+        return None
+    s, needle, repl = args
+    at = f"instr(({s}), ({needle}))"
+    return (
+        f"(CASE WHEN {at} > 0 THEN concat(substr(({s}), 1, {at} - 1), "
+        f"({repl}), substr(({s}), {at} + length(({needle})))) "
+        f"ELSE ({s}) END)"
     )
 
 
-_REWRITES: list[tuple[re.Pattern[str], str]] = [
-    # ---- r16 wave 4 (placed FIRST in the table: the argument-capturing
-    # entries here hold a one-paren-level _ARG budget, so they must run
-    # before EVERY arg-expanding entry — divide()'s CASE, emptyArrayT()'s
-    # typed CAST, toInt*'s CAST — or isNaN(divide(a, b)) and
-    # LinfNorm(emptyArrayFloat64()) falsely refuse; the same ordering rule
-    # as _rewrite_least_greatest vs datetime_diff. Their replacements emit
-    # only Spark-native text no later entry matches) ----
-    # ---- r16 wave 4: comparison / LIKE function spellings ----
-    # CH spells every comparison as a named function returning UInt8;
-    # the operator forms already pass through as Spark booleans, so
-    # the function spellings lower to the SAME parenthesized operators
-    # — one consistent boolean surface (UInt8 -> BOOLEAN documented in
-    # MIGRATION.md; sum(equals(..)) fails loudly exactly like sum(a=b)
-    # does today — wrap in countIf/if as CH users already must for
-    # typed aggregation). like()/ilike() need no entry: Spark resolves
-    # both function spellings natively with identical %/_/backslash
-    # semantics (measured).
-    (
-        re.compile(rf"\bnotEquals\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 != \2)",
-    ),
-    (
-        re.compile(rf"\bequals\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 = \2)",
-    ),
-    (
-        re.compile(rf"\blessOrEquals\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 <= \2)",
-    ),
-    (
-        re.compile(
-            rf"\bgreaterOrEquals\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"(\1 >= \2)",
-    ),
-    (
-        re.compile(rf"\bless\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 < \2)",
-    ),
-    (
-        re.compile(rf"\bgreater\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 > \2)",
-    ),
-    (
-        re.compile(rf"\bnotLike\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 NOT LIKE \2)",
-    ),
-    (
-        re.compile(rf"\bnotILike\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(NOT ilike(\1, \2))",
-    ),
-    # ---- r16 wave 4: rounding / exponentials ----
+def _padded_digits(fn: str, width: int):
+    """hex/bin padded to a multiple of ``width`` digits (the hex/bin
+    entries say why). hex over BINARY — the digest entries' unhex(..) —
+    is already the CH value (Spark hex of bytes is even-length
+    uppercase), so that call is kept as written."""
+
+    def emit(args: list[str]) -> str | None:
+        if len(args) != 1 or re.match(r"unhex\s*\(", args[0], re.I):
+            return None
+        x = args[0]
+        return (
+            f"lpad({fn}({x}), CAST(ceil(char_length({fn}({x})) / {width})"
+            f" * {width} AS INT), '0')"
+        )
+
+    return emit
+
+
+def _to_start_of_week(args: list[str]) -> str | None:
+    """toStartOfWeek(x[, mode]): ClickHouse's week START depends only on
+    the mode's parity (toWeek modes 0-9: even -> Sunday-first, odd ->
+    Monday-first; the even/odd numbering split affects only week
+    NUMBERS, not the start day). The default (mode 0) is SUNDAY — which
+    is why toStartOfWeek must NOT lower to date_trunc('week') like
+    toMonday does (Spark weeks start Monday; a bare swap would move
+    every Sunday row into the previous week, the silent-collision
+    class). Sunday form: most recent Sunday <= x via dayofweek (Sunday=1
+    in Spark), returning DATE as CH does. The argument splices twice
+    (row-local double evaluation — the least/greatest caveat class).
+    Non-literal modes and the 3-arg timezone form are kept as written
+    and refuse at the toStartOf\\w+ residual."""
+    x = args[0]
+    if len(args) == 2 and re.fullmatch(r"[13579]\s*", args[1]):
+        return f"CAST(date_trunc('week', {x}) AS DATE)"
+    if len(args) == 1 or len(args) == 2 and re.fullmatch(r"[02468]\s*", args[1]):
+        return f"date_sub(CAST({x} AS DATE), dayofweek({x}) - 1)"
+    return None
+
+
+def _arity(template: str) -> int:
+    fields = string.Formatter().parse(template)
+    return len({f for _, f, _, _ in fields if f is not None})
+
+
+def _shaped(shape: "re.Pattern[str]", template: str):
+    """A template whose LAST argument must fullmatch ``shape`` — a
+    literal the lowering reads — and is spliced as the shape's group 1."""
+
+    def emit(args: list[str]) -> str | None:
+        lit = shape.fullmatch(args[-1])
+        if len(args) != _arity(template) or lit is None:
+            return None
+        return template.format(*args[:-1], lit.group(1))
+
+    return emit
+
+
+def _stripped(template: str):
+    """A template over arguments stripped at both ends."""
+
+    def emit(args: list[str]) -> str | None:
+        if len(args) != _arity(template):
+            return None
+        return template.format(*(a.strip() for a in args))
+
+    return emit
+
+
+# ---- to{Int,Float}*Or{Null,Zero,Default} converter suffixes.
+# ClickHouse semantics: parse the STRING argument strictly; on parse
+# failure OR out-of-range return NULL (OrNull), the type default 0
+# (OrZero / 1-arg OrDefault), or the given expression (2-arg
+# OrDefault). NULL input propagates NULL (they are ordinary functions),
+# so OrZero/OrDefault wrap in an explicit NULL guard — coalesce alone
+# would turn a NULL input into the default, which CH never does.
+# Width-true Spark target types (Int8 -> TINYINT ... Float64 -> DOUBLE)
+# preserve the out-of-range -> default boundary: try_cast('300' AS
+# TINYINT) is NULL exactly where CH's range check fails the parse;
+# fractional strings are MEASURED-rejected by Spark's integer try_cast
+# too ('3.5' -> NULL, same as CH — note DuckDB's TRY_CAST rounds it to
+# 4, so oracles must not feed fractional strings to integer targets).
+# DOCUMENTED deviations (MIGRATION.md): try_cast trims surrounding
+# whitespace that CH's strict parser rejects (' 42' succeeds here,
+# default in CH), and the guard evaluates the argument twice (row-local;
+# nondeterministic arguments carry the least/greatest caveat).
+# toUInt*Or* REFUSES — Spark has no unsigned domain, so
+# toUInt8OrNull('200') = 200 in CH has no width-true target (TINYINT
+# would return NULL); toDate*/toDecimal*/toDateTime* Or-forms refuse on
+# date-parsing / scale divergence (the residual check owns the pointer).
+def _try_cast_expr(arg: str, spark_t: str) -> str:
+    """Width-true fallible parse. INTEGER targets guard the try_cast
+    behind an exception-free DOUBLE pre-parse (MEASURED: Spark's
+    string->integer try_cast fails through a thrown-and-caught
+    NumberFormatException at ~10 us/row — 3.1x slower on all-garbage
+    columns, which is exactly the dirty-data domain these converters
+    exist for — while the string->double parse fails without throwing).
+    Value-identical by grammar containment: every string Spark's
+    integer parse accepts (trimAll whitespace, sign, digits) is also
+    accepted by its double parse, so a double-parse NULL implies an
+    integer-parse NULL — verified over a 22-case battery (whitespace
+    forms, '3.5', '1e3', 'NaN', 'Infinity', hex, overflow, bare signs)
+    in test_ch_dialect_or_converters. Only numeric-looking non-integers
+    ('3.5', '1e3') still pay the exception path. Float targets parse
+    exception-free already and stay bare."""
+    if spark_t in ("FLOAT", "DOUBLE"):
+        return f"try_cast({arg} AS {spark_t})"
+    return (
+        f"(CASE WHEN try_cast({arg} AS DOUBLE) IS NOT NULL "
+        f"THEN try_cast({arg} AS {spark_t}) END)"
+    )
+
+
+def _or_converters(ch_t: str, spark_t: str) -> dict:
+    tc = _try_cast_expr("{0}", spark_t)
+    guarded = "(CASE WHEN ({0}) IS NULL THEN NULL ELSE coalesce(%s, %s) END)"
+    return {
+        f"to{ch_t}ornull": tc,
+        f"to{ch_t}orzero": guarded % (tc, "0"),
+        f"to{ch_t}ordefault": (guarded % (tc, "0"), guarded % (tc, "({1})")),
+    }
+
+
+_CALLS: dict = {
+    # comparison / LIKE function spellings: CH spells every comparison
+    # as a named function returning UInt8; the operator forms already
+    # pass through as Spark booleans, so the function spellings lower to
+    # the SAME parenthesized operators — one consistent boolean surface
+    # (UInt8 -> BOOLEAN documented in MIGRATION.md; sum(equals(..))
+    # fails loudly exactly like sum(a=b) does — wrap in countIf/if as CH
+    # users already must for typed aggregation). like()/ilike() need no
+    # entry: Spark resolves both function spellings natively with
+    # identical %/_/backslash semantics (measured).
+    "notequals": "({0} != {1})",
+    "equals": "({0} = {1})",
+    "lessorequals": "({0} <= {1})",
+    "greaterorequals": "({0} >= {1})",
+    "less": "({0} < {1})",
+    "greater": "({0} > {1})",
+    "notlike": "({0} NOT LIKE {1})",
+    "notilike": "(NOT ilike({0}, {1}))",
+    # ---- rounding / exponentials ----
     # roundBankers IS Spark's bround (IEEE half-even, any arity)
-    (re.compile(r"\broundBankers\s*\(", re.I), "bround("),
+    "roundbankers": "bround(",
     # exp2/exp10 compute at Float64 in CH; pow is the same
     # correctly-rounded libm double for the integer exponents these
-    # are used with (bare renames — nested args need no budget)
-    (re.compile(r"\bexp2\s*\(", re.I), "pow(2, "),
-    (re.compile(r"\bexp10\s*\(", re.I), "pow(10, "),
+    # are used with
+    "exp2": "pow(2, ",
+    "exp10": "pow(10, ",
     # intExp2 -> shiftleft(1L, x): exact on [0, 62]; 2^63 has no
     # signed-BIGINT home (UInt64 width surface, the emptyArrayUInt64
     # class) and Spark wraps the shift mod 64 where CH errors —
     # literal out-of-domain arguments refuse in _REFUSALS, column
     # arguments are documented in MIGRATION.md
-    (re.compile(r"\bintExp2\s*\(", re.I), "shiftleft(1L, "),
-    # ---- r16 wave 4: float classification ----
+    "intexp2": "shiftleft(1L, ",
+    # ---- float classification ----
     # isNaN rides Spark's NaN-EQUALITY (NaN = NaN is TRUE in Spark,
     # unlike IEEE): single evaluation, NULL propagates (CH Nullable
     # rule — Spark's bare isnan(NULL) returns false, the silent
     # divergence this entry closes)
-    (
-        re.compile(rf"\bisNaN\s*\(\s*{_ARG}\s*\)", re.I),
-        r"((\1) = CAST('NaN' AS DOUBLE))",
-    ),
+    "isnan": "(({0}) = CAST('NaN' AS DOUBLE))",
     # abs(x) < inf: finite -> true, ±inf -> false, NaN -> false
     # (Spark's NaN comparisons return false except =/>=-against-NaN),
     # NULL -> NULL — single evaluation, no CASE needed
-    (
-        re.compile(rf"\bisFinite\s*\(\s*{_ARG}\s*\)", re.I),
-        r"(abs(\1) < CAST('Infinity' AS DOUBLE))",
-    ),
-    (
-        re.compile(rf"\bisInfinite\s*\(\s*{_ARG}\s*\)", re.I),
-        r"(abs(\1) = CAST('Infinity' AS DOUBLE))",
-    ),
+    "isfinite": "(abs({0}) < CAST('Infinity' AS DOUBLE))",
+    "isinfinite": "(abs({0}) = CAST('Infinity' AS DOUBLE))",
     # x if finite else y; NULL x -> NULL (CH Nullable propagation —
     # stated assumption, MIGRATION.md). x evaluates up to three times
     # — row-local, the least/greatest caveat class
-    (
-        re.compile(rf"\bifNotFinite\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(CASE WHEN (\1) IS NULL THEN NULL"
-        r" WHEN abs(\1) < CAST('Infinity' AS DOUBLE) THEN (\1)"
-        r" ELSE (\2) END)",
+    "ifnotfinite": (
+        "(CASE WHEN ({0}) IS NULL THEN NULL"
+        " WHEN abs({0}) < CAST('Infinity' AS DOUBLE) THEN ({0})"
+        " ELSE ({1}) END)"
     ),
-    # ---- r16 wave 4: vector norms / distances (the LLM-pipeline
-    # surface: embeddings live in array columns here) ----
+    # ---- vector norms / distances (the LLM-pipeline surface:
+    # embeddings live in array columns here) ----
     # All accumulate at DOUBLE via a `* 1.0D` widening factor — CH
     # accumulates wide too (UInt64/Float64); integer inputs would
     # otherwise overflow INT multiplication under ANSI (the session
@@ -1505,1145 +1643,137 @@ _REWRITES: list[tuple[re.Pattern[str], str]] = [
     # greatest() SKIPS NULLs and would silently diverge from the
     # sum-based members). UNEQUAL-length distance args yield NULL
     # (zip_with pads) where CH raises — loud-to-NULL, documented.
-    (
-        re.compile(rf"\bL1Norm\s*\(\s*{_ARG}\s*\)", re.I),
-        r"aggregate(\1, 0D, (cdr_vn_a, cdr_vn_x) ->"
-        r" cdr_vn_a + abs(cdr_vn_x * 1.0D))",
+    "l1norm": (
+        "aggregate({0}, 0D, (cdr_vn_a, cdr_vn_x) ->"
+        " cdr_vn_a + abs(cdr_vn_x * 1.0D))"
     ),
-    (
-        re.compile(rf"\bL2Norm\s*\(\s*{_ARG}\s*\)", re.I),
-        r"sqrt(aggregate(\1, 0D, (cdr_vn_a, cdr_vn_x) ->"
-        r" cdr_vn_a + cdr_vn_x * 1.0D * cdr_vn_x))",
+    "l2norm": (
+        "sqrt(aggregate({0}, 0D, (cdr_vn_a, cdr_vn_x) ->"
+        " cdr_vn_a + cdr_vn_x * 1.0D * cdr_vn_x))"
     ),
-    (
-        re.compile(rf"\bL2SquaredNorm\s*\(\s*{_ARG}\s*\)", re.I),
-        r"aggregate(\1, 0D, (cdr_vn_a, cdr_vn_x) ->"
-        r" cdr_vn_a + cdr_vn_x * 1.0D * cdr_vn_x)",
+    "l2squarednorm": (
+        "aggregate({0}, 0D, (cdr_vn_a, cdr_vn_x) ->"
+        " cdr_vn_a + cdr_vn_x * 1.0D * cdr_vn_x)"
     ),
-    (
-        re.compile(rf"\bLinfNorm\s*\(\s*{_ARG}\s*\)", re.I),
-        r"aggregate(\1, 0D, (cdr_vn_a, cdr_vn_x) -> 0.5D * (cdr_vn_a"
-        r" + abs(cdr_vn_x * 1.0D) + abs(cdr_vn_a - abs(cdr_vn_x * 1.0D))))",
+    "linfnorm": (
+        "aggregate({0}, 0D, (cdr_vn_a, cdr_vn_x) -> 0.5D * (cdr_vn_a"
+        " + abs(cdr_vn_x * 1.0D) + abs(cdr_vn_a - abs(cdr_vn_x * 1.0D))))"
     ),
-    (
-        re.compile(rf"\bL1Distance\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" abs(cdr_vd_x * 1.0D - cdr_vd_y)), 0D,"
-        r" (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v)",
+    "l1distance": (
+        "aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " abs(cdr_vd_x * 1.0D - cdr_vd_y)), 0D,"
+        " (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v)"
     ),
-    (
-        re.compile(
-            rf"\bL2SquaredDistance\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" (cdr_vd_x * 1.0D - cdr_vd_y) * (cdr_vd_x * 1.0D - cdr_vd_y)),"
-        r" 0D, (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v)",
+    "l2squareddistance": (
+        "aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " (cdr_vd_x * 1.0D - cdr_vd_y) * (cdr_vd_x * 1.0D - cdr_vd_y)),"
+        " 0D, (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v)"
     ),
-    (
-        re.compile(rf"\bL2Distance\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"sqrt(aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" (cdr_vd_x * 1.0D - cdr_vd_y) * (cdr_vd_x * 1.0D - cdr_vd_y)),"
-        r" 0D, (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v))",
+    "l2distance": (
+        "sqrt(aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " (cdr_vd_x * 1.0D - cdr_vd_y) * (cdr_vd_x * 1.0D - cdr_vd_y)),"
+        " 0D, (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v))"
     ),
-    (
-        re.compile(rf"\bLinfDistance\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" abs(cdr_vd_x * 1.0D - cdr_vd_y)), 0D,"
-        r" (cdr_vd_a, cdr_vd_v) -> 0.5D * (cdr_vd_a + cdr_vd_v"
-        r" + abs(cdr_vd_a - cdr_vd_v)))",
+    "linfdistance": (
+        "aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " abs(cdr_vd_x * 1.0D - cdr_vd_y)), 0D,"
+        " (cdr_vd_a, cdr_vd_v) -> 0.5D * (cdr_vd_a + cdr_vd_v"
+        " + abs(cdr_vd_a - cdr_vd_v)))"
     ),
-    (
-        re.compile(
-            rf"\b(?:arrayDotProduct|dotProduct)\s*\(\s*{_ARG}\s*,\s*{_ARG}"
-            r"\s*\)",
-            re.I,
-        ),
-        r"aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" cdr_vd_x * 1.0D * cdr_vd_y), 0D,"
-        r" (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v)",
+    **dict.fromkeys(
+        ("arraydotproduct", "dotproduct"),
+        "aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " cdr_vd_x * 1.0D * cdr_vd_y), 0D,"
+        " (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v)",
     ),
-    # cosineDistance = 1 - dot/(|a|*|b|): the zero-norm divisor rides
-    # the divide() idiom (dot is then 0, and 0 * inf = nan — exactly
-    # CH's nan) so ANSI never raises. Each array is referenced three
-    # times — row-local; cost note: an expensive array EXPRESSION
-    # computes three times (columns are free)
-    (
-        re.compile(rf"\bcosineDistance\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(1.0D - CASE WHEN sqrt(aggregate(\1, 0D, (cdr_vd_a, cdr_vd_x)"
-        r" -> cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x))"
-        r" * sqrt(aggregate(\2, 0D, (cdr_vd_a, cdr_vd_x) ->"
-        r" cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x)) = 0.0D"
-        r" THEN aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" cdr_vd_x * 1.0D * cdr_vd_y), 0D, (cdr_vd_a, cdr_vd_v) ->"
-        r" cdr_vd_a + cdr_vd_v) * CAST('Infinity' AS DOUBLE)"
-        r" ELSE aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" cdr_vd_x * 1.0D * cdr_vd_y), 0D, (cdr_vd_a, cdr_vd_v) ->"
-        r" cdr_vd_a + cdr_vd_v)"
-        r" / nullif(sqrt(aggregate(\1, 0D, (cdr_vd_a, cdr_vd_x) ->"
-        r" cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x))"
-        r" * sqrt(aggregate(\2, 0D, (cdr_vd_a, cdr_vd_x) ->"
-        r" cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x)), 0.0D) END)",
+    # Lp family: literal-or-column p, DOUBLE folds (the same
+    # conventions: empty -> 0^(1/p) = 0, NULL element -> NULL)
+    "lpnorm": (
+        "pow(aggregate({0}, 0D, (cdr_vn_a, cdr_vn_x) ->"
+        " cdr_vn_a + pow(abs(cdr_vn_x * 1.0D), {1})), 1.0D / ({1}))"
     ),
-    # ---- r16 wave 4: map lambda swaps ----
-    # CH spells (lambda, map); Spark spells (map, lambda) — the
-    # arrayCount swap precedent. mapExists/mapAll ride cardinality of
-    # the same filter (mapAll references the map twice — row-local;
-    # empty maps: exists -> false, all -> true, both matching CH's
-    # vacuous results)
-    (
-        re.compile(rf"\bmapFilter\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"map_filter(\2, \1)",
-    ),
-    (
-        re.compile(rf"\bmapExists\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(cardinality(map_filter(\2, \1)) > 0)",
-    ),
-    (
-        re.compile(rf"\bmapAll\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(cardinality(map_filter(\2, \1)) = cardinality(\2))",
-    ),
-    # ---- r16 wave 5 (same head placement and budget rationale as wave
-    # 4; names surfaced by the namespace walk test — each was an opaque
-    # unresolved-function error before this wave) ----
-    # negate is the unary-minus spelling
-    (re.compile(rf"\bnegate\s*\(\s*{_ARG}\s*\)", re.I), r"(-(\1))"),
-    # zero-divisor variants: CH returns 0 where bare intDiv/modulo
-    # error; NULL divisor rides the ELSE to NULL (CH Nullable rule)
-    (
-        re.compile(rf"\bintDivOrZero\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(CASE WHEN (\2) = 0 THEN 0 ELSE (\1) div (\2) END)",
-    ),
-    (
-        re.compile(rf"\bmoduloOrZero\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(CASE WHEN (\2) = 0 THEN 0 ELSE mod((\1), (\2)) END)",
-    ),
-    # max2/min2 return Float64 and propagate NULL; Spark's greatest/
-    # least SKIP NULLs, so the guard spells CH's rule (args twice,
-    # row-local — the least/greatest caveat class)
-    (
-        re.compile(rf"\bmax2\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(CASE WHEN (\1) IS NULL OR (\2) IS NULL THEN NULL"
-        r" ELSE CAST(greatest((\1), (\2)) AS DOUBLE) END)",
-    ),
-    (
-        re.compile(rf"\bmin2\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(CASE WHEN (\1) IS NULL OR (\2) IS NULL THEN NULL"
-        r" ELSE CAST(least((\1), (\2)) AS DOUBLE) END)",
-    ),
-    # type-surface identities: the VALUE is unchanged
-    (re.compile(rf"\btoNullable\s*\(\s*{_ARG}\s*\)", re.I), r"(\1)"),
-    (re.compile(rf"\bmaterialize\s*\(\s*{_ARG}\s*\)", re.I), r"(\1)"),
-    (re.compile(rf"\bidentity\s*\(\s*{_ARG}\s*\)", re.I), r"(\1)"),
-    (
-        re.compile(rf"\bisZeroOrNull\s*\(\s*{_ARG}\s*\)", re.I),
-        r"((\1) IS NULL OR (\1) = 0)",
-    ),
-    # date/time constructors and projections
-    (
-        re.compile(
-            rf"\bmakeDate\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"make_date(\1, \2, \3)",
-    ),
-    (
-        re.compile(
-            rf"\bmakeDateTime\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*,"
-            rf"\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        r"make_timestamp(\1, \2, \3, \4, \5, \6)",
-    ),
-    (
-        re.compile(rf"\btoYYYYMMDDhhmmss\s*\(\s*{_ARG}\s*\)", re.I),
-        r"CAST(date_format(\1, 'yyyyMMddHHmmss') AS BIGINT)",
-    ),
-    (
-        re.compile(rf"\btoISOYear\s*\(\s*{_ARG}\s*\)", re.I),
-        r"extract(YEAROFWEEK FROM \1)",
-    ),
-    (re.compile(r"\btoLastDayOfMonth\s*\(", re.I), "last_day("),
-    (re.compile(r"\btimeZone\s*\(\s*\)", re.I), "current_timezone()"),
-    (re.compile(r"\bcurrentDatabase\s*\(\s*\)", re.I), "current_database()"),
-    (re.compile(r"\bcurrentUser\s*\(\s*\)", re.I), "current_user()"),
-    # random distributions (both engines: per-row nondeterministic).
-    # Emits Spark's random() ALIAS, not rand(): this block precedes the
-    # CH bare-rand entry, whose UInt32 scaling would re-match an
-    # emitted rand() (the randCanonical ordering note, inverted)
-    (
-        re.compile(rf"\brandUniform\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(random() * ((\2) - (\1)) + (\1))",
-    ),
-    (
-        re.compile(rf"\brandNormal\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(randn() * (\2) + (\1))",
-    ),
-    # math renames / adjustments
-    (re.compile(r"\bsgn\s*\(", re.I), "sign("),
-    (re.compile(r"\bwidthBucket\s*\(", re.I), "width_bucket("),
-    # Spark's kurtosis is EXCESS kurtosis (m4/m2^2 - 3, measured class);
-    # CH kurtPop is the raw ratio — shift back. skewPop formulas agree.
-    (
-        re.compile(rf"\bkurtPop\s*\(\s*{_ARG}\s*\)", re.I),
-        r"(kurtosis(\1) + 3)",
-    ),
-    (re.compile(r"\bskewPop\s*\(", re.I), "skewness("),
-    # sumKahan: Spark's sum is the uncompensated double sum — same
-    # value up to float summation error (documented accuracy surface)
-    (re.compile(r"\bsumKahan\s*\(", re.I), "sum("),
-    (re.compile(r"\buniqCombined64\s*\(", re.I), "approx_count_distinct("),
-    (
-        re.compile(rf"\bsumCount\s*\(\s*{_ARG}\s*\)", re.I),
-        r"named_struct('sum', sum(\1), 'count', count(\1))",
-    ),
-    # CH fits y = kx + b from (x, y); Spark's regr_* take (y, x)
-    (
-        re.compile(
-            rf"\bsimpleLinearRegression\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"named_struct('k', regr_slope(\2, \1), 'b', regr_intercept(\2, \1))",
-    ),
-    # throwIf: assert_true throws when its condition is FALSE, so wrap
-    # the negation; the ifnull pins CH's 0 return on the pass path
-    (
-        re.compile(rf"\bthrowIf\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"ifnull(assert_true(NOT (\1), \2), 0)",
-    ),
-    (
-        re.compile(rf"\bthrowIf\s*\(\s*{_ARG}\s*\)", re.I),
-        r"ifnull(assert_true(NOT (\1)), 0)",
-    ),
-    # arrays
-    (re.compile(r"\barrayShuffle\s*\(", re.I), "shuffle("),
-    (
-        re.compile(rf"\barrayProduct\s*\(\s*{_ARG}\s*\)", re.I),
-        r"aggregate(\1, 1.0D, (cdr_ap_a, cdr_ap_x) ->"
-        r" cdr_ap_a * cdr_ap_x)",
-    ),
-    # CH spells (length, elem); Spark spells (elem, count INT)
-    (
-        re.compile(
-            rf"\barrayWithConstant\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"array_repeat((\2), CAST((\1) AS INT))",
-    ),
-    (
-        re.compile(
-            rf"\bappendTrailingCharIfAbsent\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        r"(CASE WHEN endswith((\1), (\2)) THEN (\1)"
-        r" ELSE concat((\1), (\2)) END)",
-    ),
-    # replaceOne with a LITERAL empty needle refuses BEFORE the rewrite
-    # below: Spark's instr(s, '') is 1 (the lowering would insert at
-    # the start) while CH's empty-pattern behavior is engine-defined —
-    # the countSubstrings empty-needle precedent
-    (
-        re.compile(rf"\breplaceOne\s*\(\s*{_ARG}\s*,\s*''\s*,", re.I),
-        _refuse_empty_needle,
-    ),
-    # first-occurrence replace: instr/substr CASE — encoding-agnostic
-    # as an operation (the RESULT of replacing the first occurrence is
-    # the same whether positions are counted in bytes or chars); the
-    # haystack evaluates four times, row-local
-    (
-        re.compile(
-            rf"\breplaceOne\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        r"(CASE WHEN instr((\1), (\2)) > 0 THEN"
-        r" concat(substr((\1), 1, instr((\1), (\2)) - 1), (\3),"
-        r" substr((\1), instr((\1), (\2)) + length((\2))))"
-        r" ELSE (\1) END)",
-    ),
-    # Lp family: literal-or-column p, DOUBLE folds (the wave-4 vector
-    # conventions: empty -> 0^ (1/p) = 0, NULL element -> NULL)
-    (
-        re.compile(rf"\bLpNorm\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"pow(aggregate(\1, 0D, (cdr_vn_a, cdr_vn_x) ->"
-        r" cdr_vn_a + pow(abs(cdr_vn_x * 1.0D), \2)), 1.0D / (\2))",
-    ),
-    (
-        re.compile(
-            rf"\bLpDistance\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        r"pow(aggregate(zip_with(\1, \2, (cdr_vd_x, cdr_vd_y) ->"
-        r" pow(abs(cdr_vd_x * 1.0D - cdr_vd_y), \3)), 0D,"
-        r" (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v), 1.0D / (\3))",
+    "lpdistance": (
+        "pow(aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " pow(abs(cdr_vd_x * 1.0D - cdr_vd_y), {2})), 0D,"
+        " (cdr_vd_a, cdr_vd_v) -> cdr_vd_a + cdr_vd_v), 1.0D / ({2}))"
     ),
     # unit-scaled copies: the norm fold references the array again
     # (array EXPRESSION computes several times, row-local; columns are
     # free); a ZERO norm rides the divide() idiom — ANSI raises on any
     # zero divisor, double included — and 0 * Infinity gives the NaN
     # elements CH returns for zero vectors
-    (
-        re.compile(rf"\bnormalizeL1\s*\(\s*{_ARG}\s*\)", re.I),
-        r"transform(\1, cdr_nv_x -> CASE"
-        r" WHEN aggregate(\1, 0D, (cdr_nv_a, cdr_nv_y) ->"
-        r" cdr_nv_a + abs(cdr_nv_y * 1.0D)) = 0.0D"
-        r" THEN cdr_nv_x * 1.0D * CAST('Infinity' AS DOUBLE)"
-        r" ELSE cdr_nv_x * 1.0D / nullif(aggregate(\1, 0D,"
-        r" (cdr_nv_a, cdr_nv_y) -> cdr_nv_a + abs(cdr_nv_y * 1.0D)),"
-        r" 0.0D) END)",
+    "normalizel1": (
+        "transform({0}, cdr_nv_x -> CASE"
+        " WHEN aggregate({0}, 0D, (cdr_nv_a, cdr_nv_y) ->"
+        " cdr_nv_a + abs(cdr_nv_y * 1.0D)) = 0.0D"
+        " THEN cdr_nv_x * 1.0D * CAST('Infinity' AS DOUBLE)"
+        " ELSE cdr_nv_x * 1.0D / nullif(aggregate({0}, 0D,"
+        " (cdr_nv_a, cdr_nv_y) -> cdr_nv_a + abs(cdr_nv_y * 1.0D)),"
+        " 0.0D) END)"
+    ),
+    "normalizel2": (
+        "transform({0}, cdr_nv_x -> CASE"
+        " WHEN aggregate({0}, 0D, (cdr_nv_a, cdr_nv_y) ->"
+        " cdr_nv_a + cdr_nv_y * 1.0D * cdr_nv_y) = 0.0D"
+        " THEN cdr_nv_x * 1.0D * CAST('Infinity' AS DOUBLE)"
+        " ELSE cdr_nv_x * 1.0D / nullif(sqrt(aggregate({0}, 0D,"
+        " (cdr_nv_a, cdr_nv_y) -> cdr_nv_a + cdr_nv_y * 1.0D"
+        " * cdr_nv_y)), 0.0D) END)"
+    ),
+    # cosineDistance = 1 - dot/(|a|*|b|): the zero-norm divisor rides
+    # the divide() idiom (dot is then 0, and 0 * inf = nan — exactly
+    # CH's nan) so ANSI never raises. Each array is referenced three
+    # times — row-local; cost note: an expensive array EXPRESSION
+    # computes three times (columns are free)
+    "cosinedistance": (
+        "(1.0D - CASE WHEN sqrt(aggregate({0}, 0D, (cdr_vd_a, cdr_vd_x)"
+        " -> cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x))"
+        " * sqrt(aggregate({1}, 0D, (cdr_vd_a, cdr_vd_x) ->"
+        " cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x)) = 0.0D"
+        " THEN aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " cdr_vd_x * 1.0D * cdr_vd_y), 0D, (cdr_vd_a, cdr_vd_v) ->"
+        " cdr_vd_a + cdr_vd_v) * CAST('Infinity' AS DOUBLE)"
+        " ELSE aggregate(zip_with({0}, {1}, (cdr_vd_x, cdr_vd_y) ->"
+        " cdr_vd_x * 1.0D * cdr_vd_y), 0D, (cdr_vd_a, cdr_vd_v) ->"
+        " cdr_vd_a + cdr_vd_v)"
+        " / nullif(sqrt(aggregate({0}, 0D, (cdr_vd_a, cdr_vd_x) ->"
+        " cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x))"
+        " * sqrt(aggregate({1}, 0D, (cdr_vd_a, cdr_vd_x) ->"
+        " cdr_vd_a + cdr_vd_x * 1.0D * cdr_vd_x)), 0.0D) END)"
+    ),
+    # ---- map lambda swaps ----
+    # CH spells (lambda, map); Spark spells (map, lambda) — the
+    # arrayCount swap precedent. mapExists/mapAll ride cardinality of
+    # the same filter (mapAll references the map twice — row-local;
+    # empty maps: exists -> false, all -> true, both matching CH's
+    # vacuous results)
+    "mapfilter": "map_filter({1}, {0})",
+    "mapexists": "(cardinality(map_filter({1}, {0})) > 0)",
+    "mapall": "(cardinality(map_filter({1}, {0})) = cardinality({1}))",
+    # ---- arithmetic ----
+    # negate is the unary-minus spelling
+    "negate": "(-({0}))",
+    # zero-divisor variants: CH returns 0 where bare intDiv/modulo
+    # error; NULL divisor rides the ELSE to NULL (CH Nullable rule)
+    "intdivorzero": "(CASE WHEN ({1}) = 0 THEN 0 ELSE ({0}) div ({1}) END)",
+    "moduloorzero": "(CASE WHEN ({1}) = 0 THEN 0 ELSE mod(({0}), ({1})) END)",
+    # max2/min2 return Float64 and propagate NULL; Spark's greatest/
+    # least SKIP NULLs, so the guard spells CH's rule (args twice,
+    # row-local — the least/greatest caveat class)
+    "max2": (
+        "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL"
+        " ELSE CAST(greatest(({0}), ({1})) AS DOUBLE) END)"
+    ),
+    "min2": (
+        "(CASE WHEN ({0}) IS NULL OR ({1}) IS NULL THEN NULL"
+        " ELSE CAST(least(({0}), ({1})) AS DOUBLE) END)"
     ),
-    (
-        re.compile(rf"\bnormalizeL2\s*\(\s*{_ARG}\s*\)", re.I),
-        r"transform(\1, cdr_nv_x -> CASE"
-        r" WHEN aggregate(\1, 0D, (cdr_nv_a, cdr_nv_y) ->"
-        r" cdr_nv_a + cdr_nv_y * 1.0D * cdr_nv_y) = 0.0D"
-        r" THEN cdr_nv_x * 1.0D * CAST('Infinity' AS DOUBLE)"
-        r" ELSE cdr_nv_x * 1.0D / nullif(sqrt(aggregate(\1, 0D,"
-        r" (cdr_nv_a, cdr_nv_y) -> cdr_nv_a + cdr_nv_y * 1.0D"
-        r" * cdr_nv_y)), 0.0D) END)",
-    ),
-    # maps
-    (
-        re.compile(
-            rf"\bmapContainsKeyLike\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"exists(map_keys(\1), cdr_mkl_k -> cdr_mkl_k LIKE (\2))",
-    ),
-    (
-        re.compile(
-            rf"\bmapExtractKeyLike\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"map_filter(\1, (cdr_mkl_k, cdr_mkl_v) -> cdr_mkl_k LIKE (\2))",
-    ),
-    # mapAdd/mapSubtract (map form): key-union zip summing values; a
-    # `* 1L` factor reproduces CH's Int64 promotion (the
-    # arrayDifference precedent); missing keys count as 0
-    (
-        re.compile(rf"\bmapAdd\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"map_zip_with(\1, \2, (cdr_mz_k, cdr_mz_a, cdr_mz_b) ->"
-        r" coalesce(cdr_mz_a, 0) * 1L + coalesce(cdr_mz_b, 0) * 1L)",
-    ),
-    (
-        re.compile(rf"\bmapSubtract\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"map_zip_with(\1, \2, (cdr_mz_k, cdr_mz_a, cdr_mz_b) ->"
-        r" coalesce(cdr_mz_a, 0) * 1L - coalesce(cdr_mz_b, 0) * 1L)",
-    ),
-    # semi-structured renames
-    (re.compile(r"\btoJSONString\s*\(", re.I), "to_json("),
-    (re.compile(r"\bJSONExtractKeys\s*\(", re.I), "json_object_keys("),
-    (re.compile(r"\bJSONArrayLength\s*\(", re.I), "json_array_length("),
-    # anonymous tuples -> structs (field-name surface: Spark names the
-    # fields col1/col2..., CH names them 1/2... — positional access
-    # refuses at tupleElement with the named-struct pointer)
-    (re.compile(r"\btuple\s*\(", re.I), "struct("),
-    # accurateCast / accurateCastOrNull with a literal type name (the
-    # callable maps CH type names and refuses domain-mismatched ones)
-    (
-        re.compile(
-            rf"\baccurateCast(OrNull)?\s*\(\s*{_ARG}\s*,\s*'([^']*)'"
-            r"\s*\)",
-            re.I,
-        ),
-        _accurate_cast_repl,
-    ),
-    (
-        re.compile(
-            rf"\btoInterval(Second|Minute|Hour|Day|Week|Month|Quarter|Year)"
-            rf"\s*\(\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        _to_interval_repl,
-    ),
-    # ---- r16 wave 5b: similarity / fold / epoch-precision forms ----
-    # Jaccard over DISTINCT elements in both engines; the empty/empty
-    # case rides the divide() idiom (ANSI raises on ANY zero divisor,
-    # double included — measured) so it yields CH's NaN
-    (
-        re.compile(
-            rf"\barrayJaccardIndex\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"(CASE WHEN size(array_union(\1, \2)) = 0"
-        r" THEN CAST('NaN' AS DOUBLE)"
-        r" ELSE size(array_intersect(\1, \2)) * 1.0D /"
-        r" nullif(size(array_union(\1, \2)) * 1.0D, 0.0D) END)",
-    ),
-    # CH spells (lambda, arr, init); Spark aggregate spells (arr, init,
-    # lambda) — the lambda's (acc, x) parameter order agrees. Multi-
-    # array folds (4+ args) fall to the residual refusal.
-    (
-        re.compile(
-            rf"\barrayFold\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        r"aggregate(\2, \3, \1)",
-    ),
-    # random subset without replacement: both engines return k elements
-    # in arbitrary order; slice clamps k past the length
-    (
-        re.compile(
-            rf"\barrayRandomSample\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"slice(shuffle(\1), 1, CAST((\2) AS INT))",
-    ),
-    # epoch precision family: Milli/Micro are exact Spark twins; the
-    # Nano forms REFUSE (Spark timestamps top out at microseconds — a
-    # silent sub-microsecond truncation otherwise)
-    (re.compile(r"\bfromUnixTimestamp64Milli\s*\(", re.I), "timestamp_millis("),
-    (re.compile(r"\bfromUnixTimestamp64Micro\s*\(", re.I), "timestamp_micros("),
-    (re.compile(r"\btoUnixTimestamp64Milli\s*\(", re.I), "unix_millis("),
-    (re.compile(r"\btoUnixTimestamp64Micro\s*\(", re.I), "unix_micros("),
-    # addDate/subDate take an INTERVAL second argument in CH — the
-    # operator forms are the exact Spark spelling (a non-interval
-    # second argument errors loudly in both engines)
-    (
-        re.compile(rf"\baddDate\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"((\1) + (\2))",
-    ),
-    (
-        re.compile(rf"\bsubDate\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"((\1) - (\2))",
-    ),
-    # suffix/prefix equality is encoding-agnostic — the UTF8 spellings
-    # ARE Spark's endswith/startswith
-    (re.compile(r"\bendsWithUTF8\s*\(", re.I), "endswith("),
-    (re.compile(r"\bstartsWithUTF8\s*\(", re.I), "startswith("),
-    # argless count() is ClickHouse-legal; Spark wants count(*)
-    (re.compile(r"\bcount\s*\(\s*\)", re.I), "count(*)"),
-    # ---- type conversions ----
-    (re.compile(rf"\btoU?Int\d+\s*\(\s*{_ARG}\s*\)", re.I), r"CAST(\1 AS BIGINT)"),
-    # CH rand() is a UInt32 INTEGER in [0, 2^32) — Spark's same-named
-    # rand() is a double in [0, 1), the silent-collision class (a CH
-    # user's rand() % 100 would quietly become a fraction). Scale
-    # Spark's to the CH domain; the optional argument exists in CH only
-    # to defeat common-subexpression elimination and is ignored there,
-    # so it is ignored here too. randCanonical() IS Spark's rand()
-    # contract ([0, 1) double). Both are nondeterministic in BOTH
-    # engines — reproducible sampling wants the md5-derived operators
-    # (sample_fraction / stratified_sample), not rand. rand64 refuses
-    # (a 53-bit double mantissa cannot fill 64 uniform bits).
-    # ORDER: the bare-rand entry must run BEFORE randCanonical's, whose
-    # replacement emits a rand() that must not be re-matched (table
-    # entries rescan the running text; a single entry never rescans its
-    # own output)
-    (
-        re.compile(rf"\brand\s*\(\s*{_ARG}\s*\)", re.I),
-        "CAST(floor(rand() * 4294967296) AS BIGINT)",
-    ),
-    (
-        re.compile(rf"\brandCanonical\s*\(\s*{_ARG}\s*\)", re.I),
-        "rand()",
-    ),
-    (re.compile(rf"\btoFloat\d+\s*\(\s*{_ARG}\s*\)", re.I), r"CAST(\1 AS DOUBLE)"),
-    (re.compile(rf"\btoString\s*\(\s*{_ARG}\s*\)", re.I), r"CAST(\1 AS STRING)"),
-    (re.compile(r"\btoDateTime\s*\(", re.I), "to_timestamp("),
-    (re.compile(r"\btoDate\s*\(", re.I), "to_date("),
-    # ---- date rounding ----
-    (
-        re.compile(rf"\btoStartOfHour\s*\(\s*{_ARG}\s*\)", re.I),
-        r"date_trunc('hour', \1)",
-    ),
-    (
-        re.compile(rf"\btoStartOfDay\s*\(\s*{_ARG}\s*\)", re.I),
-        r"date_trunc('day', \1)",
-    ),
-    (
-        re.compile(rf"\btoStartOfMonth\s*\(\s*{_ARG}\s*\)", re.I),
-        r"CAST(date_trunc('month', \1) AS DATE)",
-    ),
-    (
-        re.compile(rf"\btoStartOfYear\s*\(\s*{_ARG}\s*\)", re.I),
-        r"CAST(date_trunc('year', \1) AS DATE)",
-    ),
-    (
-        re.compile(rf"\btoStartOfQuarter\s*\(\s*{_ARG}\s*\)", re.I),
-        r"CAST(date_trunc('quarter', \1) AS DATE)",
-    ),
-    (
-        re.compile(rf"\btoStartOfMinute\s*\(\s*{_ARG}\s*\)", re.I),
-        r"date_trunc('minute', \1)",
-    ),
-    # toStartOfWeek(x[, mode]): ClickHouse's week START depends only on
-    # the mode's parity (toWeek modes 0-9: even -> Sunday-first, odd ->
-    # Monday-first; the even/odd numbering split affects only week
-    # NUMBERS, not the start day). The default (mode 0) is SUNDAY —
-    # which is why toStartOfWeek must NOT lower to date_trunc('week')
-    # like toMonday does (Spark weeks start Monday; a bare swap would
-    # move every Sunday row into the previous week, the silent-collision
-    # class). Sunday form: most recent Sunday <= x via dayofweek
-    # (Sunday=1 in Spark), returning DATE as CH does. The argument
-    # splices twice (row-local double evaluation — the least/greatest
-    # caveat class). Non-literal modes and the 3-arg timezone form fall
-    # to the toStartOf\w+ residual and refuse.
-    (
-        re.compile(rf"\btoStartOfWeek\s*\(\s*{_ARG}\s*\)", re.I),
-        r"date_sub(CAST(\1 AS DATE), dayofweek(\1) - 1)",
-    ),
-    (
-        re.compile(rf"\btoStartOfWeek\s*\(\s*{_ARG}\s*,\s*[02468]\s*\)", re.I),
-        r"date_sub(CAST(\1 AS DATE), dayofweek(\1) - 1)",
-    ),
-    (
-        re.compile(rf"\btoStartOfWeek\s*\(\s*{_ARG}\s*,\s*[13579]\s*\)", re.I),
-        r"CAST(date_trunc('week', \1) AS DATE)",
-    ),
-    (
-        re.compile(rf"\btoYYYYMMDD\s*\(\s*{_ARG}\s*\)", re.I),
-        r"CAST(date_format(\1, 'yyyyMMdd') AS BIGINT)",
-    ),
-    (
-        re.compile(rf"\btoYYYYMM\s*\(\s*{_ARG}\s*\)", re.I),
-        r"CAST(date_format(\1, 'yyyyMM') AS BIGINT)",
-    ),
-    # ---- date part extraction ----
-    (re.compile(rf"\btoYear\s*\(\s*{_ARG}\s*\)", re.I), r"year(\1)"),
-    (re.compile(rf"\btoQuarter\s*\(\s*{_ARG}\s*\)", re.I), r"quarter(\1)"),
-    (re.compile(rf"\btoMonth\s*\(\s*{_ARG}\s*\)", re.I), r"month(\1)"),
-    # CH toISOWeek and Spark weekofyear are both ISO-8601 week numbers
-    (re.compile(rf"\btoISOWeek\s*\(\s*{_ARG}\s*\)", re.I), r"weekofyear(\1)"),
-    (re.compile(rf"\btoHour\s*\(\s*{_ARG}\s*\)", re.I), r"hour(\1)"),
-    (re.compile(rf"\btoMinute\s*\(\s*{_ARG}\s*\)", re.I), r"minute(\1)"),
-    (re.compile(rf"\btoSecond\s*\(\s*{_ARG}\s*\)", re.I), r"second(\1)"),
-    (re.compile(rf"\btoDayOfMonth\s*\(\s*{_ARG}\s*\)", re.I), r"day(\1)"),
-    (re.compile(rf"\btoDayOfYear\s*\(\s*{_ARG}\s*\)", re.I), r"dayofyear(\1)"),
-    # ClickHouse numbers Monday=1..Sunday=7; Spark's dayofweek is
-    # Sunday=1..Saturday=7 — shift so the two agree
-    (
-        re.compile(rf"\btoDayOfWeek\s*\(\s*{_ARG}\s*\)", re.I),
-        r"(((dayofweek(\1) + 5) % 7) + 1)",
-    ),
-    (
-        re.compile(rf"\btoMonday\s*\(\s*{_ARG}\s*\)", re.I),
-        r"CAST(date_trunc('week', \1) AS DATE)",
-    ),
-    (
-        re.compile(rf"\btoUnixTimestamp\s*\(\s*{_ARG}\s*\)", re.I),
-        r"unix_timestamp(\1)",
-    ),
-    (re.compile(r"\btoday\s*\(\s*\)", re.I), "current_date()"),
-    (re.compile(r"\byesterday\s*\(\s*\)", re.I), "date_sub(current_date(), 1)"),
-    (re.compile(r"\bnow\s*\(\s*\)", re.I), "current_timestamp()"),
-    # ---- string matching / replacement ----
-    # CH match(haystack, pattern) is a boolean regex test = RLIKE
-    (
-        re.compile(rf"\bmatch\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 RLIKE \2)",
-    ),
-    # CH position(haystack, needle) returns the 1-based BYTE offset
-    # (positionUTF8 is the code-point form) — Spark's locate counts
-    # CHARACTERS and takes the arguments SWAPPED, and Spark ALSO has a
-    # position(substr, str[, pos]) builtin with the REVERSE argument
-    # order of ClickHouse's, so an unrewritten call would run and
-    # silently return wrong numbers — `position\w*` is in _RESIDUALS so
-    # 3-arg, CaseInsensitive and nested forms REFUSE instead.
-    # Byte-true lowering (r13, the length()/substring class — the r9
-    # locate() swap was silently char-based on multi-byte text): the
-    # char position from locate converts to a byte position as
-    # octet_length of the CHARACTER prefix before the match + 1 — exact
-    # for valid UTF-8, where a needle can only match at code-point
-    # boundaries (UTF-8 is self-synchronizing). Not-found keeps CH's 0;
-    # NULL operands propagate NULL through the CASE (NULL = 0 is
-    # false, and the ELSE arms carry the NULL). The operands splice
-    # multiple times (row-local, the least/greatest caveat class).
-    (
-        re.compile(rf"\bpositionUTF8\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"locate(\2, \1)",
-    ),
-    (
-        re.compile(rf"\bposition\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(CASE WHEN locate(\2, \1) = 0 THEN 0"
-        r" ELSE octet_length(substring(\1, 1, locate(\2, \1) - 1)) + 1 END)",
-    ),
-    # multiSearchAny(haystack, [needles]): 1 if ANY needle is a
-    # substring. exists + contains evaluates each operand ONCE; CH's
-    # UInt8 0/1 becomes a boolean exactly like match -> RLIKE. Bracket
-    # needle literals are already array(...) calls here (the bracket
-    # pass runs before the table), so _ARG binds them; other multiSearch
-    # variants (FirstPosition/FirstIndex/CaseInsensitive/...) fall to
-    # the residual and refuse.
-    (
-        re.compile(rf"\bmultiSearchAny\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"exists(\2, cdr_ms_ -> contains(\1, cdr_ms_))",
-    ),
-    (re.compile(r"\breplaceAll\s*\(", re.I), "replace("),
-    # replaceRegexpAll is handled by _rewrite_replace_regexp (the
-    # replacement-string dialect differs: CH \1 backrefs vs Java $1)
-    # ---- higher-order array functions ----
-    # ClickHouse takes (lambda, arr); Spark takes (arr, lambda). The
-    # lambda arrow syntax `x -> expr` is identical in both dialects, so
-    # only the argument order swaps. Multi-array forms
-    # (arrayMap((x,y) -> …, a, b)) have a third argument the 2-slot
-    # pattern can't bind — they fall through to the residual check and
-    # refuse rather than mistranslate.
-    (
-        re.compile(rf"\barrayMap\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"transform(\2, \1)",
-    ),
-    (
-        re.compile(rf"\barrayFilter\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"filter(\2, \1)",
-    ),
-    (
-        re.compile(rf"\barrayExists\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"exists(\2, \1)",
-    ),
-    (
-        re.compile(rf"\barrayAll\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"forall(\2, \1)",
-    ),
-    (re.compile(r"\barrayDistinct\s*\(", re.I), "array_distinct("),
-    # bare arraySort only: the keyed form arraySort(f, arr) is a
-    # DIFFERENT contract (CH sorts BY KEY, STABLE on ties) from
-    # Spark's array_sort comparator — the lambda form refuses in
-    # _REFUSALS before this swap can touch it (r15: the old bare
-    # swap emitted args-reversed array_sort(f, arr))
-    # The negative lookahead tolerates one paren level so a
-    # parenthesized lambda parameter — arraySort((x) -> -x, a), valid
-    # CH — can't sneak past it into an args-reversed swap (ADVICE r15)
-    (
-        re.compile(r"\barraySort\s*\((?!(?:[^()]|\([^()]*\))*->)", re.I),
-        "array_sort(",
-    ),
-    # sort_array(arr, false) is Spark's descending sort and places
-    # NULLs LAST — exactly CH's arrayReverseSort NULL placement. (The
-    # old reverse(array_sort(arr)) form put NULLs FIRST — ADVICE r15.)
-    # Remaining divergence: NaN in float arrays — Spark ranks NaN above
-    # +inf so descending yields [NaN, inf, ...] while CH keeps NaN just
-    # before NULL at the tail; documented in MIGRATION.md
-    (
-        re.compile(rf"\barrayReverseSort\s*\(\s*{_ARG}\s*\)", re.I),
-        r"sort_array(\1, false)",
-    ),
-    # r15 wave 3b: array mutations (previously opaque unresolved
-    # errors) — exact Spark twins
-    (re.compile(r"\barrayPushBack\s*\(", re.I), "array_append("),
-    (re.compile(r"\barrayPushFront\s*\(", re.I), "array_prepend("),
-    # pop = guarded slice (slice length 0 yields [], so the empty
-    # array passes through; the argument is evaluated twice,
-    # row-local)
-    (
-        re.compile(rf"\barrayPopBack\s*\(\s*{_ARG}\s*\)", re.I),
-        r"slice(\1, 1, greatest(size(\1) - 1, 0))",
-    ),
-    (
-        re.compile(rf"\barrayPopFront\s*\(\s*{_ARG}\s*\)", re.I),
-        r"slice(\1, 2, greatest(size(\1) - 1, 0))",
-    ),
-    # arrayCount(f, arr) -> size(filter(arr, f)) — the (lambda, arr)
-    # swap of the arrayMap/arrayFilter family; the 1-arg non-zero
-    # count refuses (element type unknown textually)
-    (
-        re.compile(rf"\barrayCount\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"size(filter(\2, \1))",
-    ),
-    (re.compile(r"\barrayReverse\s*\(", re.I), "reverse("),
-    (re.compile(r"\barrayFlatten\s*\(", re.I), "flatten("),
-    (re.compile(r"\barraySlice\s*\(", re.I), "slice("),
-    (re.compile(r"\barrayConcat\s*\(", re.I), "concat("),
-    (re.compile(r"\barrayMin\s*\(", re.I), "array_min("),
-    (re.compile(r"\barrayMax\s*\(", re.I), "array_max("),
-    # arrayUniq = count of DISTINCT elements (a scalar, not the list)
-    (
-        re.compile(rf"\barrayUniq\s*\(\s*{_ARG}\s*\)", re.I),
-        r"size(array_distinct(\1))",
-    ),
-    # arrayCompact = CONSECUTIVE dedup (keep each run's first element,
-    # element type preserved — no typing hazard, unlike arraySum's
-    # family above). Index lambda: keep i=0, else compare to the
-    # previous element NULL-safely (<=> dedupes NULL runs exactly as CH
-    # does: [1,NULL,NULL,2] -> [1,NULL,2], measured). greatest(i, 1)
-    # keeps element_at's 1-based index legal when the i=0 arm already
-    # decided (ANSI element_at(arr, 0) errors even unselected arms of
-    # an OR in some eval orders). The array argument splices twice
-    # (row-local double evaluation, the least/greatest caveat class).
-    (
-        re.compile(rf"\barrayCompact\s*\(\s*{_ARG}\s*\)", re.I),
-        r"filter(\1, (cdr_v_, cdr_i_) -> cdr_i_ = 0 OR "
-        r"NOT (cdr_v_ <=> element_at(\1, greatest(cdr_i_, 1))))",
-    ),
-    # ---- JSON extraction (literal key -> JSONPath) ----
-    (
-        re.compile(rf"\bJSONExtractString\s*\(\s*{_ARG}\s*,\s*'([^']*)'\s*\)", re.I),
-        r"get_json_object(\1, '$.\2')",
-    ),
-    (
-        re.compile(rf"\bJSONExtractInt\s*\(\s*{_ARG}\s*,\s*'([^']*)'\s*\)", re.I),
-        r"CAST(get_json_object(\1, '$.\2') AS BIGINT)",
-    ),
-    # ---- aggregate combinators ----
-    (re.compile(r"\bcountIf\s*\(", re.I), "count_if("),
-    (
-        re.compile(rf"\b(sum|avg|min|max)If\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"\1(\2) FILTER (WHERE \3)",
-    ),
-    (re.compile(rf"\buniqExact\s*\(\s*{_ARG}\s*\)", re.I), r"COUNT(DISTINCT \1)"),
-    # uniqUpTo(N)(x): exact count-distinct saturating at N+1 — CH's
-    # documented contract, spelled exactly with LEAST
-    (
-        re.compile(rf"\buniqUpTo\s*\(\s*(\d+)\s*\)\s*\(\s*{_ARG}\s*\)", re.I),
-        r"LEAST(COUNT(DISTINCT \2), \1 + 1)",
-    ),
-    (re.compile(r"\buniq(Combined|HLL12)?\s*\(", re.I), "approx_count_distinct("),
-    (re.compile(r"\bany(Last)?\s*\(", re.I), "any_value("),
-    # argMax/argMin: identical (value, ordering) argument order in both
-    # dialects, and identical tie semantics (an arbitrary row among the
-    # ties) — a name-only rewrite, safe at any nesting depth
-    (re.compile(r"\bargMax\s*\(", re.I), "max_by("),
-    (re.compile(r"\bargMin\s*\(", re.I), "min_by("),
-    # groupArray/groupUniqArray: collect_list/collect_set. Both engines
-    # leave element order partition-dependent — deterministic queries
-    # should wrap in arraySort, exactly as they must in ClickHouse
-    (re.compile(r"\bgroupUniqArray\s*\(", re.I), "collect_set("),
-    (re.compile(r"\bgroupArray\s*\(", re.I), "collect_list("),
-    # bitwise aggregates: identical semantics, snake_case names
-    (re.compile(r"\bgroupBitAnd\s*\(", re.I), "bit_and("),
-    (re.compile(r"\bgroupBitOr\s*\(", re.I), "bit_or("),
-    (re.compile(r"\bgroupBitXor\s*\(", re.I), "bit_xor("),
-    # moment statistics: same estimators (pop/samp split matches), the
-    # names just go snake_case; corrMatrix/covarMatrix etc. fall to the
-    # residual refusal
-    (re.compile(r"\bstddevPop\s*\(", re.I), "stddev_pop("),
-    (re.compile(r"\bstddevSamp\s*\(", re.I), "stddev_samp("),
-    (re.compile(r"\bvarPop\s*\(", re.I), "var_pop("),
-    (re.compile(r"\bvarSamp\s*\(", re.I), "var_samp("),
-    (re.compile(r"\bcovarPop\s*\(", re.I), "covar_pop("),
-    (re.compile(r"\bcovarSamp\s*\(", re.I), "covar_samp("),
-    # ---- misc scalar ----
-    (
-        re.compile(rf"\bintDiv\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 div \2)",
-    ),
-    # has/indexOf (r13 upgrade from the name-only array_contains /
-    # array_position maps): ClickHouse processes NULL AS A VALUE here
-    # too — has([NULL], NULL) = 1 and has([NULL, 1], 2) = 0 where
-    # Spark's array_contains returns NULL in both (NULL value; NULL
-    # element present but value absent); indexOf([1, NULL, 2], NULL) =
-    # 2 where array_position(a, NULL) is NULL. The <=> lambdas spell
-    # CH's rule; the boolean-array array_position keeps CH's not-found
-    # 0 (measured: Spark array_position returns 0 when absent).
-    # ORDER: these binder entries run BEFORE splitByChar/splitByString,
-    # whose regex-quoted emission is two paren levels deep — the demo
-    # idiom `ARRAY JOIN splitByChar(' ', text) AS tok` binds here first
-    # (the split call is one level), then the split entry rewrites
-    # inside the emitted text. (has/indexOf are SCANNER passes —
-    # _rewrite_membership — for the same reason at any depth.)
-    # ARRAY JOIN as a CLAUSE (ClickHouse's signature flatten): the
-    # expression form `FROM t ARRAY JOIN <expr> AS x` becomes a lateral
-    # explode; LEFT ARRAY JOIN keeps empty-array rows via explode_outer
-    (
-        re.compile(
-            rf"\bLEFT\s+ARRAY\s+JOIN\s+{_ARG}\s+AS\s+([A-Za-z_]\w*)", re.I
-        ),
-        r"LATERAL VIEW OUTER explode(\1) AS \2",
-    ),
-    (
-        re.compile(
-            rf"\bARRAY\s+JOIN\s+{_ARG}\s+AS\s+([A-Za-z_]\w*)", re.I
-        ),
-        r"LATERAL VIEW explode(\1) AS \2",
-    ),
-    # hasAll/hasAny/countEqual (r13): ClickHouse processes NULL AS A
-    # VALUE in these ("hasAny([NULL], [NULL]) = 1", CH docs) — Spark's
-    # arrays_overlap returns NULL in exactly that case, so the
-    # name-adjacent builtin would silently diverge; the <=> lambdas
-    # spell CH's rule exactly (empty needle set: hasAll -> 1,
-    # hasAny -> 0 — forall/exists over empty agree). Row-local
-    # O(|a|*|b|), each operand evaluated once.
-    (
-        re.compile(rf"\bhasAll\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"forall(\2, cdr_he_ -> exists(\1, cdr_hv_ -> cdr_he_ <=> cdr_hv_))",
-    ),
-    (
-        re.compile(rf"\bhasAny\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"exists(\2, cdr_he_ -> exists(\1, cdr_hv_ -> cdr_he_ <=> cdr_hv_))",
-    ),
-    (
-        re.compile(rf"\bcountEqual\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"size(filter(\1, cdr_ce_ -> cdr_ce_ <=> (\2)))",
-    ),
-    # arrayElement(a, i) = CH's a[i] spelled as a function — the same
-    # lowering as the bracket-index rewrite (1-based, negative from the
-    # end in BOTH engines) with the same documented deviation:
-    # out-of-range yields NULL here where CH yields the element type's
-    # DEFAULT (unknowable textually)
-    (
-        re.compile(rf"\barrayElement\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"try_element_at(\1, \2)",
-    ),
-    # substringIndex (MySQL-style segment slice — identical semantics
-    # incl. negative counts-from-the-end): Spark's snake_case twin; the
-    # camelCase spelling would otherwise die on an unresolved-function
-    # error (Spark's name matching is case-insensitive, not
-    # camelCase-aware). Delimiter-count semantics are byte/char
-    # agnostic, so no BINARY round-trip is needed.
-    (re.compile(r"\bsubstringIndex\s*\(", re.I), "substring_index("),
-    # reverseUTF8 = code-point reversal = Spark's reverse on strings
-    # (bare reverse REFUSES above — CH's is byte-level)
-    (re.compile(r"\breverseUTF8\s*\(", re.I), "reverse("),
-    # splitByChar/splitByString moved to the _rewrite_split_family
-    # SCANNER pass (r14), which runs AFTER this table so the ARRAY JOIN
-    # clause and the has/indexOf binder entries still bind the compact
-    # splitBy* text (the r13 ordering constraint). Semantics unchanged:
-    # \Q...\E runtime quoting (metacharacters literal, trailing empty
-    # fields kept as CH keeps them — measured), decoded one-byte
-    # splitByChar guard, splitByString('') refusal. A separator VALUE
-    # containing the two characters \E is outside splitByChar's 1-byte
-    # domain and splitByString's quoting breaks there (MIGRATION.md).
-    (re.compile(r"\barrayStringConcat\s*\(", re.I), "array_join("),
-    # ---- r14 wave 2: refusals-or-opaque-errors turned translations ----
-    # code-point edit distance: CH's UTF8 forms == Spark levenshtein
-    # (the bare byte forms refuse above)
-    (
-        re.compile(r"\b(editDistanceUTF8|levenshteinDistanceUTF8)\s*\(", re.I),
-        "levenshtein(",
-    ),
-    # both are nondeterministic random v4 UUIDs
-    (re.compile(r"\bgenerateUUIDv4\s*\(\s*\)", re.I), "uuid()"),
-    # English month name in both engines (Spark follows the JVM locale,
-    # en-US in this harness — documented in MIGRATION.md)
-    (
-        re.compile(rf"\bmonthName\s*\(\s*{_ARG}\s*\)", re.I),
-        r"date_format(\1, 'MMMM')",
-    ),
-    # Decode entries run BEFORE Encode: base64Decode(base64Encode(x))
-    # must bind the compact inner call — Encode's expansion (3 paren
-    # levels) would push it past _ARG's budget (the reverse nesting,
-    # Encode-around-Decode, lands on the pointered residual)
-    (
-        re.compile(rf"\bbase64Decode\s*\(\s*{_ARG}\s*\)", re.I),
-        lambda m, raw: _base64_decode_repl(m, raw, lenient=False),
-    ),
-    (
-        re.compile(rf"\btryBase64Decode\s*\(\s*{_ARG}\s*\)", re.I),
-        lambda m, raw: _base64_decode_repl(m, raw, lenient=True),
-    ),
-    # CH base64Encode emits ONE unwrapped line; Spark's base64 inserts
-    # RFC 2045 \r\n line breaks every 76 chars (measured: 100-byte
-    # input -> 138-char output) — strip them for CH parity
-    (
-        re.compile(rf"\bbase64Encode\s*\(\s*{_ARG}\s*\)", re.I),
-        r"replace(replace(base64(\1), '\r', ''), '\n', '')",
-    ),
-    # ---- r15 wave 3: digest / radix same-name collisions ----
-    # CH MD5/SHA* return the raw digest BYTES (FixedString) while
-    # Spark's same-named md5/sha1 RESOLVE case-insensitively and
-    # return the lowercase-HEX STRING — a silent same-name collision:
-    # hex(MD5(s)) previously hexed the ASCII hex text instead of the
-    # 16 digest bytes. unhex(..) restores the CH byte value, and
-    # compositions then agree naturally (Spark hex over BINARY is the
-    # even-length uppercase CH form).
-    (re.compile(rf"\bMD5\s*\(\s*{_ARG}\s*\)", re.I), r"unhex(md5(\1))"),
-    (re.compile(rf"\bSHA1\s*\(\s*{_ARG}\s*\)", re.I), r"unhex(sha1(\1))"),
-    (
-        re.compile(rf"\bSHA(224|256|384|512)\s*\(\s*{_ARG}\s*\)", re.I),
-        r"unhex(sha2(\2, \1))",
-    ),
-    # CH hex/bin pad numbers to the TYPE's byte width (hex(10) =
-    # '0A', bin(1) = '00000001') while Spark emits minimal digits
-    # ('A', '1') — a silent same-name collision for numeric
-    # arguments. Padding the Spark output to even (hex) / multiple-
-    # of-8 (bin) digits restores the CH value for integer arguments
-    # and is a NO-OP for string/binary arguments (their hex is
-    # already byte-aligned). The argument is evaluated twice —
-    # row-local, the least/greatest caveat class. CH hex of FLOAT
-    # arguments (raw IEEE bytes, little-endian) stays divergent for
-    # typed COLUMNS (documented in MIGRATION.md); float LITERAL
-    # arguments refuse in _REFUSALS before this rename (ADVICE r15);
-    # nested-call arguments past _ARG's budget refuse via the
-    # post-pass check in translate().
-    (
-        re.compile(rf"\bhex\s*\(\s*{_ARG}\s*\)", re.I),
-        r"lpad(hex(\1), CAST(ceil(char_length(hex(\1)) / 2) * 2 AS INT)"
-        r", '0')",
-    ),
-    (
-        re.compile(rf"\bbin\s*\(\s*{_ARG}\s*\)", re.I),
-        r"lpad(bin(\1), CAST(ceil(char_length(bin(\1)) / 8) * 8 AS INT)"
-        r", '0')",
-    ),
-    # ---- r15 wave 3: unresolved-survivor translations ----
-    # CH fromUnixTimestamp(x) -> DateTime; Spark has no such name
-    # (opaque error before). timestamp_seconds is the exact instant.
-    # The 2-arg formatting form refuses (residual) — spell it as
-    # formatDateTime(fromUnixTimestamp(x), fmt).
-    (
-        re.compile(rf"\bfromUnixTimestamp\s*\(\s*{_ARG}\s*\)", re.I),
-        r"timestamp_seconds(\1)",
-    ),
-    # arrayIntersect: Spark's array_intersect (distinct, first-array
-    # order — a deterministic refinement of CH's documented
-    # arbitrary result order); N-ary via left fold, 2/3-ary here,
-    # deeper forms refuse via the residual
-    (
-        re.compile(rf"\barrayIntersect\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"array_intersect(array_intersect(\1, \2), \3)",
-    ),
-    (
-        re.compile(rf"\barrayIntersect\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"array_intersect(\1, \2)",
-    ),
-    # arrayDifference: CH yields [0, a[1]-a[0], a[2]-a[1], ...];
-    # spelled with transform's index lambda (the arrayEnumerate
-    # precedent). The array is referenced twice — row-local.
-    # CH promotes integer elements to Int64 — without the promotion a
-    # TINYINT/SMALLINT subtraction wraps with ANSI off (Int8
-    # [-100, 100] -> CH 200, unpromoted Spark -56; ADVICE r15). The
-    # `* 1L` factor widens every integer family to BIGINT BEFORE the
-    # subtraction (reproducing CH's Int64 value), and Spark coerces
-    # FLOAT op BIGINT to DOUBLE (measured: array<float> in ->
-    # array<double> out) — exactly CH's Float32 -> Float64 promotion —
-    # while DOUBLE/DECIMAL keep their own arithmetic. A
-    # CAST(... AS BIGINT) would have truncated the float families.
-    (
-        re.compile(rf"\barrayDifference\s*\(\s*{_ARG}\s*\)", re.I),
-        r"transform(\1, (cdr_ad_x, cdr_ad_i) -> CASE WHEN cdr_ad_i = 0"
-        r" THEN 0 ELSE cdr_ad_x * 1L - element_at(\1, cdr_ad_i) * 1L"
-        r" END)",
-    ),
-    # emptyArrayT() -> typed empty array literals. The unsigned
-    # widths map to the next-wider signed Spark type (UInt64 ->
-    # BIGINT: the array is EMPTY, so no value can be out of domain;
-    # the width surface is documented in MIGRATION.md).
-    (
-        re.compile(r"\bemptyArrayInt8\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<TINYINT>)",
-    ),
-    (
-        re.compile(r"\bemptyArray(Int16|UInt8)\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<SMALLINT>)",
-    ),
-    (
-        re.compile(r"\bemptyArray(Int32|UInt16)\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<INT>)",
-    ),
-    (
-        re.compile(r"\bemptyArray(Int64|UInt32|UInt64)\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<BIGINT>)",
-    ),
-    (
-        re.compile(r"\bemptyArrayFloat32\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<FLOAT>)",
-    ),
-    (
-        re.compile(r"\bemptyArrayFloat64\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<DOUBLE>)",
-    ),
-    (
-        re.compile(r"\bemptyArrayString\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<STRING>)",
-    ),
-    (
-        re.compile(r"\bemptyArrayDate\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<DATE>)",
-    ),
-    (
-        re.compile(r"\bemptyArrayDateTime\s*\(\s*\)", re.I),
-        "CAST(array() AS ARRAY<TIMESTAMP>)",
-    ),
-    # toStartOfFiveMinutes/TenMinutes/FifteenMinutes + literal
-    # toStartOfInterval for the FIXED-length sub-day units: epoch
-    # bucketing (CH's 1970-01-01 origin). TIMEZONE PRECONDITION
-    # (the dateDiff sub-day class, MIGRATION.md): CH buckets on the
-    # column timezone's wall clock — identical under UTC or any
-    # fixed offset aligned to the bucket width (this harness's
-    # default); week/month/quarter/year intervals refuse (origin
-    # and calendar-walk conventions diverge — use toStartOfWeek /
-    # toStartOfMonth / date_trunc).
-    # timeSlot rounds DOWN to the half-hour — the same epoch-bucket
-    # form (and UTC/fixed-offset timezone precondition) as the
-    # toStartOf*Minutes family below
-    (
-        re.compile(rf"\btimeSlot\s*\(\s*{_ARG}\s*\)", re.I),
-        r"timestamp_seconds(CAST(floor(unix_timestamp(\1) / 1800)"
-        r" * 1800 AS BIGINT))",
-    ),
-    (
-        re.compile(rf"\btoStartOfFiveMinutes\s*\(\s*{_ARG}\s*\)", re.I),
-        r"timestamp_seconds(CAST(floor(unix_timestamp(\1) / 300) * 300"
-        r" AS BIGINT))",
-    ),
-    (
-        re.compile(rf"\btoStartOfTenMinutes\s*\(\s*{_ARG}\s*\)", re.I),
-        r"timestamp_seconds(CAST(floor(unix_timestamp(\1) / 600) * 600"
-        r" AS BIGINT))",
-    ),
-    (
-        re.compile(rf"\btoStartOfFifteenMinutes\s*\(\s*{_ARG}\s*\)", re.I),
-        r"timestamp_seconds(CAST(floor(unix_timestamp(\1) / 900) * 900"
-        r" AS BIGINT))",
-    ),
-    (
-        re.compile(
-            rf"\btoStartOfInterval\s*\(\s*{_ARG}\s*,\s*INTERVAL\s+(\d+)\s+"
-            r"(second|minute|hour|day)s?\s*\)",
-            re.I,
-        ),
-        _to_start_of_interval_repl,
-    ),
-    # ---- r15 wave 3c: date arithmetic ----
-    # CH's 3-arg date_add/dateAdd/date_sub/dateSub/timestamp_add/...
-    # ((unit, n, x) with a bare or quoted unit) collides with Spark's
-    # 2-arg date_add(start, days) — the 3-arg spelling died as a loud
-    # arity error. timestampadd is the exact Spark twin (month-end
-    # clamping agrees on both sides — documented in each engine).
-    # Spark's own 2-arg date_add form never matches (one comma).
-    (
-        # the unit may be QUOTED in CH ('day') where Spark's native
-        # 3-arg date_add/dateAdd parser alias takes bare units only —
-        # the quoted group matches on the MASKED copy (contents
-        # blanked), so the callable reads and validates the RAW unit;
-        # the bare-unit spelling is Spark's own timestampadd alias and
-        # needs no rewrite
-        re.compile(
-            rf"\b(?:date|timestamp)_?(add|sub)\s*\(\s*'([^']*)'\s*,"
-            rf"\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        _date_add_quoted_repl,
-    ),
-    # addDays/subtractHours/... -> timestampadd (previously opaque
-    # unresolved errors). Type surface: CH's addDays(Date, n) returns
-    # Date where timestampadd returns TIMESTAMP — the value is the
-    # same instant (MIGRATION.md, the width-surface class).
-    (
-        re.compile(
-            rf"\b(add|subtract)"
-            r"(Second|Minute|Hour|Day|Week|Month|Quarter|Year)s\s*\(\s*"
-            rf"{_ARG}\s*,\s*{_ARG}\s*\)",
-            re.I,
-        ),
-        lambda m, raw: (
-            f"timestampadd({raw[slice(*m.span(2))].upper()}, "
-            + (
-                raw[slice(*m.span(4))].strip()
-                if raw[slice(*m.span(1))].lower() == "add"
-                else f"-({raw[slice(*m.span(4))].strip()})"
-            )
-            + f", {raw[slice(*m.span(3))].strip()})"
-        ),
-    ),
-    # CH's value-mapping transform(x, from, to[, default]) with
-    # LITERAL arrays -> the CASE chain it denotes (Spark's same-named
-    # transform is the (array, lambda) higher-order function — a
-    # 4-arg call previously died as an opaque arity error)
-    (
-        re.compile(
-            rf"\btransform\s*\(\s*{_ARG}\s*,\s*"
-            r"(?:array\(([^()]*)\)|\[([^\[\]]*)\])\s*,\s*"
-            r"(?:array\(([^()]*)\)|\[([^\[\]]*)\])"
-            rf"(?:\s*,\s*{_ARG})?\s*\)",
-            re.I,
-        ),
-        _transform_map_repl,
-    ),
-    # dotted-quad <-> UInt32 integer arithmetic (exact)
-    (
-        re.compile(rf"\bIPv4NumToString\s*\(\s*{_ARG}\s*\)", re.I),
-        r"concat(CAST(((\1) DIV 16777216) % 256 AS STRING), '.',"
-        r" CAST(((\1) DIV 65536) % 256 AS STRING), '.',"
-        r" CAST(((\1) DIV 256) % 256 AS STRING), '.',"
-        r" CAST((\1) % 256 AS STRING))",
-    ),
-    (
-        re.compile(
-            rf"\bIPv4StringToNum(OrNull|OrZero)?\s*\(\s*{_ARG}\s*\)", re.I
-        ),
-        _ipv4_string_to_num_repl,
-    ),
-    (
-        re.compile(r"\bisIPv4String\s*\(\s*" + _ARG + r"\s*\)", re.I),
-        r"((\1) RLIKE '^" + _IPV4_OCTET + r"(\\." + _IPV4_OCTET + r"){3}$')",
-    ),
-    # half-open [start, end) integer range with CH's empty-when-
-    # end<=start rule (Spark's sequence is inclusive and walks downward)
-    (
-        re.compile(
-            rf"\brange\s*\(\s*{_ARG}\s*(?:,\s*{_ARG}\s*)?(?:,\s*{_ARG}\s*)?\)",
-            re.I,
-        ),
-        _range_repl,
-    ),
-    # map accessors (r13): identical semantics, snake_case names —
-    # previously opaque unresolved-function errors
-    (re.compile(r"\bmapKeys\s*\(", re.I), "map_keys("),
-    (re.compile(r"\bmapValues\s*\(", re.I), "map_values("),
-    (re.compile(r"\bmapContains\s*\(", re.I), "map_contains_key("),
-    (re.compile(r"\bmapFromArrays\s*\(", re.I), "map_from_arrays("),
-    # CH length(String) counts BYTES; Spark's length counts CHARACTERS
-    # — identical on ASCII, silently different on multi-byte UTF-8 (the
-    # collision class). octet_length is Spark's byte counter. ORDER:
-    # this entry must precede lengthUTF8's, whose replacement emits the
-    # char-counting length( that later entries must not re-rewrite.
-    # (CH length(Array) = element count — that lowering would need the
-    # type; octet_length over an array fails Spark analysis loudly, and
-    # MIGRATION.md points array users at size().)
-    (re.compile(r"\blength\s*\(", re.I), "octet_length("),
-    (re.compile(r"\blengthUTF8\s*\(", re.I), "length("),
-    # left/right (r13 wave 5 — the length()/substring byte class): CH
-    # left/right slice BYTES while Spark's SAME-NAMED functions slice
-    # characters, so an untranslated call runs silently char-based.
-    # NONNEGATIVE INTEGER LITERAL lengths translate (byte-true through
-    # BINARY; right's greatest-guard keeps the 1-based start legal for
-    # n = 0 and n > length — both measured); negative literals (CH's
-    # "all but the last/first |n|" rule) and expression lengths fall to
-    # the residual and refuse. leftUTF8/rightUTF8 (CH's char forms)
-    # spell as substring so the emitted text never re-enters the
-    # left/right residual; rightUTF8's emitted length( is safe because
-    # the bare-length entry above has already run (the lengthUTF8
-    # ordering rule).
-    (
-        re.compile(rf"\bleft\s*\(\s*{_ARG}\s*,\s*(\d+)\s*\)", re.I),
-        r"CAST(substring(CAST(\1 AS BINARY), 1, \2) AS STRING)",
-    ),
-    (
-        re.compile(rf"\bright\s*\(\s*{_ARG}\s*,\s*(\d+)\s*\)", re.I),
-        r"CAST(substring(CAST(\1 AS BINARY), "
-        r"greatest(octet_length(\1) - \2 + 1, 1), \2) AS STRING)",
-    ),
-    (
-        re.compile(rf"\bleftUTF8\s*\(\s*{_ARG}\s*,\s*(\d+)\s*\)", re.I),
-        r"substring(\1, 1, \2)",
-    ),
-    (
-        re.compile(rf"\brightUTF8\s*\(\s*{_ARG}\s*,\s*(\d+)\s*\)", re.I),
-        r"substring(\1, greatest(length(\1) - \2 + 1, 1), \2)",
-    ),
-    # countSubstrings (r13 wave 5): CH counts NON-OVERLAPPING
-    # occurrences left-to-right — exactly what replace() removes, so
-    # the count is the byte-length delta over the needle's byte length
-    # (byte == occurrence count for well-formed needles; measured on
-    # multibyte). NULL operands propagate; a runtime-empty needle gives
-    # NULL via the nullif divisor (documented); a LITERAL empty needle
-    # refuses in the replacement callable.
-    (
-        re.compile(
-            rf"\bcountSubstrings\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        lambda m, raw: _count_substrings_repl(m, raw),
-    ),
-    (re.compile(r"\barrayJoin\s*\(", re.I), "explode("),
-    (re.compile(rf"\bnotEmpty\s*\(\s*{_ARG}\s*\)", re.I), r"(length(\1) > 0)"),
-    (re.compile(rf"\bempty\s*\(\s*{_ARG}\s*\)", re.I), r"(length(\1) = 0)"),
-    (re.compile(r"\bmodulo\s*\(", re.I), "mod("),
-    # scalar bitwise ops: two's-complement AND/OR/XOR/NOT are
-    # width-independent (both engines promote to a common integer type
-    # and the bit patterns agree), so the operator spellings are exact.
-    # bitShift*/bitRotate*/bitCount/bitTest* REFUSE above — shift-count
-    # masking and sign-extension make those width-dependent.
-    (
-        re.compile(rf"\bbitAnd\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"((\1) & (\2))",
-    ),
-    (
-        re.compile(rf"\bbitOr\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"((\1) | (\2))",
-    ),
-    (
-        re.compile(rf"\bbitXor\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"((\1) ^ (\2))",
-    ),
-    (re.compile(rf"\bbitNot\s*\(\s*{_ARG}\s*\)", re.I), r"(~(\1))"),
     # arithmetic function spellings: CH exposes operators as functions
-    (re.compile(rf"\bplus\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I), r"(\1 + \2)"),
-    (re.compile(rf"\bminus\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I), r"(\1 - \2)"),
-    (
-        re.compile(rf"\bmultiply\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(\1 * \2)",
-    ),
+    "plus": "({0} + {1})",
+    "minus": "({0} - {1})",
+    "multiply": "({0} * {1})",
+    "intdiv": "({0} div {1})",
+    "modulo": "mod(",
     # CH divide() is ALWAYS Float64 division with IEEE zero-divisor
     # semantics (1/0 = inf, 0/0 = nan) — Spark's `/` raises
     # DIVIDE_BY_ZERO under ANSI (the session default) and NULLs
@@ -2657,14 +1787,308 @@ _REWRITES: list[tuple[re.Pattern[str], str]] = [
     # itself gives for a nondeterministic divisor. (Known edge: a
     # negative-zero DIVISOR loses its sign — CH 1/-0.0 = -inf, here
     # +inf.)
-    (
-        re.compile(rf"\bdivide\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"(CASE WHEN CAST(\2 AS DOUBLE) = 0.0D"
-        r" THEN CAST(\1 AS DOUBLE) * CAST('Infinity' AS DOUBLE)"
-        r" ELSE CAST(\1 AS DOUBLE) / nullif(CAST(\2 AS DOUBLE), 0.0D) END)",
+    "divide": (
+        "(CASE WHEN CAST({1} AS DOUBLE) = 0.0D"
+        " THEN CAST({0} AS DOUBLE) * CAST('Infinity' AS DOUBLE)"
+        " ELSE CAST({0} AS DOUBLE) / nullif(CAST({1} AS DOUBLE), 0.0D) END)"
     ),
-    # assumeNotNull is a type-level assertion; the VALUE is unchanged
-    (re.compile(rf"\bassumeNotNull\s*\(\s*{_ARG}\s*\)", re.I), r"(\1)"),
+    # scalar bitwise ops: two's-complement AND/OR/XOR/NOT are
+    # width-independent (both engines promote to a common integer type
+    # and the bit patterns agree), so the operator spellings are exact.
+    # bitShift*/bitRotate*/bitCount/bitTest* refuse in _REFUSALS —
+    # shift-count masking and sign-extension make those width-dependent.
+    "bitand": "(({0}) & ({1}))",
+    "bitor": "(({0}) | ({1}))",
+    "bitxor": "(({0}) ^ ({1}))",
+    "bitnot": "(~({0}))",
+    # ---- type-surface identities: the VALUE is unchanged ----
+    "tonullable": "({0})",
+    "materialize": "({0})",
+    "identity": "({0})",
+    # assumeNotNull is a type-level assertion
+    "assumenotnull": "({0})",
+    "iszeroornull": "(({0}) IS NULL OR ({0}) = 0)",
+    # ---- type conversions ----
+    **{
+        f"to{t}int{w}": "CAST({0} AS BIGINT)"
+        for t in ("", "u")
+        for w in (8, 16, 32, 64, 128, 256)
+    },
+    "tofloat32": "CAST({0} AS DOUBLE)",
+    "tofloat64": "CAST({0} AS DOUBLE)",
+    "tostring": "CAST({0} AS STRING)",
+    "todatetime": "to_timestamp(",
+    "todate": "to_date(",
+    **_or_converters("int8", "TINYINT"),
+    **_or_converters("int16", "SMALLINT"),
+    **_or_converters("int32", "INT"),
+    **_or_converters("int64", "BIGINT"),
+    **_or_converters("float32", "FLOAT"),
+    **_or_converters("float64", "DOUBLE"),
+    # fixed-precision casts: toDecimal{32,64,128}(x, S) carries the CH
+    # type's full precision (9/18/38 digits) at the written scale
+    "todecimal32": _shaped(_UINT_ARG, "CAST({0} AS DECIMAL(9, {1}))"),
+    "todecimal64": _shaped(_UINT_ARG, "CAST({0} AS DECIMAL(18, {1}))"),
+    "todecimal128": _shaped(_UINT_ARG, "CAST({0} AS DECIMAL(38, {1}))"),
+    # accurateCast / accurateCastOrNull with a literal type name (the
+    # emitter maps CH type names and refuses domain-mismatched ones)
+    "accuratecast": _accurate_cast("CAST"),
+    "accuratecastornull": _accurate_cast("try_cast"),
+    **{
+        f"tointerval{unit}": _stripped(form)
+        for unit, form in _TO_INTERVAL_FORMS.items()
+    },
+    # ---- date/time constructors and projections ----
+    "makedate": "make_date({0}, {1}, {2})",
+    "makedatetime": "make_timestamp({0}, {1}, {2}, {3}, {4}, {5})",
+    "toyyyymmddhhmmss": "CAST(date_format({0}, 'yyyyMMddHHmmss') AS BIGINT)",
+    "toyyyymmdd": "CAST(date_format({0}, 'yyyyMMdd') AS BIGINT)",
+    "toyyyymm": "CAST(date_format({0}, 'yyyyMM') AS BIGINT)",
+    "toisoyear": "extract(YEAROFWEEK FROM {0})",
+    "tolastdayofmonth": "last_day(",
+    "timezone": "current_timezone()",
+    "currentdatabase": "current_database()",
+    "currentuser": "current_user()",
+    "today": "current_date()",
+    "yesterday": "date_sub(current_date(), 1)",
+    "now": "current_timestamp()",
+    "toyear": "year({0})",
+    "toquarter": "quarter({0})",
+    "tomonth": "month({0})",
+    # CH toISOWeek and Spark weekofyear are both ISO-8601 week numbers
+    "toisoweek": "weekofyear({0})",
+    "tohour": "hour({0})",
+    "tominute": "minute({0})",
+    "tosecond": "second({0})",
+    "todayofmonth": "day({0})",
+    "todayofyear": "dayofyear({0})",
+    # ClickHouse numbers Monday=1..Sunday=7; Spark's dayofweek is
+    # Sunday=1..Saturday=7 — shift so the two agree
+    "todayofweek": "(((dayofweek({0}) + 5) % 7) + 1)",
+    "tounixtimestamp": "unix_timestamp({0})",
+    # CH fromUnixTimestamp(x) -> DateTime; Spark has no such name.
+    # timestamp_seconds is the exact instant. The 2-arg formatting form
+    # refuses (residual) — spell it as
+    # formatDateTime(fromUnixTimestamp(x), fmt).
+    "fromunixtimestamp": "timestamp_seconds({0})",
+    # epoch precision family: Milli/Micro are exact Spark twins; the
+    # Nano forms REFUSE (Spark timestamps top out at microseconds — a
+    # silent sub-microsecond truncation otherwise)
+    "fromunixtimestamp64milli": "timestamp_millis(",
+    "fromunixtimestamp64micro": "timestamp_micros(",
+    "tounixtimestamp64milli": "unix_millis(",
+    "tounixtimestamp64micro": "unix_micros(",
+    # ---- date rounding ----
+    "tostartofhour": "date_trunc('hour', {0})",
+    "tostartofday": "date_trunc('day', {0})",
+    "tostartofmonth": "CAST(date_trunc('month', {0}) AS DATE)",
+    "tostartofyear": "CAST(date_trunc('year', {0}) AS DATE)",
+    "tostartofquarter": "CAST(date_trunc('quarter', {0}) AS DATE)",
+    "tostartofminute": "date_trunc('minute', {0})",
+    "tostartofweek": _to_start_of_week,
+    "tomonday": "CAST(date_trunc('week', {0}) AS DATE)",
+    # toStartOfFiveMinutes/TenMinutes/FifteenMinutes, timeSlot (the
+    # half-hour) and literal toStartOfInterval for the FIXED-length
+    # sub-day units: epoch bucketing (CH's 1970-01-01 origin). TIMEZONE
+    # PRECONDITION (the dateDiff sub-day class, MIGRATION.md): CH
+    # buckets on the column timezone's wall clock — identical under UTC
+    # or any fixed offset aligned to the bucket width (this module's
+    # default); week/month/quarter/year intervals refuse (origin and
+    # calendar-walk conventions diverge — use toStartOfWeek /
+    # toStartOfMonth / date_trunc).
+    "timeslot": (
+        "timestamp_seconds(CAST(floor(unix_timestamp({0}) / 1800)"
+        " * 1800 AS BIGINT))"
+    ),
+    "tostartoffiveminutes": (
+        "timestamp_seconds(CAST(floor(unix_timestamp({0}) / 300) * 300"
+        " AS BIGINT))"
+    ),
+    "tostartoftenminutes": (
+        "timestamp_seconds(CAST(floor(unix_timestamp({0}) / 600) * 600"
+        " AS BIGINT))"
+    ),
+    "tostartoffifteenminutes": (
+        "timestamp_seconds(CAST(floor(unix_timestamp({0}) / 900) * 900"
+        " AS BIGINT))"
+    ),
+    "tostartofinterval": _to_start_of_interval,
+    # ---- date arithmetic ----
+    # CH's 3-arg date_add/dateAdd/date_sub/dateSub/timestamp_add/...
+    # ((unit, n, x) with a bare or quoted unit) collides with Spark's
+    # 2-arg date_add(start, days). timestampadd is the exact Spark twin
+    # (month-end clamping agrees on both sides — documented in each
+    # engine); the bare-unit spelling is Spark's own timestampadd alias
+    # and needs no rewrite.
+    **{
+        f"{base}{sep}{kind}": _date_add_quoted(kind)
+        for base in ("date", "timestamp")
+        for sep in ("", "_")
+        for kind in ("add", "sub")
+    },
+    # addDays/subtractHours/... -> timestampadd. Type surface: CH's
+    # addDays(Date, n) returns Date where timestampadd returns TIMESTAMP
+    # — the value is the same instant (MIGRATION.md, the width-surface
+    # class).
+    **{
+        f"{op}{unit}s": _stripped(f"timestampadd({unit.upper()}, {n}, {{0}})")
+        for op, n in (("add", "{1}"), ("subtract", "-({1})"))
+        for unit in _DATE_ADD_UNITS
+    },
+    # addDate/subDate take an INTERVAL second argument in CH — the
+    # operator forms are the exact Spark spelling (a non-interval
+    # second argument errors loudly in both engines)
+    "adddate": "(({0}) + ({1}))",
+    "subdate": "(({0}) - ({1}))",
+    # English month name in both engines (Spark follows the JVM locale,
+    # en-US in this module's sessions — documented in MIGRATION.md)
+    "monthname": "date_format({0}, 'MMMM')",
+    # ---- random ----
+    # randUniform/randNormal: per-row nondeterministic in both engines
+    "randuniform": "(random() * (({1}) - ({0})) + ({0}))",
+    "randnormal": "(randn() * ({1}) + ({0}))",
+    # CH rand() is a UInt32 INTEGER in [0, 2^32) — Spark's same-named
+    # rand() is a double in [0, 1), the silent-collision class (a CH
+    # user's rand() % 100 would quietly become a fraction). Scale
+    # Spark's to the CH domain; the optional argument exists in CH only
+    # to defeat common-subexpression elimination and is ignored there,
+    # so it is ignored here too. randCanonical() IS Spark's rand()
+    # contract ([0, 1) double). Both are nondeterministic in BOTH
+    # engines — reproducible sampling wants the md5-derived operators
+    # (sample_fraction / stratified_sample), not rand. rand64 refuses
+    # (a 53-bit double mantissa cannot fill 64 uniform bits).
+    "rand": lambda a: (
+        "CAST(floor(rand() * 4294967296) AS BIGINT)" if len(a) == 1 else None
+    ),
+    "randcanonical": lambda a: "rand()" if len(a) == 1 else None,
+    # both are nondeterministic random v4 UUIDs
+    "generateuuidv4": "uuid()",
+    # ---- math / statistics ----
+    "sgn": "sign(",
+    "widthbucket": "width_bucket(",
+    # Spark's kurtosis is EXCESS kurtosis (m4/m2^2 - 3, measured class);
+    # CH kurtPop is the raw ratio — shift back. skewPop formulas agree.
+    "kurtpop": "(kurtosis({0}) + 3)",
+    "skewpop": "skewness(",
+    # sumKahan: Spark's sum is the uncompensated double sum — same
+    # value up to float summation error (documented accuracy surface)
+    "sumkahan": "sum(",
+    "sumcount": "named_struct('sum', sum({0}), 'count', count({0}))",
+    # CH fits y = kx + b from (x, y); Spark's regr_* take (y, x)
+    "simplelinearregression": (
+        "named_struct('k', regr_slope({1}, {0}), 'b', regr_intercept({1}, {0}))"
+    ),
+    # moment statistics: same estimators (pop/samp split matches), the
+    # names just go snake_case; corrMatrix/covarMatrix etc. fall to the
+    # residual refusal
+    "stddevpop": "stddev_pop(",
+    "stddevsamp": "stddev_samp(",
+    "varpop": "var_pop(",
+    "varsamp": "var_samp(",
+    "covarpop": "covar_pop(",
+    "covarsamp": "covar_samp(",
+    # throwIf: assert_true throws when its condition is FALSE, so wrap
+    # the negation; the ifnull pins CH's 0 return on the pass path
+    "throwif": (
+        "ifnull(assert_true(NOT ({0})), 0)",
+        "ifnull(assert_true(NOT ({0}), {1}), 0)",
+    ),
+    # ---- aggregate combinators ----
+    "countif": "count_if(",
+    "sumif": "sum({0}) FILTER (WHERE {1})",
+    "avgif": "avg({0}) FILTER (WHERE {1})",
+    "minif": "min({0}) FILTER (WHERE {1})",
+    "maxif": "max({0}) FILTER (WHERE {1})",
+    "uniqexact": "COUNT(DISTINCT {0})",
+    **dict.fromkeys(
+        ("uniq", "uniqcombined", "uniqhll12", "uniqcombined64"),
+        "approx_count_distinct(",
+    ),
+    "any": "any_value(",
+    "anylast": "any_value(",
+    # argMax/argMin: identical (value, ordering) argument order in both
+    # dialects, and identical tie semantics (an arbitrary row among the
+    # ties)
+    "argmax": "max_by(",
+    "argmin": "min_by(",
+    # groupArray/groupUniqArray: collect_list/collect_set. Both engines
+    # leave element order partition-dependent — deterministic queries
+    # should wrap in arraySort, exactly as they must in ClickHouse
+    "groupuniqarray": "collect_set(",
+    "grouparray": "collect_list(",
+    # bitwise aggregates: identical semantics, snake_case names
+    "groupbitand": "bit_and(",
+    "groupbitor": "bit_or(",
+    "groupbitxor": "bit_xor(",
+    # ---- higher-order array functions ----
+    # ClickHouse takes (lambda, arr); Spark takes (arr, lambda). The
+    # lambda arrow syntax `x -> expr` is identical in both dialects, so
+    # only the argument order swaps. Multi-array forms
+    # (arrayMap((x,y) -> …, a, b)) have a third argument the 2-slot
+    # template can't bind — they fall through to the residual check and
+    # refuse rather than mistranslate.
+    "arraymap": "transform({1}, {0})",
+    "arrayfilter": "filter({1}, {0})",
+    "arrayexists": "exists({1}, {0})",
+    "arrayall": "forall({1}, {0})",
+    # arrayCount(f, arr) -> size(filter(arr, f)); the 1-arg non-zero
+    # count refuses (element type unknown textually)
+    "arraycount": "size(filter({1}, {0}))",
+    # CH spells (lambda, arr, init); Spark aggregate spells (arr, init,
+    # lambda) — the lambda's (acc, x) parameter order agrees. Multi-
+    # array folds (4+ args) fall to the residual refusal.
+    "arrayfold": "aggregate({1}, {2}, {0})",
+    # ---- arrays ----
+    "arraydistinct": "array_distinct(",
+    # bare arraySort only: the keyed form arraySort(f, arr) is a
+    # DIFFERENT contract (CH sorts BY KEY, STABLE on ties) from
+    # Spark's array_sort comparator — every lambda form, parenthesized
+    # parameters included, refuses in _REFUSALS before any rewrite
+    "arraysort": "array_sort(",
+    # sort_array(arr, false) is Spark's descending sort and places
+    # NULLs LAST — exactly CH's arrayReverseSort NULL placement.
+    # Remaining divergence: NaN in float arrays — Spark ranks NaN above
+    # +inf so descending yields [NaN, inf, ...] while CH keeps NaN just
+    # before NULL at the tail; documented in MIGRATION.md
+    "arrayreversesort": "sort_array({0}, false)",
+    "arrayshuffle": "shuffle(",
+    "arraypushback": "array_append(",
+    "arraypushfront": "array_prepend(",
+    # pop = guarded slice (slice length 0 yields [], so the empty
+    # array passes through; the argument is evaluated twice,
+    # row-local)
+    "arraypopback": "slice({0}, 1, greatest(size({0}) - 1, 0))",
+    "arraypopfront": "slice({0}, 2, greatest(size({0}) - 1, 0))",
+    "arrayreverse": "reverse(",
+    "arrayflatten": "flatten(",
+    "arrayslice": "slice(",
+    "arrayconcat": "concat(",
+    "arraymin": "array_min(",
+    "arraymax": "array_max(",
+    "arrayjoin": "explode(",
+    "arraystringconcat": "array_join(",
+    "arrayproduct": (
+        "aggregate({0}, 1.0D, (cdr_ap_a, cdr_ap_x) -> cdr_ap_a * cdr_ap_x)"
+    ),
+    # CH spells (length, elem); Spark spells (elem, count INT)
+    "arraywithconstant": "array_repeat(({1}), CAST(({0}) AS INT))",
+    # random subset without replacement: both engines return k elements
+    # in arbitrary order; slice clamps k past the length
+    "arrayrandomsample": "slice(shuffle({0}), 1, CAST(({1}) AS INT))",
+    # arrayUniq = count of DISTINCT elements (a scalar, not the list)
+    "arrayuniq": "size(array_distinct({0}))",
+    # arrayCompact = CONSECUTIVE dedup (keep each run's first element,
+    # element type preserved). Index lambda: keep i=0, else compare to
+    # the previous element NULL-safely (<=> dedupes NULL runs exactly as
+    # CH does: [1,NULL,NULL,2] -> [1,NULL,2], measured). greatest(i, 1)
+    # keeps element_at's 1-based index legal when the i=0 arm already
+    # decided (ANSI element_at(arr, 0) errors even unselected arms of
+    # an OR in some eval orders). The array argument splices twice
+    # (row-local double evaluation, the least/greatest caveat class).
+    "arraycompact": (
+        "filter({0}, (cdr_v_, cdr_i_) -> cdr_i_ = 0 OR "
+        "NOT (cdr_v_ <=> element_at({0}, greatest(cdr_i_, 1))))"
+    ),
     # arrayEnumerate(arr) = [1..len(arr)], [] for empty, NULL for NULL —
     # transform's index lambda gives all three with ONE evaluation of
     # the argument (a sequence/slice spelling evaluated it twice, which
@@ -2672,75 +2096,298 @@ _REWRITES: list[tuple[re.Pattern[str], str]] = [
     # steps DOWNWARD to [1, 0] for empty arrays). The lambda variables
     # are namespaced so an outer column named x/i can never be shadowed
     # into the body (which references only the index variable).
-    (
-        re.compile(rf"\barrayEnumerate\s*\(\s*{_ARG}\s*\)", re.I),
-        r"transform(\1, (cdr_x_, cdr_i_) -> cdr_i_ + 1)",
+    "arrayenumerate": "transform({0}, (cdr_x_, cdr_i_) -> cdr_i_ + 1)",
+    # arrayDifference: CH yields [0, a[1]-a[0], a[2]-a[1], ...];
+    # spelled with transform's index lambda. The array is referenced
+    # twice — row-local. CH promotes integer elements to Int64 — without
+    # the promotion a TINYINT/SMALLINT subtraction wraps with ANSI off
+    # (Int8 [-100, 100] -> CH 200, unpromoted Spark -56). The `* 1L`
+    # factor widens every integer family to BIGINT BEFORE the
+    # subtraction (reproducing CH's Int64 value), and Spark coerces
+    # FLOAT op BIGINT to DOUBLE (measured: array<float> in ->
+    # array<double> out) — exactly CH's Float32 -> Float64 promotion —
+    # while DOUBLE/DECIMAL keep their own arithmetic. A
+    # CAST(... AS BIGINT) would have truncated the float families.
+    "arraydifference": (
+        "transform({0}, (cdr_ad_x, cdr_ad_i) -> CASE WHEN cdr_ad_i = 0"
+        " THEN 0 ELSE cdr_ad_x * 1L - element_at({0}, cdr_ad_i) * 1L END)"
     ),
-    # leftPad/rightPad (r13 wave 5 upgrade from the bare lpad/rpad
-    # name maps, which were silently char-based): CH pads and truncates
-    # in BYTES (leftPadUTF8/rightPadUTF8 are the char forms) — Spark's
-    # lpad/rpad over BINARY pad and truncate bytes (measured), with the
-    # pad operand made explicit because binary lpad's DEFAULT pad is a
-    # 0x00 byte where CH's is a space.
-    (re.compile(r"\bleftPadUTF8\s*\(", re.I), "lpad("),
-    (re.compile(r"\brightPadUTF8\s*\(", re.I), "rpad("),
-    (
-        re.compile(
-            rf"\bleftPad\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"CAST(lpad(CAST(\1 AS BINARY), \2, CAST(\3 AS BINARY)) AS STRING)",
+    # arrayIntersect: Spark's array_intersect (distinct, first-array
+    # order — a deterministic refinement of CH's documented arbitrary
+    # result order); N-ary via left fold, 2/3-ary here, deeper forms
+    # refuse via the residual
+    "arrayintersect": (
+        "array_intersect({0}, {1})",
+        "array_intersect(array_intersect({0}, {1}), {2})",
     ),
-    (
-        re.compile(rf"\bleftPad\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"CAST(lpad(CAST(\1 AS BINARY), \2, CAST(' ' AS BINARY)) AS STRING)",
+    # Jaccard over DISTINCT elements in both engines; the empty/empty
+    # case rides the divide() idiom (ANSI raises on ANY zero divisor,
+    # double included — measured) so it yields CH's NaN
+    "arrayjaccardindex": (
+        "(CASE WHEN size(array_union({0}, {1})) = 0"
+        " THEN CAST('NaN' AS DOUBLE)"
+        " ELSE size(array_intersect({0}, {1})) * 1.0D /"
+        " nullif(size(array_union({0}, {1})) * 1.0D, 0.0D) END)"
     ),
-    (
-        re.compile(
-            rf"\brightPad\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-        ),
-        r"CAST(rpad(CAST(\1 AS BINARY), \2, CAST(\3 AS BINARY)) AS STRING)",
+    # hasAll/hasAny/countEqual: ClickHouse processes NULL AS A VALUE in
+    # these ("hasAny([NULL], [NULL]) = 1", CH docs) — Spark's
+    # arrays_overlap returns NULL in exactly that case, so the
+    # name-adjacent builtin would silently diverge; the <=> lambdas
+    # spell CH's rule exactly (empty needle set: hasAll -> 1,
+    # hasAny -> 0 — forall/exists over empty agree). Row-local
+    # O(|a|*|b|), each operand evaluated once.
+    "hasall": "forall({1}, cdr_he_ -> exists({0}, cdr_hv_ -> cdr_he_ <=> cdr_hv_))",
+    "hasany": "exists({1}, cdr_he_ -> exists({0}, cdr_hv_ -> cdr_he_ <=> cdr_hv_))",
+    "countequal": "size(filter({0}, cdr_ce_ -> cdr_ce_ <=> ({1})))",
+    # arrayElement(a, i) = CH's a[i] spelled as a function — the same
+    # lowering as the bracket-index rewrite (1-based, negative from the
+    # end in BOTH engines) with the same documented deviation:
+    # out-of-range yields NULL here where CH yields the element type's
+    # DEFAULT (unknowable textually)
+    "arrayelement": "try_element_at({0}, {1})",
+    # emptyArrayT() -> typed empty array literals. The unsigned widths
+    # map to the next-wider signed Spark type (UInt64 -> BIGINT: the
+    # array is EMPTY, so no value can be out of domain; the width
+    # surface is documented in MIGRATION.md).
+    "emptyarrayint8": "CAST(array() AS ARRAY<TINYINT>)",
+    "emptyarrayint16": "CAST(array() AS ARRAY<SMALLINT>)",
+    "emptyarrayuint8": "CAST(array() AS ARRAY<SMALLINT>)",
+    "emptyarrayint32": "CAST(array() AS ARRAY<INT>)",
+    "emptyarrayuint16": "CAST(array() AS ARRAY<INT>)",
+    "emptyarrayint64": "CAST(array() AS ARRAY<BIGINT>)",
+    "emptyarrayuint32": "CAST(array() AS ARRAY<BIGINT>)",
+    "emptyarrayuint64": "CAST(array() AS ARRAY<BIGINT>)",
+    "emptyarrayfloat32": "CAST(array() AS ARRAY<FLOAT>)",
+    "emptyarrayfloat64": "CAST(array() AS ARRAY<DOUBLE>)",
+    "emptyarraystring": "CAST(array() AS ARRAY<STRING>)",
+    "emptyarraydate": "CAST(array() AS ARRAY<DATE>)",
+    "emptyarraydatetime": "CAST(array() AS ARRAY<TIMESTAMP>)",
+    # half-open [start, end) integer range with CH's empty-when-
+    # end<=start rule (Spark's sequence is inclusive and walks downward)
+    "range": _range,
+    # numbers(n) table function -> range(n), keeping CH's column NAME
+    # (`number`; Spark's range emits `id`, so a bare swap would break
+    # every downstream reference). The 2-arg offset form falls to the
+    # residual refusal rather than a silent mis-bind.
+    "numbers": "(SELECT id AS number FROM range({0}))",
+    # ---- maps ----
+    "mapkeys": "map_keys(",
+    "mapvalues": "map_values(",
+    "mapcontains": "map_contains_key(",
+    "mapfromarrays": "map_from_arrays(",
+    "mapcontainskeylike": "exists(map_keys({0}), cdr_mkl_k -> cdr_mkl_k LIKE ({1}))",
+    "mapextractkeylike": (
+        "map_filter({0}, (cdr_mkl_k, cdr_mkl_v) -> cdr_mkl_k LIKE ({1}))"
     ),
-    (
-        re.compile(rf"\brightPad\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I),
-        r"CAST(rpad(CAST(\1 AS BINARY), \2, CAST(' ' AS BINARY)) AS STRING)",
+    # mapAdd/mapSubtract (map form): key-union zip summing values; a
+    # `* 1L` factor reproduces CH's Int64 promotion (the
+    # arrayDifference precedent); missing keys count as 0
+    "mapadd": (
+        "map_zip_with({0}, {1}, (cdr_mz_k, cdr_mz_a, cdr_mz_b) ->"
+        " coalesce(cdr_mz_a, 0) * 1L + coalesce(cdr_mz_b, 0) * 1L)"
+    ),
+    "mapsubtract": (
+        "map_zip_with({0}, {1}, (cdr_mz_k, cdr_mz_a, cdr_mz_b) ->"
+        " coalesce(cdr_mz_a, 0) * 1L - coalesce(cdr_mz_b, 0) * 1L)"
+    ),
+    # CH's value-mapping transform(x, from, to[, default]) with LITERAL
+    # arrays -> the CASE chain it denotes (Spark's same-named transform
+    # is the (array, lambda) higher-order function)
+    "transform": _transform_map,
+    # anonymous tuples -> structs (field-name surface: Spark names the
+    # fields col1/col2..., CH names them 1/2... — positional access
+    # refuses at tupleElement with the named-struct pointer)
+    "tuple": "struct(",
+    # ---- semi-structured ----
+    "tojsonstring": "to_json(",
+    "jsonextractkeys": "json_object_keys(",
+    "jsonarraylength": "json_array_length(",
+    # literal key -> JSONPath
+    "jsonextractstring": _shaped(_LITERAL_ARG, "get_json_object({0}, '$.{1}')"),
+    "jsonextractint": _shaped(
+        _LITERAL_ARG, "CAST(get_json_object({0}, '$.{1}') AS BIGINT)"
+    ),
+    # ---- strings ----
+    # CH length(String) counts BYTES; Spark's length counts CHARACTERS
+    # — identical on ASCII, silently different on multi-byte UTF-8 (the
+    # collision class). octet_length is Spark's byte counter. (CH
+    # length(Array) = element count — that lowering would need the
+    # type; octet_length over an array fails Spark analysis loudly, and
+    # MIGRATION.md points array users at size().)
+    "length": "octet_length(",
+    "lengthutf8": "length(",
+    "notempty": "(length({0}) > 0)",
+    "empty": "(length({0}) = 0)",
+    # left/right: CH slices BYTES while Spark's SAME-NAMED functions
+    # slice characters, so an untranslated call runs silently
+    # char-based. NONNEGATIVE INTEGER LITERAL lengths translate
+    # (byte-true through BINARY; right's greatest-guard keeps the
+    # 1-based start legal for n = 0 and n > length — both measured);
+    # negative literals (CH's "all but the last/first |n|" rule) and
+    # expression lengths fall to the residual and refuse.
+    # leftUTF8/rightUTF8 (CH's char forms) spell as substring.
+    "left": _shaped(
+        _UINT_ARG, "CAST(substring(CAST({0} AS BINARY), 1, {1}) AS STRING)"
+    ),
+    "right": _shaped(
+        _UINT_ARG,
+        "CAST(substring(CAST({0} AS BINARY), "
+        "greatest(octet_length({0}) - {1} + 1, 1), {1}) AS STRING)",
+    ),
+    "leftutf8": _shaped(_UINT_ARG, "substring({0}, 1, {1})"),
+    "rightutf8": _shaped(
+        _UINT_ARG, "substring({0}, greatest(length({0}) - {1} + 1, 1), {1})"
+    ),
+    # leftPad/rightPad: CH pads and truncates in BYTES
+    # (leftPadUTF8/rightPadUTF8 are the char forms) — Spark's lpad/rpad
+    # over BINARY pad and truncate bytes (measured), with the pad
+    # operand made explicit because binary lpad's DEFAULT pad is a 0x00
+    # byte where CH's is a space.
+    "leftpadutf8": "lpad(",
+    "rightpadutf8": "rpad(",
+    "leftpad": (
+        "CAST(lpad(CAST({0} AS BINARY), {1}, CAST(' ' AS BINARY)) AS STRING)",
+        "CAST(lpad(CAST({0} AS BINARY), {1}, CAST({2} AS BINARY)) AS STRING)",
+    ),
+    "rightpad": (
+        "CAST(rpad(CAST({0} AS BINARY), {1}, CAST(' ' AS BINARY)) AS STRING)",
+        "CAST(rpad(CAST({0} AS BINARY), {1}, CAST({2} AS BINARY)) AS STRING)",
     ),
     # 1-ARG forms only: ClickHouse's 2-arg trims take (string, chars)
     # while Spark's take (chars, string) — a name-only swap of the
     # 2-arg form runs fine and returns wrong data (the classic silent
     # trap); multi-arg calls fall to the residual refusal instead
-    (re.compile(rf"\btrimLeft\s*\(\s*{_ARG}\s*\)", re.I), r"ltrim(\1)"),
-    (re.compile(rf"\btrimRight\s*\(\s*{_ARG}\s*\)", re.I), r"rtrim(\1)"),
-    (re.compile(rf"\btrimBoth\s*\(\s*{_ARG}\s*\)", re.I), r"trim(\1)"),
-    # fixed-precision casts: toDecimal{32,64,128}(x, S) carries the CH
-    # type's full precision (9/18/38 digits) at the written scale
+    "trimleft": "ltrim({0})",
+    "trimright": "rtrim({0})",
+    "trimboth": "trim({0})",
+    # substringIndex (MySQL-style segment slice — identical semantics
+    # incl. negative counts-from-the-end): Spark's snake_case twin.
+    # Delimiter-count semantics are byte/char agnostic, so no BINARY
+    # round-trip is needed.
+    "substringindex": "substring_index(",
+    # reverseUTF8 = code-point reversal = Spark's reverse on strings
+    # (bare reverse refuses in _REFUSALS — CH's is byte-level)
+    "reverseutf8": "reverse(",
+    # code-point edit distance: CH's UTF8 forms == Spark levenshtein
+    # (the bare byte forms refuse in _REFUSALS)
+    "editdistanceutf8": "levenshtein(",
+    "levenshteindistanceutf8": "levenshtein(",
+    # suffix/prefix equality is encoding-agnostic — the UTF8 spellings
+    # ARE Spark's endswith/startswith
+    "endswithutf8": "endswith(",
+    "startswithutf8": "startswith(",
+    "appendtrailingcharifabsent": (
+        "(CASE WHEN endswith(({0}), ({1})) THEN ({0})"
+        " ELSE concat(({0}), ({1})) END)"
+    ),
+    "replaceall": "replace(",
+    "replaceone": _replace_one,
+    "countsubstrings": _count_substrings,
+    # CH match(haystack, pattern) is a boolean regex test = RLIKE
+    "match": "({0} RLIKE {1})",
+    # CH position(haystack, needle) returns the 1-based BYTE offset
+    # (positionUTF8 is the code-point form) — Spark's locate counts
+    # CHARACTERS and takes the arguments SWAPPED, and Spark ALSO has a
+    # position(substr, str[, pos]) builtin with the REVERSE argument
+    # order of ClickHouse's, so an unrewritten call would run and
+    # silently return wrong numbers — `position\w*` is in _RESIDUALS so
+    # 3-arg, CaseInsensitive and nested forms REFUSE instead. Byte-true
+    # lowering: the char position from locate converts to a byte
+    # position as octet_length of the CHARACTER prefix before the match
+    # + 1 — exact for valid UTF-8, where a needle can only match at
+    # code-point boundaries (UTF-8 is self-synchronizing). Not-found
+    # keeps CH's 0; NULL operands propagate NULL through the CASE (NULL
+    # = 0 is false, and the ELSE arms carry the NULL). The operands
+    # splice multiple times (row-local, the least/greatest caveat
+    # class).
+    "positionutf8": "locate({1}, {0})",
+    "position": (
+        "(CASE WHEN locate({1}, {0}) = 0 THEN 0"
+        " ELSE octet_length(substring({0}, 1, locate({1}, {0}) - 1)) + 1 END)"
+    ),
+    # multiSearchAny(haystack, [needles]): 1 if ANY needle is a
+    # substring. exists + contains evaluates each operand ONCE; CH's
+    # UInt8 0/1 becomes a boolean exactly like match -> RLIKE. Bracket
+    # needle literals are already array(...) calls here (the bracket
+    # pass runs before the table); other multiSearch variants
+    # (FirstPosition/FirstIndex/CaseInsensitive/...) fall to the
+    # residual and refuse.
+    "multisearchany": "exists({1}, cdr_ms_ -> contains({0}, cdr_ms_))",
+    # ---- encodings / digests ----
+    "base64decode": _base64_decode(lenient=False),
+    "trybase64decode": _base64_decode(lenient=True),
+    # CH base64Encode emits ONE unwrapped line; Spark's base64 inserts
+    # RFC 2045 \r\n line breaks every 76 chars (measured: 100-byte
+    # input -> 138-char output) — strip them for CH parity
+    "base64encode": r"replace(replace(base64({0}), '\r', ''), '\n', '')",
+    # CH MD5/SHA* return the raw digest BYTES (FixedString) while
+    # Spark's same-named md5/sha1 RESOLVE case-insensitively and return
+    # the lowercase-HEX STRING — a silent same-name collision:
+    # hex(MD5(s)) would hex the ASCII hex text instead of the 16 digest
+    # bytes. unhex(..) restores the CH byte value, and compositions then
+    # agree naturally (Spark hex over BINARY is the even-length
+    # uppercase CH form).
+    "md5": "unhex(md5({0}))",
+    "sha1": "unhex(sha1({0}))",
+    "sha224": "unhex(sha2({0}, 224))",
+    "sha256": "unhex(sha2({0}, 256))",
+    "sha384": "unhex(sha2({0}, 384))",
+    "sha512": "unhex(sha2({0}, 512))",
+    # CH hex/bin pad numbers to the TYPE's byte width (hex(10) = '0A',
+    # bin(1) = '00000001') while Spark emits minimal digits ('A', '1') —
+    # a silent same-name collision for numeric arguments. Padding the
+    # Spark output to even (hex) / multiple-of-8 (bin) digits restores
+    # the CH value for integer arguments and is a NO-OP for
+    # string/binary arguments (their hex is already byte-aligned). The
+    # argument is evaluated twice — row-local, the least/greatest caveat
+    # class. CH hex of FLOAT arguments (raw IEEE bytes, little-endian)
+    # stays divergent for typed COLUMNS (documented in MIGRATION.md);
+    # float LITERAL arguments refuse in _REFUSALS; nested-call arguments
+    # past _ARG's budget refuse via the post-pass check in translate().
+    "hex": _padded_digits("hex", 2),
+    "bin": _padded_digits("bin", 8),
+    # dotted-quad <-> UInt32 integer arithmetic (exact)
+    "ipv4numtostring": (
+        "concat(CAST((({0}) DIV 16777216) % 256 AS STRING), '.',"
+        " CAST((({0}) DIV 65536) % 256 AS STRING), '.',"
+        " CAST((({0}) DIV 256) % 256 AS STRING), '.',"
+        " CAST(({0}) % 256 AS STRING))"
+    ),
+    **{
+        f"ipv4stringtonum{suffix}": _ipv4_string_to_num(suffix)
+        for suffix in ("", "ornull", "orzero")
+    },
+    "isipv4string": (
+        f"(({{0}}) RLIKE '^{_IPV4_OCTET}(\\\\.{_IPV4_OCTET}){{{{3}}}}$')"
+    ),
+    # argless count() is ClickHouse-legal; Spark wants count(*)
+    "count": "count(*)",
+}
+
+# clause syntax — not calls, so the call table cannot hold it. These run
+# before the call walk, so the ARRAY JOIN operand's one-level _ARG sees
+# the text as written (`ARRAY JOIN splitByChar(' ', s) AS tok` binds
+# before any expansion).
+_CLAUSES: list[tuple[re.Pattern[str], str]] = [
+    # ARRAY JOIN as a CLAUSE (ClickHouse's signature flatten): the
+    # expression form `FROM t ARRAY JOIN <expr> AS x` becomes a lateral
+    # explode; LEFT ARRAY JOIN keeps empty-array rows via explode_outer
     (
-        re.compile(rf"\btoDecimal32\s*\(\s*{_ARG}\s*,\s*(\d+)\s*\)", re.I),
-        r"CAST(\1 AS DECIMAL(9, \2))",
+        re.compile(
+            rf"\bLEFT\s+ARRAY\s+JOIN\s+{_ARG}\s+AS\s+([A-Za-z_]\w*)", re.I
+        ),
+        r"LATERAL VIEW OUTER explode(\1) AS \2",
     ),
     (
-        re.compile(rf"\btoDecimal64\s*\(\s*{_ARG}\s*,\s*(\d+)\s*\)", re.I),
-        r"CAST(\1 AS DECIMAL(18, \2))",
+        re.compile(rf"\bARRAY\s+JOIN\s+{_ARG}\s+AS\s+([A-Za-z_]\w*)", re.I),
+        r"LATERAL VIEW explode(\1) AS \2",
     ),
-    (
-        re.compile(rf"\btoDecimal128\s*\(\s*{_ARG}\s*,\s*(\d+)\s*\)", re.I),
-        r"CAST(\1 AS DECIMAL(38, \2))",
-    ),
-    # numbers(n) table function -> range(n), keeping CH's column NAME
-    # (`number`; Spark's range emits `id`, so a bare swap would break
-    # every downstream reference). The 2-arg offset form falls to the
-    # residual refusal rather than a silent mis-bind.
-    (
-        re.compile(rf"\bnumbers\s*\(\s*{_ARG}\s*\)", re.I),
-        r"(SELECT id AS number FROM range(\1))",
-    ),
-    # ---- clauses ----
     # GLOBAL JOIN/IN ships the right side to every shard — exactly what
     # Spark's planner decides itself (broadcast by stats/AQE); the
     # keyword is distribution advice with no Spark spelling, so strip it
-    # (NOT/SEMI/ANTI cover `GLOBAL NOT IN` and CH's semi/anti joins —
-    # without NOT in the lookahead the leftover GLOBAL reached Spark as
-    # an opaque parse error; a residual \bGLOBAL\b refusal backstops any
-    # spelling this alternation still misses)
+    # (NOT/SEMI/ANTI cover `GLOBAL NOT IN` and CH's semi/anti joins; a
+    # residual \bGLOBAL\b refusal backstops any spelling this
+    # alternation still misses)
     (
         re.compile(
             r"\bGLOBAL\s+(?=(ANY|ALL|LEFT|RIGHT|INNER|FULL|CROSS|JOIN|NOT|SEMI|ANTI|IN\b))",
@@ -2748,9 +2395,6 @@ _REWRITES: list[tuple[re.Pattern[str], str]] = [
         ),
         "",
     ),
-    # (the ARRAY JOIN clause entries moved BEFORE the r13 binder group —
-    # their one-level _ARG must bind `ARRAY JOIN splitByChar(...) AS x`
-    # before the split expansion makes the operand two levels deep)
     # (GROUP BY ... WITH TOTALS — bare columns AND expression keys — is
     # rewritten by _rewrite_totals, which owns the paren-aware key-list
     # split; the residual \bWITH TOTALS\b check backstops what it
@@ -2759,7 +2403,7 @@ _REWRITES: list[tuple[re.Pattern[str], str]] = [
     # CH's MySQL-style `LIMIT offset, count` — Spark wants the SQL
     # standard spelling (OFFSET clause); Spark rejects the comma form at
     # parse, so this turns an opaque error into the right query. (The
-    # `LIMIT o, n BY` variant refuses above before reaching here.)
+    # `LIMIT o, n BY` variant refuses before reaching here.)
     (
         re.compile(r"\bLIMIT\s+(\d+)\s*,\s*(\d+)", re.I),
         r"LIMIT \2 OFFSET \1",
@@ -2782,97 +2426,16 @@ _REWRITES: list[tuple[re.Pattern[str], str]] = [
     (re.compile(r"\bFORMAT\s+\w+\s*;?\s*$", re.I), ""),
 ]
 
-# ---- to{Int,Float}*Or{Null,Zero,Default} converter suffixes (r13,
-# VERDICT r12 #3 — refusal turned translation). ClickHouse semantics:
-# parse the STRING argument strictly; on parse failure OR out-of-range
-# return NULL (OrNull), the type default 0 (OrZero / 1-arg OrDefault),
-# or the given expression (2-arg OrDefault). NULL input propagates NULL
-# (they are ordinary functions), so OrZero/OrDefault wrap in an explicit
-# NULL guard — coalesce alone would turn a NULL input into the default,
-# which CH never does. Width-true Spark target types (Int8 -> TINYINT
-# ... Float64 -> DOUBLE) preserve the out-of-range -> default boundary:
-# try_cast('300' AS TINYINT) is NULL exactly where CH's range check
-# fails the parse; fractional strings are MEASURED-rejected by Spark's
-# integer try_cast too ('3.5' -> NULL, same as CH — note DuckDB's
-# TRY_CAST rounds it to 4, so oracles must not feed fractional
-# strings to integer targets). DOCUMENTED deviations (MIGRATION.md):
-# try_cast trims surrounding whitespace that CH's strict parser
-# rejects (' 42' succeeds here, default in CH), and the guard
-# evaluates the argument twice (row-local; nondeterministic
-# arguments carry the least/greatest caveat). toUInt*Or* REFUSES —
-# Spark has no unsigned domain, so toUInt8OrNull('200') = 200 in CH
-# has no width-true target (TINYINT would return NULL); toDate*/
-# toDecimal*/toDateTime* Or-forms refuse on date-parsing / scale
-# divergence (the residual check below owns the pointer).
-_OR_CONVERTER_TYPES: list[tuple[str, str]] = [
-    ("Int8", "TINYINT"),
-    ("Int16", "SMALLINT"),
-    ("Int32", "INT"),
-    ("Int64", "BIGINT"),
-    ("Float32", "FLOAT"),
-    ("Float64", "DOUBLE"),
-]
-def _try_cast_expr(arg: str, spark_t: str) -> str:
-    """Width-true fallible parse. INTEGER targets guard the try_cast
-    behind an exception-free DOUBLE pre-parse (r13 perf fix, MEASURED:
-    Spark's string->integer try_cast fails through a thrown-and-caught
-    NumberFormatException at ~10 us/row — 3.1x slower on all-garbage
-    columns, which is exactly the dirty-data domain these converters
-    exist for — while the string->double parse fails without throwing).
-    Value-identical by grammar containment: every string Spark's
-    integer parse accepts (trimAll whitespace, sign, digits) is also
-    accepted by its double parse, so a double-parse NULL implies an
-    integer-parse NULL — verified over a 22-case battery (whitespace
-    forms, '3.5', '1e3', 'NaN', 'Infinity', hex, overflow, bare signs)
-    in test_ch_dialect_or_converters. Only numeric-looking non-integers
-    ('3.5', '1e3') still pay the exception path. Float targets parse
-    exception-free already and stay bare."""
-    if spark_t in ("FLOAT", "DOUBLE"):
-        return f"try_cast({arg} AS {spark_t})"
-    return (
-        f"(CASE WHEN try_cast({arg} AS DOUBLE) IS NOT NULL "
-        f"THEN try_cast({arg} AS {spark_t}) END)"
-    )
-
-
-for _ch_t, _spark_t in _OR_CONVERTER_TYPES:
-    _tc = _try_cast_expr("\\1", _spark_t)
-    _REWRITES.extend(
-        [
-            (
-                re.compile(rf"\bto{_ch_t}OrNull\s*\(\s*{_ARG}\s*\)", re.I),
-                _tc,
-            ),
-            # 2-arg OrDefault BEFORE the 1-arg forms: _ARG never crosses
-            # a top-level comma, so a 2-arg call cannot mis-bind to the
-            # 1-arg pattern and vice versa, but the explicit order keeps
-            # the intent readable
-            (
-                re.compile(
-                    rf"\bto{_ch_t}OrDefault\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-                    re.I,
-                ),
-                r"(CASE WHEN (\1) IS NULL THEN NULL "
-                r"ELSE coalesce(" + _tc + r", (\2)) END)",
-            ),
-            (
-                re.compile(
-                    rf"\bto{_ch_t}Or(?:Zero|Default)\s*\(\s*{_ARG}\s*\)", re.I
-                ),
-                r"(CASE WHEN (\1) IS NULL THEN NULL "
-                r"ELSE coalesce(" + _tc + r", 0) END)",
-            ),
-        ]
-    )
 
 # any surviving ClickHouse-only name means a rewrite failed to match
-# (e.g. nested arguments) — refuse rather than ship wrong SQL
+# (nested arguments past the _ARG budget, wrong arity, a non-literal
+# argument an entry needs as a literal) — refuse rather than ship wrong
+# SQL. The call table's emissions spell none of these names.
 _RESIDUALS = re.compile(
     # \w* tails on the converter families: the signed-Int/Float
-    # OrZero/OrNull/OrDefault suffixes TRANSLATE since r13 (width-true
-    # try_cast + NULL guard, entries above), so what reaches this check
-    # is the still-refused remainder — toUInt*Or* (no unsigned domain in
-    # Spark), toDate*/toDecimal* Or-forms (date-parsing/scale
+    # OrZero/OrNull/OrDefault suffixes translate, so what reaches this
+    # check is the still-refused remainder — toUInt*Or* (no unsigned
+    # domain in Spark), toDate*/toDecimal* Or-forms (date-parsing/scale
     # divergence), and Or-calls whose arguments nest too deep for _ARG —
     # refuse with the pointer instead of an opaque unresolved-function
     # error
@@ -2889,57 +2452,38 @@ _RESIDUALS = re.compile(
     r"|leftPad|rightPad|numbers|trimLeft|trimRight|trimBoth"
     r"|toDecimal\d+\w*|rand64|arrayConcat|arrayMin|arrayMax|arrayUniq"
     r"|groupBit(And|Or|Xor)|stddev(Pop|Samp)|var(Pop|Samp)|covar(Pop|Samp)"
-    # r13 second wave: the rewrites emit exists/filter/operators, never
-    # these names, so a surviving spelling is always an unbound form
-    # (deep nesting, wrong arity, non-literal toStartOfWeek mode)
     r"|multiSearch\w*|bit(And|Or|Xor|Not)|arrayCompact"
     r"|hasAll|hasAny|countEqual|arrayElement"
-    # r13 wave 5: CH left/right slice BYTES and Spark's same-named
-    # functions slice chars, so NON-literal-length spellings must refuse
-    # rather than run silently char-based (the rewrites above emit
-    # substring/octet_length, never these names); countSubstrings'
-    # CaseInsensitive/UTF8 variants and deep-nested forms land here too
+    # CH left/right slice BYTES and Spark's same-named functions slice
+    # chars, so NON-literal-length spellings must refuse rather than run
+    # silently char-based; countSubstrings' CaseInsensitive/UTF8
+    # variants land here too
     r"|left|right|countSubstrings\w*|leftUTF8|rightUTF8"
-    # r14: the concatWithSeparator scanner rewrites every nesting level,
-    # so a surviving spelling is a typo'd suffix — refuse it loudly
+    # the concatWithSeparator scanner rewrites every nesting level, so
+    # a surviving spelling is a typo'd suffix
     r"|concatWithSeparator\w*"
-    # r14 wave 2: deep-nested (past-_ARG) or wrong-arity survivors of
-    # the new translations refuse with the pointer instead of reaching
-    # Spark as unresolved functions
-    # isIPv4String spelled explicitly (ADVICE r14): \bIPv4\w+ can't
-    # fire mid-identifier (no word boundary inside isIPv4String), so a
-    # past-_ARG survivor reached Spark as an opaque unresolved-function
-    # error instead of the pointered refusal. range() survivors get a
-    # dedicated check in translate() — the numbers() rewrite itself
-    # emits Spark's `FROM range(n)` table function, which must not trip
-    # the expression-position refusal.
+    # isIPv4String spelled explicitly: \bIPv4\w+ can't fire
+    # mid-identifier (no word boundary inside isIPv4String). range()
+    # survivors get a dedicated check in translate() — the numbers()
+    # entry itself emits Spark's `FROM range(n)` table function, which
+    # must not trip the expression-position refusal; MD5/SHA and
+    # hex/bin survivors likewise (their entries emit the same names).
     r"|parseDateTime\w*|IPv4\w+|isIPv4String"
     r"|base64(Encode|Decode)|tryBase64Decode"
     r"|monthName|generateUUIDv4"
-    # r15 wave 3: past-_ARG / 4+-ary survivors of the new translations
-    # (toStartOf\w+ already refuses above; MD5/SHA survivors get an
-    # emission-aware post-pass in translate() — putting them here
-    # would match the rewrite's own unhex(md5(..)) emission)
     r"|arrayIntersect|arrayDifference|fromUnixTimestamp"
     r"|emptyArray\w+"
-    # r15 wave 3b: nested/1-arg survivors of the array-mutation wave
     r"|arrayPop(Back|Front)|arrayCount|extractAll\w*|arrayReverseSort"
-    # r15 wave 3c: past-_ARG survivors of the date-arithmetic family
-    # (the 3-arg date_add/date_sub forms can't be listed — the 2-arg
-    # spelling is valid Spark — but these names are CH-only)
+    # the 3-arg date_add/date_sub forms can't be listed — the 2-arg
+    # spelling is valid Spark — but these names are CH-only
     r"|(add|subtract)(Second|Minute|Hour|Day|Week|Month|Quarter|Year)s"
-    # r16 wave 4: past-_ARG / wrong-arity survivors of the comparison,
-    # float-classification, vector, and map-lambda waves (roundBankers/
-    # exp2/exp10/intExp2 are bare renames with no survivor shape; the
-    # emitted Spark text — map_filter, pow, shiftleft, bround,
-    # aggregate/zip_with folds — triggers none of these names)
+    # roundBankers/exp2/exp10/intExp2 are head renames with no survivor
+    # shape
     r"|equals|notEquals|lessOrEquals|greaterOrEquals|less|greater"
     r"|notI?Like|isNaN|isFinite|isInfinite|ifNotFinite"
     r"|L1Norm|L2Norm|L2SquaredNorm|LinfNorm"
     r"|L1Distance|L2Distance|L2SquaredDistance|LinfDistance"
     r"|(array)?dotProduct|cosineDistance|mapFilter|mapExists|mapAll"
-    # r16 wave 5 survivors (past-_ARG / wrong-arity forms of the
-    # wave-5 rewrites; the emitted Spark text triggers none of these)
     r"|negate|intDivOrZero|moduloOrZero|max2|min2|toNullable"
     r"|materialize|identity|isZeroOrNull|makeDate(Time)?"
     r"|toYYYYMMDDhhmmss|toISOYear|randUniform|randNormal|kurtPop"
@@ -3072,20 +2616,17 @@ def _scan_to_close(masked: str, start: int) -> int:
     return i
 
 
-def _calls(masked: str, head: "re.Pattern[str]", nested: bool = True):
+def _calls(masked: str, head: "re.Pattern[str]"):
     """Yield ``(m, close)`` for each call ``head`` (a pattern ending in
     the call's '(') matches on the literal-MASKED text: ``close`` is the
     index just past the matching ')', or None when the call never
-    closes. ``nested=False`` resumes the search past each closed call,
-    so calls inside its arguments are not yielded."""
-    pos = 0
-    while m := head.search(masked, pos):
+    closes."""
+    for m in head.finditer(masked):
         try:
             close = _scan_to_close(masked, m.end())
         except UnsupportedClickHouseSQL:
             close = None
         yield m, close
-        pos = m.end() if nested or close is None else close
 
 
 def _rewrite_calls(
@@ -3096,39 +2637,96 @@ def _rewrite_calls(
     max_depth: int,
     too_deep: str,
     name=str.lower,
-    unbalanced: str = "unbalanced parentheses in {}()",
+    unbalanced: str | None = "unbalanced parentheses in {}()",
+    strip: bool = True,
 ) -> str:
-    """The one call-site rewriter behind the function-family passes.
+    """The one call-site rewriter behind translate()'s call passes.
 
     Every call ``head`` matches (group 1 spells the function name) is
     found on the literal-masked copy, so a call spelled inside a string
-    literal is data and never rewritten. Its arguments are split at the
-    top level and stripped from the RAW text, and the call is replaced by
-    ``emit(name(group 1), args, recurse)``. ``recurse(arg)`` rewrites one
-    argument the same way one level deeper; past ``max_depth`` levels it
-    refuses with ``too_deep``. The emission is spliced into the raw text
-    and the search resumes past the call, so emitted text — which may
-    spell the same function name — is never matched again. A call that
-    never closes refuses with ``unbalanced`` (formatted with the name)."""
+    literal is data and never rewritten; a head whose ``name(group 1)``
+    is None is no call of this pass. The call's arguments are split at
+    the top level and taken from the RAW text — stripped unless
+    ``strip`` is false — and the call is replaced by ``emit(name, args,
+    recurse)``. ``recurse(arg)`` rewrites one argument the same way one
+    level deeper; past ``max_depth`` levels it refuses with
+    ``too_deep``. The emission is spliced into the raw text and the
+    search resumes past the call, so emitted text — which may spell the
+    same function name — is never matched again. When ``emit`` returns
+    None the call keeps its text and the search goes on inside it. A
+    call that never closes refuses with ``unbalanced`` (formatted with
+    the name), or keeps its text when ``unbalanced`` is None."""
 
     def walk(sql: str, depth: int) -> str:
         if depth > max_depth:
             raise UnsupportedClickHouseSQL(too_deep)
+        masked = _mask_literals(sql)
         out: list[str] = []
-        pos = 0
-        for m, close in _calls(_mask_literals(sql), head, nested=False):
+        pos = scan = 0
+        while m := head.search(masked, scan):
+            scan = m.end()
             fn = name(m.group(1))
-            if close is None:
-                raise UnsupportedClickHouseSQL(unbalanced.format(fn))
-            body = sql[m.end() : close - 1]
-            args = [a.strip() for a in _split_top_level_args(body)]
-            out.append(sql[pos : m.start()])
-            out.append(emit(fn, args, lambda a: walk(a, depth + 1)))
-            pos = close
+            if fn is None:
+                continue
+            try:
+                close = _scan_to_close(masked, m.end())
+            except UnsupportedClickHouseSQL:
+                if unbalanced is None:
+                    continue
+                raise UnsupportedClickHouseSQL(unbalanced.format(fn)) from None
+            pieces = _split_top_level_args(sql[m.end() : close - 1])
+            args = [a.strip() for a in pieces] if strip else pieces
+            text = emit(fn, args, lambda a: walk(a, depth + 1))
+            if text is not None:
+                out += [sql[pos : m.start()], text]
+                pos = scan = close
         out.append(sql[pos:])
         return "".join(out)
 
     return walk(sql, 0)
+
+
+_CALL_HEAD = re.compile(r"\b(\w+)\s*\(")
+_WITHIN_BUDGET = re.compile(_ARG).fullmatch
+
+
+def _table_key(name: str) -> str | None:
+    key = name.lower()
+    return key if key in _CALLS else None
+
+
+def _emit_call(key: str, pieces: list[str], recurse) -> str | None:
+    """Rewrite one call through its _CALLS entry (see the table's
+    header for the three kinds of value); None keeps it as written."""
+    spec = _CALLS[key]
+    if isinstance(spec, str) and not spec.endswith(")"):
+        return spec + ",".join(map(recurse, pieces)) + ")"
+    if not all(_WITHIN_BUDGET(_mask_literals(p)) for p in pieces):
+        return None
+    args = [recurse(p).lstrip() for p in pieces]
+    if callable(spec):
+        return spec(args)
+    for template in (spec,) if isinstance(spec, str) else spec:
+        n = _arity(template)
+        if n == len(args) or n == 0 and args == [""]:
+            return template.format(*args)
+    return None
+
+
+def _rewrite_table_calls(sql: str) -> str:
+    """Apply the call table to every call site in one walk, arguments
+    before their call."""
+    return _rewrite_calls(
+        sql,
+        _CALL_HEAD,
+        _emit_call,
+        max_depth=32,
+        too_deep="function calls nested more than 32 levels deep — "
+        "precompute inner expressions as subquery/CTE columns",
+        name=_table_key,
+        unbalanced=None,
+        strip=False,
+    )
 
 
 def _null_guarded(fn: str, args: list[str]) -> str:
@@ -3583,7 +3181,7 @@ def _rewrite_format_datetime(sql: str) -> str:
 # spark.sql.ansi.enabled (ADVICE r14 — previously it lowered to plain
 # to_timestamp, which with ANSI off silently returned NULL where CH
 # throws): CASE over try_to_timestamp with an explicit raise_error,
-# mirroring _base64_decode_repl. The guard evaluates expr twice —
+# mirroring _base64_decode. The guard evaluates expr twice —
 # row-local and fine for pure expressions (the concatWithSeparator /
 # least/greatest precedent, MIGRATION.md). Timezone 3-arg forms fall
 # to the residual refusal.
@@ -3612,7 +3210,7 @@ def _rewrite_parse_datetime(sql: str) -> str:
         # bare form: CH THROWS on a parse miss, but Spark's
         # to_timestamp only throws under spark.sql.ansi.enabled —
         # with ANSI off it silently returns NULL. Spell the throw
-        # explicitly (ADVICE r14), mirroring _base64_decode_repl:
+        # explicitly (ADVICE r14), mirroring _base64_decode:
         # NULL input passes through, a non-NULL miss raises.
         return (
             f"(CASE WHEN ({expr}) IS NULL THEN "
@@ -3997,6 +3595,11 @@ _TOPK_WEIGHTED = re.compile(
 )
 _AVG_WEIGHTED = re.compile(
     rf"\bavgWeighted\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
+)
+# uniqUpTo(N)(x): exact count-distinct saturating at N+1 — CH's
+# documented contract, spelled exactly with LEAST
+_UNIQ_UP_TO = re.compile(
+    rf"\buniqUpTo\s*\(\s*(\d+)\s*\)\s*\(\s*{_ARG}\s*\)", re.I
 )
 
 
@@ -4515,7 +4118,10 @@ def _rewrite_quantile_family(sql: str) -> str:
     out = _sub_outside_literals(_QUANT_BARE, bare_repl, out)
     out = _sub_outside_literals(_TOPK_WEIGHTED, topk_weighted_repl, out)
     out = _sub_outside_literals(_AVG_WEIGHTED, avg_weighted_repl, out)
-    return _sub_outside_literals(_TOPK, topk_repl, out)
+    out = _sub_outside_literals(_TOPK, topk_repl, out)
+    return _sub_outside_literals(
+        _UNIQ_UP_TO, r"LEAST(COUNT(DISTINCT \2), \1 + 1)", out
+    )
 
 
 _TOTALS_TOKEN = re.compile(r"\bWITH\s+TOTALS\b", re.I)
@@ -4876,17 +4482,18 @@ def translate(ch_sql: str) -> str:
     # (multiIf arms, totals keys, least/greatest guards) that may carry
     # substring calls — running after them guarantees every spelling is
     # seen exactly once; the emitted byte-form text triggers nothing in
-    # the table below
+    # the call table
     out = _rewrite_substring_family(out)
     out = _rewrite_case_family(out)
     # BEFORE the table: the has/indexOf argument text it splices
     # (arrayMap, splitByChar) is rewritten there
     out = _rewrite_membership(out)
-    for pat, repl in _REWRITES:
+    for pat, repl in _CLAUSES:
         out = _sub_outside_literals(pat, repl, out)
-    # AFTER the table: its ARRAY JOIN entry binds the COMPACT splitBy*
-    # text; this pass then expands every remaining spelling at any
-    # nesting depth
+    out = _rewrite_table_calls(out)
+    # AFTER the clauses: the ARRAY JOIN clause binds the COMPACT
+    # splitBy* text; this pass then expands every remaining spelling at
+    # any nesting depth
     out = _rewrite_split_family(out)
     masked = _mask_literals(out)
     if re.search(r"\bWITH\s+TOTALS\b", masked, re.I):
@@ -4917,25 +4524,32 @@ def translate(ch_sql: str) -> str:
             "SETTINGS in a non-tail position (subquery / before UNION) — "
             "remove it; session confs own execution advice here"
         )
-    # range() survivors (ADVICE r14): the rewrite's {_ARG} budget is one
-    # paren level, so range(least(a,b)) — whose NULL-guard CASE
-    # expansion exceeds it — survived to Spark as an opaque unresolved-
-    # function error. Expression-position range( refuses here; table-
-    # position `FROM range(` is exempt because the numbers(n) rewrite
-    # emits exactly that Spark table function.
-    for _rm in re.finditer(r"\brange\s*\(", masked, re.I):
-        if not masked[: _rm.start()].rstrip().upper().endswith("FROM"):
+    # survivors of the table entries whose own emission spells the same
+    # name, so _RESIDUALS cannot list them
+    heads = [(m, m.group(1).lower()) for m in _CALL_HEAD.finditer(masked)]
+    # range() survivors: the entry's _ARG budget is one paren level, so
+    # range(least(a,b)) — whose NULL-guard CASE expansion exceeds it —
+    # would reach Spark as an opaque unresolved-function error.
+    # Expression-position range( refuses here; table-position
+    # `FROM range(` is exempt because the numbers(n) entry emits exactly
+    # that Spark table function.
+    for _rm, fn in heads:
+        if fn == "range" and not (
+            masked[: _rm.start()].rstrip().upper().endswith("FROM")
+        ):
             raise UnsupportedClickHouseSQL(
                 "could not rewrite 'range(' (nested arguments?) — "
                 "flatten the call or precompute nested expressions as "
                 "subquery/CTE columns"
             )
-    # hex/bin survivors (r15 wave 3): the padding rewrite's {_ARG}
-    # budget is one paren level, so a deeper-nested numeric argument
-    # would ride Spark's MINIMAL-digit hex/bin unpadded — refuse
-    # instead. The rewrite's own emission is exempt: it spells hex(
-    # after `lpad(` and after `char_length(`.
-    for _hm in re.finditer(r"\b(hex|bin)\s*\(", masked, re.I):
+    # hex/bin survivors: the padding entry's _ARG budget is one paren
+    # level, so a deeper-nested numeric argument would ride Spark's
+    # MINIMAL-digit hex/bin unpadded — refuse instead. The entry's own
+    # emission is exempt: it spells hex( after `lpad(` and after
+    # `char_length(`.
+    for _hm, fn in heads:
+        if fn not in ("hex", "bin"):
+            continue
         _pre = masked[: _hm.start()].rstrip().lower()
         if re.match(r"\s*unhex\s*\(", masked[_hm.end() :], re.I):
             # hex over BINARY (the digest compositions: hex(MD5(s))
@@ -4950,13 +4564,14 @@ def translate(ch_sql: str) -> str:
                 "width where Spark emits minimal digits; flatten the "
                 "argument into a subquery/CTE column"
             )
-    # digest survivors (r15 wave 3): a deeper-nested MD5/SHA* argument
-    # would RESOLVE to Spark's same-named md5/sha1 and return the
-    # hex STRING where CH returns digest BYTES — silent. The rewrite's
-    # own emission is exempt: it always spells the digest after
-    # `unhex(`.
-    for _dm in re.finditer(r"\b(md5|sha1|sha\d+)\s*\(", masked, re.I):
-        if not masked[: _dm.start()].rstrip().lower().endswith("unhex("):
+    # digest survivors: a deeper-nested MD5/SHA* argument would RESOLVE
+    # to Spark's same-named md5/sha1 and return the hex STRING where CH
+    # returns digest BYTES — silent. The entry's own emission is exempt:
+    # it always spells the digest after `unhex(`.
+    for _dm, fn in heads:
+        if re.fullmatch(r"md5|sha1|sha\d+", fn) and not (
+            masked[: _dm.start()].rstrip().lower().endswith("unhex(")
+        ):
             raise UnsupportedClickHouseSQL(
                 f"could not rewrite '{_dm.group(1)}(' (nested "
                 "arguments?) — Spark's same-named digest returns a hex "
@@ -4967,8 +4582,12 @@ def translate(ch_sql: str) -> str:
     # mapping form with NON-LITERAL from/to arrays — Spark's
     # same-named transform is the (array, lambda) higher-order
     # function, so passing through would be an opaque arity error
-    for _tm, _ti in _calls(masked, re.compile(r"\btransform\s*\(", re.I)):
-        if _ti is None:
+    for _tm, fn in heads:
+        if fn != "transform":
+            continue
+        try:
+            _ti = _scan_to_close(masked, _tm.end())
+        except UnsupportedClickHouseSQL:
             continue
         if len(_split_top_level_args(masked[_tm.end() : _ti - 1])) >= 3:
             raise UnsupportedClickHouseSQL(

@@ -372,9 +372,11 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_mv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C53/B5 as a driver query: the streaming-maintained MV must equal
-    the batch day-rollup — the strongest MV-parity check."""
+    the batch day-rollup — the strongest MV-parity check. The view lives
+    in a fresh ``_ckpt_dir`` dir per call: the returned frame reads it
+    lazily, so it stays until ``_remove_own_ckpts`` runs at exit."""
     table(spark, sf_dir, "events")
-    out = mv_maintain(spark, sf_dir, os.path.join(tempfile.gettempdir(), "cdr_mv_out"))
+    out = mv_maintain(spark, sf_dir, os.path.join(_ckpt_dir("cdr_ckpt_mv_out_"), "mv"))
     return out.orderBy("day", "event_type")
 
 

@@ -5278,13 +5278,23 @@ def test_ch_dialect_wave3_funcs(spark):
         "SELECT x FROM t WHERE s = 'xxHash64(q) trunc(v, 2)'",
     ):
         assert translate(lit_sql) == lit_sql
-    # nested compositions refuse rather than ride the divergent form
-    for nested in (
-        "SELECT MD5(MD5(s)) FROM t",
-        "SELECT hex(hex(x)) FROM t",
+    # nested compositions translate level by level (the call table
+    # rewrites arguments before their call), each level the CH value:
+    # same-name nestings, and a call whose inner expansion used to push
+    # it past the one-paren-level argument budget
+    spark.createDataFrame(
+        [("abc", 10, 7, dt.date(2024, 3, 5))], "s string, x int, y int, d date"
+    ).createOrReplaceTempView("cdr_w3_nest")
+    for nested, want in (
+        (
+            "SELECT lower(hex(MD5(MD5(s)))) FROM cdr_w3_nest",
+            "af5da9f45af7a300e3aded972f8ff687",  # md5 of the 16 digest bytes
+        ),
+        ("SELECT hex(hex(x)) FROM cdr_w3_nest", "3041"),  # hex('0A')
+        ("SELECT toUInt32(toUInt32(y)) FROM cdr_w3_nest", 7),
+        ("SELECT toYear(toStartOfMonth(d)) FROM cdr_w3_nest", 2024),
     ):
-        with _pytest.raises(UnsupportedClickHouseSQL):
-            translate(nested)
+        assert spark.sql(translate(nested)).collect()[0][0] == want, nested
 
 
 def test_ch_dialect_wave3b_array_mutations(spark):
@@ -5626,6 +5636,9 @@ def test_ch_dialect_wave5_funcs(spark):
     assert one("SELECT appendTrailingCharIfAbsent('ab/', '/')") == "ab/"
     assert one("SELECT replaceOne('aXbXc', 'X', '-')") == "a-bXc"
     assert one("SELECT replaceOne('abc', 'X', '-')") == "abc"
+    # multibyte needle: the emitted length( counts characters like
+    # instr/substr (a byte count dropped the tail: 'cafx')
+    assert one("SELECT replaceOne('café!', 'é', 'x')") == "cafx!"
     assert abs(one("SELECT LpNorm([3.0, 4.0], 2)") - 5.0) < 1e-12
     assert abs(one("SELECT LpDistance([1.0, 2.0], [4.0, 6.0], 2)") - 5.0) < 1e-12
     assert one("SELECT normalizeL1([2.0, 2.0])") == [0.5, 0.5]

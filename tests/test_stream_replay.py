@@ -5,7 +5,9 @@ manager inside the stream only, and leaves no checkpoint behind."""
 from __future__ import annotations
 
 import ast
+import fnmatch
 import os
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,10 +102,21 @@ def test_a_callers_own_stream_keeps_sparks_default_manager(spark, started, tmp_p
     assert _stream_conf(q) is None
 
 
-def test_replay_queries_leave_no_checkpoint(spark, started):
+def test_replay_queries_leave_no_checkpoint(spark, started, monkeypatch):
     """After each replay query returns, none of its checkpoints remain;
-    statestore_introspection keeps the one its frame reads."""
-    for name in STREAM_QUERIES + ["statestore_introspection"]:
+    statestore_introspection keeps the one its frame reads, and
+    stream_mv_maintain its view, each in a dir of its own that this
+    process removes at exit."""
+    views = []
+    mv_maintain = stream_ops.mv_maintain
+    monkeypatch.setattr(
+        stream_ops,
+        "mv_maintain",
+        lambda spark, sf_dir, dst: views.append(dst) or mv_maintain(spark, sf_dir, dst),
+    )
+    legacy = os.path.join(tempfile.gettempdir(), "cdr_mv_out")
+    legacy_before = os.path.exists(legacy) and os.stat(legacy).st_mtime_ns
+    for name in STREAM_QUERIES + ["statestore_introspection", "stream_mv_maintain"]:
         del started[:]
         df = registry.QUERIES[name](spark, SF_SMALL)
         assert started, f"{name} started no stream"
@@ -113,6 +126,12 @@ def test_replay_queries_leave_no_checkpoint(spark, started):
             assert df.count() > 0
         else:
             assert not left, f"{name} left {left}"
+    assert len(views) == 2 and views[0] != views[1]
+    own = f"cdr_ckpt_*__pid{os.getpid()}_*"
+    for view in views:
+        assert fnmatch.fnmatch(os.path.dirname(view), os.path.join(stream_ops._CKPT_BASE, own))
+        assert os.path.isdir(view) and "cdr_mv_out" not in view
+    assert (os.path.exists(legacy) and os.stat(legacy).st_mtime_ns) == legacy_before
 
 
 def _raise(*_a, **_kw):

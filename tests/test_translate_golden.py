@@ -6,14 +6,20 @@ translate(), plus edge cases for the eight call-site rewrite families,
 each with sha256(output) or the exact refusal message. It was recorded
 by tools/record_translate_golden.py on the commit before the families
 moved onto one call-site walker; every case must still give the same
-result, except the ones listed in _CAPPED.
+result, except the ones listed in _CAPPED, _NOW_TRANSLATES and
+_REPLACE_ONE_FIXED. The last two list the cases whose result moved when
+translate()'s function table became one name-keyed call table applied in
+one walk over the call sites: refusals that now translate, and the
+replaceOne multibyte fix.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import json
 import os
+import re
 
 import pytest
 
@@ -41,6 +47,43 @@ _CAPPED = {
     "edge/multiIf/depth_33": _MULTIIF_TOO_DEEP,
 }
 
+# Refusals in the record that now translate: the call table walks
+# arguments before their call, so a same-name nesting the old
+# single-pass regex left half-rewritten translates level by level.
+# id -> sha256 of the translation now.
+_NOW_TRANSLATES = {
+    # toUInt32(toUInt32(y)) and its siblings
+    "captured/63": "fa5911cb8c467b161120575d64725d900b8a3b3602b7dc806d48fe773b7688fd",
+    "captured/88": "5f5f6af01980d76fd345388b22f928749adbefd69e21dc88e74f8cd93dc934f6",
+    "captured/112": "d7435ddb07629b9bc9a4c668ee90030c4af7cfe1c01950a67dc22f832ef5a0f4",
+    "captured/125": "a58dfafd5a6e0d2a9693782d359e6d4a8d0769f7d6f4753d57890d5fe48be34a",
+    # uniqExact(uniqExact(...))
+    "captured/102": "fe3eb9c5358dc3699bd70c48614d0adf5a2b460693c21673a13b7f316ab5e703",
+    "captured/160": "70e7314dae5358cf3d1394fbdc46d009e7ebd6a57fd4a0cd460f7e294a9d9096",
+    "captured/163": "10e59831afac7c3c3ecc4837321cdec28cb6e40a90fec52ac8c6b6e4c5decbb9",
+    "captured/167": "d0071bebc8081a7008ac43b21c4abef678319f6be5798bf00cd958bce0fbc490",
+    # toString(toString(...))
+    "captured/114": "b920d1cd3761900b7590a3f04df8199e8fc18f5f3714d4ba44407c7313aeb13a",
+    "captured/139": "fc734d4b7a7ade93c31a753c40d8415f1c36f1dd5101fb38cada26770eed5792",
+    "captured/156": "41b508babbed82c6713b953339e051f84f08895b9139d242f84e6f3b24563c2d",
+    # toStartOfDay(toStartOfDay(...))
+    "captured/136": "2c6aa9423224a907d8884e04a63bb0fe5e0c45a0611a2f68df89fcf2c2d012f2",
+    "captured/153": "a057d2a87bd1185cfe96e980f1cba88af0c7dbb4e251644b77ece159b32827ed",
+    # MD5(MD5(s)), hex(hex(x))
+    "captured/722": "79c74fdfda0966b5c6f16db36a06ec12c4a496d785d7e5892d3b8ea32e86126b",
+    "captured/723": "87e6fb1d8d4c4772718321aa5f7085f0e39e080f8f0677fa61dbc45f3970f847",
+}
+# The replaceOne multibyte fix: a later entry of the old table rewrote
+# the emitted length( to octet_length(, mixing a byte count into
+# character positions (replaceOne('café!', 'é', 'x') gave 'cafx');
+# emitted text is now never rescanned. id -> sha256 now.
+_REPLACE_ONE_FIXED = {
+    "captured/858": "043d023a97374f4b1181a9ad480cfb14e484f6d9bfaeb77bd05f7e1a6c71db14",
+    "captured/859": "48cd614fff6b261af147724d2e58bdc10082c27e58c51dbf1115f06ba648bd98",
+    "captured/1062": "162b7cc5613d2224faf09e653783285d27410885b1905519270b484b35a6fd0f",
+    "captured/1462": "19022fcdfebcd07a8015b1bbb4408863eb5ffbfe37ae1dd35b7fe557b41b5f2b",
+}
+
 
 def _result(sql: str, entry: str) -> dict:
     try:
@@ -60,6 +103,12 @@ def test_translate_matches_golden():
     for case in cases:
         if case["id"] in _CAPPED:
             want = {"error": _CAPPED[case["id"]]}
+        elif case["id"] in _NOW_TRANSLATES:
+            assert "error" in case, case["id"]
+            want = {"sha256": _NOW_TRANSLATES[case["id"]]}
+        elif case["id"] in _REPLACE_ONE_FIXED:
+            assert "sha256" in case, case["id"]
+            want = {"sha256": _REPLACE_ONE_FIXED[case["id"]]}
         else:
             want = {k: case[k] for k in ("sha256", "error", "crash") if k in case}
         got = _result(case["sql"], case["entry"])
@@ -120,6 +169,12 @@ _FAMILIES = [
         lambda e, k: f"has(arr{k}, {e})",
         "has/indexOf calls nested more than 32 levels deep",
     ),
+    (
+        "_rewrite_table_calls",
+        32,
+        lambda e, k: f"{'arrayReverse' if k % 2 else 'arraySort'}({e})",
+        "function calls nested more than 32 levels deep",
+    ),
 ]
 
 
@@ -145,3 +200,78 @@ def test_nesting_cap_refuses_instead_of_crashing(family, cap, wrap, too_deep):
         with pytest.raises(UnsupportedClickHouseSQL) as exc:
             translate(_nested(wrap, depth))
         assert too_deep in str(exc.value)
+
+
+def _regex_head(node: ast.expr) -> str:
+    """The literal text a regex argument starts with (f-strings up to
+    their first placeholder, concatenations by their left operand)."""
+    while isinstance(node, ast.BinOp):
+        node = node.left
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        head = ""
+        for part in node.values:
+            if not isinstance(part, ast.Constant):
+                break
+            head += part.value
+        return head
+    return ""
+
+
+def test_the_call_table_is_the_only_call_rewriter():
+    """No regex in ch_dialect.py heads on a call-table name — a second
+    per-name rewrite growing back beside the table — except the refusal
+    lists, which refuse such names on purpose; and translate() loops
+    over no (pattern, replacement) list but the clause list."""
+    with open(ch_dialect.__file__) as f:
+        tree = ast.parse(f.read())
+    refusal_lines = set()
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            if {getattr(t, "id", None) for t in targets} & {"_REFUSALS", "_RESIDUALS"}:
+                refusal_lines |= set(range(node.lineno, node.end_lineno + 1))
+    head = re.compile(r"\\b\(?(?:\?:)?((?:\w+\|)*\w+)\)?\\s\*\\\(")
+    named = {}
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and getattr(node.func.value, "id", None) == "re"
+            and node.args
+            and node.lineno not in refusal_lines
+        ):
+            m = head.match(_regex_head(node.args[0]))
+            for name in m.group(1).split("|") if m else ():
+                if name.lower() in ch_dialect._CALLS:
+                    named[name] = node.lineno
+    assert not named, f"per-name call regexes beside the call table: {named}"
+
+    translate_def = next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "translate"
+    )
+    pair_lists = {
+        n.iter.id
+        for n in ast.walk(translate_def)
+        if isinstance(n, ast.For)
+        and isinstance(n.iter, ast.Name)
+        and all(
+            isinstance(e, tuple) and len(e) == 2 and isinstance(e[0], re.Pattern)
+            for e in getattr(ch_dialect, n.iter.id, [None])
+        )
+    }
+    assert pair_lists == {"_CLAUSES", "_REFUSALS"}
+    assert len(ch_dialect._CLAUSES) <= 10
+    clause_loop = next(
+        n
+        for n in ast.walk(translate_def)
+        if isinstance(n, ast.For) and getattr(n.iter, "id", None) == "_CLAUSES"
+    )
+    subs = [
+        n
+        for n in ast.walk(translate_def)
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_sub_outside_literals"
+    ]
+    inside = {id(n) for n in ast.walk(clause_loop)}
+    assert subs and all(id(n) in inside for n in subs)
