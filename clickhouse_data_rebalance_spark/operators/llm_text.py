@@ -92,23 +92,28 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the ratios divide through nullif: an empty document has no
+    # characters, and the oracle's ratio is NULL where ANSI Spark would
+    # raise DIVIDE_BY_ZERO
     d = table(spark, sf_dir, "documents")
     toks = tokens("text")
     low_toks = tokens(F.lower(F.col("text")))
     n_words = F.size(toks).cast("bigint")
+    per_word = F.nullif(n_words, F.lit(0))
+    per_char = F.nullif(F.length("text"), F.lit(0))
     return d.select(
         "doc_id",
         F.length("text").cast("bigint").alias("n_chars_q"),
         n_words.alias("n_words"),
-        (F.length("text").cast("double") / n_words).alias("chars_per_word"),
-        (marker_count(low_toks, LANG_MARKERS["en"]).cast("double") / n_words).alias(
+        (F.length("text").cast("double") / per_word).alias("chars_per_word"),
+        (marker_count(low_toks, LANG_MARKERS["en"]).cast("double") / per_word).alias(
             "stopword_ratio"
         ),
         (
             F.size(F.regexp_extract_all(F.col("text"), F.lit("[^A-Za-z0-9 ]"), F.lit(0))).cast(
                 "double"
             )
-            / F.length("text")
+            / per_char
         ).alias("punct_ratio"),
     ).orderBy("doc_id")
 
@@ -156,13 +161,15 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = tokens("text")
     low_toks = tokens(F.lower(F.col("text")))
     n_words = F.size(toks).cast("double")
-    cpw = F.length("text").cast("double") / F.size(toks)
-    stop_r = marker_count(low_toks, LANG_MARKERS["en"]).cast("double") / F.size(toks)
+    # nullif divisors: an empty document scores NULL, as in the oracle
+    per_word = F.nullif(F.size(toks), F.lit(0))
+    cpw = F.length("text").cast("double") / per_word
+    stop_r = marker_count(low_toks, LANG_MARKERS["en"]).cast("double") / per_word
     punct_r = (
         F.size(F.regexp_extract_all(F.col("text"), F.lit("[^A-Za-z0-9 ]"), F.lit(0))).cast(
             "double"
         )
-        / F.length("text")
+        / F.nullif(F.length("text"), F.lit(0))
     )
     logit = (
         F.lit(-2.0)

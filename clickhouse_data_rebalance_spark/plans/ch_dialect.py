@@ -11,7 +11,7 @@ ClickHouse          Spark SQL
 ==================  =========================================
 toUInt*/toInt*      CAST(x AS BIGINT)
 toFloat32/64        CAST(x AS DOUBLE)
-toInt*OrNull        try_cast(x AS <width-true type>)  (r13; NULL input
+toInt*OrNull        try_cast(x AS <width-true type>)  (NULL input
 toFloat*OrNull      propagates on both engines already)
 toInt*OrZero /      NULL-guarded coalesce(try_cast(x AS T), 0 | default)
   OrDefault, Float*  — the guard keeps CH's NULL-in -> NULL-out rule;
@@ -20,7 +20,7 @@ toString            CAST(x AS STRING)
 toDate/toDateTime   to_date(x) / to_timestamp(x)
 toStartOfDay/...    date_trunc('day'|'month'|'quarter'|'year'|'minute', x)
 toStartOfWeek       date_sub(CAST(x AS DATE), dayofweek(x) - 1) — CH's
-                    default mode 0 is SUNDAY-first (r13; literal odd
+                    default mode 0 is SUNDAY-first (literal odd
                     modes -> Monday date_trunc('week'); non-literal
                     modes + timezone form refuse)
 toYYYYMM            date_format(x, 'yyyyMM') as int
@@ -33,7 +33,7 @@ any/anyLast         any_value
 dateDiff/date_diff  timestampdiff over unit-TRUNCATED operands (CH
                     counts boundary crossings, not complete units)
 age                 timestampdiff for fixed units; month/quarter/year
-                    as CH's exact tuple-borrow integer arithmetic (r13)
+                    as CH's exact tuple-borrow integer arithmetic
 extract(s, 're')    regexp_extract(s, 're', has_group ? 1 : 0) — the
                     ANSI EXTRACT(f FROM x) form passes through
 argMax/argMin       max_by / min_by (same tie nondeterminism)
@@ -66,7 +66,7 @@ toYear/Quarter/...  year / quarter / month / weekofyear (toISOWeek)
 now()               current_timestamp()
 match(h, p)         (h RLIKE p)
 position(h, n)      BYTE offset via octet_length of the char prefix
-                    before locate's match (r13 — CH position counts
+                    before locate's match (CH position counts
                     BYTES; the bare locate swap was silently char-based
                     on multi-byte text); positionUTF8 -> locate(n, h)
 has(a, x)           exists(a, e -> e <=> x) — CH's NULL-is-a-value rule
@@ -75,7 +75,7 @@ substringIndex      substring_index (delimiter-based, byte/char
                     agnostic); reverseUTF8 -> reverse; bare reverse
                     REFUSES (CH reverses STRING BYTES — no Spark twin)
 splitByChar/String  split(s, concat('\\Q', sep, '\\E')) — CH splits
-                    LITERALLY, Spark's split is regex (r13 fix: the
+                    LITERALLY, Spark's split is regex (the
                     bare swap made '.' split every char); one-byte
                     literal contract enforced, splitByString('') refuses
 left/right(s, N)    BYTE slices through BINARY for literal nonneg N
@@ -95,20 +95,20 @@ formatDateTime      date_format with %-tokens mapped to Java pattern
 GLOBAL JOIN/IN      modifier stripped (planner owns distribution)
 ARRAY JOIN e AS x   LATERAL VIEW explode(e) AS x  (LEFT -> OUTER;
                     multi-array `e1 AS a, e2 AS b` zips positionally:
-                    ONE LATERAL VIEW inline(zip_with(...)) since r10)
+                    ONE LATERAL VIEW inline(zip_with(...)))
 PREWHERE            WHERE (Spark pushes predicates anyway)
 GROUP BY c WITH TOTALS   GROUP BY GROUPING SETS ((c), ())
-                    (bare columns AND expression keys since r10)
+                    (bare columns AND expression keys)
 LIMIT o, n          LIMIT n OFFSET o (MySQL-style offset form)
 groupBit*/stddev*.. bit_and/bit_or/bit_xor, stddev_pop/... snake_case
 trimLeft/Right/Both ltrim / rtrim / trim
 toDecimalN(x, S)    CAST(x AS DECIMAL(9|18|38, S))
 arrayConcat/Min/Max concat / array_min / array_max
 arrayUniq           size(array_distinct(x))
-arrayCompact        NULL-safe consecutive-dedup index lambda (r13)
+arrayCompact        NULL-safe consecutive-dedup index lambda
 substring/substr/   CAST(substring(CAST(s AS BINARY), o[, l]) AS STRING)
-  mid               — CH slices BYTES (r13, the length() class; scanner
-                    pass, any nesting; literal offset 0 refuses)
+  mid               — CH slices BYTES (the length() class; any nesting
+                    up to 32 levels; literal offset 0 refuses)
 substringUTF8       substring (Spark's is the character slicer)
 bitAnd/Or/Xor/Not   & | ^ ~ (width-independent two's complement;
                     bitShift*/bitRotate*/bitCount/bitTest* REFUSE —
@@ -116,7 +116,7 @@ bitAnd/Or/Xor/Not   & | ^ ~ (width-independent two's complement;
                     bit_count sign-extends narrow negatives)
 multiSearchAny      exists(needles, n -> contains(h, n))
 lower/upper         translate(s, 'A..Z', 'a..z') — CH's bare forms fold
-                    ASCII ONLY (r13, the length()/substring class);
+                    ASCII ONLY (the length()/substring class);
                     lowerUTF8/upperUTF8 -> Spark's Unicode lower/upper
 hasAll/hasAny       forall/exists with <=> lambdas — CH treats NULL as
                     a VALUE (hasAny([NULL],[NULL]) = 1), arrays_overlap
@@ -143,7 +143,7 @@ ROW_NUMBER window in the flat single-SELECT shape (see
 `_rewrite_limit_by`); `quantile(s)[Exact[Weighted]]`, `median[Exact
 [Weighted]]`, `topK(N)`, `topKWeighted(N)` and `avgWeighted` translate
 as exact deterministic refinements of CH's sketches (see
-`_rewrite_quantile_family`). Constructs with no faithful textual
+`_aggregate_call`). Constructs with no faithful textual
 equivalent raise :class:`UnsupportedClickHouseSQL` with a pointer to
 the native operator in this package (nested `LIMIT n BY` ->
 top_k_per_group, `SAMPLE` -> sample_fraction, sketch-only quantile
@@ -162,6 +162,10 @@ from __future__ import annotations
 import os
 import re
 import string
+from dataclasses import dataclass
+from decimal import Decimal
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -190,15 +194,15 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
     # the quantile SKETCH combinators (BFloat16/TDigest/Timing/
     # Deterministic/Interpolated/GK/DD): each changes the sketch, so a
     # textual map would silently change the numbers. The EXACT-semantics
-    # family IS translated (see _rewrite_quantile_family): plain
+    # family IS translated (see _aggregate_call): plain
     # quantile(s)/median -> percentile (CH's reservoir is
     # EXACT-interpolating for groups <= 8192 and nondeterministic above
     # — the deterministic exact value is the faithful refinement),
     # quantile(s)Exact/medianExact -> CH's own nearest-rank formula
     # (floor(p*n), 0-based, clamped) spelled over
     # array_sort(collect_list), quantile(s)ExactWeighted /
-    # medianExactWeighted -> the cumulative-weight crossing, and — since
-    # r12 — the four exact RANK-RULE variants quantile(s)ExactLow/
+    # medianExactWeighted -> the cumulative-weight crossing, and the
+    # four exact RANK-RULE variants quantile(s)ExactLow/
     # ExactHigh/ExactInclusive/ExactExclusive (+ medianExactLow/High)
     # over the same sorted-array machinery (_exact_rank_rule_expr).
     # the lookahead admits exactly those completions followed by `(` —
@@ -232,7 +236,7 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "medianExact/medianExactWeighted/medianExactLow/medianExactHigh "
         "(translated) or approx_quantiles / median_exact",
     ),
-    # topKWeighted(N)(x, w) translates since r11 (exact weight-sum
+    # topKWeighted(N)(x, w) translates (exact weight-sum
     # frequencies — see _topk_weighted_expr); any OTHER topK suffix
     # still falls to the residual check and refuses.
     # locate()'s argument order FLIPPED in ClickHouse 24.1 — older
@@ -302,7 +306,7 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "block-local semantics don't survive distribution anyway",
     ),
     (
-        # r15 additions to the hash-family refusal: xxHash64/32 is the
+        # the rest of the hash-family refusal: xxHash64/32 is the
         # WORST of the class — the name RESOLVES in Spark
         # (case-insensitive xxhash64) but Spark's xxhash64 is seed-42
         # over the Catalyst row encoding while CH's is seed-0 over the
@@ -342,7 +346,7 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         # to a textual translator (documented caveat, MIGRATION.md),
         # but a float LITERAL argument (digits with '.' or an
         # exponent) is detectable and refuses here instead of
-        # translating to the wrong value (ADVICE r15).
+        # translating to the wrong value.
         re.compile(
             r"\b(?:hex|bin)\s*\(\s*[+-]?"
             r"(?:\d+\.|\.\d|\d+(?:\.\d*)?[eE][+-]?\d)",
@@ -361,7 +365,6 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         # tolerated before '->' so a parenthesized lambda parameter —
         # arraySort((x) -> -x, a) — still hits this refusal instead of
         # slipping through to the swap as an opaque analysis error
-        # (ADVICE r15)
         re.compile(r"\barray(Reverse)?Sort\s*\((?:[^()]|\([^()]*\))*->", re.I),
         "keyed arraySort/arrayReverseSort (CH sorts BY KEY with a "
         "STABLE tie order Spark's comparator cannot reproduce) — "
@@ -397,8 +400,8 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
     ),
     # arrayReduce's agg name is a runtime string; arraySum/Avg/CumSum
     # preserve CH integer-sum typing a lambda rewrite would silently
-    # widen (arrayCompact carries no typing hazard and TRANSLATES since
-    # r13 — consecutive dedup via an index-lambda filter, entry below)
+    # widen (arrayCompact carries no typing hazard and TRANSLATES —
+    # consecutive dedup via an index-lambda filter, entry below)
     (
         re.compile(
             r"\b(arrayReduce|array(Sum|Avg|CumSum\w*)"
@@ -478,8 +481,8 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "positional tuple access has no Spark spelling — use named "
         "struct fields (named_struct / col.field)",
     ),
-    # ---- r14 wave 2: pointered refusals for previously-OPAQUE
-    # unresolved-function errors (the wave-5-tail precedent) ----
+    # ---- pointered refusals for names that would otherwise reach
+    # Spark as OPAQUE unresolved-function errors ----
     (
         re.compile(r"\bparseDateTimeBestEffort\w*\s*\(", re.I),
         "Spark has no lenient datetime parser — try_cast(x AS "
@@ -607,7 +610,7 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "scalar WITH has no Spark spelling — inline the constant or "
         "use a CTE subquery (WITH c AS (SELECT 5 AS v))",
     ),
-    # ---- r16 wave 4 refusals ----
+    # ---- width, nondeterminism and sketch-state refusals ----
     # intExp10 returns UInt64 in CH — 10^19 exceeds BIGINT's signed
     # max, so no width-true Spark integer target exists (the
     # toUInt*Or* precedent); CAST(pow(10, x) AS BIGINT) is exact only
@@ -645,7 +648,7 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "transform_keys / transform_values, and sorts on map_entries "
         "as an array",
     ),
-    # ---- r16 wave 5 refusals (names surfaced by the namespace walk
+    # ---- refusals for names surfaced by the namespace walk
     # test: each would otherwise reach Spark as an OPAQUE
     # unresolved-function error, or worse, resolve to different
     # semantics) ----
@@ -873,7 +876,7 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "is printf-style — rewrite the template (format_string('%s', "
         "...)) or use concat",
     ),
-    # ---- r16 wave 5b refusals ----
+    # ---- more namespace-walk refusals ----
     (
         re.compile(
             r"\b(damerauLevenshteinDistance|jaro(Winkler)?Similarity"
@@ -928,7 +931,7 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "explicitly on BIGINT",
     ),
     # (multi-array ARRAY JOIN — the positional zip form — is TRANSLATED
-    # since r10 by _rewrite_array_join_zip: one zip_with struct + one
+    # by _rewrite_array_join_zip: one zip_with struct + one
     # inline, never two cross-producting LATERAL VIEWs; unparseable
     # operand lists raise inside that rewrite with the same pointer)
 ]
@@ -950,9 +953,9 @@ _AGREED_ESCAPES = {
     "t": "\t", "n": "\n", "r": "\r", "b": "\b", "0": "\0",
     "\\": "\\", "'": "'", '"': '"',
 }
-# WHITELIST guard (ADVICE r14, upgrading the r13 blacklist): refuse any
-# escape NOT in _AGREED_ESCAPES. The blacklist form assumed "unknown
-# escapes drop the backslash in both engines", which is FALSE outside
+# WHITELIST guard: refuse any escape NOT in _AGREED_ESCAPES. A
+# blacklist would assume "unknown escapes drop the backslash in both
+# engines", which is FALSE outside
 # the agreed set: Spark's unescapeSQLString decodes \Z to U+001A (MySQL
 # ctrl-Z) and KEEPS the backslash for \% and \_ where CH yields
 # 'Z'/'%'/'_'; CH decodes \e to ESC(0x1B) and \N to nothing where Spark
@@ -988,8 +991,8 @@ def _escape_divergence(content: str) -> str | None:
 
 def _decode_sep_literal(content: str, name: str) -> str:
     """Decode a separator literal's escapes the way BOTH engines will
-    (ADVICE r13: the one-byte guard must measure the decoded value, not
-    the raw SQL text — '\\t' is a genuine one-byte separator). Refuses
+    (the one-byte guard must measure the decoded value, not the raw
+    SQL text — '\\t' is a genuine one-byte separator). Refuses
     escapes whose decoding diverges between the parsers, because the
     raw text is re-emitted into Spark SQL verbatim."""
     if _escape_divergence(content) is not None:
@@ -1018,11 +1021,10 @@ def _decode_sep_literal(content: str, name: str) -> str:
 def _check_split_sep_literal(sep: str, *, by_string: bool, name: str) -> None:
     """Literal-argument guards for the split family: the CH contracts
     the text makes checkable. splitByChar's separator is exactly one
-    byte — measured on the DECODED value (ADVICE r13: '\\t' is one
-    byte; the raw-text measurement falsely refused tab/backslash
-    separators); splitByString('') refuses (Spark's empty pattern keeps
-    a trailing empty element CH's per-character split does not —
-    measured)."""
+    byte — measured on the DECODED value ('\\t' is one byte; a
+    raw-text measurement would refuse tab/backslash separators);
+    splitByString('') refuses (Spark's empty pattern keeps a trailing
+    empty element CH's per-character split does not — measured)."""
     lit = re.fullmatch(r"'([^']*)'", sep)
     if lit is None:
         return
@@ -1042,10 +1044,58 @@ def _check_split_sep_literal(sep: str, *, by_string: bool, name: str) -> None:
         )
 
 
-_TRANSLATE_HEAD = re.compile(r"\b(translate(?:UTF8)?)\s*\(", re.I)
+# ---- the call table ----
+# translate()'s function-call stage is ONE walk over the call sites
+# (_rewrite_table_calls) that looks each ClickHouse name up in _CALLS,
+# keyed by the lower-cased name. A value is one of:
+#   - a string that does not close, like "bround(" or "pow(2, ": it
+#     replaces the head `name(` and keeps the argument list as written —
+#     any arity, any nesting depth;
+#   - a template over the arguments, like "({0} != {1})", or a tuple of
+#     templates told apart by their arity; "current_date()" (no field)
+#     matches the empty call `today()` only;
+#   - an emitter: a function of the argument list returning the Spark
+#     text, or None to keep the call as written (wrong arity or argument
+#     shape);
+#   - a _Family: an emitter that reads its arguments as written, before
+#     any call inside them is rewritten, and rewrites the ones it keeps
+#     through `recurse` — least/greatest flattens same-name nesting and
+#     translate checks its literal from/to that way. Each family has its
+#     own nesting cap and refusal texts. The parametric family (quantile,
+#     median, topK, avgWeighted, uniqUpTo) also reads ClickHouse's
+#     `f(params)(args)` shape: its emitter gets the parameter list too,
+#     or None for a plain `f(args)` call.
+# Templates, emitters and the parametric family bind only calls whose
+# every argument fits the one-paren-level _ARG budget as written; a call
+# that fails the budget or its arity keeps its text, calls inside its
+# arguments are still rewritten, and the residual checks in translate()
+# refuse the ClickHouse-only names left over. An empty argument list is
+# no arguments; a template or emitter call that no form accepts without
+# arguments refuses (head renames keep it as written). Arguments are
+# rewritten before their call, lose their leading whitespace and keep
+# their trailing whitespace (a _Family gets them stripped); emitters
+# strip both where they say so. Emitted text is never scanned again, so
+# no entry's output can be rewritten by another entry.
 
 
-def _rewrite_translate_family(sql: str) -> str:
+@dataclass(frozen=True, eq=False)
+class _Family:
+    """A raw-argument call-table entry: ``emit(name, args, recurse)``
+    gets the name as spelled and the stripped argument texts (plus
+    ``params`` and the weighted fusion plan when ``parametric``; _TABLE,
+    the plain entries' group, gets the raw pieces). Calls
+    of one family nested more than ``cap`` deep refuse with ``too_deep``;
+    an unclosed call refuses with ``unbalanced`` formatted with the name,
+    or keeps its text when that is None."""
+
+    emit: Callable
+    cap: int
+    too_deep: str
+    unbalanced: str | None = "unbalanced parentheses in {}()"
+    parametric: bool = False
+
+
+def _translate_call(name: str, args: list[str], recurse) -> str:
     """translate/translateUTF8 guard (a silent same-name collision):
     ClickHouse's translate requires CONSTANT same-length ASCII from/to
     strings (one-to-one mapping; anything else is a CH ERROR), and
@@ -1056,114 +1106,64 @@ def _rewrite_translate_family(sql: str) -> str:
     translate would silently do what only translateUTF8 does in CH.
     Validated calls pass through (bare) or rename (translateUTF8 ->
     translate): for equal-length literals the two engines' mappings
-    coincide exactly. Refuses past 32 nested levels."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) != 3:
-            raise UnsupportedClickHouseSQL(
-                f"{name} takes (s, from, to) — got {len(args)} argument(s)"
-            )
-        lits = [re.fullmatch(r"'([^']*)'", a) for a in args[1:]]
-        if not all(lits):
-            raise UnsupportedClickHouseSQL(
-                f"{name} from/to must be string LITERALS (the ClickHouse "
-                "constant-argument contract; Spark's translate would "
-                "accept columns with different semantics)"
-            )
-        frm = _decode_sep_literal(lits[0].group(1), name)
-        to = _decode_sep_literal(lits[1].group(1), name)
-        if len(frm) != len(to):
-            raise UnsupportedClickHouseSQL(
-                f"{name} from/to must be the SAME length (CH contract; "
-                "Spark's translate DELETES characters when to is "
-                "shorter — a silent divergence)"
-            )
-        if len(set(frm)) != len(frm):
-            # a duplicated from-char is not a verified-identical case —
-            # Spark's translate applies first-wins ('aa'->'xy' maps
-            # a->x) and ClickHouse's duplicate resolution is unverified
-            # here, so refuse rather than risk the silent collision
-            raise UnsupportedClickHouseSQL(
-                f"{name} 'from' contains duplicate characters — the "
-                "mapping must be one-to-one (Spark resolves "
-                "duplicates first-wins; CH behavior unverified) — "
-                "drop the duplicate from/to pairs"
-            )
-        if name == "translate" and not (frm.isascii() and to.isascii()):
-            raise UnsupportedClickHouseSQL(
-                "bare translate is ASCII-only in ClickHouse — use "
-                "translateUTF8 for multi-byte mappings"
-            )
-        return f"translate({recurse(args[0])}, {args[1]}, {args[2]})"
-
-    return _rewrite_calls(
-        sql,
-        _TRANSLATE_HEAD,
-        emit,
-        max_depth=32,
-        too_deep="translate calls nested more than 32 levels deep — "
-        "precompute inner mappings as subquery/CTE columns",
-        name=lambda n: "translateUTF8" if len(n) > 9 else "translate",
-    )
+    coincide exactly."""
+    name = "translateUTF8" if len(name) > 9 else "translate"
+    if len(args) != 3:
+        raise UnsupportedClickHouseSQL(
+            f"{name} takes (s, from, to) — got {len(args)} argument(s)"
+        )
+    lits = [re.fullmatch(r"'([^']*)'", a) for a in args[1:]]
+    if not all(lits):
+        raise UnsupportedClickHouseSQL(
+            f"{name} from/to must be string LITERALS (the ClickHouse "
+            "constant-argument contract; Spark's translate would "
+            "accept columns with different semantics)"
+        )
+    frm = _decode_sep_literal(lits[0].group(1), name)
+    to = _decode_sep_literal(lits[1].group(1), name)
+    if len(frm) != len(to):
+        raise UnsupportedClickHouseSQL(
+            f"{name} from/to must be the SAME length (CH contract; "
+            "Spark's translate DELETES characters when to is "
+            "shorter — a silent divergence)"
+        )
+    if len(set(frm)) != len(frm):
+        # a duplicated from-char is not a verified-identical case —
+        # Spark's translate applies first-wins ('aa'->'xy' maps
+        # a->x) and ClickHouse's duplicate resolution is unverified
+        # here, so refuse rather than risk the silent collision
+        raise UnsupportedClickHouseSQL(
+            f"{name} 'from' contains duplicate characters — the "
+            "mapping must be one-to-one (Spark resolves "
+            "duplicates first-wins; CH behavior unverified) — "
+            "drop the duplicate from/to pairs"
+        )
+    if name == "translate" and not (frm.isascii() and to.isascii()):
+        raise UnsupportedClickHouseSQL(
+            "bare translate is ASCII-only in ClickHouse — use "
+            "translateUTF8 for multi-byte mappings"
+        )
+    return f"translate({recurse(args[0])}, {args[1]}, {args[2]})"
 
 
-_SPLIT_HEAD = re.compile(r"\b(splitByChar|splitByString)\s*\(", re.I)
-
-
-def _rewrite_split_family(sql: str) -> str:
+def _split_call(name: str, args: list[str], recurse) -> str:
     """splitByChar/splitByString lowering: ClickHouse splits on the
     LITERAL separator while Spark's split takes a Java REGEX, so the
     separator is \\Q...\\E-quoted at runtime via concat (Catalyst
     constant-folds it for literal separators). The max_substrings 3-arg
     form refuses: its truncation-vs-remainder semantics changed across
-    ClickHouse versions, so no single lowering is faithful. Refuses past
-    32 nested levels."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) != 2:
-            raise UnsupportedClickHouseSQL(
-                f"{name} with {len(args)} argument(s) — the "
-                "max_substrings form has version-divergent truncation "
-                "semantics in ClickHouse; take the 2-arg split and "
-                "slice(...) the result"
-            )
-        sep, s = recurse(args[0]), recurse(args[1])
-        by_string = name.lower() == "splitbystring"
-        _check_split_sep_literal(sep, by_string=by_string, name=name)
-        return f"split({s}, concat('\\\\Q', {sep}, '\\\\E'))"
-
-    return _rewrite_calls(
-        sql,
-        _SPLIT_HEAD,
-        emit,
-        max_depth=32,
-        too_deep="splitBy* calls nested more than 32 levels deep — "
-        "precompute inner splits as subquery/CTE columns",
-        name=str,
-    )
-
-
-# ---- the call table ----
-# translate()'s function-call stage is ONE walk over the call sites
-# (_rewrite_table_calls) that looks each ClickHouse name up here, keyed by
-# the lower-cased name. A value is one of:
-#   - a string that does not close, like "bround(" or "pow(2, ": it
-#     replaces the head `name(` and keeps the argument list as written —
-#     any arity, any nesting depth;
-#   - a template over the arguments, like "({0} != {1})", or a tuple of
-#     templates told apart by their arity; "current_date()" (no field)
-#     matches the empty call `today()` only;
-#   - an emitter: a function of the argument list returning the Spark
-#     text, or None to keep the call as written (wrong arity or argument
-#     shape).
-# Templates and emitters bind only calls whose every argument fits the
-# one-paren-level _ARG budget as the walk receives it; a call that fails
-# the budget or its arity keeps its text, calls inside its arguments are
-# still rewritten, and the residual checks in translate() refuse the
-# ClickHouse-only names left over. Arguments are rewritten before their
-# call, lose their leading whitespace and keep their trailing whitespace;
-# emitters strip both where they say so. Emitted text is never scanned
-# again, so no entry's output can be rewritten by another entry.
+    ClickHouse versions, so no single lowering is faithful."""
+    if len(args) != 2:
+        raise UnsupportedClickHouseSQL(
+            f"{name} with {len(args)} argument(s) — the "
+            "max_substrings form has version-divergent truncation "
+            "semantics in ClickHouse; take the 2-arg split and "
+            "slice(...) the result"
+        )
+    sep, s = recurse(args[0]), recurse(args[1])
+    by_string = name.lower() == "splitbystring"
+    _check_split_sep_literal(sep, by_string=by_string, name=name)
+    return f"split({s}, concat('\\\\Q', {sep}, '\\\\E'))"
 
 
 def _count_substrings(args: list[str]) -> str | None:
@@ -1265,8 +1265,8 @@ def _date_add_quoted(kind: str):
     date_add and bare-unit forms are kept as written."""
 
     def emit(args: list[str]) -> str | None:
-        lit = _LITERAL_ARG.fullmatch(args[0])
-        if len(args) != 3 or lit is None:
+        lit = len(args) == 3 and _LITERAL_ARG.fullmatch(args[0])
+        if not lit:
             return None
         unit = lit.group(1).strip().lower()
         n, x = args[1].strip(), args[2].strip()
@@ -1292,8 +1292,8 @@ def _to_start_of_interval(args: list[str]) -> str | None:
     MIGRATION.md). week/month/quarter/year fall through to the
     toStartOf residual refusal (origin and calendar-walk conventions
     diverge)."""
-    iv = _TSOI_ARG.fullmatch(args[-1])
-    if len(args) != 2 or iv is None:
+    iv = len(args) == 2 and _TSOI_ARG.fullmatch(args[-1])
+    if not iv:
         return None
     x = args[0].strip()
     n = int(iv.group(1))
@@ -1400,8 +1400,8 @@ _ACCURATE_CAST_TYPES = {
 
 def _accurate_cast(fn: str):
     def emit(args: list[str]) -> str | None:
-        lit = _LITERAL_ARG.fullmatch(args[-1])
-        if len(args) != 2 or lit is None:
+        lit = len(args) == 2 and _LITERAL_ARG.fullmatch(args[-1])
+        if not lit:
             return None
         ch_type = lit.group(1).strip()
         target = _ACCURATE_CAST_TYPES.get(ch_type.lower())
@@ -1489,6 +1489,8 @@ def _to_start_of_week(args: list[str]) -> str | None:
     (row-local double evaluation — the least/greatest caveat class).
     Non-literal modes and the 3-arg timezone form are kept as written
     and refuse at the toStartOf\\w+ residual."""
+    if not args:
+        return None
     x = args[0]
     if len(args) == 2 and re.fullmatch(r"[13579]\s*", args[1]):
         return f"CAST(date_trunc('week', {x}) AS DATE)"
@@ -1507,8 +1509,8 @@ def _shaped(shape: "re.Pattern[str]", template: str):
     literal the lowering reads — and is spliced as the shape's group 1."""
 
     def emit(args: list[str]) -> str | None:
-        lit = shape.fullmatch(args[-1])
-        if len(args) != _arity(template) or lit is None:
+        lit = len(args) == _arity(template) and shape.fullmatch(args[-1])
+        if not lit:
             return None
         return template.format(*args[:-1], lit.group(1))
 
@@ -1578,6 +1580,1116 @@ def _or_converters(ch_t: str, spark_t: str) -> dict:
         f"to{ch_t}orzero": guarded % (tc, "0"),
         f"to{ch_t}ordefault": (guarded % (tc, "0"), guarded % (tc, "({1})")),
     }
+
+
+def _null_guarded(fn: str, args: list[str]) -> str:
+    """``fn(args...)``, NULL when ANY argument is NULL (ClickHouse's
+    ordinary-function rule) — each argument is evaluated twice."""
+    checks = " OR ".join(f"({a}) IS NULL" for a in args)
+    call = f"{fn}({', '.join(f'({a})' for a in args)})"
+    return f"(CASE WHEN {checks} THEN NULL ELSE {call} END)"
+
+
+def _multiif_call(name: str, args: list[str], recurse) -> str:
+    """Rewrite every `multiIf(c1, v1, c2, v2, ..., else)` to
+    `(CASE WHEN c1 THEN v1 ... ELSE else END)`. CH requires the trailing
+    else, so an even argument count refuses (sibling calls are
+    unbounded: a wide machine-generated SELECT with 200 sibling multiIfs
+    is legal)."""
+    if len(args) < 3 or len(args) % 2 == 0:
+        raise UnsupportedClickHouseSQL(
+            "multiIf needs an odd argument count >= 3 "
+            "(cond, val, ..., else) — ClickHouse requires the else arm"
+        )
+    args = [recurse(a) for a in args]
+    arms = "".join(
+        f" WHEN {args[k]} THEN {args[k + 1]}" for k in range(0, len(args) - 1, 2)
+    )
+    return f"(CASE{arms} ELSE {args[-1]} END)"
+
+
+def _lg_leaves(name: str, arg: str) -> list[str]:
+    # flatten SAME-function nesting: least(a, least(b, c)) has exactly
+    # least(a, b, c)'s semantics in CH (min of all, NULL if any NULL),
+    # and the pre-variadic ClickHouse idiom chains 2-arg calls — without
+    # flattening, the guard's double-embedding grows 2^depth. Iterative
+    # (explicit work stack): a machine-generated 1000-deep chain must
+    # flatten, not blow Python's recursion limit.
+    out: list[str] = []
+    stack = [arg]
+    while stack:
+        a = stack.pop()
+        m = _CALL_HEAD.match(a)
+        if m and m.group(1).lower() == name and a.endswith(")"):
+            try:
+                pieces = _split_top_level_args(a[m.end() : -1])
+            except UnsupportedClickHouseSQL:
+                out.append(a)  # trailing ')' closes something else
+                continue
+            if len(pieces) >= 2:
+                stack.extend(p.strip() for p in reversed(pieces))
+                continue
+            # a 1-arg same-name call is not valid CH — keep it intact
+            # so it reaches Spark's loud arity error instead of being
+            # silently legalized by the flatten
+        out.append(a)
+    return out
+
+
+def _least_greatest_call(name: str, args: list[str], recurse) -> str:
+    """NULL-propagation guard for least/greatest: ClickHouse's
+    least/greatest are ordinary functions — ANY NULL argument makes the
+    result NULL — while Spark's SKIP nulls and return the extreme of
+    the non-null arguments (greatest(1, NULL) = 1). Same name, silently
+    different answers. Each user-written call becomes
+    `(CASE WHEN (a) IS NULL OR (b) IS NULL ... THEN NULL ELSE
+    least((a), (b), ...) END)` — arguments are evaluated twice, both
+    row-local (CH users pass columns/arithmetic here). Caveat: double
+    evaluation means a NONDETERMINISTIC nullable argument (e.g.
+    `if(rand() < 0.5, NULL, x)`) can disagree between the IS NULL check
+    and the ELSE call — documented in MIGRATION.md (precompute such
+    arguments as a subquery/CTE column); not refused, because a name
+    scan for rand/uuid-class functions would also refuse the common
+    deterministic uses of those names in UNRELATED argument positions.
+    SAME-function nesting flattens first (identical CH semantics, kills
+    the 2^depth growth on idiomatic 2-arg chains); MIXED nesting
+    refuses past 8 levels, where the doubling would make the emitted
+    text megabytes. Other entries' own least/greatest spellings
+    (quantile index clamps, weighted thresholds — all over provably
+    non-null counts) are emitted text and stay untouched. 1-argument
+    calls are not valid CH: they keep their (rewritten) argument — never
+    flattened — and pass to Spark's loud arity error."""
+    name = name.lower()
+    if len(args) < 2:
+        return f"{name}({', '.join(recurse(a) for a in args)})"
+    leaves = [leaf for a in args for leaf in _lg_leaves(name, a)]
+    return _null_guarded(name, [recurse(a) for a in leaves])
+
+
+def _concat_with_separator_call(name: str, args: list[str], recurse) -> str:
+    """NULL-propagation guard for concatWithSeparator. ClickHouse's
+    ``concatWithSeparator(sep, a, b, ...)`` returns NULL when ANY
+    argument (separator included) is NULL; Spark's ``concat_ws`` SKIPS
+    NULL arguments and returns '' for an all-NULL tail — same shape,
+    silently different rows: the least/greatest class, variadic with a
+    separator. Each user-written call becomes ``(CASE WHEN (sep) IS NULL
+    OR (a) IS NULL ... THEN NULL ELSE concat_ws((sep), (a), ...) END)``.
+    Arguments are evaluated twice, both row-local — the documented
+    least/greatest caveat (nondeterministic nullable arguments belong in
+    a subquery column, MIGRATION.md). ``AssumeInjective`` is CH's
+    GROUP-BY-elimination hint, semantics identical — translated the
+    same. Refuses with fewer than two arguments (CH rejects that arity);
+    the 16-level cap stops the doubling before the emitted text reaches
+    megabytes."""
+    if len(args) < 2:
+        raise UnsupportedClickHouseSQL(
+            "concatWithSeparator needs a separator and at least one argument"
+        )
+    return _null_guarded("concat_ws", [recurse(a) for a in args])
+
+
+def _substring_call(name: str, args: list[str], recurse) -> str:
+    """Byte-vs-char closure for the substring family (the
+    length()/octet_length() silent-divergence class). ClickHouse's
+    substring/substr/mid slice BYTES of a String (substringUTF8 is its
+    character slicer); Spark's substring slices CHARACTERS — identical
+    on ASCII, silently different rows on multi-byte UTF-8. The
+    byte-true lowering routes through BINARY:
+    ``CAST(substring(CAST(s AS BINARY), o[, l]) AS STRING)`` —
+    MEASURED byte-exact in Spark for positive offsets, NEGATIVE offsets
+    (counted from the end in bytes: substring('привет', -4, 4) = 'ет'),
+    the 2-arg form, and NULL propagation; a slice landing mid-codepoint
+    yields the same invalid-UTF-8 byte run CH produces (Spark's
+    binary->string cast keeps bytes as-is). substringUTF8 lowers to
+    Spark's own (character) substring.
+
+    Refusals: wrong arity; a LITERAL offset 0 — Spark treats 0 as
+    position 1 (measured) while MySQL-family engines return '' there,
+    an engine-divergent edge no rewrite can make faithful (a runtime 0
+    from an expression is undetectable textually — MIGRATION.md
+    documents the >= 1 / negative-from-end operand domain)."""
+    name = name.lower()
+    if len(args) not in (2, 3):
+        raise UnsupportedClickHouseSQL(
+            f"{name}() takes (string, offset[, length]) — got "
+            f"{len(args)} argument(s)"
+        )
+    args = [recurse(a) for a in args]
+    if re.fullmatch(r"[+-]?0+", args[1]):
+        raise UnsupportedClickHouseSQL(
+            "substring offset 0 is an engine-divergent edge (Spark "
+            "treats 0 as position 1, measured; MySQL-family engines "
+            "return '') — offsets are 1-based, negatives count from "
+            "the end"
+        )
+    if name == "substringutf8":
+        return f"substring({', '.join(args)})"
+    tail = f", {args[2]}" if len(args) == 3 else ""
+    return f"CAST(substring(CAST({args[0]} AS BINARY), {args[1]}{tail}) AS STRING)"
+
+
+_ASCII_UP = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+_ASCII_LO = "abcdefghijklmnopqrstuvwxyz"
+
+
+def _case_fold_call(name: str, args: list[str], recurse) -> str:
+    """ASCII-vs-Unicode closure for the case-folding family (the
+    substring/length class): ClickHouse's bare lower/upper convert
+    ASCII LATIN symbols ONLY (documented CH behavior — lower('ÄBC')
+    keeps the Ä) while Spark's lower/upper fold full Unicode — same
+    name, silently different rows on non-ASCII text. Bare spellings
+    lower to the exact ASCII fold ``translate(s, 'A..Z', 'a..z')``;
+    lowerUTF8/upperUTF8 (CH's Unicode folders) lower to Spark's own
+    lower/upper — documented caveat: both engines apply per-codepoint
+    case mapping but exotic codepoints with locale/1:N mappings
+    (dotted İ, ligatures) may differ; MIGRATION.md records it. Refuses
+    any arity but one."""
+    name = name.lower()
+    if len(args) != 1:
+        raise UnsupportedClickHouseSQL(
+            f"{name}() takes exactly one argument — got {len(args)}"
+        )
+    arg = recurse(args[0])
+    if name == "lower":
+        return f"translate({arg}, '{_ASCII_UP}', '{_ASCII_LO}')"
+    if name == "upper":
+        return f"translate({arg}, '{_ASCII_LO}', '{_ASCII_UP}')"
+    return f"{name.removesuffix('utf8')}({arg})"
+
+
+def _membership_call(name: str, args: list[str], recurse) -> str:
+    """NULL-as-a-value semantics for has/indexOf: ClickHouse processes
+    NULL AS A VALUE — has([NULL], NULL) = 1 and has([NULL, 1], 2) = 0
+    where Spark's array_contains returns NULL in BOTH (NULL value; NULL
+    element present but value absent); indexOf([1, NULL, 2], NULL) = 2
+    where array_position(a, NULL) is NULL. The <=> lambdas spell CH's
+    rule; the boolean-array array_position keeps CH's not-found 0
+    (measured). Refuses any arity but two."""
+    name = name.lower()
+    if len(args) != 2:
+        raise UnsupportedClickHouseSQL(
+            f"{name}() takes (array, value) — got {len(args)} argument(s)"
+        )
+    arr, val = recurse(args[0]), recurse(args[1])
+    if name == "has":
+        return f"exists({arr}, cdr_h_ -> cdr_h_ <=> ({val}))"
+    return f"array_position(transform({arr}, cdr_ix_ -> cdr_ix_ <=> ({val})), true)"
+
+
+# formatDateTime: ClickHouse %-tokens -> Spark (Java DateTimeFormatter)
+# pattern letters. Only LITERAL format strings translate (the token map
+# needs the text); %M refuses outright — it means minute in older
+# ClickHouse and full month name in newer, so any translation silently
+# changes meaning for half the users.
+_FDT_MAP = {
+    "Y": "yyyy",
+    "y": "yy",
+    "m": "MM",
+    "d": "dd",
+    "H": "HH",
+    "h": "hh",
+    "i": "mm",
+    "S": "ss",
+    "p": "a",
+    "j": "DDD",
+    "F": "yyyy-MM-dd",
+    "T": "HH:mm:ss",
+}
+
+
+def _fdt_pattern(fmt: str) -> str:
+    """CH % format -> Java pattern; literal runs containing letters are
+    single-quoted (Java treats bare letters as pattern tokens)."""
+    out: list[str] = []
+    lit: list[str] = []
+
+    def flush() -> None:
+        if lit:
+            # quote EVERY literal run: letters are pattern tokens in
+            # Java, and [ ] # { } are reserved (optional-section /
+            # future-use) — [ ] would be silently DROPPED from output;
+            # quoting safe chars too is always legal
+            s = "".join(lit)
+            out.append("'" + s.replace("'", "''") + "'")
+            lit.clear()
+
+    i = 0
+    while i < len(fmt):
+        c = fmt[i]
+        if c == "%":
+            if i + 1 >= len(fmt):
+                raise UnsupportedClickHouseSQL("dangling % in formatDateTime")
+            t = fmt[i + 1]
+            if t == "%":
+                lit.append("%")
+                i += 2
+                continue
+            if t == "M":
+                raise UnsupportedClickHouseSQL(
+                    "formatDateTime %M is minute in older ClickHouse and "
+                    "month NAME in newer — write %i (minute) or %m (month)"
+                )
+            if t not in _FDT_MAP:
+                raise UnsupportedClickHouseSQL(
+                    f"formatDateTime token %{t} has no mapped Spark pattern"
+                )
+            flush()
+            out.append(_FDT_MAP[t])
+            i += 2
+        else:
+            lit.append(c)
+            i += 1
+    flush()
+    return "".join(out)
+
+
+def _format_datetime(args: list[str]) -> str | None:
+    fmt = len(args) == 2 and _LITERAL_ARG.fullmatch(args[1])
+    if not fmt:
+        return None
+    pattern = _fdt_pattern(fmt.group(1))
+    return f"date_format({args[0]}, '{pattern.replace(chr(39), chr(39) * 2)}')"
+
+
+# parseDateTime family: CH parseDateTime uses the SAME MySQL-style %
+# tokens formatDateTime uses, so the _fdt_pattern map runs in reverse
+# gear feeding to_timestamp; the InJodaSyntax forms pass their pattern
+# through (ClickHouse's "Joda" grammar and Spark's datetime-pattern
+# grammar are the same letter family). OrNull -> try_to_timestamp,
+# OrZero -> coalesce(try, epoch) — CH's 1970-01-01 00:00:00 default.
+# The BARE form THROWS on a parse miss regardless of
+# spark.sql.ansi.enabled (plain to_timestamp with ANSI off silently
+# returns NULL where CH throws): CASE over try_to_timestamp with an
+# explicit raise_error, mirroring _base64_decode. The guard evaluates
+# expr twice — row-local and fine for pure expressions (the
+# concatWithSeparator / least/greatest precedent, MIGRATION.md).
+# Timezone 3-arg forms fall to the residual refusal.
+def _parse_datetime(joda: bool, suffix: str):
+    def emit(args: list[str]) -> str | None:
+        fmt = len(args) == 2 and _LITERAL_ARG.fullmatch(args[1])
+        if not fmt:
+            return None
+        expr = args[0]
+        pattern = fmt.group(1) if joda else _fdt_pattern(fmt.group(1))
+        pat_sql = pattern.replace("'", "''")
+        if suffix == "ornull":
+            return f"try_to_timestamp({expr}, '{pat_sql}')"
+        if suffix == "orzero":
+            return (
+                f"coalesce(try_to_timestamp({expr}, '{pat_sql}'), "
+                "TIMESTAMP '1970-01-01 00:00:00')"
+            )
+        # bare form: NULL input passes through, a non-NULL miss raises
+        return (
+            f"(CASE WHEN ({expr}) IS NULL THEN "
+            f"CAST(NULL AS TIMESTAMP) "
+            f"WHEN try_to_timestamp({expr}, '{pat_sql}') IS NULL "
+            f"THEN CAST(raise_error(concat('parseDateTime: cannot "
+            f"parse ', CAST(({expr}) AS STRING))) AS TIMESTAMP) "
+            f"ELSE try_to_timestamp({expr}, '{pat_sql}') END)"
+        )
+
+    return emit
+
+
+# ---- dateDiff / age / extract(haystack, re) ----
+# CH dateDiff counts UNIT-BOUNDARY CROSSINGS (DateDiff in
+# src/Functions/dateDiff.cpp, public ClickHouse source: both operands
+# convert to the unit's relative ordinal and subtract, so
+# dateDiff('day', 23:59:59, next-day 00:01) = 1). That is NOT Spark
+# timestampdiff's complete-unit count — but on unit-TRUNCATED operands
+# the two coincide, so the lowering is
+#   timestampdiff(U, date_trunc('U', s), date_trunc('U', e))
+# (verified per-unit against hand traces; exact — on first-of-unit
+# operands even Spark's months_between-based MONTH counting is an
+# exact integer). TIMEZONE PRECONDITION (review finding, documented in
+# MIGRATION.md): the sub-day units count CIVIL wall-clock ordinals,
+# while ClickHouse's toRelativeHour/Minute/SecondNum count PHYSICAL
+# epoch ordinals — identical under UTC or any fixed-offset session
+# timezone (this repo's harness default), but ACROSS a DST transition
+# under a DST-observing session timezone the civil count includes the
+# shifted hour (spring-forward 01:30->03:30 is 2 civil hours, 1
+# physical). A physical lowering via unix_timestamp is NOT a fix:
+# Spark's unix_timestamp(TIMESTAMP_NTZ) ignores the session timezone
+# (measured: interprets UTC), so it is config-fragile rather than
+# exact. Run with spark.sql.session.timeZone=UTC for CH parity on
+# sub-day units. CH age()
+# counts COMPLETE elapsed units and maps to timestampdiff for the
+# FIXED-length units (second/minute/hour/day/week — exact duration
+# arithmetic on both sides). age month/quarter/year translate as the
+# rule spelled directly in integer date arithmetic — 12*(y2-y1) +
+# (m2-m1) minus a (day, time-of-day) tuple borrow, DIV 3/12 for
+# quarter/year — because Spark's
+# timestampdiff(MONTH) floors months_between's (day2-day1)/31 fraction,
+# which at month-end edges (age('month', Jan31 23:59, Mar01) -> CH 1 via
+# its remainder-tuple rule, Spark 0) disagrees with ClickHouse's
+# complete-month counting — measured, not hypothetical. 'week' refuses
+# for dateDiff (ClickHouse's week ordinal follows toRelativeWeekNum's
+# Sunday convention while Spark's date_trunc('WEEK') starts Monday — a
+# textual map would move rows across the cut) but translates for age
+# (complete 7-day periods involve no boundary convention). Sub-second
+# units refuse.
+#
+# extract(haystack, 'pattern') — CH's regex fragment extractor — is the
+# WORST collision class: Spark parses the same comma spelling as ANSI
+# datetime EXTRACT (field, source), so an untranslated call either
+# errors misleadingly (INVALID_EXTRACT_FIELD) or, with a column named
+# like a field, silently extracts a date part. Literal patterns lower
+# to regexp_extract(haystack, pattern, g) with g = 1 when the pattern
+# has a capturing group (CH "extracts the first subpattern") else 0;
+# (?...) constructs refuse (RE2/Java group+flag syntaxes diverge), and
+# any surviving comma-form extract refuses via a depth-aware scan (the
+# ANSI `EXTRACT(f FROM x)` form has no top-level comma and passes).
+# Pattern flavor: CH is RE2, Spark is Java regex — a domain superset
+# for the accepted subset (no (?...), no backrefs in patterns; classes,
+# quantifiers, alternation, anchors agree).
+_DD_UNIT = {
+    "year": "YEAR", "yyyy": "YEAR", "yy": "YEAR",
+    "quarter": "QUARTER", "qq": "QUARTER", "q": "QUARTER",
+    "month": "MONTH", "mm": "MONTH", "m": "MONTH",
+    "day": "DAY", "dd": "DAY", "d": "DAY",
+    "hour": "HOUR", "hh": "HOUR", "h": "HOUR",
+    "minute": "MINUTE", "mi": "MINUTE", "n": "MINUTE",
+    "second": "SECOND", "ss": "SECOND", "s": "SECOND",
+}
+_DD_WEEK = ("week", "wk", "ww")
+# countMatches counts non-overlapping matches of the WHOLE pattern
+# (group index 0 always), and regexpExtract is Spark's regexp_extract
+# under a CH camelCase name — both share extract()'s pattern-dialect
+# guards (_extract_group_index refuses the backslash/class/(?...) arms
+# where the same literal denotes different regexes in the two engines)
+
+
+def _extract_group_index(pat: str) -> int:
+    """1 when the pattern has a capturing group (CH extract returns the
+    FIRST subpattern), else 0 — scanned class-aware. BACKSLASH-bearing
+    patterns refuse outright: the two engines'
+    STRING-LITERAL escape dialects diverge before the regex engine ever
+    sees the text — CH unescapes \\x41 to 'A' and preserves unknown
+    escapes, Spark's unescaper has no \\x and drops the backslash from
+    unknown escapes — so the same literal denotes different regexes
+    ('\\x41+' means A-runs in CH and 'x41' repetitions in Spark), and
+    group-ness judged on the literal (\\( vs () would be wrong anyway.
+    Without backslashes the literal IS the regex on both engines, so
+    the scan below is exact. (?...) constructs refuse (RE2/Java
+    group+flag syntaxes diverge)."""
+    if "\\" in pat:
+        raise UnsupportedClickHouseSQL(
+            "extract() pattern contains backslash escapes — ClickHouse "
+            "and Spark unescape string literals differently (\\x41 vs "
+            "x41; \\( group-ness flips), so the same text denotes "
+            "different regexes; use Spark regexp_extract directly with "
+            "a Spark-escaped pattern"
+        )
+    in_class = False
+    saw_capture = False
+    for i, c in enumerate(pat):
+        if in_class:
+            if c == "[":
+                # Java parses [a[b]c] as a nested-class UNION {a,b,c};
+                # RE2 treats the inner '[' as a literal — backslash-free
+                # text that still denotes different regexes (review
+                # finding); refuse like the (?...) arm
+                raise UnsupportedClickHouseSQL(
+                    "extract() pattern has '[' inside a character class "
+                    "— Java reads it as a nested class union, RE2 as a "
+                    "literal; rewrite the class or use Spark "
+                    "regexp_extract directly"
+                )
+            if c == "]":
+                in_class = False
+        elif c == "[":
+            in_class = True
+        elif c == "(":
+            if i + 1 < len(pat) and pat[i + 1] == "?":
+                raise UnsupportedClickHouseSQL(
+                    "extract() pattern uses a (?...) group — RE2 and Java "
+                    "group/flag syntaxes diverge there; use a plain "
+                    "capturing group or Spark regexp_extract directly"
+                )
+            saw_capture = True
+    return 1 if saw_capture else 0
+
+
+def _date_diff(fname: str):
+    def emit(args: list[str]) -> str | None:
+        lit = len(args) == 3 and _LITERAL_ARG.fullmatch(args[0])
+        if not lit:
+            return None
+        unit = lit.group(1).strip().lower()
+        s, e = args[1].strip(), args[2].strip()
+        is_age = fname == "age"
+        if unit in _DD_WEEK:
+            if not is_age:
+                raise UnsupportedClickHouseSQL(
+                    "dateDiff('week', ...) — ClickHouse counts "
+                    "Sunday-based toRelativeWeekNum boundaries, Spark's "
+                    "week starts Monday; count day boundaries "
+                    "(dateDiff('day', ...) then divide) or truncate "
+                    "explicitly with date_trunc"
+                )
+            u = "WEEK"
+        else:
+            u = _DD_UNIT.get(unit)
+        if is_age and u in ("MONTH", "QUARTER", "YEAR"):
+            # CH's complete-month rule is EXACT integer date arithmetic —
+            # base = 12*(y2-y1) + (m2-m1), minus 1 when the
+            # (day, time-of-day) tuple of the LATER operand is
+            # lexicographically below the earlier one's (dateDiff.cpp's
+            # age arm compares components; NO month-end clamping:
+            # age('month', Jan31, Feb29) = 0 where Postgres/DuckDB
+            # clamp to 1 — pinned in the edge-matrix test). Spark's
+            # timestampdiff(MONTH) is no twin: it floors months_between's
+            # (d2-d1)/31 FRACTION (Jan31 23:59 -> Mar01: CH 1,
+            # timestampdiff 0); spelling the rule directly avoids
+            # months_between entirely. Sign-symmetric:
+            # for e < s the borrow flips to a carry (CH negates the
+            # swapped-operand result). quarter/year are the month count
+            # DIV 3 / DIV 12 (Spark DIV truncates toward zero, matching
+            # the complete-unit count in both directions). The operands
+            # splice several times — row-local double evaluation, the
+            # least/greatest caveat class; the seconds component keeps
+            # its microsecond fraction via extract(SECOND ...).
+            mb = f"((year({e}) - year({s})) * 12 + (month({e}) - month({s})))"
+            te = (
+                f"struct(day({e}), hour({e}), minute({e}), "
+                f"extract(SECOND FROM {e}))"
+            )
+            ts_ = (
+                f"struct(day({s}), hour({s}), minute({s}), "
+                f"extract(SECOND FROM {s}))"
+            )
+            months = (
+                f"(CASE WHEN ({e}) >= ({s}) THEN {mb} - "
+                f"(CASE WHEN {te} < {ts_} THEN 1 ELSE 0 END) "
+                f"ELSE {mb} + "
+                f"(CASE WHEN {te} > {ts_} THEN 1 ELSE 0 END) END)"
+            )
+            if u == "MONTH":
+                return months
+            return f"({months} DIV {3 if u == 'QUARTER' else 12})"
+        if u is None:
+            raise UnsupportedClickHouseSQL(
+                f"{fname} unit {unit!r} — year/quarter/month/day/hour/"
+                "minute/second translate (+ week for age); sub-second "
+                "units have no boundary-exact Spark twin here"
+            )
+        if is_age:
+            return f"timestampdiff({u}, {s}, {e})"
+        return (
+            f"timestampdiff({u}, date_trunc('{u}', {s}), "
+            f"date_trunc('{u}', {e}))"
+        )
+
+    return emit
+
+
+def _regexp_call(template: str, with_index: bool = False):
+    """extract / extractAll / countMatches / regexpExtract over a LITERAL
+    pattern: ``template`` spells the Spark call over the haystack
+    ({0}), the pattern literal ({1}) and the group index ({2}) — CH's
+    first-subpattern rule from _extract_group_index, or regexpExtract's
+    own literal index when ``with_index``. Every form runs the pattern
+    through _extract_group_index's dialect guards."""
+
+    def emit(args: list[str]) -> str | None:
+        if len(args) != 2 + with_index:
+            return None
+        lit = _LITERAL_ARG.fullmatch(args[1])
+        idx = _UINT_ARG.fullmatch(args[2]) if with_index else True
+        if not (lit and idx):
+            return None
+        pat = lit.group(1)
+        group = _extract_group_index(pat)
+        return template.format(
+            args[0].strip(), f"'{pat}'", idx.group(1) if with_index else group
+        )
+
+    return emit
+
+
+# replaceRegexpAll: the PATTERN dialects are close (RE2 vs Java), but
+# the REPLACEMENT dialects are not — ClickHouse backreferences are \1
+# while Java/Spark uses $1, treats \1 as a literal digit, and treats a
+# bare $ as a group reference. A literal replacement (no \ or $)
+# translates exactly; anything else refuses rather than silently
+# rewriting the wrong occurrences.
+def _replace_regexp_all(args: list[str]) -> str | None:
+    lit = len(args) == 3 and _LITERAL_ARG.fullmatch(args[2])
+    if not lit:
+        return None
+    replacement = lit.group(1)
+    if "\\" in replacement or "$" in replacement:
+        raise UnsupportedClickHouseSQL(
+            "replaceRegexpAll replacement contains \\ or $ — CH "
+            "backreferences are \\1 but Spark's are $1 (and a bare $ "
+            "is a group reference); rewrite the replacement in "
+            "Spark's regexp_replace dialect"
+        )
+    return f"regexp_replace({args[0]}, {args[1]}, '{replacement}')"
+
+
+# ---- quantile / median / topK family (parametric aggregates) ----
+# Accepted forms and their Spark spellings (every other member of the
+# family refuses via _REFUSALS, and any surviving spelling via
+# _RESIDUALS):
+#
+#   quantile(p)(x), quantile(x), median(x)   -> percentile(x, p)  [p=0.5]
+#   quantiles(p1, ..., pk)(x)                -> percentile(x, array(p...))
+#   quantileExact(p)(x), medianExact(x)      -> CH's exact nearest-rank
+#   quantilesExact(p1, ..., pk)(x)           -> array(<exact per level>)
+#   topK(N)(x)                               -> exact frequency top-N
+#
+# Semantics (checked against ClickHouse's own definitions):
+#  * CH quantile() is an 8192-element reservoir sketch: for groups that
+#    fit the reservoir it linear-interpolates with the SAME index
+#    formula as Spark percentile / DuckDB quantile_cont (p * (n-1));
+#    above that it is nondeterministic subsampling. percentile() is the
+#    deterministic refinement of that contract.
+#  * CH quantileExact() returns the element at 0-based index
+#    floor(p * n) clamped to n-1 (QuantileExact::getImpl) — NOT
+#    percentile_disc's ceil(p*n)-1 — so the rewrite spells CH's formula
+#    directly over array_sort(collect_list); the index clamps to >= 1
+#    (count=0 would otherwise hit Spark's INVALID_INDEX_OF_ZERO — try_
+#    only forgives out-of-bounds) so an all-NULL group yields NULL.
+#  * CH topK(N) returns the ~N most frequent values, frequency-
+#    descending, tie order unspecified; the rewrite computes EXACT
+#    frequencies with a value-ascending tie-break (deterministic
+#    refinement of the approximate contract).
+# The collect_list spellings carry the whole group in memory —
+# exactness' honest cost at scale; heavy_hitters / approx_quantiles
+# (bounded sketches) are the 100 TB paths the refusal hints name.
+
+_NUM_LIT = re.compile(r"\d+(?:\.\d+)?(?:[eE][+-]?\d+)?").fullmatch
+# quantile[s][Exact[Low|High|Inclusive|Exclusive|Weighted]],
+# median[Exact[Low|High|Weighted]]: group 1 the quantile/quantiles
+# stem (None for median), group 2 Exact plus its rule, group 3 the rule
+_QUANTILE_FORM = re.compile(
+    r"(?:(quantiles?)|median)(exact(low|high|inclusive|exclusive|weighted)?)?"
+).fullmatch
+
+
+def _within_budget(args: list[str]) -> bool:
+    return all(_WITHIN_BUDGET(_mask_literals(a)) for a in args)
+
+
+def _exact_index(p: str) -> str:
+    # CH's 0-based floor(p*n) as a 1-based index, clamped to [1, n].
+    # The >= 1 clamp: an all-NULL group has count(x) = 0, making the
+    # unclamped index least(floor(p*0)+1, 0) = 0, and Spark's
+    # try_element_at only suppresses OUT-OF-BOUNDS, not index zero — it
+    # raises INVALID_INDEX_OF_ZERO. At index 1 over the empty collected
+    # list, try_element_at genuinely returns NULL (CH's answer).
+    return (
+        f"greatest(least(CAST(floor({p} * count({{x}})) AS INT) + 1, "
+        f"CAST(count({{x}}) AS INT)), 1)"
+    )
+
+
+def _interp_quantile_expr(x: str, p: str) -> str:
+    """Singular quantile()/median()/quantileExactInclusive lowering: the
+    R-7 linear interpolation at h = p*(n-1) over the sorted collected
+    list — BIT-IDENTICAL to Spark's ``percentile(x, p)`` aggregate (same
+    double position arithmetic, same (hi-pos)*lo_key + (pos-lo)*hi_key
+    rounding order, same equal-keys and integral-position shortcuts,
+    NULL for empty/all-NULL groups; verified equal over every fixture
+    column x level grid at sf0.1).
+
+    Why not percentile() itself: Percentile
+    accumulates an OpenHashMap<value, count> per group — on a
+    HIGH-CARDINALITY double column that is one boxed map entry per
+    distinct value (measured 1.25 s vs 0.35 s for the same median at
+    sf0.1), with the same unbounded-state posture as the collected
+    list. The plural quantiles() lowering keeps percentile(x, array):
+    its per-group state is bounded by the column's distinct count,
+    which is the better trade for the low-cardinality columns plural
+    scans here. The sketch path for 100 TB remains approx_quantiles /
+    quantile_state_merge either way."""
+    pos = f"(CAST({p} AS DOUBLE) * CAST(n - 1 AS BIGINT))"
+    lo = f"CAST(FLOOR{pos} AS INT)"
+    hi = f"CAST(CEIL{pos} AS INT)"
+    body = (
+        f"CASE WHEN n = 0 THEN CAST(NULL AS DOUBLE) "
+        f"WHEN {lo} = {hi} THEN element_at(a, {lo} + 1) "
+        f"WHEN element_at(a, {lo} + 1) = element_at(a, {hi} + 1) "
+        f"THEN element_at(a, {lo} + 1) "
+        f"ELSE (CAST({hi} AS DOUBLE) - {pos}) * element_at(a, {lo} + 1) "
+        f"+ ({pos} - CAST({lo} AS DOUBLE)) * element_at(a, {hi} + 1) END"
+    )
+    return (
+        f"element_at(transform(array(sort_array(collect_list("
+        f"CAST({x} AS DOUBLE)))), a -> "
+        f"element_at(transform(array(size(a)), n -> {body}), 1)), 1)"
+    )
+
+
+def _exact_quantile_expr(x: str, p: str, idx_fn=None) -> str:
+    # idx_fn parameterizes the rank rule (see _exact_quantiles_plural_expr)
+    # sort_array, not array_sort: collect_list never emits NULL elements,
+    # and on NULL-free input the two produce the identical ascending
+    # order (Spark's NaN-largest double ordering on both paths) — but
+    # array_sort evaluates its default lambda comparator INTERPRETED per
+    # comparison, while sort_array sorts with the native type ordering
+    # (measured at sf0.1: the 3-exact-quantile query's final stage
+    # dropped ~2x when the 200k-element per-group sorts switched).
+    idx_fn = idx_fn or _exact_index
+    return (
+        f"try_element_at(sort_array(collect_list({x})), "
+        + idx_fn(p).format(x=x)
+        + ")"
+    )
+
+
+def _exact_quantiles_plural_expr(x: str, levels: list[str], idx_fn=None) -> str:
+    # plural form: ONE sorted array let-bound via the 1-element-array
+    # transform trick, indexed once per level — the sort runs once.
+    # Measured caveat for the SINGULAR form: separate
+    # output columns cannot share a let binding in flat SQL, but the
+    # per-group re-sort is noise anyway — at sf0.1 a 3-exact-quantile
+    # query times identically to a 1-exact-quantile query (~0.85 s both;
+    # the collect_list/percentile aggregation buffers dominate).
+    # idx_fn parameterizes the rank rule (default quantileExact's
+    # floor(p*n); _exact_index_low for quantilesExactLow) so the
+    # rank-rule variants reuse THIS spelling instead of a copy.
+    idx_fn = idx_fn or _exact_index
+    idx = ", ".join(
+        f"try_element_at(a, {idx_fn(p).format(x=x)})" for p in levels
+    )
+    # sort_array over the NULL-free collected list — see
+    # _exact_quantile_expr for the native-vs-interpreted-sort rationale
+    return (
+        f"element_at(transform(array(sort_array(collect_list({x}))), "
+        f"a -> array({idx})), 1)"
+    )
+
+
+def _exact_index_low(p: str) -> str:
+    # CH QuantileExactLow (QuantileExact.h, public ClickHouse source):
+    # level == 0.5 EXACTLY takes the LOWER median — 0-based (n/2)-1 for
+    # even n, (n-1)/2 for odd — i.e. 1-based (n+1) DIV 2 (= ceil(n/2));
+    # every OTHER level uses quantileExact's own floor(p*n) rule (the
+    # source comment's example: level 0.1 over 10 elements -> array[1]).
+    # The float() comparison mirrors CH's Float64 `level == 0.5` test
+    # on the parsed literal. Same >= 1 clamp as _exact_index (all-NULL
+    # group -> index 1 over the empty list -> NULL).
+    if float(p) == 0.5:
+        return "greatest(CAST((count({x}) + 1) DIV 2 AS INT), 1)"
+    return _exact_index(p)
+
+
+def _check_level_range(levels: list[str]) -> None:
+    # ClickHouse throws PARAMETER_OUT_OF_BOUND for any quantile level
+    # outside [0, 1] (every quantile* function) — refuse rather than
+    # silently clamp to the first/last element
+    for p in levels:
+        if not 0.0 <= float(p) <= 1.0:
+            raise UnsupportedClickHouseSQL(
+                f"quantile level {p} is outside [0, 1] — ClickHouse "
+                "throws PARAMETER_OUT_OF_BOUND"
+            )
+
+
+def _check_exclusive_levels(levels: list[str]) -> None:
+    for p in levels:
+        if float(p) in (0.0, 1.0):
+            raise UnsupportedClickHouseSQL(
+                "quantileExactExclusive cannot interpolate levels 0 and 1 "
+                "(ClickHouse throws BAD_ARGUMENTS there) — use "
+                "quantileExact / min / max"
+            )
+
+
+def _exclusive_expr(x: str, levels: list[str], plural: bool = False) -> str:
+    """CH quantileExactExclusive (QuantileExact.h getFloatImpl; Excel
+    PERCENTILE.EXC / R-6 / SciPy-(0,0)): h = level * (n + 1),
+    k = floor(h); k < 1 -> first element, k >= n -> last, else
+    a[k] + (h - k) * (a[k+1] - a[k]) over the 1-based sorted array,
+    all in Float64 (the input casts to DOUBLE — CH returns Float64
+    regardless of input type). h is computed in exact DECIMAL here
+    where CH multiplies in Float64 — the same one-rank boundary caveat
+    as the weighted threshold, documented in MIGRATION.md. Levels 0/1
+    refuse upstream (CH throws). All-NULL group -> NULL (CH Nullable
+    semantics; the raw NaN arm of getFloatImpl is unreachable through
+    Nullable aggregation). The plural form shares ONE sort and ONE
+    size binding across all levels and returns an array even with a
+    single level (CH's quantiles* contract)."""
+
+    def one(p: str) -> str:
+        k = f"CAST(floor({p} * (n + 1)) AS INT)"
+        frac = f"CAST({p} * (n + 1) - floor({p} * (n + 1)) AS DOUBLE)"
+        return (
+            f"CASE WHEN n = 0 THEN CAST(NULL AS DOUBLE) "
+            f"WHEN {k} < 1 THEN element_at(a, 1) "
+            f"WHEN {k} >= n THEN element_at(a, n) "
+            f"ELSE element_at(a, {k}) + {frac} * "
+            f"(element_at(a, {k} + 1) - element_at(a, {k})) END"
+        )
+
+    assert plural or len(levels) == 1, levels  # see _exact_rank_rule_expr
+    body = (
+        one(levels[0])
+        if not plural
+        else f"array({', '.join(one(p) for p in levels)})"
+    )
+    # sort_array over the NULL-free collected list — see
+    # _exact_quantile_expr for the native-vs-interpreted-sort rationale
+    return (
+        f"element_at(transform(array(sort_array(collect_list("
+        f"CAST({x} AS DOUBLE)))), a -> "
+        f"element_at(transform(array(size(a)), n -> {body}), 1)), 1)"
+    )
+
+
+def _exact_rank_rule_expr(
+    x: str, levels: list[str], rule: str, plural: bool = False
+) -> str:
+    """The four exact rank-rule variants — same sorted-array machinery
+    as quantileExact, different rank
+    formula (all from QuantileExact.h, public ClickHouse source):
+
+      Low       — lower median at level 0.5; floor(p*n) otherwise
+                  (_exact_index_low parameterizes the shared spellings).
+      High      — higher median at level 0.5, which COINCIDES with
+                  quantileExact's floor(p*n)+1 at every n parity
+                  (even: n/2+1 both; odd: (n+1)/2 both), and the other
+                  levels share quantileExact's branch verbatim — so
+                  High delegates to exactly the quantileExact spelling.
+      Inclusive — Excel PERCENTILE.INC / R-7: h = p*(n-1) linear
+                  interpolation = Spark percentile / DuckDB
+                  quantile_cont, exact over all values (CH evaluates
+                  this one exactly too — no reservoir), so the lowering
+                  is the function's own definition, not a refinement.
+      Exclusive — Excel PERCENTILE.EXC / R-6: see _exclusive_expr.
+
+    A PLURAL spelling returns an array even with one level (CH returns
+    Array(T) for every quantiles* form — a scalar here would be a
+    silent dtype mistranslation); singular spellings return the scalar.
+    Plural forms share ONE sort across levels (the
+    _exact_quantiles_plural_expr let trick). Levels outside [0, 1]
+    refuse (CH PARAMETER_OUT_OF_BOUND)."""
+    rule = rule.lower()
+    # singular callers must pre-split to one level — silently computing
+    # only levels[0] would be a wrong-result hazard for future callers
+    assert plural or len(levels) == 1, levels
+    _check_level_range(levels)
+    if rule == "inclusive":
+        if not plural:
+            return _interp_quantile_expr(x, levels[0])
+        return f"percentile({x}, array({', '.join(levels)}))"
+    if rule == "exclusive":
+        _check_exclusive_levels(levels)
+        return _exclusive_expr(x, levels, plural=plural)
+    idx_fn = _exact_index_low if rule == "low" else _exact_index
+    if not plural:
+        return _exact_quantile_expr(x, levels[0], idx_fn=idx_fn)
+    return _exact_quantiles_plural_expr(x, levels, idx_fn=idx_fn)
+
+
+def _exact_weighted_expr(x: str, w: str, p: str) -> str:
+    """CH quantileExactWeighted(p)(x, w) (QuantileExactWeighted::getImpl,
+    public ClickHouse source): sort values ascending, accumulate weights,
+    return the FIRST value whose cumulative weight reaches the threshold
+    floor(p * total_weight). Deterministic refinement documented in
+    MIGRATION.md: weights are cast to BIGINT and assumed positive (CH's
+    zero-weight edge returns the first element regardless of p; the
+    threshold here clamps to >= 1, skipping zero-weight prefixes), and
+    NULL value/weight pairs are skipped (CH Nullable semantics).
+
+    Spelled as one pass over array_sort(collect_list(struct(v, w))) with
+    the 1-element-array let trick (the _topk_expr precedent): the sorted
+    list binds to `a`, the total weight to `tot`, and a 2-field
+    (sum, result) fold returns the crossing VALUE directly — the typed
+    NULL for the not-found state comes from `try_element_at(a, 2^31-1).v`
+    (out-of-bounds yields a NULL of the element type, so no CAST to an
+    unknown type is needed). Empty group -> result stays NULL (CH's
+    answer). p is a decimal literal and weights integers, so the
+    threshold arithmetic is exact decimal on BOTH engines — no float
+    boundary anywhere. Documented deviation from live ClickHouse
+    (also in MIGRATION.md): CH computes its threshold as
+    `level * sum_weight` in FLOAT64 and truncates, so at float-boundary
+    combinations (e.g. p=0.29, total=100: Float64 0.29*100 =
+    28.999999999999996 -> CH threshold 28 vs exact decimal 29) a live
+    server can sit one rank away from this translation. The
+    exact-decimal spelling is deliberate — it matches the construct's
+    mathematical definition and the DuckDB oracle's arithmetic — but
+    that same agreement means the harness cannot observe the deviation;
+    only a live-CH differential would. The plural form (_exact_weighted_plural_expr)
+    shares ONE sort + ONE total fold across all levels."""
+    return _weighted_let(x, w, [_weighted_find(_weighted_threshold(p))])
+
+
+def _weighted_pairs(x: str, w: str, sort: bool = True) -> str:
+    # NULL value/weight pairs are skipped (collect_list drops NULL
+    # elements; CH Nullable semantics). Struct sort = (v, w)
+    # lexicographic — required by the quantile crossing scan; top-K's
+    # weight sums are order-independent, so it passes sort=False (a
+    # struct-array sort costs ~0.43 s per 200k rows at sf0.1).
+    collected = (
+        f"collect_list(CASE WHEN ({x}) IS NOT NULL "
+        f"AND ({w}) IS NOT NULL THEN "
+        f"named_struct('v', {x}, 'w', CAST({w} AS BIGINT)) END)"
+    )
+    # sort_array's native struct ordering (field-by-field, the same
+    # (v, w) lexicographic order as array_sort's default comparator)
+    # over the NULL-free collected pairs — see _exact_quantile_expr
+    return f"sort_array({collected})" if sort else collected
+
+
+def _weighted_threshold(p: str) -> str:
+    return f"greatest(CAST(floor({p} * tot) AS BIGINT), CAST(1 AS BIGINT))"
+
+
+def _weighted_find(t_expr: str) -> str:
+    # saturating fold: once `r` is set it is carried unchanged; before
+    # that the running weight sum accumulates until it crosses t.
+    return (
+        f"aggregate(a, named_struct('s', CAST(0 AS BIGINT), "
+        f"'r', try_element_at(a, 2147483647).v), "
+        f"(st, e) -> CASE WHEN st.r IS NOT NULL THEN st "
+        f"WHEN st.s + e.w >= {t_expr} "
+        f"THEN named_struct('s', st.s + e.w, 'r', e.v) "
+        f"ELSE named_struct('s', st.s + e.w, 'r', st.r) END, "
+        f"st -> st.r)"
+    )
+
+
+def _weighted_let(x: str, w: str, finds: list[str]) -> str:
+    # let-bind the sorted pair list (`a`) and the total weight (`tot`)
+    # once; each find in `finds` runs over the same bindings.
+    body = finds[0] if len(finds) == 1 else f"array({', '.join(finds)})"
+    total = "aggregate(a, CAST(0 AS BIGINT), (s, e) -> s + e.w)"
+    return (
+        f"element_at(transform(array({_weighted_pairs(x, w)}), a -> "
+        f"element_at(transform(array({total}), tot -> {body}), 1)), 1)"
+    )
+
+
+def _exact_weighted_plural_expr(x: str, w: str, levels: list[str]) -> str:
+    # plural form: ONE sorted pair list, ONE total fold, and ONE
+    # crossing fold for ALL levels (state = running sum + one result
+    # slot per level). Measured at sf0.1: the collect is the ~0.8 s
+    # floor, each struct sort adds ~0.43 s and each separate crossing
+    # fold ~0.25 s — sharing both makes k levels cost one level.
+    null_v = "try_element_at(a, 2147483647).v"
+    zero = ", ".join(f"'r{i}', {null_v}" for i in range(len(levels)))
+    step = ", ".join(
+        f"'r{i}', CASE WHEN st.r{i} IS NOT NULL THEN st.r{i} "
+        f"WHEN st.s + e.w >= {_weighted_threshold(p)} THEN e.v END"
+        for i, p in enumerate(levels)
+    )
+    finish = ", ".join(f"st.r{i}" for i in range(len(levels)))
+    find_all = (
+        f"aggregate(a, named_struct('s', CAST(0 AS BIGINT), {zero}), "
+        f"(st, e) -> named_struct('s', st.s + e.w, {step}), "
+        f"st -> array({finish}))"
+    )
+    return _weighted_let(x, w, [find_all])
+
+
+def _topk_expr(x: str, n: int) -> str:
+    # let-binding via a 1-element array: the collected list is computed
+    # once and referenced repeatedly through the lambda variable `a`
+    # sort_array: the (neg, val) structs are built non-NULL, so the
+    # native struct ordering equals array_sort's default comparator
+    return (
+        f"element_at(transform(array(collect_list({x})), a -> "
+        f"slice(transform(sort_array(transform(array_distinct(a), v -> "
+        f"named_struct('neg', -size(filter(a, e -> e <=> v)), 'val', v))), "
+        f"s -> s.val), 1, {n})), 1)"
+    )
+
+
+def _topk_weighted_expr(x: str, w: str, n: int) -> str:
+    """CH topKWeighted(N)(x, w): the ~N values with the largest summed
+    weights. Deterministic refinement (same contract as _topk_expr's
+    refinement of the counting sketch): EXACT per-value weight sums,
+    weight-descending with a value-ascending tie-break; NULL value/
+    weight pairs are skipped; weights cast to BIGINT. The pair list
+    stays UNSORTED (weight sums are order-independent; the output
+    order comes from the (negw, val) struct sort over the distinct
+    values, and a struct-array sort costs ~0.43 s per 200k rows at
+    sf0.1). The collected group is scanned once per distinct value — bounded-domain dialect
+    path; heavy_hitters_weighted is the bounded-memory 100 TB path."""
+    pairs = _weighted_pairs(x, w, sort=False)
+    return (
+        f"element_at(transform(array({pairs}), a -> "
+        f"slice(transform(sort_array(transform("
+        f"array_distinct(transform(a, e -> e.v)), v -> "
+        f"named_struct('negw', -aggregate(filter(a, e -> e.v <=> v), "
+        f"CAST(0 AS BIGINT), (s, e) -> s + e.w), 'val', v))), "
+        f"s -> s.val), 1, {n})), 1)"
+    )
+
+
+def _avg_weighted_expr(x: str, w: str) -> str:
+    """CH avgWeighted(x, w): Float64 sum(x*w)/sum(w), NULL pairs
+    skipped. Documented refinement: an empty group or a zero total
+    weight yields NaN (CH returns NaN for the empty group and IEEE
+    inf/NaN for nonzero/0 — Spark's ANSI double division THROWS on a
+    zero divisor, so the zero-total arm is made explicit)."""
+    guard = f"(({x}) IS NOT NULL AND ({w}) IS NOT NULL)"
+    den = f"sum(CASE WHEN {guard} THEN CAST(({w}) AS DOUBLE) END)"
+    num = (
+        f"sum(CASE WHEN {guard} THEN "
+        f"CAST(({x}) AS DOUBLE) * CAST(({w}) AS DOUBLE) END)"
+    )
+    return (
+        f"(CASE WHEN {den} IS NULL OR {den} = 0.0D "
+        f"THEN CAST('NaN' AS DOUBLE) ELSE {num} / {den} END)"
+    )
+
+
+def _quantile_shape(key: str, params: list[str] | None, args: list[str]):
+    """(plural, exact, rule, levels) of an accepted quantile/median call
+    — rule is None or low/high/inclusive/exclusive/weighted — or None to
+    keep it as written. Parametric calls take numeric-literal levels;
+    the plain forms take the median level (quantiles* and
+    quantileExactWeighted need their levels, medianExact has no
+    Inclusive/Exclusive form)."""
+    form = _QUANTILE_FORM(key)
+    arity = 1 + key.endswith("weighted")
+    if form is None or len(args) != arity or not _within_budget(args):
+        return None
+    stem, rule = form[1], form[3]
+    if params is None:
+        if stem == "quantiles" or (stem and rule == "weighted"):
+            return None
+        if not stem and rule in ("inclusive", "exclusive"):
+            return None
+        params = ["0.5"]
+    elif not (stem and params and all(map(_NUM_LIT, params))):
+        return None
+    return stem == "quantiles", form[2] is not None, rule, params
+
+
+def _fused_weighted_levels(sql: str) -> dict:
+    """Cross-expression fusion plan for the ExactWeighted family, read
+    through the call walk's scanner before the walk: when a statement
+    carries TWO OR MORE weighted-quantile calls over the same (x, w)
+    argument text as written (plural + medianExactWeighted is the
+    canonical CH idiom), every occurrence is spelled from ONE canonical
+    multi-level fold over the
+    value-sorted union of the statement's levels, with singular/median
+    occurrences extracting their slot via element_at. Spark's
+    subexpression elimination evaluates byte-identical project subtrees
+    once (measured: plural + element_at(identical plural) runs at the
+    plural-only floor), so the per-occurrence struct sort (~0.43 s /
+    200k rows at sf0.1) and crossing fold (~0.25 s) collapse to one.
+    Slot results are independent CASE arms of the shared fold, so each
+    requested level's value is bit-identical to its standalone form
+    (same literal threshold arithmetic, same NULL init state). A key
+    used by a single occurrence keeps its standalone spelling — the
+    single-level path stays exercised, and cosmetically different
+    argument spellings simply don't fuse (not an error).
+
+    Returns {(x, w): (ordered Decimal values, ordered level literals)}
+    for keys with >= 2 occurrences."""
+    masked = _mask_literals(sql)
+    slots: dict = {}
+    occurrences: dict = {}
+    for m in _CALL_HEAD.finditer(masked):
+        key = m.group(1).lower()
+        if not key.endswith("exactweighted"):
+            continue
+        try:
+            site = _call_site(sql, masked, m.end(), parametric=True)
+        except UnsupportedClickHouseSQL:
+            continue  # unbalanced brackets — not a well-formed call
+        if site is None:
+            continue
+        args = [p.strip() for p in site[2]]
+        shape = _quantile_shape(key, site[1], args)
+        if shape is None:
+            continue
+        xw = (args[0], args[1])
+        per = slots.setdefault(xw, {})
+        for p in shape[3]:
+            per.setdefault(Decimal(p), p)
+        occurrences[xw] = occurrences.get(xw, 0) + 1
+    fused = {}
+    for key, per in slots.items():
+        if occurrences.get(key, 0) >= 2:
+            ordered = sorted(per.items())
+            fused[key] = ([v for v, _ in ordered], [lit for _, lit in ordered])
+    return fused
+
+
+def _weighted_quantile(x: str, w: str, levels: list[str], plural: bool, plan) -> str:
+    if plan is None:
+        if plural:
+            return _exact_weighted_plural_expr(x, w, levels)
+        return _exact_weighted_expr(x, w, levels[0])
+    vals, lits = plan
+    canon = _exact_weighted_plural_expr(x, w, lits)
+
+    def slot(p: str) -> str:
+        return f"element_at({canon}, {vals.index(Decimal(p)) + 1})"
+
+    if not plural:
+        return slot(levels[0])
+    if [Decimal(p) for p in levels] == vals:
+        return canon
+    # caller's order/multiplicity differs from the canonical sorted
+    # union — rebuild the array from shared slots (the repeated canon
+    # texts CSE to one evaluation)
+    return f"array({', '.join(slot(p) for p in levels)})"
+
+
+def _aggregate_call(name: str, args: list[str], recurse, params, fused) -> str | None:
+    """The parametric family: quantile/median in every accepted form
+    (_quantile_shape), topK[Weighted](N)(x[, w]), uniqUpTo(N)(x) and
+    avgWeighted(x, w). ``params`` is the parameter list of an
+    ``f(params)(args)`` call, else None; ``fused`` is the statement's
+    weighted-level fusion plan (_fused_weighted_levels). Arguments must
+    fit the one-paren _ARG budget, as the level and count parameters
+    must be numeric literals; other spellings keep their text and refuse
+    at the residual check."""
+    key = name.lower()
+    if key in ("topk", "topkweighted", "uniqupto"):
+        count = params is not None and len(params) == 1 and params[0].isdecimal()
+        arity = 1 + key.endswith("weighted")
+        if not (count and len(args) == arity and _within_budget(args)):
+            return None
+        n, x = params[0], recurse(args[0])
+        if key == "uniqupto":
+            # exact count-distinct saturating at N+1 — CH's documented
+            # contract, spelled exactly with LEAST
+            return f"LEAST(COUNT(DISTINCT {x}), {n} + 1)"
+        if key == "topk":
+            return _topk_expr(x, int(n))
+        return _topk_weighted_expr(x, recurse(args[1]), int(n))
+    if key == "avgweighted":
+        if params is not None or len(args) != 2 or not _within_budget(args):
+            return None
+        return _avg_weighted_expr(recurse(args[0]), recurse(args[1]))
+    shape = _quantile_shape(key, params, args)
+    if shape is None:
+        return None
+    plural, exact, rule, levels = shape
+    if not plural and len(levels) > 1:
+        form, tail = "", "(x)"
+        if rule == "weighted":
+            form, tail = "ExactWeighted", "(x, w)"
+        elif rule:
+            form = "Exact" + name[len(name) - len(rule) :]
+        raise UnsupportedClickHouseSQL(
+            f"quantile{form}() takes one level — "
+            f"use quantiles{form}(p1, ...){tail}"
+        )
+    _check_level_range(levels)
+    x = recurse(args[0])
+    if rule == "weighted":
+        plan = fused.get((args[0], args[1]))
+        return _weighted_quantile(x, recurse(args[1]), levels, plural, plan)
+    if rule:
+        return _exact_rank_rule_expr(x, levels, rule, plural=plural)
+    if exact:
+        if plural:
+            return _exact_quantiles_plural_expr(x, levels)
+        return _exact_quantile_expr(x, levels[0])
+    if plural:
+        return f"percentile({x}, array({', '.join(levels)}))"
+    return _interp_quantile_expr(x, levels[0])
 
 
 _CALLS: dict = {
@@ -1958,9 +3070,9 @@ _CALLS: dict = {
     # (sample_fraction / stratified_sample), not rand. rand64 refuses
     # (a 53-bit double mantissa cannot fill 64 uniform bits).
     "rand": lambda a: (
-        "CAST(floor(rand() * 4294967296) AS BIGINT)" if len(a) == 1 else None
+        "CAST(floor(rand() * 4294967296) AS BIGINT)" if len(a) <= 1 else None
     ),
-    "randcanonical": lambda a: "rand()" if len(a) == 1 else None,
+    "randcanonical": lambda a: "rand()" if len(a) <= 1 else None,
     # both are nondeterministic random v4 UUIDs
     "generateuuidv4": "uuid()",
     # ---- math / statistics ----
@@ -2309,7 +3421,7 @@ _CALLS: dict = {
     # substring. exists + contains evaluates each operand ONCE; CH's
     # UInt8 0/1 becomes a boolean exactly like match -> RLIKE. Bracket
     # needle literals are already array(...) calls here (the bracket
-    # pass runs before the table); other multiSearch variants
+    # pass runs before the call walk); other multiSearch variants
     # (FirstPosition/FirstIndex/CaseInsensitive/...) fall to the
     # residual and refuse.
     "multisearchany": "exists({1}, cdr_ms_ -> contains({0}, cdr_ms_))",
@@ -2362,6 +3474,122 @@ _CALLS: dict = {
     ),
     # argless count() is ClickHouse-legal; Spark wants count(*)
     "count": "count(*)",
+    # ---- datetime formatting / parsing / differences ----
+    # formatDateTime / parseDateTime*: literal CH %-format strings only
+    # (_fdt_pattern; InJodaSyntax passes its pattern through)
+    "formatdatetime": _format_datetime,
+    **{
+        f"parsedatetime{joda}{suffix}": _parse_datetime(bool(joda), suffix)
+        for joda in ("", "injodasyntax")
+        for suffix in ("", "ornull", "orzero")
+    },
+    # dateDiff/age with a literal unit; Spark's own 2-arg datediff and
+    # date_diff keep their text
+    **{fname: _date_diff(fname) for fname in ("datediff", "date_diff", "age")},
+    # ---- regular expressions over a literal pattern ----
+    # CH's comma-form extract(haystack, pattern); the ANSI
+    # `extract(field FROM x)` keeps its text
+    "extract": _regexp_call("regexp_extract({0}, {1}, {2})"),
+    "extractall": _regexp_call("regexp_extract_all({0}, {1}, {2})"),
+    "countmatches": _regexp_call("size(regexp_extract_all({0}, {1}, 0))"),
+    "regexpextract": _regexp_call("regexp_extract({0}, {1}, {2})", with_index=True),
+    "replaceregexpall": _replace_regexp_all,
+    # ---- the raw-argument families (_Family) ----
+    **dict.fromkeys(
+        ("translate", "translateutf8"),
+        _Family(
+            _translate_call,
+            32,
+            "translate calls nested more than 32 levels deep — "
+            "precompute inner mappings as subquery/CTE columns",
+        ),
+    ),
+    **dict.fromkeys(
+        ("splitbychar", "splitbystring"),
+        _Family(
+            _split_call,
+            32,
+            "splitBy* calls nested more than 32 levels deep — "
+            "precompute inner splits as subquery/CTE columns",
+        ),
+    ),
+    "multiif": _Family(
+        _multiif_call,
+        32,
+        "multiIf calls nested more than 32 levels deep — "
+        "precompute inner branches as subquery/CTE columns",
+        unbalanced="unbalanced multiIf parentheses",
+    ),
+    **dict.fromkeys(
+        ("least", "greatest"),
+        _Family(
+            _least_greatest_call,
+            8,
+            "least/greatest ALTERNATING more than 8 levels deep — the "
+            "NULL-propagation guard doubles per mixed level (same-name "
+            "chains flatten and never hit this); precompute inner "
+            "min/max steps as subquery/CTE columns and compose those",
+        ),
+    ),
+    **dict.fromkeys(
+        ("concatwithseparator", "concatwithseparatorassumeinjective"),
+        _Family(
+            _concat_with_separator_call,
+            16,
+            "concatWithSeparator nested more than 16 levels deep — "
+            "precompute inner concatenations as subquery/CTE columns",
+            unbalanced="unbalanced parentheses in concatWithSeparator()",
+        ),
+    ),
+    **dict.fromkeys(
+        ("substringutf8", "substring", "substr", "mid"),
+        _Family(
+            _substring_call,
+            32,
+            "substring calls nested more than 32 levels deep — "
+            "precompute inner slices as subquery/CTE columns",
+        ),
+    ),
+    **dict.fromkeys(
+        ("lowerutf8", "upperutf8", "lower", "upper"),
+        _Family(
+            _case_fold_call,
+            32,
+            "case-folding calls nested more than 32 levels deep — "
+            "precompute inner folds as subquery/CTE columns",
+        ),
+    ),
+    **dict.fromkeys(
+        ("has", "indexof"),
+        _Family(
+            _membership_call,
+            32,
+            "has/indexOf calls nested more than 32 levels deep — "
+            "precompute inner lookups as subquery/CTE columns",
+        ),
+    ),
+    # the parametric family: quantile/median/topK/avgWeighted/uniqUpTo
+    **dict.fromkeys(
+        (
+            *(
+                f"{stem}{rule}"
+                for stem in ("quantile", "quantiles")
+                for rule in ("", "exact", "exactlow", "exacthigh",
+                             "exactinclusive", "exactexclusive", "exactweighted")
+            ),
+            *(f"median{rule}" for rule in ("", "exact", "exactlow", "exacthigh",
+                                           "exactweighted")),
+            "topk", "topkweighted", "avgweighted", "uniqupto",
+        ),
+        _Family(
+            _aggregate_call,
+            32,
+            "function calls nested more than 32 levels deep — "
+            "precompute inner expressions as subquery/CTE columns",
+            unbalanced=None,
+            parametric=True,
+        ),
+    ),
 }
 
 # clause syntax — not calls, so the call table cannot hold it. These run
@@ -2599,10 +3827,10 @@ def _split_top_level_args(s: str) -> list[str]:
     return args
 
 
-def _scan_to_close(masked: str, start: int) -> int:
+def _scan_to_close(masked: str, start: int) -> int | None:
     """Index just past the ')' closing the '(' that precedes ``start``,
     scanning the literal-MASKED copy (masked literal contents carry no
-    parens). Raises on unbalanced text."""
+    parens); None when it never closes."""
     depth, i = 1, start
     while i < len(masked) and depth:
         c = masked[i]
@@ -2611,407 +3839,130 @@ def _scan_to_close(masked: str, start: int) -> int:
         elif c == ")":
             depth -= 1
         i += 1
-    if depth:
-        raise UnsupportedClickHouseSQL("unbalanced parentheses")
-    return i
+    return None if depth else i
 
 
-def _calls(masked: str, head: "re.Pattern[str]"):
-    """Yield ``(m, close)`` for each call ``head`` (a pattern ending in
-    the call's '(') matches on the literal-MASKED text: ``close`` is the
-    index just past the matching ')', or None when the call never
-    closes."""
-    for m in head.finditer(masked):
-        try:
-            close = _scan_to_close(masked, m.end())
-        except UnsupportedClickHouseSQL:
-            close = None
-        yield m, close
+_CALL_HEAD = re.compile(r"\b(\w+)\s*\(")
+_NEXT_PAREN = re.compile(r"\s*\(")
+_WITHIN_BUDGET = re.compile(_ARG).fullmatch
 
 
-def _rewrite_calls(
-    sql: str,
-    head: "re.Pattern[str]",
-    emit,
-    *,
-    max_depth: int,
-    too_deep: str,
-    name=str.lower,
-    unbalanced: str | None = "unbalanced parentheses in {}()",
-    strip: bool = True,
-) -> str:
-    """The one call-site rewriter behind translate()'s call passes.
+def _arg_list(s: str) -> list[str]:
+    return _split_top_level_args(s) if s.strip() else []
 
-    Every call ``head`` matches (group 1 spells the function name) is
-    found on the literal-masked copy, so a call spelled inside a string
-    literal is data and never rewritten; a head whose ``name(group 1)``
-    is None is no call of this pass. The call's arguments are split at
-    the top level and taken from the RAW text — stripped unless
-    ``strip`` is false — and the call is replaced by ``emit(name, args,
-    recurse)``. ``recurse(arg)`` rewrites one argument the same way one
-    level deeper; past ``max_depth`` levels it refuses with
-    ``too_deep``. The emission is spliced into the raw text and the
-    search resumes past the call, so emitted text — which may spell the
-    same function name — is never matched again. When ``emit`` returns
-    None the call keeps its text and the search goes on inside it. A
-    call that never closes refuses with ``unbalanced`` (formatted with
-    the name), or keeps its text when ``unbalanced`` is None."""
 
-    def walk(sql: str, depth: int) -> str:
-        if depth > max_depth:
-            raise UnsupportedClickHouseSQL(too_deep)
+def _call_site(sql: str, masked: str, start: int, parametric: bool = False):
+    """The call whose '(' ends at ``start`` (``masked`` is ``sql`` with
+    its literals masked): ``(index past its ')', params, pieces)``, with
+    the raw argument pieces and, for a ``parametric`` call spelled
+    ``f(params)(args)``, the stripped parameter list (else None); an
+    empty list is no arguments. None when the call never closes."""
+    close = _scan_to_close(masked, start)
+    params = None
+    if parametric and close is not None and (o := _NEXT_PAREN.match(masked, close)):
+        params = [p.strip() for p in _arg_list(sql[start : close - 1])]
+        start, close = o.end(), _scan_to_close(masked, o.end())
+    if close is None:
+        return None
+    return close, params, _arg_list(sql[start : close - 1])
+
+
+def _arity_at(masked: str, head: "re.Match[str]") -> int:
+    """Top-level argument count of the call ``head`` matched on the
+    literal-masked text (0 when it never closes); raises on unbalanced
+    brackets."""
+    close = _scan_to_close(masked, head.end())
+    return 0 if close is None else len(_arg_list(masked[head.end() : close - 1]))
+
+
+def _emit_call(name: str, pieces: list[str], recurse) -> str | None:
+    """Rewrite one call through its plain _CALLS value (a head rename, a
+    template or an emitter — see the table's header); None keeps it as
+    written."""
+    spec = _CALLS[name.lower()]
+    if isinstance(spec, str) and not spec.endswith(")"):
+        return spec + ",".join(map(recurse, pieces)) + ")"
+    if not _within_budget(pieces):
+        return None
+    args = [recurse(p).lstrip() for p in pieces]
+    if callable(spec):
+        text = spec(args)
+    else:
+        templates = (spec,) if isinstance(spec, str) else spec
+        text = next(
+            (t.format(*args) for t in templates if _arity(t) == len(args)), None
+        )
+    if text is None and not args:
+        raise UnsupportedClickHouseSQL(
+            f"{name}() without arguments — ClickHouse rejects the call; "
+            "pass the argument(s) the function takes"
+        )
+    return text
+
+
+# the plain table entries: one depth group, raw argument pieces
+_TABLE = _Family(
+    _emit_call,
+    32,
+    "function calls nested more than 32 levels deep — "
+    "precompute inner expressions as subquery/CTE columns",
+    unbalanced=None,
+)
+
+
+def _rewrite_calls(sql: str, fused: dict) -> str:
+    """The one call walk behind translate(): every call site whose name
+    is a _CALLS key is rewritten through its entry, arguments first.
+
+    Calls are found on the literal-masked copy, so a call spelled inside
+    a string literal is data and never rewritten. The emission is
+    spliced into the raw text and the search resumes past the call, so
+    emitted text — which may spell the same function name — is never
+    matched again. When an entry returns None the call keeps its text
+    and the search goes on inside it. Each _Family (the plain entries
+    share _TABLE) counts its own nesting: recursing into the arguments
+    of a call nested deeper than its cap refuses with its ``too_deep``.
+    ``fused`` is the statement's weighted-quantile fusion plan, handed to
+    the parametric family."""
+
+    def walk(sql: str, depth: dict, family: _Family | None = None) -> str:
+        if family is not None and depth[family] > family.cap:
+            raise UnsupportedClickHouseSQL(family.too_deep)
         masked = _mask_literals(sql)
         out: list[str] = []
         pos = scan = 0
-        while m := head.search(masked, scan):
+        while m := _CALL_HEAD.search(masked, scan):
             scan = m.end()
-            fn = name(m.group(1))
-            if fn is None:
+            name = m.group(1)
+            spec = _CALLS.get(name.lower())
+            if spec is None:
                 continue
-            try:
-                close = _scan_to_close(masked, m.end())
-            except UnsupportedClickHouseSQL:
-                if unbalanced is None:
+            fam = spec if isinstance(spec, _Family) else _TABLE
+            site = _call_site(sql, masked, scan, fam.parametric)
+            if site is None:
+                if fam.unbalanced is None:
                     continue
-                raise UnsupportedClickHouseSQL(unbalanced.format(fn)) from None
-            pieces = _split_top_level_args(sql[m.end() : close - 1])
-            args = [a.strip() for a in pieces] if strip else pieces
-            text = emit(fn, args, lambda a: walk(a, depth + 1))
+                raise UnsupportedClickHouseSQL(fam.unbalanced.format(name))
+            close, params, pieces = site
+            if fam is not _TABLE:
+                pieces = [p.strip() for p in pieces]
+            recurse = partial(
+                walk, depth={**depth, fam: depth.get(fam, 0) + 1}, family=fam
+            )
+            extra = (params, fused) if fam.parametric else ()
+            text = fam.emit(name, pieces, recurse, *extra)
             if text is not None:
                 out += [sql[pos : m.start()], text]
                 pos = scan = close
         out.append(sql[pos:])
         return "".join(out)
 
-    return walk(sql, 0)
-
-
-_CALL_HEAD = re.compile(r"\b(\w+)\s*\(")
-_WITHIN_BUDGET = re.compile(_ARG).fullmatch
-
-
-def _table_key(name: str) -> str | None:
-    key = name.lower()
-    return key if key in _CALLS else None
-
-
-def _emit_call(key: str, pieces: list[str], recurse) -> str | None:
-    """Rewrite one call through its _CALLS entry (see the table's
-    header for the three kinds of value); None keeps it as written."""
-    spec = _CALLS[key]
-    if isinstance(spec, str) and not spec.endswith(")"):
-        return spec + ",".join(map(recurse, pieces)) + ")"
-    if not all(_WITHIN_BUDGET(_mask_literals(p)) for p in pieces):
-        return None
-    args = [recurse(p).lstrip() for p in pieces]
-    if callable(spec):
-        return spec(args)
-    for template in (spec,) if isinstance(spec, str) else spec:
-        n = _arity(template)
-        if n == len(args) or n == 0 and args == [""]:
-            return template.format(*args)
-    return None
+    return walk(sql, {})
 
 
 def _rewrite_table_calls(sql: str) -> str:
-    """Apply the call table to every call site in one walk, arguments
-    before their call."""
-    return _rewrite_calls(
-        sql,
-        _CALL_HEAD,
-        _emit_call,
-        max_depth=32,
-        too_deep="function calls nested more than 32 levels deep — "
-        "precompute inner expressions as subquery/CTE columns",
-        name=_table_key,
-        unbalanced=None,
-        strip=False,
-    )
-
-
-def _null_guarded(fn: str, args: list[str]) -> str:
-    """``fn(args...)``, NULL when ANY argument is NULL (ClickHouse's
-    ordinary-function rule) — each argument is evaluated twice."""
-    checks = " OR ".join(f"({a}) IS NULL" for a in args)
-    call = f"{fn}({', '.join(f'({a})' for a in args)})"
-    return f"(CASE WHEN {checks} THEN NULL ELSE {call} END)"
-
-
-_MULTIIF_HEAD = re.compile(r"\b(multiIf)\s*\(", re.I)
-
-
-def _rewrite_multiif(sql: str) -> str:
-    """Rewrite every `multiIf(c1, v1, c2, v2, ..., else)` to
-    `(CASE WHEN c1 THEN v1 ... ELSE else END)`. CH requires the trailing
-    else, so an even argument count refuses. Refuses past 32 nested
-    levels (sibling calls are unbounded: a wide machine-generated SELECT
-    with 200 sibling multiIfs is legal)."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) < 3 or len(args) % 2 == 0:
-            raise UnsupportedClickHouseSQL(
-                "multiIf needs an odd argument count >= 3 "
-                "(cond, val, ..., else) — ClickHouse requires the else arm"
-            )
-        args = [recurse(a) for a in args]
-        arms = "".join(
-            f" WHEN {args[k]} THEN {args[k + 1]}" for k in range(0, len(args) - 1, 2)
-        )
-        return f"(CASE{arms} ELSE {args[-1]} END)"
-
-    return _rewrite_calls(
-        sql,
-        _MULTIIF_HEAD,
-        emit,
-        max_depth=32,
-        too_deep="multiIf calls nested more than 32 levels deep — "
-        "precompute inner branches as subquery/CTE columns",
-        unbalanced="unbalanced multiIf parentheses",
-    )
-
-
-_LG_HEAD = re.compile(r"\b(least|greatest)\s*\(", re.I)
-
-
-def _lg_leaves(name: str, arg: str) -> list[str]:
-    # flatten SAME-function nesting: least(a, least(b, c)) has exactly
-    # least(a, b, c)'s semantics in CH (min of all, NULL if any NULL),
-    # and the pre-variadic ClickHouse idiom chains 2-arg calls — without
-    # flattening, the guard's double-embedding grows 2^depth. Iterative
-    # (explicit work stack): a machine-generated 1000-deep chain must
-    # flatten, not blow Python's recursion limit.
-    head = re.compile(rf"{name}\s*\(", re.I)
-    out: list[str] = []
-    stack = [arg]
-    while stack:
-        a = stack.pop()
-        m = head.match(a)
-        if m and a.endswith(")"):
-            try:
-                pieces = _split_top_level_args(a[m.end() : -1])
-            except UnsupportedClickHouseSQL:
-                out.append(a)  # trailing ')' closes something else
-                continue
-            if len(pieces) >= 2:
-                stack.extend(p.strip() for p in reversed(pieces))
-                continue
-            # a 1-arg same-name call is not valid CH — keep it intact
-            # so it reaches Spark's loud arity error instead of being
-            # silently legalized by the flatten
-        out.append(a)
-    return out
-
-
-def _rewrite_least_greatest(sql: str) -> str:
-    """NULL-propagation guard for least/greatest: ClickHouse's
-    least/greatest are ordinary functions — ANY NULL argument makes the
-    result NULL — while Spark's SKIP nulls and return the extreme of
-    the non-null arguments (greatest(1, NULL) = 1). Same name, silently
-    different answers. Each user-written call becomes
-    `(CASE WHEN (a) IS NULL OR (b) IS NULL ... THEN NULL ELSE
-    least((a), (b), ...) END)` — arguments are evaluated twice, both
-    row-local (CH users pass columns/arithmetic here). Caveat: double
-    evaluation means a NONDETERMINISTIC nullable argument (e.g.
-    `if(rand() < 0.5, NULL, x)`) can disagree between the IS NULL check
-    and the ELSE call — documented in MIGRATION.md (precompute such
-    arguments as a subquery/CTE column); not refused, because a name
-    scan for rand/uuid-class functions would also refuse the common
-    deterministic uses of those names in UNRELATED argument positions.
-    SAME-function nesting flattens first (identical CH semantics, kills
-    the 2^depth growth on idiomatic 2-arg chains); MIXED nesting
-    refuses past 8 levels, where the doubling would make the emitted
-    text megabytes. Later rewrite stages' OWN least/greatest spellings
-    (quantile index clamps, weighted thresholds — all over provably
-    non-null counts) run after this stage and stay untouched. 1-argument
-    calls are not valid CH: they keep their (rewritten) argument — never
-    flattened — and pass to Spark's loud arity error."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) < 2:
-            return f"{name}({', '.join(recurse(a) for a in args)})"
-        leaves = [leaf for a in args for leaf in _lg_leaves(name, a)]
-        return _null_guarded(name, [recurse(a) for a in leaves])
-
-    return _rewrite_calls(
-        sql,
-        _LG_HEAD,
-        emit,
-        max_depth=8,
-        too_deep="least/greatest ALTERNATING more than 8 levels deep — the "
-        "NULL-propagation guard doubles per mixed level (same-name "
-        "chains flatten and never hit this); precompute inner "
-        "min/max steps as subquery/CTE columns and compose those",
-    )
-
-
-_CWS_HEAD = re.compile(r"\b(concatWithSeparator)(?:AssumeInjective)?\s*\(", re.I)
-
-
-def _rewrite_concat_with_separator(sql: str) -> str:
-    """NULL-propagation guard for concatWithSeparator. ClickHouse's
-    ``concatWithSeparator(sep, a, b, ...)`` returns NULL when ANY
-    argument (separator included) is NULL; Spark's ``concat_ws`` SKIPS
-    NULL arguments and returns '' for an all-NULL tail — same shape,
-    silently different rows: the least/greatest class, variadic with a
-    separator. Each user-written call becomes ``(CASE WHEN (sep) IS NULL
-    OR (a) IS NULL ... THEN NULL ELSE concat_ws((sep), (a), ...) END)``.
-    Arguments are evaluated twice, both row-local — the documented
-    least/greatest caveat (nondeterministic nullable arguments belong in
-    a subquery column, MIGRATION.md). ``AssumeInjective`` is CH's
-    GROUP-BY-elimination hint, semantics identical — translated the
-    same. Refuses with fewer than two arguments (CH rejects that arity)
-    and past 16 nested levels, where the doubling makes the emitted text
-    megabytes."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) < 2:
-            raise UnsupportedClickHouseSQL(
-                "concatWithSeparator needs a separator and at least "
-                "one argument"
-            )
-        return _null_guarded("concat_ws", [recurse(a) for a in args])
-
-    return _rewrite_calls(
-        sql,
-        _CWS_HEAD,
-        emit,
-        max_depth=16,
-        too_deep="concatWithSeparator nested more than 16 levels deep — "
-        "precompute inner concatenations as subquery/CTE columns",
-        unbalanced="unbalanced parentheses in concatWithSeparator()",
-    )
-
-
-_SUBSTR_HEAD = re.compile(r"\b(substringUTF8|substring|substr|mid)\s*\(", re.I)
-
-
-def _rewrite_substring_family(sql: str) -> str:
-    """Byte-vs-char closure for the substring family (the
-    length()/octet_length() silent-divergence class). ClickHouse's
-    substring/substr/mid slice BYTES of a String (substringUTF8 is its
-    character slicer); Spark's substring slices CHARACTERS — identical
-    on ASCII, silently different rows on multi-byte UTF-8. The
-    byte-true lowering routes through BINARY:
-    ``CAST(substring(CAST(s AS BINARY), o[, l]) AS STRING)`` —
-    MEASURED byte-exact in Spark for positive offsets, NEGATIVE offsets
-    (counted from the end in bytes: substring('привет', -4, 4) = 'ет'),
-    the 2-arg form, and NULL propagation; a slice landing mid-codepoint
-    yields the same invalid-UTF-8 byte run CH produces (Spark's
-    binary->string cast keeps bytes as-is). substringUTF8 lowers to
-    Spark's own (character) substring.
-
-    Refusals: wrong arity; a LITERAL offset 0 — Spark treats 0 as
-    position 1 (measured) while MySQL-family engines return '' there,
-    an engine-divergent edge no rewrite can make faithful (a runtime 0
-    from an expression is undetectable textually — MIGRATION.md
-    documents the >= 1 / negative-from-end operand domain); more than
-    32 nested levels."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) not in (2, 3):
-            raise UnsupportedClickHouseSQL(
-                f"{name}() takes (string, offset[, length]) — got "
-                f"{len(args)} argument(s)"
-            )
-        args = [recurse(a) for a in args]
-        if re.fullmatch(r"[+-]?0+", args[1]):
-            raise UnsupportedClickHouseSQL(
-                "substring offset 0 is an engine-divergent edge (Spark "
-                "treats 0 as position 1, measured; MySQL-family engines "
-                "return '') — offsets are 1-based, negatives count from "
-                "the end"
-            )
-        if name == "substringutf8":
-            return f"substring({', '.join(args)})"
-        tail = f", {args[2]}" if len(args) == 3 else ""
-        return (
-            f"CAST(substring(CAST({args[0]} AS BINARY), "
-            f"{args[1]}{tail}) AS STRING)"
-        )
-
-    return _rewrite_calls(
-        sql,
-        _SUBSTR_HEAD,
-        emit,
-        max_depth=32,
-        too_deep="substring calls nested more than 32 levels deep — "
-        "precompute inner slices as subquery/CTE columns",
-    )
-
-
-_CASE_HEAD = re.compile(r"\b(lowerUTF8|upperUTF8|lower|upper)\s*\(", re.I)
-_ASCII_UP = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_ASCII_LO = "abcdefghijklmnopqrstuvwxyz"
-
-
-def _rewrite_case_family(sql: str) -> str:
-    """ASCII-vs-Unicode closure for the case-folding family (the
-    substring/length class): ClickHouse's bare lower/upper convert
-    ASCII LATIN symbols ONLY (documented CH behavior — lower('ÄBC')
-    keeps the Ä) while Spark's lower/upper fold full Unicode — same
-    name, silently different rows on non-ASCII text. Bare spellings
-    lower to the exact ASCII fold ``translate(s, 'A..Z', 'a..z')``;
-    lowerUTF8/upperUTF8 (CH's Unicode folders) lower to Spark's own
-    lower/upper — documented caveat: both engines apply per-codepoint
-    case mapping but exotic codepoints with locale/1:N mappings
-    (dotted İ, ligatures) may differ; MIGRATION.md records it. Refuses
-    any arity but one and past 32 nested levels."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) != 1:
-            raise UnsupportedClickHouseSQL(
-                f"{name}() takes exactly one argument — got {len(args)}"
-            )
-        arg = recurse(args[0])
-        if name == "lower":
-            return f"translate({arg}, '{_ASCII_UP}', '{_ASCII_LO}')"
-        if name == "upper":
-            return f"translate({arg}, '{_ASCII_LO}', '{_ASCII_UP}')"
-        return f"{name.removesuffix('utf8')}({arg})"
-
-    return _rewrite_calls(
-        sql,
-        _CASE_HEAD,
-        emit,
-        max_depth=32,
-        too_deep="case-folding calls nested more than 32 levels deep — "
-        "precompute inner folds as subquery/CTE columns",
-    )
-
-
-_MEMBERSHIP_HEAD = re.compile(r"\b(has|indexOf)\s*\(", re.I)
-
-
-def _rewrite_membership(sql: str) -> str:
-    """NULL-as-a-value semantics for has/indexOf: ClickHouse processes
-    NULL AS A VALUE — has([NULL], NULL) = 1 and has([NULL, 1], 2) = 0
-    where Spark's array_contains returns NULL in BOTH (NULL value; NULL
-    element present but value absent); indexOf([1, NULL, 2], NULL) = 2
-    where array_position(a, NULL) is NULL. The <=> lambdas spell CH's
-    rule; the boolean-array array_position keeps CH's not-found 0
-    (measured). Refuses any arity but two and past 32 nested levels."""
-
-    def emit(name: str, args: list[str], recurse) -> str:
-        if len(args) != 2:
-            raise UnsupportedClickHouseSQL(
-                f"{name}() takes (array, value) — got {len(args)} argument(s)"
-            )
-        arr, val = recurse(args[0]), recurse(args[1])
-        if name == "has":
-            return f"exists({arr}, cdr_h_ -> cdr_h_ <=> ({val}))"
-        return (
-            f"array_position(transform({arr}, "
-            f"cdr_ix_ -> cdr_ix_ <=> ({val})), true)"
-        )
-
-    return _rewrite_calls(
-        sql,
-        _MEMBERSHIP_HEAD,
-        emit,
-        max_depth=32,
-        too_deep="has/indexOf calls nested more than 32 levels deep — "
-        "precompute inner lookups as subquery/CTE columns",
-    )
+    """Apply the call table to every call site in one walk."""
+    return _rewrite_calls(sql, _fused_weighted_levels(sql))
 
 
 _IDX_BASE = re.compile(r"([A-Za-z_][\w]*(?:\.[A-Za-z_][\w]*)*)\s*$")
@@ -3091,1039 +4042,6 @@ def _rewrite_brackets(sql: str) -> str:
             sql = sql[:pos] + f"array({inner})" + sql[end + 1 :]
 
 
-# formatDateTime: ClickHouse %-tokens -> Spark (Java DateTimeFormatter)
-# pattern letters. Only LITERAL format strings translate (the token map
-# needs the text); %M refuses outright — it means minute in older
-# ClickHouse and full month name in newer, so any translation silently
-# changes meaning for half the users.
-_FDT = re.compile(rf"\bformatDateTime\s*\(\s*{_ARG}\s*,\s*'([^']*)'\s*\)", re.I)
-_FDT_MAP = {
-    "Y": "yyyy",
-    "y": "yy",
-    "m": "MM",
-    "d": "dd",
-    "H": "HH",
-    "h": "hh",
-    "i": "mm",
-    "S": "ss",
-    "p": "a",
-    "j": "DDD",
-    "F": "yyyy-MM-dd",
-    "T": "HH:mm:ss",
-}
-
-
-def _fdt_pattern(fmt: str) -> str:
-    """CH % format -> Java pattern; literal runs containing letters are
-    single-quoted (Java treats bare letters as pattern tokens)."""
-    out: list[str] = []
-    lit: list[str] = []
-
-    def flush() -> None:
-        if lit:
-            # quote EVERY literal run: letters are pattern tokens in
-            # Java, and [ ] # { } are reserved (optional-section /
-            # future-use) — [ ] would be silently DROPPED from output;
-            # quoting safe chars too is always legal
-            s = "".join(lit)
-            out.append("'" + s.replace("'", "''") + "'")
-            lit.clear()
-
-    i = 0
-    while i < len(fmt):
-        c = fmt[i]
-        if c == "%":
-            if i + 1 >= len(fmt):
-                raise UnsupportedClickHouseSQL("dangling % in formatDateTime")
-            t = fmt[i + 1]
-            if t == "%":
-                lit.append("%")
-                i += 2
-                continue
-            if t == "M":
-                raise UnsupportedClickHouseSQL(
-                    "formatDateTime %M is minute in older ClickHouse and "
-                    "month NAME in newer — write %i (minute) or %m (month)"
-                )
-            if t not in _FDT_MAP:
-                raise UnsupportedClickHouseSQL(
-                    f"formatDateTime token %{t} has no mapped Spark pattern"
-                )
-            flush()
-            out.append(_FDT_MAP[t])
-            i += 2
-        else:
-            lit.append(c)
-            i += 1
-    flush()
-    return "".join(out)
-
-
-def _rewrite_format_datetime(sql: str) -> str:
-    # positions from the masked copy, group CONTENT from the raw string
-    # (group 2 IS a literal — masked it would be all blanks)
-    def repl(m: "re.Match[str]", raw: str) -> str:
-        expr = raw[slice(*m.span(1))]
-        pattern = _fdt_pattern(raw[slice(*m.span(2))])
-        return f"date_format({expr}, '{pattern.replace(chr(39), chr(39) * 2)}')"
-
-    return _sub_outside_literals(_FDT, repl, sql)
-
-
-# parseDateTime family (r14 wave 2 — previously opaque unresolved-
-# function errors): CH parseDateTime uses the SAME MySQL-style % tokens
-# formatDateTime uses, so the _fdt_pattern map runs in reverse gear
-# feeding to_timestamp; the InJodaSyntax forms pass their pattern
-# through (ClickHouse's "Joda" grammar and Spark's datetime-pattern
-# grammar are the same letter family). OrNull -> try_to_timestamp,
-# OrZero -> coalesce(try, epoch) — CH's 1970-01-01 00:00:00 default.
-# The BARE form THROWS on a parse miss regardless of
-# spark.sql.ansi.enabled (ADVICE r14 — previously it lowered to plain
-# to_timestamp, which with ANSI off silently returned NULL where CH
-# throws): CASE over try_to_timestamp with an explicit raise_error,
-# mirroring _base64_decode. The guard evaluates expr twice —
-# row-local and fine for pure expressions (the concatWithSeparator /
-# least/greatest precedent, MIGRATION.md). Timezone 3-arg forms fall
-# to the residual refusal.
-_PDT = re.compile(
-    rf"\bparseDateTime(InJodaSyntax)?(OrNull|OrZero)?\s*"
-    rf"\(\s*{_ARG}\s*,\s*'([^']*)'\s*\)",
-    re.I,
-)
-
-
-def _rewrite_parse_datetime(sql: str) -> str:
-    def repl(m: "re.Match[str]", raw: str) -> str:
-        joda = m.group(1) is not None
-        suffix = (m.group(2) or "").lower()
-        expr = raw[slice(*m.span(3))]
-        fmt = raw[slice(*m.span(4))]
-        pattern = fmt if joda else _fdt_pattern(fmt)
-        pat_sql = pattern.replace("'", "''")
-        if suffix == "ornull":
-            return f"try_to_timestamp({expr}, '{pat_sql}')"
-        if suffix == "orzero":
-            return (
-                f"coalesce(try_to_timestamp({expr}, '{pat_sql}'), "
-                "TIMESTAMP '1970-01-01 00:00:00')"
-            )
-        # bare form: CH THROWS on a parse miss, but Spark's
-        # to_timestamp only throws under spark.sql.ansi.enabled —
-        # with ANSI off it silently returns NULL. Spell the throw
-        # explicitly (ADVICE r14), mirroring _base64_decode:
-        # NULL input passes through, a non-NULL miss raises.
-        return (
-            f"(CASE WHEN ({expr}) IS NULL THEN "
-            f"CAST(NULL AS TIMESTAMP) "
-            f"WHEN try_to_timestamp({expr}, '{pat_sql}') IS NULL "
-            f"THEN CAST(raise_error(concat('parseDateTime: cannot "
-            f"parse ', CAST(({expr}) AS STRING))) AS TIMESTAMP) "
-            f"ELSE try_to_timestamp({expr}, '{pat_sql}') END)"
-        )
-
-    return _sub_outside_literals(_PDT, repl, sql)
-
-
-# ---- dateDiff / age / extract(haystack, re) — the r12 datetime wave ----
-# CH dateDiff counts UNIT-BOUNDARY CROSSINGS (DateDiff in
-# src/Functions/dateDiff.cpp, public ClickHouse source: both operands
-# convert to the unit's relative ordinal and subtract, so
-# dateDiff('day', 23:59:59, next-day 00:01) = 1). That is NOT Spark
-# timestampdiff's complete-unit count — but on unit-TRUNCATED operands
-# the two coincide, so the lowering is
-#   timestampdiff(U, date_trunc('U', s), date_trunc('U', e))
-# (verified per-unit against hand traces; exact — on first-of-unit
-# operands even Spark's months_between-based MONTH counting is an
-# exact integer). TIMEZONE PRECONDITION (review finding, documented in
-# MIGRATION.md): the sub-day units count CIVIL wall-clock ordinals,
-# while ClickHouse's toRelativeHour/Minute/SecondNum count PHYSICAL
-# epoch ordinals — identical under UTC or any fixed-offset session
-# timezone (this repo's harness default), but ACROSS a DST transition
-# under a DST-observing session timezone the civil count includes the
-# shifted hour (spring-forward 01:30->03:30 is 2 civil hours, 1
-# physical). A physical lowering via unix_timestamp is NOT a fix:
-# Spark's unix_timestamp(TIMESTAMP_NTZ) ignores the session timezone
-# (measured: interprets UTC), so it is config-fragile rather than
-# exact. Run with spark.sql.session.timeZone=UTC for CH parity on
-# sub-day units. CH age()
-# counts COMPLETE elapsed units and maps to timestampdiff for the
-# FIXED-length units (second/minute/hour/day/week — exact duration
-# arithmetic on both sides). age month/quarter/year TRANSLATE since r13
-# (VERDICT r12 #4) as the rule spelled directly in integer date
-# arithmetic — 12*(y2-y1) + (m2-m1) minus a (day, time-of-day) tuple
-# borrow, DIV 3/12 for quarter/year — because Spark's
-# timestampdiff(MONTH) floors months_between's (day2-day1)/31 fraction,
-# which at month-end edges (age('month', Jan31 23:59, Mar01) -> CH 1 via
-# its remainder-tuple rule, Spark 0) disagrees with ClickHouse's
-# complete-month counting — measured, not hypothetical. 'week' refuses
-# for dateDiff (ClickHouse's week ordinal follows toRelativeWeekNum's
-# Sunday convention while Spark's date_trunc('WEEK') starts Monday — a
-# textual map would move rows across the cut) but translates for age
-# (complete 7-day periods involve no boundary convention). Sub-second
-# units refuse.
-#
-# extract(haystack, 'pattern') — CH's regex fragment extractor — is the
-# WORST collision class: Spark parses the same comma spelling as ANSI
-# datetime EXTRACT (field, source), so an untranslated call either
-# errors misleadingly (INVALID_EXTRACT_FIELD) or, with a column named
-# like a field, silently extracts a date part. Literal patterns lower
-# to regexp_extract(haystack, pattern, g) with g = 1 when the pattern
-# has a capturing group (CH "extracts the first subpattern") else 0;
-# (?...) constructs refuse (RE2/Java group+flag syntaxes diverge), and
-# any surviving comma-form extract refuses via a depth-aware scan (the
-# ANSI `EXTRACT(f FROM x)` form has no top-level comma and passes).
-# Pattern flavor: CH is RE2, Spark is Java regex — a domain superset
-# for the accepted subset (no (?...), no backrefs in patterns; classes,
-# quantifiers, alternation, anchors agree).
-_DD_UNIT = {
-    "year": "YEAR", "yyyy": "YEAR", "yy": "YEAR",
-    "quarter": "QUARTER", "qq": "QUARTER", "q": "QUARTER",
-    "month": "MONTH", "mm": "MONTH", "m": "MONTH",
-    "day": "DAY", "dd": "DAY", "d": "DAY",
-    "hour": "HOUR", "hh": "HOUR", "h": "HOUR",
-    "minute": "MINUTE", "mi": "MINUTE", "n": "MINUTE",
-    "second": "SECOND", "ss": "SECOND", "s": "SECOND",
-}
-_DD_WEEK = ("week", "wk", "ww")
-_DATEDIFF = re.compile(
-    rf"\b(dateDiff|date_diff|age)\s*\(\s*'([^']*)'\s*,\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-    re.I,
-)
-_EXTRACT_RX = re.compile(rf"\bextract\s*\(\s*{_ARG}\s*,\s*'([^']*)'\s*\)", re.I)
-# r16 wave 5: countMatches counts non-overlapping matches of the WHOLE
-# pattern (group index 0 always), and regexpExtract is Spark's
-# regexp_extract under a CH camelCase name — both share extract()'s
-# pattern-dialect guards (_extract_group_index refuses the
-# backslash/class/(?...) arms where the same literal denotes different
-# regexes in the two engines)
-_COUNT_MATCHES_RX = re.compile(
-    rf"\bcountMatches\s*\(\s*{_ARG}\s*,\s*'([^']*)'\s*\)", re.I
-)
-_REGEXP_EXTRACT_RX = re.compile(
-    rf"\bregexpExtract\s*\(\s*{_ARG}\s*,\s*'([^']*)'\s*,\s*(\d+)\s*\)",
-    re.I,
-)
-_EXTRACT_ALL_RX = re.compile(
-    rf"\bextractAll\s*\(\s*{_ARG}\s*,\s*'([^']*)'\s*\)", re.I
-)
-
-
-def _extract_group_index(pat: str) -> int:
-    """1 when the pattern has a capturing group (CH extract returns the
-    FIRST subpattern), else 0 — scanned class-aware. BACKSLASH-bearing
-    patterns refuse outright (review finding, r12): the two engines'
-    STRING-LITERAL escape dialects diverge before the regex engine ever
-    sees the text — CH unescapes \\x41 to 'A' and preserves unknown
-    escapes, Spark's unescaper has no \\x and drops the backslash from
-    unknown escapes — so the same literal denotes different regexes
-    ('\\x41+' means A-runs in CH and 'x41' repetitions in Spark), and
-    group-ness judged on the literal (\\( vs () would be wrong anyway.
-    Without backslashes the literal IS the regex on both engines, so
-    the scan below is exact. (?...) constructs refuse (RE2/Java
-    group+flag syntaxes diverge)."""
-    if "\\" in pat:
-        raise UnsupportedClickHouseSQL(
-            "extract() pattern contains backslash escapes — ClickHouse "
-            "and Spark unescape string literals differently (\\x41 vs "
-            "x41; \\( group-ness flips), so the same text denotes "
-            "different regexes; use Spark regexp_extract directly with "
-            "a Spark-escaped pattern"
-        )
-    in_class = False
-    saw_capture = False
-    for i, c in enumerate(pat):
-        if in_class:
-            if c == "[":
-                # Java parses [a[b]c] as a nested-class UNION {a,b,c};
-                # RE2 treats the inner '[' as a literal — backslash-free
-                # text that still denotes different regexes (review
-                # finding); refuse like the (?...) arm
-                raise UnsupportedClickHouseSQL(
-                    "extract() pattern has '[' inside a character class "
-                    "— Java reads it as a nested class union, RE2 as a "
-                    "literal; rewrite the class or use Spark "
-                    "regexp_extract directly"
-                )
-            if c == "]":
-                in_class = False
-        elif c == "[":
-            in_class = True
-        elif c == "(":
-            if i + 1 < len(pat) and pat[i + 1] == "?":
-                raise UnsupportedClickHouseSQL(
-                    "extract() pattern uses a (?...) group — RE2 and Java "
-                    "group/flag syntaxes diverge there; use a plain "
-                    "capturing group or Spark regexp_extract directly"
-                )
-            saw_capture = True
-    return 1 if saw_capture else 0
-
-
-def _has_toplevel_comma_call(masked: str, name: str) -> bool:
-    # does any well-formed `name(...)` call carry a top-level comma?
-    for m, close in _calls(masked, re.compile(rf"\b{name}\s*\(", re.I)):
-        try:
-            if close is not None and len(
-                _split_top_level_args(masked[m.end() : close - 1])
-            ) > 1:
-                return True
-        except UnsupportedClickHouseSQL:
-            pass  # unbalanced brackets — not a well-formed call
-    return False
-
-
-def _rewrite_datetime_diff(sql: str) -> str:
-    def dd_repl(m: "re.Match[str]", raw: str) -> str:
-        fname = m.group(1).lower()
-        unit = raw[slice(*m.span(2))].strip().lower()
-        s = raw[slice(*m.span(3))].strip()
-        e = raw[slice(*m.span(4))].strip()
-        is_age = fname == "age"
-        if unit in _DD_WEEK:
-            if not is_age:
-                raise UnsupportedClickHouseSQL(
-                    "dateDiff('week', ...) — ClickHouse counts "
-                    "Sunday-based toRelativeWeekNum boundaries, Spark's "
-                    "week starts Monday; count day boundaries "
-                    "(dateDiff('day', ...) then divide) or truncate "
-                    "explicitly with date_trunc"
-                )
-            u = "WEEK"
-        else:
-            u = _DD_UNIT.get(unit)
-        if is_age and u in ("MONTH", "QUARTER", "YEAR"):
-            # r13 (VERDICT r12 #4, refusal turned translation): CH's
-            # complete-month rule is EXACT integer date arithmetic —
-            # base = 12*(y2-y1) + (m2-m1), minus 1 when the
-            # (day, time-of-day) tuple of the LATER operand is
-            # lexicographically below the earlier one's (dateDiff.cpp's
-            # age arm compares components; NO month-end clamping:
-            # age('month', Jan31, Feb29) = 0 where Postgres/DuckDB
-            # clamp to 1 — pinned in the edge-matrix test). The r12
-            # refusal existed because Spark's timestampdiff(MONTH)
-            # floors months_between's (d2-d1)/31 FRACTION (Jan31 23:59
-            # -> Mar01: CH 1, timestampdiff 0); spelling the rule
-            # directly avoids months_between entirely. Sign-symmetric:
-            # for e < s the borrow flips to a carry (CH negates the
-            # swapped-operand result). quarter/year are the month count
-            # DIV 3 / DIV 12 (Spark DIV truncates toward zero, matching
-            # the complete-unit count in both directions). The operands
-            # splice several times — row-local double evaluation, the
-            # least/greatest caveat class; the seconds component keeps
-            # its microsecond fraction via extract(SECOND ...), which
-            # emits no comma-form extract (the CH-extract scan below
-            # only fires on top-level-comma calls).
-            mb = f"((year({e}) - year({s})) * 12 + (month({e}) - month({s})))"
-            te = (
-                f"struct(day({e}), hour({e}), minute({e}), "
-                f"extract(SECOND FROM {e}))"
-            )
-            ts_ = (
-                f"struct(day({s}), hour({s}), minute({s}), "
-                f"extract(SECOND FROM {s}))"
-            )
-            months = (
-                f"(CASE WHEN ({e}) >= ({s}) THEN {mb} - "
-                f"(CASE WHEN {te} < {ts_} THEN 1 ELSE 0 END) "
-                f"ELSE {mb} + "
-                f"(CASE WHEN {te} > {ts_} THEN 1 ELSE 0 END) END)"
-            )
-            if u == "MONTH":
-                return months
-            return f"({months} DIV {3 if u == 'QUARTER' else 12})"
-        if u is None:
-            raise UnsupportedClickHouseSQL(
-                f"{fname} unit {unit!r} — year/quarter/month/day/hour/"
-                "minute/second translate (+ week for age); sub-second "
-                "units have no boundary-exact Spark twin here"
-            )
-        if is_age:
-            return f"timestampdiff({u}, {s}, {e})"
-        return (
-            f"timestampdiff({u}, date_trunc('{u}', {s}), "
-            f"date_trunc('{u}', {e}))"
-        )
-
-    def extract_repl(m: "re.Match[str]", raw: str) -> str:
-        hay = raw[slice(*m.span(1))].strip()
-        pat = raw[slice(*m.span(2))]
-        return f"regexp_extract({hay}, '{pat}', {_extract_group_index(pat)})"
-
-    def extract_all_repl(m: "re.Match[str]", raw: str) -> str:
-        # r15 wave 3b: extractAll shares extract()'s group rule (all
-        # matches of the FIRST subpattern, else of the whole pattern)
-        # and its backslash/class guards — _extract_group_index
-        # refuses the divergent-regex-dialect arms
-        hay = raw[slice(*m.span(1))].strip()
-        pat = raw[slice(*m.span(2))]
-        return (
-            f"regexp_extract_all({hay}, '{pat}', "
-            f"{_extract_group_index(pat)})"
-        )
-
-    out = _sub_outside_literals(_DATEDIFF, dd_repl, sql)
-    def count_matches_repl(m: "re.Match[str]", raw: str) -> str:
-        hay = raw[slice(*m.span(1))].strip()
-        pat = raw[slice(*m.span(2))]
-        _extract_group_index(pat)  # dialect guards only; count uses 0
-        return f"size(regexp_extract_all({hay}, '{pat}', 0))"
-
-    def regexp_extract_repl(m: "re.Match[str]", raw: str) -> str:
-        hay = raw[slice(*m.span(1))].strip()
-        pat = raw[slice(*m.span(2))]
-        idx = m.group(3)
-        _extract_group_index(pat)  # dialect guards; CH passes idx through
-        return f"regexp_extract({hay}, '{pat}', {idx})"
-
-    out = _sub_outside_literals(_COUNT_MATCHES_RX, count_matches_repl, out)
-    out = _sub_outside_literals(_REGEXP_EXTRACT_RX, regexp_extract_repl, out)
-    out = _sub_outside_literals(_EXTRACT_ALL_RX, extract_all_repl, out)
-    out = _sub_outside_literals(_EXTRACT_RX, extract_repl, out)
-    masked = _mask_literals(out)
-    # leftovers the regexes could not parse must refuse, not fall
-    # through: a comma-form extract PARSES in Spark as ANSI datetime
-    # extraction (wrong semantics), and a unit-literal dateDiff/age
-    # (4-arg timezone form, nested args) would hit an opaque arg-count
-    # error
-    if _has_toplevel_comma_call(masked, "extract"):
-        raise UnsupportedClickHouseSQL(
-            "could not rewrite a comma-form extract(haystack, pattern) "
-            "(non-literal or quote-bearing pattern?) — Spark would parse "
-            "it as ANSI datetime EXTRACT; use regexp_extract directly"
-        )
-    if re.search(r"\b(?:dateDiff|date_diff|age)\s*\(\s*'", masked, re.I):
-        raise UnsupportedClickHouseSQL(
-            "could not rewrite dateDiff/age (4-arg timezone form or "
-            "nested arguments?) — flatten the call; the 3-arg "
-            "unit-literal form translates"
-        )
-    return out
-
-
-# replaceRegexpAll: the PATTERN dialects are close (RE2 vs Java), but
-# the REPLACEMENT dialects are not — ClickHouse backreferences are \1
-# while Java/Spark uses $1, treats \1 as a literal digit, and treats a
-# bare $ as a group reference. A literal replacement (no \ or $)
-# translates exactly; anything else refuses rather than silently
-# rewriting the wrong occurrences.
-_REPL_REGEXP = re.compile(
-    rf"\breplaceRegexpAll\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*,\s*'([^']*)'\s*\)", re.I
-)
-
-
-def _rewrite_replace_regexp(sql: str) -> str:
-    # positions from the masked copy, group content from the raw string
-    # (the replacement group IS a literal — masking would both blank it
-    # and hide the \/$ dialect trap this function exists to refuse)
-    def repl(m: "re.Match[str]", raw: str) -> str:
-        replacement = raw[slice(*m.span(3))]
-        if "\\" in replacement or "$" in replacement:
-            raise UnsupportedClickHouseSQL(
-                "replaceRegexpAll replacement contains \\ or $ — CH "
-                "backreferences are \\1 but Spark's are $1 (and a bare $ "
-                "is a group reference); rewrite the replacement in "
-                "Spark's regexp_replace dialect"
-            )
-        hay, pat_ = raw[slice(*m.span(1))], raw[slice(*m.span(2))]
-        return f"regexp_replace({hay}, {pat_}, '{replacement}')"
-
-    return _sub_outside_literals(_REPL_REGEXP, repl, sql)
-
-
-# ---- quantile / median / topK family (parametric aggregates) ----
-# Accepted forms and their Spark spellings (every other member of the
-# family refuses via _REFUSALS, and any surviving spelling via
-# _RESIDUALS):
-#
-#   quantile(p)(x), quantile(x), median(x)   -> percentile(x, p)  [p=0.5]
-#   quantiles(p1, ..., pk)(x)                -> percentile(x, array(p...))
-#   quantileExact(p)(x), medianExact(x)      -> CH's exact nearest-rank
-#   quantilesExact(p1, ..., pk)(x)           -> array(<exact per level>)
-#   topK(N)(x)                               -> exact frequency top-N
-#
-# Semantics (checked against ClickHouse's own definitions):
-#  * CH quantile() is an 8192-element reservoir sketch: for groups that
-#    fit the reservoir it linear-interpolates with the SAME index
-#    formula as Spark percentile / DuckDB quantile_cont (p * (n-1));
-#    above that it is nondeterministic subsampling. percentile() is the
-#    deterministic refinement of that contract.
-#  * CH quantileExact() returns the element at 0-based index
-#    floor(p * n) clamped to n-1 (QuantileExact::getImpl) — NOT
-#    percentile_disc's ceil(p*n)-1 — so the rewrite spells CH's formula
-#    directly over array_sort(collect_list); the index clamps to >= 1
-#    (count=0 would otherwise hit Spark's INVALID_INDEX_OF_ZERO — try_
-#    only forgives out-of-bounds) so an all-NULL group yields NULL.
-#  * CH topK(N) returns the ~N most frequent values, frequency-
-#    descending, tie order unspecified; the rewrite computes EXACT
-#    frequencies with a value-ascending tie-break (deterministic
-#    refinement of the approximate contract).
-# The collect_list spellings carry the whole group in memory —
-# exactness' honest cost at scale; heavy_hitters / approx_quantiles
-# (bounded sketches) are the 100 TB paths the refusal hints name.
-
-_NUM_LIT = r"\d+(?:\.\d+)?(?:[eE][+-]?\d+)?"
-_QUANT_PARAM = re.compile(
-    rf"\b(quantiles?)(Exact)?\s*\(\s*({_NUM_LIT}(?:\s*,\s*{_NUM_LIT})*)\s*\)"
-    rf"\s*\(\s*{_ARG}\s*\)",
-    re.I,
-)
-_QUANT_BARE = re.compile(
-    rf"\b(?:quantile|median)(Exact)?\s*\(\s*{_ARG}\s*\)(?!\s*\()", re.I
-)
-_QUANT_WEIGHTED = re.compile(
-    rf"\b(quantiles?)ExactWeighted\s*\(\s*({_NUM_LIT}(?:\s*,\s*{_NUM_LIT})*)"
-    rf"\s*\)\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)",
-    re.I,
-)
-_MEDIAN_WEIGHTED = re.compile(
-    rf"\bmedianExactWeighted\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)(?!\s*\()", re.I
-)
-_QUANT_RANK = re.compile(
-    rf"\b(quantiles?)Exact(Low|High|Inclusive|Exclusive)\s*"
-    rf"\(\s*({_NUM_LIT}(?:\s*,\s*{_NUM_LIT})*)\s*\)"
-    rf"\s*\(\s*{_ARG}\s*\)",
-    re.I,
-)
-_QUANT_RANK_BARE = re.compile(
-    rf"\b(?:quantileExact(Low|High|Inclusive|Exclusive)"
-    rf"|medianExact(Low|High))\s*\(\s*{_ARG}\s*\)(?!\s*\()",
-    re.I,
-)
-_TOPK = re.compile(rf"\btopK\s*\(\s*(\d+)\s*\)\s*\(\s*{_ARG}\s*\)", re.I)
-_TOPK_WEIGHTED = re.compile(
-    rf"\btopKWeighted\s*\(\s*(\d+)\s*\)\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-)
-_AVG_WEIGHTED = re.compile(
-    rf"\bavgWeighted\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", re.I
-)
-# uniqUpTo(N)(x): exact count-distinct saturating at N+1 — CH's
-# documented contract, spelled exactly with LEAST
-_UNIQ_UP_TO = re.compile(
-    rf"\buniqUpTo\s*\(\s*(\d+)\s*\)\s*\(\s*{_ARG}\s*\)", re.I
-)
-
-
-def _exact_index(p: str) -> str:
-    # CH's 0-based floor(p*n) as a 1-based index, clamped to [1, n].
-    # The >= 1 clamp: an all-NULL group has count(x) = 0, making the
-    # unclamped index least(floor(p*0)+1, 0) = 0, and Spark's
-    # try_element_at only suppresses OUT-OF-BOUNDS, not index zero — it
-    # raises INVALID_INDEX_OF_ZERO. At index 1 over the empty collected
-    # list, try_element_at genuinely returns NULL (CH's answer).
-    return (
-        f"greatest(least(CAST(floor({p} * count({{x}})) AS INT) + 1, "
-        f"CAST(count({{x}}) AS INT)), 1)"
-    )
-
-
-def _interp_quantile_expr(x: str, p: str) -> str:
-    """Singular quantile()/median()/quantileExactInclusive lowering: the
-    R-7 linear interpolation at h = p*(n-1) over the sorted collected
-    list — BIT-IDENTICAL to Spark's ``percentile(x, p)`` aggregate (same
-    double position arithmetic, same (hi-pos)*lo_key + (pos-lo)*hi_key
-    rounding order, same equal-keys and integral-position shortcuts,
-    NULL for empty/all-NULL groups; verified equal over every fixture
-    column x level grid at sf0.1).
-
-    Why not percentile() itself (r16 optimization): Percentile
-    accumulates an OpenHashMap<value, count> per group — on a
-    HIGH-CARDINALITY double column that is one boxed map entry per
-    distinct value (measured 1.25 s vs 0.35 s for the same median at
-    sf0.1), with the same unbounded-state posture as the collected
-    list. The plural quantiles() lowering keeps percentile(x, array):
-    its per-group state is bounded by the column's distinct count,
-    which is the better trade for the low-cardinality columns plural
-    scans here. The sketch path for 100 TB remains approx_quantiles /
-    quantile_state_merge either way."""
-    pos = f"(CAST({p} AS DOUBLE) * CAST(n - 1 AS BIGINT))"
-    lo = f"CAST(FLOOR{pos} AS INT)"
-    hi = f"CAST(CEIL{pos} AS INT)"
-    body = (
-        f"CASE WHEN n = 0 THEN CAST(NULL AS DOUBLE) "
-        f"WHEN {lo} = {hi} THEN element_at(a, {lo} + 1) "
-        f"WHEN element_at(a, {lo} + 1) = element_at(a, {hi} + 1) "
-        f"THEN element_at(a, {lo} + 1) "
-        f"ELSE (CAST({hi} AS DOUBLE) - {pos}) * element_at(a, {lo} + 1) "
-        f"+ ({pos} - CAST({lo} AS DOUBLE)) * element_at(a, {hi} + 1) END"
-    )
-    return (
-        f"element_at(transform(array(sort_array(collect_list("
-        f"CAST({x} AS DOUBLE)))), a -> "
-        f"element_at(transform(array(size(a)), n -> {body}), 1)), 1)"
-    )
-
-
-def _exact_quantile_expr(x: str, p: str, idx_fn=None) -> str:
-    # idx_fn parameterizes the rank rule (see _exact_quantiles_plural_expr)
-    # sort_array, not array_sort: collect_list never emits NULL elements,
-    # and on NULL-free input the two produce the identical ascending
-    # order (Spark's NaN-largest double ordering on both paths) — but
-    # array_sort evaluates its default lambda comparator INTERPRETED per
-    # comparison, while sort_array sorts with the native type ordering
-    # (measured at sf0.1: the 3-exact-quantile query's final stage
-    # dropped ~2x when the 200k-element per-group sorts switched).
-    idx_fn = idx_fn or _exact_index
-    return (
-        f"try_element_at(sort_array(collect_list({x})), "
-        + idx_fn(p).format(x=x)
-        + ")"
-    )
-
-
-def _exact_quantiles_plural_expr(x: str, levels: list[str], idx_fn=None) -> str:
-    # plural form: ONE sorted array let-bound via the 1-element-array
-    # transform trick, indexed once per level — the sort runs once
-    # (VERDICT r10 #5). Measured caveat for the SINGULAR form: separate
-    # output columns cannot share a let binding in flat SQL, but the
-    # per-group re-sort is noise anyway — at sf0.1 a 3-exact-quantile
-    # query times identically to a 1-exact-quantile query (~0.85 s both;
-    # the collect_list/percentile aggregation buffers dominate).
-    # idx_fn parameterizes the rank rule (default quantileExact's
-    # floor(p*n); _exact_index_low for quantilesExactLow) so the
-    # rank-rule variants reuse THIS spelling instead of a copy.
-    idx_fn = idx_fn or _exact_index
-    idx = ", ".join(
-        f"try_element_at(a, {idx_fn(p).format(x=x)})" for p in levels
-    )
-    # sort_array over the NULL-free collected list — see
-    # _exact_quantile_expr for the native-vs-interpreted-sort rationale
-    return (
-        f"element_at(transform(array(sort_array(collect_list({x}))), "
-        f"a -> array({idx})), 1)"
-    )
-
-
-def _exact_index_low(p: str) -> str:
-    # CH QuantileExactLow (QuantileExact.h, public ClickHouse source):
-    # level == 0.5 EXACTLY takes the LOWER median — 0-based (n/2)-1 for
-    # even n, (n-1)/2 for odd — i.e. 1-based (n+1) DIV 2 (= ceil(n/2));
-    # every OTHER level uses quantileExact's own floor(p*n) rule (the
-    # source comment's example: level 0.1 over 10 elements -> array[1]).
-    # The float() comparison mirrors CH's Float64 `level == 0.5` test
-    # on the parsed literal. Same >= 1 clamp as _exact_index (all-NULL
-    # group -> index 1 over the empty list -> NULL).
-    if float(p) == 0.5:
-        return "greatest(CAST((count({x}) + 1) DIV 2 AS INT), 1)"
-    return _exact_index(p)
-
-
-def _check_level_range(levels: list[str]) -> None:
-    # ClickHouse throws PARAMETER_OUT_OF_BOUND for any quantile level
-    # outside [0, 1] (every quantile* function) — refuse rather than
-    # silently clamp to the first/last element
-    for p in levels:
-        if not 0.0 <= float(p) <= 1.0:
-            raise UnsupportedClickHouseSQL(
-                f"quantile level {p} is outside [0, 1] — ClickHouse "
-                "throws PARAMETER_OUT_OF_BOUND"
-            )
-
-
-def _check_exclusive_levels(levels: list[str]) -> None:
-    for p in levels:
-        if float(p) in (0.0, 1.0):
-            raise UnsupportedClickHouseSQL(
-                "quantileExactExclusive cannot interpolate levels 0 and 1 "
-                "(ClickHouse throws BAD_ARGUMENTS there) — use "
-                "quantileExact / min / max"
-            )
-
-
-def _exclusive_expr(x: str, levels: list[str], plural: bool = False) -> str:
-    """CH quantileExactExclusive (QuantileExact.h getFloatImpl; Excel
-    PERCENTILE.EXC / R-6 / SciPy-(0,0)): h = level * (n + 1),
-    k = floor(h); k < 1 -> first element, k >= n -> last, else
-    a[k] + (h - k) * (a[k+1] - a[k]) over the 1-based sorted array,
-    all in Float64 (the input casts to DOUBLE — CH returns Float64
-    regardless of input type). h is computed in exact DECIMAL here
-    where CH multiplies in Float64 — the same one-rank boundary caveat
-    as the weighted threshold, documented in MIGRATION.md. Levels 0/1
-    refuse upstream (CH throws). All-NULL group -> NULL (CH Nullable
-    semantics; the raw NaN arm of getFloatImpl is unreachable through
-    Nullable aggregation). The plural form shares ONE sort and ONE
-    size binding across all levels and returns an array even with a
-    single level (CH's quantiles* contract)."""
-
-    def one(p: str) -> str:
-        k = f"CAST(floor({p} * (n + 1)) AS INT)"
-        frac = f"CAST({p} * (n + 1) - floor({p} * (n + 1)) AS DOUBLE)"
-        return (
-            f"CASE WHEN n = 0 THEN CAST(NULL AS DOUBLE) "
-            f"WHEN {k} < 1 THEN element_at(a, 1) "
-            f"WHEN {k} >= n THEN element_at(a, n) "
-            f"ELSE element_at(a, {k}) + {frac} * "
-            f"(element_at(a, {k} + 1) - element_at(a, {k})) END"
-        )
-
-    assert plural or len(levels) == 1, levels  # see _exact_rank_rule_expr
-    body = (
-        one(levels[0])
-        if not plural
-        else f"array({', '.join(one(p) for p in levels)})"
-    )
-    # sort_array over the NULL-free collected list — see
-    # _exact_quantile_expr for the native-vs-interpreted-sort rationale
-    return (
-        f"element_at(transform(array(sort_array(collect_list("
-        f"CAST({x} AS DOUBLE)))), a -> "
-        f"element_at(transform(array(size(a)), n -> {body}), 1)), 1)"
-    )
-
-
-def _exact_rank_rule_expr(
-    x: str, levels: list[str], rule: str, plural: bool = False
-) -> str:
-    """The four exact rank-rule variants (refusal removal, VERDICT r11
-    #5) — same sorted-array machinery as quantileExact, different rank
-    formula (all from QuantileExact.h, public ClickHouse source):
-
-      Low       — lower median at level 0.5; floor(p*n) otherwise
-                  (_exact_index_low parameterizes the shared spellings).
-      High      — higher median at level 0.5, which COINCIDES with
-                  quantileExact's floor(p*n)+1 at every n parity
-                  (even: n/2+1 both; odd: (n+1)/2 both), and the other
-                  levels share quantileExact's branch verbatim — so
-                  High delegates to exactly the quantileExact spelling.
-      Inclusive — Excel PERCENTILE.INC / R-7: h = p*(n-1) linear
-                  interpolation = Spark percentile / DuckDB
-                  quantile_cont, exact over all values (CH evaluates
-                  this one exactly too — no reservoir), so the lowering
-                  is the function's own definition, not a refinement.
-      Exclusive — Excel PERCENTILE.EXC / R-6: see _exclusive_expr.
-
-    A PLURAL spelling returns an array even with one level (CH returns
-    Array(T) for every quantiles* form — a scalar here would be a
-    silent dtype mistranslation); singular spellings return the scalar.
-    Plural forms share ONE sort across levels (the
-    _exact_quantiles_plural_expr let trick). Levels outside [0, 1]
-    refuse (CH PARAMETER_OUT_OF_BOUND)."""
-    rule = rule.lower()
-    # singular callers must pre-split to one level — silently computing
-    # only levels[0] would be a wrong-result hazard for future callers
-    assert plural or len(levels) == 1, levels
-    _check_level_range(levels)
-    if rule == "inclusive":
-        if not plural:
-            return _interp_quantile_expr(x, levels[0])
-        return f"percentile({x}, array({', '.join(levels)}))"
-    if rule == "exclusive":
-        _check_exclusive_levels(levels)
-        return _exclusive_expr(x, levels, plural=plural)
-    idx_fn = _exact_index_low if rule == "low" else _exact_index
-    if not plural:
-        return _exact_quantile_expr(x, levels[0], idx_fn=idx_fn)
-    return _exact_quantiles_plural_expr(x, levels, idx_fn=idx_fn)
-
-
-def _exact_weighted_expr(x: str, w: str, p: str) -> str:
-    """CH quantileExactWeighted(p)(x, w) (QuantileExactWeighted::getImpl,
-    public ClickHouse source): sort values ascending, accumulate weights,
-    return the FIRST value whose cumulative weight reaches the threshold
-    floor(p * total_weight). Deterministic refinement documented in
-    MIGRATION.md: weights are cast to BIGINT and assumed positive (CH's
-    zero-weight edge returns the first element regardless of p; the
-    threshold here clamps to >= 1, skipping zero-weight prefixes), and
-    NULL value/weight pairs are skipped (CH Nullable semantics).
-
-    Spelled as one pass over array_sort(collect_list(struct(v, w))) with
-    the 1-element-array let trick (the _topk_expr precedent): the sorted
-    list binds to `a`, the total weight to `tot`, and a 2-field
-    (sum, result) fold returns the crossing VALUE directly — the typed
-    NULL for the not-found state comes from `try_element_at(a, 2^31-1).v`
-    (out-of-bounds yields a NULL of the element type, so no CAST to an
-    unknown type is needed). Empty group -> result stays NULL (CH's
-    answer). p is a decimal literal and weights integers, so the
-    threshold arithmetic is exact decimal on BOTH engines — no float
-    boundary anywhere. Documented deviation from live ClickHouse
-    (ADVICE r11, also in MIGRATION.md): CH computes its threshold as
-    `level * sum_weight` in FLOAT64 and truncates, so at float-boundary
-    combinations (e.g. p=0.29, total=100: Float64 0.29*100 =
-    28.999999999999996 -> CH threshold 28 vs exact decimal 29) a live
-    server can sit one rank away from this translation. The
-    exact-decimal spelling is deliberate — it matches the construct's
-    mathematical definition and the DuckDB oracle's arithmetic — but
-    that same agreement means the harness cannot observe the deviation;
-    only a live-CH differential would. The plural form (_exact_weighted_plural_expr)
-    shares ONE sort + ONE total fold across all levels."""
-    return _weighted_let(x, w, [_weighted_find(_weighted_threshold(p))])
-
-
-def _weighted_pairs(x: str, w: str, sort: bool = True) -> str:
-    # NULL value/weight pairs are skipped (collect_list drops NULL
-    # elements; CH Nullable semantics). Struct sort = (v, w)
-    # lexicographic — required by the quantile crossing scan; top-K's
-    # weight sums are order-independent, so it passes sort=False (a
-    # struct-array sort costs ~0.43 s per 200k rows at sf0.1).
-    collected = (
-        f"collect_list(CASE WHEN ({x}) IS NOT NULL "
-        f"AND ({w}) IS NOT NULL THEN "
-        f"named_struct('v', {x}, 'w', CAST({w} AS BIGINT)) END)"
-    )
-    # sort_array's native struct ordering (field-by-field, the same
-    # (v, w) lexicographic order as array_sort's default comparator)
-    # over the NULL-free collected pairs — see _exact_quantile_expr
-    return f"sort_array({collected})" if sort else collected
-
-
-def _weighted_threshold(p: str) -> str:
-    return f"greatest(CAST(floor({p} * tot) AS BIGINT), CAST(1 AS BIGINT))"
-
-
-def _weighted_find(t_expr: str) -> str:
-    # saturating fold: once `r` is set it is carried unchanged; before
-    # that the running weight sum accumulates until it crosses t.
-    return (
-        f"aggregate(a, named_struct('s', CAST(0 AS BIGINT), "
-        f"'r', try_element_at(a, 2147483647).v), "
-        f"(st, e) -> CASE WHEN st.r IS NOT NULL THEN st "
-        f"WHEN st.s + e.w >= {t_expr} "
-        f"THEN named_struct('s', st.s + e.w, 'r', e.v) "
-        f"ELSE named_struct('s', st.s + e.w, 'r', st.r) END, "
-        f"st -> st.r)"
-    )
-
-
-def _weighted_let(x: str, w: str, finds: list[str]) -> str:
-    # let-bind the sorted pair list (`a`) and the total weight (`tot`)
-    # once; each find in `finds` runs over the same bindings.
-    body = finds[0] if len(finds) == 1 else f"array({', '.join(finds)})"
-    total = "aggregate(a, CAST(0 AS BIGINT), (s, e) -> s + e.w)"
-    return (
-        f"element_at(transform(array({_weighted_pairs(x, w)}), a -> "
-        f"element_at(transform(array({total}), tot -> {body}), 1)), 1)"
-    )
-
-
-def _exact_weighted_plural_expr(x: str, w: str, levels: list[str]) -> str:
-    # plural form: ONE sorted pair list, ONE total fold, and ONE
-    # crossing fold for ALL levels (state = running sum + one result
-    # slot per level). Measured at sf0.1: the collect is the ~0.8 s
-    # floor, each struct sort adds ~0.43 s and each separate crossing
-    # fold ~0.25 s — sharing both makes k levels cost one level.
-    null_v = "try_element_at(a, 2147483647).v"
-    zero = ", ".join(f"'r{i}', {null_v}" for i in range(len(levels)))
-    step = ", ".join(
-        f"'r{i}', CASE WHEN st.r{i} IS NOT NULL THEN st.r{i} "
-        f"WHEN st.s + e.w >= {_weighted_threshold(p)} THEN e.v END"
-        for i, p in enumerate(levels)
-    )
-    finish = ", ".join(f"st.r{i}" for i in range(len(levels)))
-    find_all = (
-        f"aggregate(a, named_struct('s', CAST(0 AS BIGINT), {zero}), "
-        f"(st, e) -> named_struct('s', st.s + e.w, {step}), "
-        f"st -> array({finish}))"
-    )
-    return _weighted_let(x, w, [find_all])
-
-
-def _topk_expr(x: str, n: int) -> str:
-    # let-binding via a 1-element array: the collected list is computed
-    # once and referenced repeatedly through the lambda variable `a`
-    # sort_array: the (neg, val) structs are built non-NULL, so the
-    # native struct ordering equals array_sort's default comparator
-    return (
-        f"element_at(transform(array(collect_list({x})), a -> "
-        f"slice(transform(sort_array(transform(array_distinct(a), v -> "
-        f"named_struct('neg', -size(filter(a, e -> e <=> v)), 'val', v))), "
-        f"s -> s.val), 1, {n})), 1)"
-    )
-
-
-def _topk_weighted_expr(x: str, w: str, n: int) -> str:
-    """CH topKWeighted(N)(x, w): the ~N values with the largest summed
-    weights. Deterministic refinement (same contract as _topk_expr's
-    refinement of the counting sketch): EXACT per-value weight sums,
-    weight-descending with a value-ascending tie-break; NULL value/
-    weight pairs are skipped; weights cast to BIGINT. The pair list
-    stays UNSORTED (weight sums are order-independent; the output
-    order comes from the (negw, val) struct sort over the distinct
-    values, and a struct-array sort costs ~0.43 s per 200k rows at
-    sf0.1). The collected group is scanned once per distinct value — bounded-domain dialect
-    path; heavy_hitters_weighted is the bounded-memory 100 TB path."""
-    pairs = _weighted_pairs(x, w, sort=False)
-    return (
-        f"element_at(transform(array({pairs}), a -> "
-        f"slice(transform(sort_array(transform("
-        f"array_distinct(transform(a, e -> e.v)), v -> "
-        f"named_struct('negw', -aggregate(filter(a, e -> e.v <=> v), "
-        f"CAST(0 AS BIGINT), (s, e) -> s + e.w), 'val', v))), "
-        f"s -> s.val), 1, {n})), 1)"
-    )
-
-
-def _avg_weighted_expr(x: str, w: str) -> str:
-    """CH avgWeighted(x, w): Float64 sum(x*w)/sum(w), NULL pairs
-    skipped. Documented refinement: an empty group or a zero total
-    weight yields NaN (CH returns NaN for the empty group and IEEE
-    inf/NaN for nonzero/0 — Spark's ANSI double division THROWS on a
-    zero divisor, so the zero-total arm is made explicit)."""
-    guard = f"(({x}) IS NOT NULL AND ({w}) IS NOT NULL)"
-    den = f"sum(CASE WHEN {guard} THEN CAST(({w}) AS DOUBLE) END)"
-    num = (
-        f"sum(CASE WHEN {guard} THEN "
-        f"CAST(({x}) AS DOUBLE) * CAST(({w}) AS DOUBLE) END)"
-    )
-    return (
-        f"(CASE WHEN {den} IS NULL OR {den} = 0.0D "
-        f"THEN CAST('NaN' AS DOUBLE) ELSE {num} / {den} END)"
-    )
-
-
-def _fused_weighted_levels(sql: str) -> dict:
-    """Cross-expression fusion plan for the ExactWeighted family (r17,
-    guide §1.2 "per-task work"): when a statement carries TWO OR MORE
-    weighted-quantile calls over the same (x, w) argument text
-    (plural + medianExactWeighted is the canonical CH idiom), every
-    occurrence is spelled from ONE canonical multi-level fold over the
-    value-sorted union of the statement's levels, with singular/median
-    occurrences extracting their slot via element_at. Spark's
-    subexpression elimination evaluates byte-identical project subtrees
-    once (measured: plural + element_at(identical plural) runs at the
-    plural-only floor), so the per-occurrence struct sort (~0.43 s /
-    200k rows at sf0.1) and crossing fold (~0.25 s) collapse to one.
-    Slot results are independent CASE arms of the shared fold, so each
-    requested level's value is bit-identical to its standalone form
-    (same literal threshold arithmetic, same NULL init state). A key
-    used by a single occurrence keeps the legacy spelling — the
-    single-level path stays exercised, and cosmetically different
-    argument spellings simply don't fuse (old behavior, not an error).
-
-    Returns {(x, w): (ordered Decimal values, ordered level literals)}
-    for keys with >= 2 occurrences."""
-    from decimal import Decimal
-
-    masked = _mask_literals(sql)
-    slots: dict = {}
-    occurrences: dict = {}
-    for m in _QUANT_WEIGHTED.finditer(masked):
-        x = sql[m.start(3) : m.end(3)].strip()
-        w = sql[m.start(4) : m.end(4)].strip()
-        per = slots.setdefault((x, w), {})
-        for p in (s.strip() for s in sql[m.start(2) : m.end(2)].split(",")):
-            per.setdefault(Decimal(p), p)
-        occurrences[(x, w)] = occurrences.get((x, w), 0) + 1
-    for m in _MEDIAN_WEIGHTED.finditer(masked):
-        x = sql[m.start(1) : m.end(1)].strip()
-        w = sql[m.start(2) : m.end(2)].strip()
-        slots.setdefault((x, w), {}).setdefault(Decimal("0.5"), "0.5")
-        occurrences[(x, w)] = occurrences.get((x, w), 0) + 1
-    fused = {}
-    for key, per in slots.items():
-        if occurrences.get(key, 0) >= 2:
-            ordered = sorted(per.items())
-            fused[key] = ([v for v, _ in ordered], [lit for _, lit in ordered])
-    return fused
-
-
-def _rewrite_quantile_family(sql: str) -> str:
-    from decimal import Decimal
-
-    fused = _fused_weighted_levels(sql)
-
-    def fused_slot(x: str, w: str, p: str) -> str:
-        vals, lits = fused[(x, w)]
-        canon = _exact_weighted_plural_expr(x, w, lits)
-        return f"element_at({canon}, {vals.index(Decimal(p)) + 1})"
-
-    def topk_weighted_repl(m: "re.Match[str]", raw: str) -> str:
-        x = raw[m.start(2) : m.end(2)].strip()
-        w = raw[m.start(3) : m.end(3)].strip()
-        return _topk_weighted_expr(x, w, int(m.group(1)))
-
-    def avg_weighted_repl(m: "re.Match[str]", raw: str) -> str:
-        x = raw[m.start(1) : m.end(1)].strip()
-        w = raw[m.start(2) : m.end(2)].strip()
-        return _avg_weighted_expr(x, w)
-
-    def weighted_repl(m: "re.Match[str]", raw: str) -> str:
-        plural = m.group(1).lower().endswith("s")
-        levels = [p.strip() for p in raw[m.start(2) : m.end(2)].split(",")]
-        x = raw[m.start(3) : m.end(3)].strip()
-        w = raw[m.start(4) : m.end(4)].strip()
-        if not plural and len(levels) > 1:
-            raise UnsupportedClickHouseSQL(
-                "quantileExactWeighted() takes one level — use "
-                "quantilesExactWeighted(p1, ...)(x, w)"
-            )
-        _check_level_range(levels)
-        if (x, w) in fused:
-            vals, lits = fused[(x, w)]
-            if not plural:
-                return fused_slot(x, w, levels[0])
-            if [Decimal(p) for p in levels] == vals:
-                return _exact_weighted_plural_expr(x, w, lits)
-            # caller's order/multiplicity differs from the canonical
-            # sorted union — rebuild the array from shared slots (the
-            # repeated canon texts CSE to one evaluation)
-            return f"array({', '.join(fused_slot(x, w, p) for p in levels)})"
-        if plural:
-            return _exact_weighted_plural_expr(x, w, levels)
-        return _exact_weighted_expr(x, w, levels[0])
-
-    def median_weighted_repl(m: "re.Match[str]", raw: str) -> str:
-        x = raw[m.start(1) : m.end(1)].strip()
-        w = raw[m.start(2) : m.end(2)].strip()
-        if (x, w) in fused:
-            return fused_slot(x, w, "0.5")
-        return _exact_weighted_expr(x, w, "0.5")
-
-    def rank_repl(m: "re.Match[str]", raw: str) -> str:
-        plural = m.group(1).lower().endswith("s")
-        rule = m.group(2)
-        levels = [p.strip() for p in raw[m.start(3) : m.end(3)].split(",")]
-        x = raw[m.start(4) : m.end(4)].strip()
-        if not plural and len(levels) > 1:
-            raise UnsupportedClickHouseSQL(
-                f"quantileExact{rule}() takes one level — use "
-                f"quantilesExact{rule}(p1, ...)(x)"
-            )
-        return _exact_rank_rule_expr(x, levels, rule, plural=plural)
-
-    def rank_bare_repl(m: "re.Match[str]", raw: str) -> str:
-        rule = m.group(1) or m.group(2)
-        x = raw[m.start(3) : m.end(3)].strip()
-        return _exact_rank_rule_expr(x, ["0.5"], rule)
-
-    def param_repl(m: "re.Match[str]", raw: str) -> str:
-        plural = m.group(1).lower().endswith("s")
-        levels = [p.strip() for p in raw[m.start(3) : m.end(3)].split(",")]
-        x = raw[m.start(4) : m.end(4)].strip()
-        if not plural and len(levels) > 1:
-            raise UnsupportedClickHouseSQL(
-                "quantile() takes one level — use quantiles(p1, ...)(x)"
-            )
-        _check_level_range(levels)
-        if m.group(2):  # Exact
-            if plural:
-                return _exact_quantiles_plural_expr(x, levels)
-            return _exact_quantile_expr(x, levels[0])
-        if plural:
-            return f"percentile({x}, array({', '.join(levels)}))"
-        return _interp_quantile_expr(x, levels[0])
-
-    def bare_repl(m: "re.Match[str]", raw: str) -> str:
-        x = raw[m.start(2) : m.end(2)].strip()
-        if m.group(1):  # quantileExact(x) / medianExact(x), default level
-            return _exact_quantile_expr(x, "0.5")
-        return _interp_quantile_expr(x, "0.5")
-
-    def topk_repl(m: "re.Match[str]", raw: str) -> str:
-        return _topk_expr(raw[m.start(2) : m.end(2)].strip(), int(m.group(1)))
-
-    out = _sub_outside_literals(_QUANT_WEIGHTED, weighted_repl, sql)
-    out = _sub_outside_literals(_MEDIAN_WEIGHTED, median_weighted_repl, out)
-    out = _sub_outside_literals(_QUANT_RANK, rank_repl, out)
-    out = _sub_outside_literals(_QUANT_RANK_BARE, rank_bare_repl, out)
-    out = _sub_outside_literals(_QUANT_PARAM, param_repl, out)
-    out = _sub_outside_literals(_QUANT_BARE, bare_repl, out)
-    out = _sub_outside_literals(_TOPK_WEIGHTED, topk_weighted_repl, out)
-    out = _sub_outside_literals(_AVG_WEIGHTED, avg_weighted_repl, out)
-    out = _sub_outside_literals(_TOPK, topk_repl, out)
-    return _sub_outside_literals(
-        _UNIQ_UP_TO, r"LEAST(COUNT(DISTINCT \2), \1 + 1)", out
-    )
-
-
 _TOTALS_TOKEN = re.compile(r"\bWITH\s+TOTALS\b", re.I)
 _GROUP_BY_TOKEN = re.compile(r"\bGROUP\s+BY\s+", re.I)
 # a clause keyword inside the group-key segment means the nearest-GROUP-BY
@@ -4142,7 +4060,7 @@ def _rewrite_totals(sql: str) -> str:
     standard all-NULL totals row. The key list is split on TOP-LEVEL
     commas (paren/bracket aware, quoted literals opaque), so expression
     keys like ``toYear(d)`` or ``substring(s, 1, 1)`` translate instead
-    of hitting the r9 refusal (VERDICT r9 #5). Matches are located on
+    of refusing. Matches are located on
     the literal-masked copy and spliced into raw text, right-to-left so
     earlier spans stay valid."""
     masked = _mask_literals(sql)
@@ -4178,8 +4096,8 @@ def _rewrite_totals(sql: str) -> str:
 
 _ARRAY_JOIN_START = re.compile(r"\b(LEFT\s+)?ARRAY\s+JOIN\s+", re.I)
 # clause keywords that end the operand list AT BRACKET DEPTH 0 (a
-# regex lookahead can't know the depth — review r10 finding: the lazy
-# form ran past a subquery's closing paren and broke every ARRAY JOIN
+# regex lookahead can't know the depth — a lazy
+# form runs past a subquery's closing paren and broke every ARRAY JOIN
 # inside a derived table)
 _ARRAY_JOIN_STOP = re.compile(
     r"(?:WHERE|PREWHERE|GROUP|ORDER|HAVING|LIMIT|WINDOW|QUALIFY"
@@ -4198,7 +4116,7 @@ def _array_join_operand_end(masked: str, start: int) -> int:
     list ends at a depth-0 clause keyword, a ';', or the enclosing
     subquery's ')' (depth would go negative).
 
-    Keyword classification needs syntactic context (review-2 r10):
+    Keyword classification needs syntactic context:
     a stop keyword immediately after ``AS`` is an operand ALIAS
     (``ys AS any``), and LEFT/RIGHT followed by ``(`` are the string
     FUNCTIONS (``left(xs, 2) AS a``) — neither ends the list."""
@@ -4257,7 +4175,7 @@ def _zip_struct_expr(exprs: list[str], aliases: list[str], depth: int = 0) -> st
 
 def _rewrite_array_join_zip(sql: str) -> str:
     """Translate the MULTI-array ``ARRAY JOIN e1 AS a1, e2 AS a2[, ...]``
-    clause (ClickHouse's positional zip — VERDICT r9 #5) to ONE lateral
+    clause (ClickHouse's positional zip) to ONE lateral
     ``inline`` over a zip_with-built array of structs: the arrays stay
     positionally aligned (two LATERAL VIEWs would cross-product), and
     the struct fields carry the user's aliases so downstream references
@@ -4402,8 +4320,8 @@ def translate(ch_sql: str) -> str:
     textual equivalent (pointing at the native operator) and for
     rewrites defeated by nested arguments — never silently mistranslates.
     """
-    # GLOBAL input-literal escape guard (r15, closing the CLASS behind
-    # ADVICE r14's split/translate finding): every string literal in
+    # GLOBAL input-literal escape guard (the class behind the
+    # split/translate separator escapes): every string literal in
     # the input is re-emitted into Spark SQL verbatim, so ANY escape
     # the two literal parsers decode differently changes the value —
     # not just split separators: match(s, '\d+') reached RLIKE as the
@@ -4453,49 +4371,46 @@ def translate(ch_sql: str) -> str:
             "tuple element access (t.1) — use named struct fields "
             "(named_struct / col.field)"
         )
-    # FIRST rewrite pass: bare translate is validated/renamed on USER
-    # text only — later stages (case folds) emit their own translate(
-    # text, which this pass must never re-scan (r14 wave 2)
-    out = _rewrite_translate_family(ch_sql)
-    out = _rewrite_limit_by(out)
+    out = _rewrite_limit_by(ch_sql)
     out = _rewrite_limit_ties(out)
-    out = _rewrite_multiif(out)
     out = _rewrite_brackets(out)
-    out = _rewrite_format_datetime(out)
-    out = _rewrite_parse_datetime(out)
-    out = _rewrite_datetime_diff(out)
-    # AFTER datetime_diff (review finding, r12): the guard's CASE
-    # expansion would otherwise push dateDiff('day', least(a, b), c)
-    # past _ARG's one paren level and falsely refuse a flat user call;
-    # neither stage emits the other's trigger tokens in this order
-    out = _rewrite_least_greatest(out)
-    # after least/greatest: the guard may duplicate concatWithSeparator
-    # spellings into both CASE arms, and each duplicate must still be
-    # rewritten — this scanner sees the whole text, so order only needs
-    # the emitted concat_ws() to trigger nothing upstream (it doesn't)
-    out = _rewrite_concat_with_separator(out)
-    out = _rewrite_replace_regexp(out)
-    out = _rewrite_quantile_family(out)
     out = _rewrite_totals(out)
     out = _rewrite_array_join_zip(out)
-    # LAST function pass: earlier stages re-emit user argument text
-    # (multiIf arms, totals keys, least/greatest guards) that may carry
-    # substring calls — running after them guarantees every spelling is
-    # seen exactly once; the emitted byte-form text triggers nothing in
-    # the call table
-    out = _rewrite_substring_family(out)
-    out = _rewrite_case_family(out)
-    # BEFORE the table: the has/indexOf argument text it splices
-    # (arrayMap, splitByChar) is rewritten there
-    out = _rewrite_membership(out)
     for pat, repl in _CLAUSES:
         out = _sub_outside_literals(pat, repl, out)
     out = _rewrite_table_calls(out)
-    # AFTER the clauses: the ARRAY JOIN clause binds the COMPACT
-    # splitBy* text; this pass then expands every remaining spelling at
-    # any nesting depth
-    out = _rewrite_split_family(out)
     masked = _mask_literals(out)
+    # call survivors _RESIDUALS cannot list: names Spark spells too, or
+    # that an entry's own emission spells
+    heads = [(m, m.group(1).lower()) for m in _CALL_HEAD.finditer(masked)]
+    # a comma-form extract PARSES in Spark as ANSI datetime extraction
+    # (wrong semantics); the ANSI `EXTRACT(f FROM x)` form has no
+    # top-level comma and passes
+    for _xm, fn in heads:
+        if fn != "extract":
+            continue
+        try:
+            comma = _arity_at(masked, _xm) > 1
+        except UnsupportedClickHouseSQL:
+            comma = False  # unbalanced brackets — not a well-formed call
+        if comma:
+            raise UnsupportedClickHouseSQL(
+                "could not rewrite a comma-form extract(haystack, pattern) "
+                "(non-literal or quote-bearing pattern?) — Spark would "
+                "parse it as ANSI datetime EXTRACT; use regexp_extract "
+                "directly"
+            )
+    # a unit-literal dateDiff/age left over (4-arg timezone form, nested
+    # arguments) would hit an opaque arg-count error
+    for _dm, fn in heads:
+        if fn in ("datediff", "date_diff", "age") and (
+            masked[_dm.end() :].lstrip().startswith("'")
+        ):
+            raise UnsupportedClickHouseSQL(
+                "could not rewrite dateDiff/age (4-arg timezone form or "
+                "nested arguments?) — flatten the call; the 3-arg "
+                "unit-literal form translates"
+            )
     if re.search(r"\bWITH\s+TOTALS\b", masked, re.I):
         raise UnsupportedClickHouseSQL(
             "WITH TOTALS over a non-bare-column GROUP BY — rewrite the "
@@ -4524,13 +4439,9 @@ def translate(ch_sql: str) -> str:
             "SETTINGS in a non-tail position (subquery / before UNION) — "
             "remove it; session confs own execution advice here"
         )
-    # survivors of the table entries whose own emission spells the same
-    # name, so _RESIDUALS cannot list them
-    heads = [(m, m.group(1).lower()) for m in _CALL_HEAD.finditer(masked)]
     # range() survivors: the entry's _ARG budget is one paren level, so
-    # range(least(a,b)) — whose NULL-guard CASE expansion exceeds it —
-    # would reach Spark as an opaque unresolved-function error.
-    # Expression-position range( refuses here; table-position
+    # range(f(g(x))) would reach Spark as an opaque unresolved-function
+    # error. Expression-position range( refuses here; table-position
     # `FROM range(` is exempt because the numbers(n) entry emits exactly
     # that Spark table function.
     for _rm, fn in heads:
@@ -4585,11 +4496,7 @@ def translate(ch_sql: str) -> str:
     for _tm, fn in heads:
         if fn != "transform":
             continue
-        try:
-            _ti = _scan_to_close(masked, _tm.end())
-        except UnsupportedClickHouseSQL:
-            continue
-        if len(_split_top_level_args(masked[_tm.end() : _ti - 1])) >= 3:
+        if _arity_at(masked, _tm) >= 3:
             raise UnsupportedClickHouseSQL(
                 "transform(x, from, to[, default]) with non-literal "
                 "from/to arrays — the mapping must be spelled with "
@@ -4601,15 +4508,12 @@ def translate(ch_sql: str) -> str:
     if residual:
         hint = (
             "flatten the call, precompute nested expressions as "
-            "subquery/CTE columns (a NULL-guarded least/greatest "
-            "argument expands past the rewriter's nesting budget — "
-            "flattening alone will not help there), or use the "
-            "DataFrame API"
+            "subquery/CTE columns, or use the DataFrame API"
         )
         if re.search(r"Or(Zero|Null|Default)\s*\($", residual.group(0)):
             hint = (
                 "signed to{Int,Float}*Or{Null,Zero,Default} translate "
-                "since r13 (flatten deep-nested arguments into a "
+                "(flatten deep-nested arguments into a "
                 "subquery column if this one did not match); toUInt*Or* "
                 "refuses — Spark has no unsigned domain, so CH values in "
                 "[2^(w-1), 2^w) have no width-true target (a wider "
@@ -4640,7 +4544,7 @@ def translate(ch_sql: str) -> str:
 # (integer keys only) DESCENDING — the downward walk runs as the
 # ascending one in negated key space; integer FROM/TO/STEP literals
 # (dates: STEP n = n days, no FROM/TO). Leading BARE sort keys group
-# the fill (r10): `ORDER BY g1, g2, k WITH FILL` restarts the fill at
+# the fill: `ORDER BY g1, g2, k WITH FILL` restarts the fill at
 # every leading-key change, CH's FillingTransform rule — grouped
 # FROM/TO bounds refuse (per-group bound spines: time_gap_fill). Bare
 # INTERPOLATE, AS-expression INTERPOLATE, multiple filled keys, and
@@ -5371,7 +5275,7 @@ def _apply_dict_get(
                 raise UnsupportedClickHouseSQL(
                     "dictGetOrDefault takes (dict, attr, key, default)"
                 )
-            # no capture check here (ADVICE r11): the default is spliced
+            # no capture check here: the default is spliced
             # OUTSIDE the correlated subquery — coalesce(sub, (default))
             # — so it binds in the OUTER query's scope exactly as CH
             # evaluates it. A default naming a source-only column can't
@@ -5997,7 +5901,7 @@ def ch_dialect_array_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature flatten — distinct from the arrayJoin() function): the
     expression form translates to LATERAL VIEW explode, LEFT ARRAY JOIN
     to the OUTER variant, and the multi-array zip form translates to
-    ONE inline(zip_with(...)) since r10 (see ch_dialect_array_join_zip
+    ONE inline(zip_with(...)) (see ch_dialect_array_join_zip
     — never two cross-producting lateral views). The oracle flattens
     via DuckDB unnest — an independent derivation of the same rows.
 
@@ -6006,7 +5910,7 @@ def ch_dialect_array_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ch_sql(spark, sf_dir, _CH_ARRAY_JOIN_QUERY)
 
 
-# WITH TOTALS over EXPRESSION group keys (r10 — previously a refusal):
+# WITH TOTALS over EXPRESSION group keys:
 # the paren-aware key-list split feeds the same GROUPING SETS lowering
 _CH_TOTALS_EXPR_QUERY = """
     SELECT toYear(o_orderdate) AS yr,
@@ -6036,8 +5940,7 @@ _CH_TOTALS_EXPR_ORACLE = """
 @query("ch_dialect_totals_expr", _CH_TOTALS_EXPR_ORACLE)
 def ch_dialect_totals_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dialect shim end-to-end over ``GROUP BY <expr>, <expr> WITH
-    TOTALS`` — EXPRESSION group keys, the form the r9 shim refused
-    (VERDICT r9 #5): the paren-aware top-level key-list split makes
+    TOTALS`` — EXPRESSION group keys: the paren-aware top-level key-list split makes
     ``toYear(...)``/``substring(..., 1, 1)`` keys feed the same
     GROUPING SETS lowering as bare columns; the totals row appears as
     the all-NULL key pair. The oracle derives the blocks via DuckDB
@@ -6051,7 +5954,7 @@ def ch_dialect_totals_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("yr", F.col("yr").cast("bigint"))
 
 
-# multi-array ARRAY JOIN (positional zip, r10 — previously a refusal):
+# multi-array ARRAY JOIN (positional zip):
 # one zip_with struct + one inline keeps the arrays aligned; the
 # n_distinct column is the alignment witness (a cross-product or a
 # misaligned zip changes WHICH tokens land in each length group)
@@ -6083,9 +5986,9 @@ _CH_ARRAY_JOIN_ZIP_ORACLE = """
 @query("ch_dialect_array_join_zip", _CH_ARRAY_JOIN_ZIP_ORACLE)
 def ch_dialect_array_join_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dialect shim end-to-end over the MULTI-array ``ARRAY JOIN e1 AS
-    a1, e2 AS a2`` clause (ClickHouse's positional zip — VERDICT r9
-    #5): lowered to ONE ``LATERAL VIEW inline(zip_with(...))`` whose
-    struct fields carry the user aliases, so tokens stay aligned with
+    a1, e2 AS a2`` clause (ClickHouse's positional zip): lowered to ONE
+    ``LATERAL VIEW inline(zip_with(...))`` whose struct fields carry the
+    user aliases, so tokens stay aligned with
     their per-position lengths. The oracle re-derives the pairing
     independently (length computed ON the flattened token), so a
     cross-product or misaligned zip cannot hash-match.
@@ -6350,7 +6253,7 @@ def ch_dialect_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Driver surface: the sorted-uniq array is serialized to a CSV string
     on both engines — pandas (the driver's canonicalizer) cannot sort
-    LIST columns (the r10 ERR mechanism)."""
+    LIST columns."""
     out = ch_sql(spark, sf_dir, _CH_ARGMAX_QUERY)
     return out.withColumn("statuses", F.array_join("statuses", ","))
 
@@ -6434,9 +6337,8 @@ def ch_dialect_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ch_sql(spark, sf_dir, _CH_DATETIME_QUERY)
 
 
-# ---- round-9 dialect queries: the three refusals-turned-rewrites ----
-# (VERDICT r8 #3: quantile/quantileExact, topK, and simple WITH FILL all
-# had exact in-repo semantics — approx_quantiles/median_exact,
+# ---- quantile/quantileExact, topK and simple WITH FILL ----
+# (all three had exact in-repo semantics — approx_quantiles/median_exact,
 # heavy_hitters, time_gap_fill — so the translator now rewrites them
 # instead of refusing; these queries run the rewrites end-to-end.)
 
@@ -6483,10 +6385,10 @@ _CH_QUANTILE_ORACLE = f"""
 
 @query("ch_dialect_quantile", _CH_QUANTILE_ORACLE)
 def ch_dialect_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dialect shim end-to-end over the quantile-family rewrites
-    (VERDICT r8 #3 — a migrating ClickHouse user hits ``quantile()``
-    constantly): quantileExact/medianExact (CH's exact nearest-rank
-    formula, floor(p*n) 0-based, spelled over array_sort(collect_list)),
+    """Dialect shim end-to-end over the quantile-family rewrites (a
+    migrating ClickHouse user hits ``quantile()`` constantly):
+    quantileExact/medianExact (CH's exact nearest-rank formula,
+    floor(p*n) 0-based, spelled over array_sort(collect_list)),
     quantile/median -> percentile (the deterministic refinement of CH's
     reservoir sketch — identical linear interpolation for groups within
     the 8192-row reservoir), and the plural quantiles() -> one
@@ -6502,7 +6404,7 @@ def ch_dialect_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver surface: the plural-quantiles array is serialized to a
     decimal(30,4)-element CSV string (mirrored by the oracle's
     array_to_string) — the external comparator canonicalizes through
-    pandas, which cannot sort LIST columns (the r10 ERR mechanism).
+    pandas, which cannot sort LIST columns.
     l_quantity order statistics interpolate at dyadic quarters, so the
     4-decimal fixed-point form is exact."""
     out = ch_sql(spark, sf_dir, _CH_QUANTILE_QUERY)
@@ -6567,9 +6469,9 @@ _CH_QUANTILE_WEIGHTED_ORACLE = f"""
 @query("ch_dialect_quantile_weighted", _CH_QUANTILE_WEIGHTED_ORACLE)
 def ch_dialect_quantile_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dialect shim end-to-end over the quantileExactWeighted /
-    medianExactWeighted rewrites (VERDICT r10 #6 — the first weighted
-    member of the quantile-combinator zoo with exact semantics: CH
-    sorts values, accumulates weights, and returns the first value
+    medianExactWeighted rewrites (the first weighted member of the
+    quantile-combinator zoo with exact semantics: CH sorts values,
+    accumulates weights, and returns the first value
     whose cumulative weight reaches floor(p * total); see
     _exact_weighted_expr for the refinement notes). l_linenumber (1..7,
     positive integers) is the weight, so the threshold arithmetic is
@@ -6676,9 +6578,9 @@ _CH_RANK_RULES_ORACLE = f"""
 @query("ch_dialect_quantile_rank_rules", _CH_RANK_RULES_ORACLE)
 def ch_dialect_quantile_rank_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dialect shim end-to-end over the four exact rank-rule rewrites
-    (VERDICT r11 #5 — the last exact-semantics members of the quantile
-    refusal table; the sketch combinators TDigest/BFloat16/Timing/
-    Deterministic stay refused forever): quantileExactLow (lower median
+    (the last exact-semantics members of the quantile refusal table; the
+    sketch combinators TDigest/BFloat16/Timing/Deterministic stay
+    refused forever): quantileExactLow (lower median
     at level 0.5, quantileExact's floor(p*n) otherwise),
     quantileExactHigh (coincides with quantileExact at every level —
     asserted by the rewrite test), quantileExactInclusive (Excel
@@ -6736,7 +6638,7 @@ _CH_TOPK_ORACLE = """
 
 @query("ch_dialect_topk", _CH_TOPK_ORACLE)
 def ch_dialect_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dialect shim end-to-end over the topK(N) rewrite (VERDICT r8 #3):
+    """Dialect shim end-to-end over the topK(N) rewrite:
     CH's approximate most-frequent-values aggregate becomes an exact
     frequency top-N (frequency-descending, value-ascending tie-break —
     the deterministic refinement of CH's unspecified tie order), built
@@ -6750,7 +6652,7 @@ def ch_dialect_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Driver surface: the top-N array is serialized to a CSV string on
     both engines — pandas (the driver's canonicalizer) cannot sort LIST
-    columns (the r10 ERR mechanism)."""
+    columns."""
     out = ch_sql(spark, sf_dir, _CH_TOPK_QUERY)
     return out.withColumn("top_flags", F.array_join("top_flags", ","))
 
@@ -6860,7 +6762,7 @@ _CH_WEIGHTED_AGGS_ORACLE = """
 
 @query("ch_dialect_weighted_aggs", _CH_WEIGHTED_AGGS_ORACLE)
 def ch_dialect_weighted_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dialect shim end-to-end over the r11 weighted-aggregate rewrites:
+    """Dialect shim end-to-end over the weighted-aggregate rewrites:
     topKWeighted(N)(x, w) (exact per-value weight sums, weight-desc /
     value-asc — the deterministic refinement of CH's weighted counting
     sketch; see _topk_weighted_expr) and avgWeighted(x, w) (Float64
@@ -6912,8 +6814,8 @@ _CH_WITH_FILL_ORACLE = """
 
 @query("ch_dialect_with_fill", _CH_WITH_FILL_ORACLE)
 def ch_dialect_with_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dialect shim end-to-end over the schema-aware WITH FILL tail
-    (VERDICT r8 #3): a sparse price-bucket histogram densified to the
+    """Dialect shim end-to-end over the schema-aware WITH FILL tail:
+    a sparse price-bucket histogram densified to the
     [0, 30) spine, filled rows carrying each column's CH TYPE DEFAULT
     (0 for the counts) — the piece bare textual translation cannot know
     and the built DataFrame's schema does. Restart-at-each-value STEP
@@ -6932,7 +6834,7 @@ def ch_dialect_with_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ch_sql(spark, sf_dir, _CH_WITH_FILL_QUERY)
 
 
-# the GROUPED (multi-key) form, r10: leading bare sort keys partition
+# the GROUPED (multi-key) form: leading bare sort keys partition
 # the fill — ClickHouse's FillingTransform restarts whenever a non-fill
 # sort column changes. The filter keys on length(o_orderpriority) % 3,
 # which splits the five priorities into TWO classes with different year
@@ -6971,8 +6873,7 @@ _CH_WITH_FILL_GROUPED_ORACLE = """
 @query("ch_dialect_with_fill_multi", _CH_WITH_FILL_GROUPED_ORACLE)
 def ch_dialect_with_fill_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dialect shim end-to-end over the GROUPED `ORDER BY g, k WITH
-    FILL` form (the r9 'multi-key WITH FILL' refusal, removed r10 for
-    bare leading keys): per-priority order-count-by-year series with
+    FILL` form (bare leading keys): per-priority order-count-by-year series with
     per-group gaps densified independently — each priority's fill spine
     runs its OWN min..max (the filter yields two distinct spine classes
     across the five priorities), filled rows
@@ -7344,7 +7245,7 @@ _CH_WF_DESC_ORACLE = """
 
 @query("ch_dialect_with_fill_desc", _CH_WF_DESC_ORACLE)
 def ch_dialect_with_fill_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``ORDER BY ... DESC WITH FILL`` (the r9 wave-2 refusal removal):
+    """``ORDER BY ... DESC WITH FILL``:
     the downward walk runs as the ascending fill in NEGATED key space —
     FROM becomes the inclusive high start, TO the exclusive low end,
     sequences restart at each existing value going down, and the
@@ -7383,7 +7284,7 @@ _CH_LIMIT_BY_OFF_ORACLE = """
 
 @query("ch_dialect_limit_by_offset", _CH_LIMIT_BY_OFF_ORACLE)
 def ch_dialect_limit_by_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``LIMIT offset, n BY cols`` (the r9 wave-2 refusal removal):
+    """``LIMIT offset, n BY cols``:
     skip the first ``offset`` rows of each group in the query's ORDER,
     take the next ``n`` — lowered to the same materialized ROW_NUMBER
     plan as plain LIMIT BY with a rank RANGE predicate. The unique
@@ -7418,7 +7319,7 @@ _CH_TIES_ORACLE = """
 
 @query("ch_dialect_limit_ties", _CH_TIES_ORACLE)
 def ch_dialect_limit_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``LIMIT n WITH TIES`` (the r9 wave-2 refusal removal): the first
+    """``LIMIT n WITH TIES``: the first
     n rows in the query's order PLUS every further row tying the n-th
     key value — lowered to a distributed threshold (TakeOrdered n-th
     key + filter), never a single-partition rank window over all rows.
@@ -7432,7 +7333,7 @@ def ch_dialect_limit_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ch_sql(spark, sf_dir, _CH_TIES_QUERY)
 
 
-# ---- Or{Null,Zero,Default} converters end-to-end (r13) ----
+# ---- Or{Null,Zero,Default} converters end-to-end ----
 # a clean round-trip parse (sum recovers the key sum), an
 # unparseable-string arm (o_orderstatus is 'O'/'F'/'P' — every parse
 # fails, so OrDefault's -1 counts rows and OrNull's count() is 0), and
@@ -7498,10 +7399,10 @@ _CH_CONVERTERS_ORACLE = """
 
 @query("ch_dialect_converters", _CH_CONVERTERS_ORACLE)
 def ch_dialect_converters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """to{Int,Float}*Or{Null,Zero,Default} end-to-end (the r13 refusal
-    removal, VERDICT r12 #3): ClickHouse's fallible string converters
-    lower to width-true ``try_cast`` — bare for OrNull, NULL-guarded
-    ``coalesce(try_cast, default)`` for OrZero/OrDefault so a NULL
+    """to{Int,Float}*Or{Null,Zero,Default} end-to-end: ClickHouse's
+    fallible string converters lower to width-true ``try_cast`` — bare
+    for OrNull, NULL-guarded ``coalesce(try_cast, default)`` for
+    OrZero/OrDefault so a NULL
     INPUT still propagates NULL (CH's ordinary-function rule) instead
     of taking the default. The demo drives all three suffixes plus
     both failure classes (unparseable text, NULL input) and the oracle
@@ -7520,7 +7421,7 @@ def ch_dialect_converters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ch_sql(spark, sf_dir, _CH_CONVERTERS_QUERY)
 
 
-# r13 second/third dialect waves end-to-end: byte-true substring,
+# byte-level string functions end-to-end: byte-true substring,
 # ASCII-true case folding, Sunday-first toStartOfWeek, scalar bit ops,
 # multiSearchAny and NULL-as-a-value hasAny — every construct here was
 # previously a refusal or a silent byte/char divergence
@@ -7572,7 +7473,7 @@ _CH_STRINGS_ORACLE = """
 
 @query("ch_dialect_strings", _CH_STRINGS_ORACLE)
 def ch_dialect_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r13 second-fifth dialect waves end-to-end over one grouped scan:
+    """Byte-level string functions end-to-end over one grouped scan:
     byte-true ``substring`` (lowered through BINARY — CH slices bytes,
     the length()/octet_length class; byte == char on this ASCII
     fixture, which is exactly what lets DuckDB's char substring be the
@@ -7588,21 +7489,19 @@ def ch_dialect_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     == byte on ASCII), and ``indexOf`` over a LITERAL ``splitByChar``
     (the \\Q\\E-quoted regex fix) vs the oracle's independent
     string_split + list_position with CH's not-found-0 coalesce. Every
-    construct in this query refused or silently diverged before the
-    r13 waves.
+    construct in this query would silently diverge as a bare rename.
 
     Scale: pure row-local expressions inside whole-stage codegen, one
     grouped exchange, no UDFs, no driver work — the translation layer
     adds nothing to the plan (pinned in test_plan_quality).
 
     Reference parity: ClickHouse substring/upper/toStartOfWeek/bitAnd/
-    multiSearchAny/hasAny semantics per MIGRATION.md's r13 wave rows."""
+    multiSearchAny/hasAny semantics per their MIGRATION.md rows."""
     return ch_sql(spark, sf_dir, _CH_STRINGS_QUERY)
 
 
-# r14: concatWithSeparator (refusal-turned-translation, VERDICT r13
-# #4) + the escape-decoded one-byte splitByChar separator (ADVICE r13)
-# end-to-end: a tab-joined composite is split back apart, and the
+# concatWithSeparator + the escape-decoded one-byte splitByChar
+# separator end-to-end: a tab-joined composite is split back apart, and the
 # NULL-propagation guard's arm is counted against an INDEPENDENT
 # oracle derivation
 _CH_CONCAT_SPLIT_QUERY = """
@@ -7631,13 +7530,12 @@ _CH_CONCAT_SPLIT_ORACLE = """
 
 @query("ch_dialect_concat_split", _CH_CONCAT_SPLIT_ORACLE)
 def ch_dialect_concat_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r14 dialect wave end-to-end: ``concatWithSeparator`` (refusal
-    turned translation — CH returns NULL when ANY argument is NULL
-    where Spark's bare ``concat_ws`` skips them; the NULL-propagation
-    CASE guard closes it, the least/greatest precedent) joins
+    """``concatWithSeparator`` and ``splitByChar`` end-to-end (CH
+    returns NULL when ANY argument is NULL where Spark's bare
+    ``concat_ws`` skips them; the NULL-propagation CASE guard closes it,
+    the least/greatest precedent) joins
     mktsegment and nationkey with a TAB, ``splitByChar('\\t', ...)``
-    (the ADVICE r13 escape-decode fix — the one-byte guard now
-    measures the DECODED separator, so tab is a legal one-byte
+    (the one-byte guard measures the DECODED separator, so tab is a legal one-byte
     separator) splits it back, and the guard's NULL arm
     (``nullIf(..., '0')`` firing on nationkey % 5 = 0) is counted.
     The DuckDB oracle derives seg/n_null INDEPENDENTLY from
@@ -7648,11 +7546,11 @@ def ch_dialect_concat_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     one grouped exchange, no UDFs.
 
     Reference parity: ClickHouse concatWithSeparator / splitByChar
-    per MIGRATION.md's r14 row."""
+    per their MIGRATION.md rows."""
     return ch_sql(spark, sf_dir, _CH_CONCAT_SPLIT_QUERY)
 
 
-# r14 wave 2 end-to-end: parseDateTime, the base64 codec guards, the
+# parseDateTime, the base64 codec guards, the
 # IPv4 integer arithmetic, range's half-open guard, monthName,
 # levenshteinDistanceUTF8, and the validated translate — every name
 # here was an opaque unresolved-function error (or a silent same-name
@@ -7704,7 +7602,8 @@ _CH_FUNCS2_ORACLE = """
 
 @query("ch_dialect_funcs_wave2", _CH_FUNCS2_ORACLE)
 def ch_dialect_funcs_wave2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r14 wave 2 end-to-end over one grouped orders scan, each
+    """Datetime parsing, codecs and IPv4 end-to-end over one grouped
+    orders scan, each
     construct checked against an INDEPENDENT DuckDB derivation:
     ``IPv4StringToNum(IPv4NumToString(k))`` round-trips to k (oracle
     uses k directly — the dotted-quad arithmetic never runs there);
@@ -7721,12 +7620,11 @@ def ch_dialect_funcs_wave2(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, no UDFs.
 
     Reference parity: ClickHouse parseDateTime / base64 / IPv4 / range
-    / monthName / translate semantics per MIGRATION.md's r14 wave-2
-    rows."""
+    / monthName / translate semantics per their MIGRATION.md rows."""
     return ch_sql(spark, sf_dir, _CH_FUNCS2_QUERY)
 
 
-# r15 wave 3 end-to-end: the digest/radix same-name collisions
+# the digest/radix same-name collisions end-to-end
 # (MD5/SHA* return BYTES in CH but hex STRINGS in Spark; hex/bin pad
 # numbers to byte width in CH but emit minimal digits in Spark), CH's
 # value-mapping transform, arrayDifference/arrayIntersect,
@@ -7806,7 +7704,8 @@ _CH_FUNCS3_ORACLE = """
 
 @query("ch_dialect_funcs_wave3", _CH_FUNCS3_ORACLE)
 def ch_dialect_funcs_wave3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r15 wave 3 end-to-end over one grouped orders scan, each
+    """Digest, radix and array functions end-to-end over one grouped
+    orders scan, each
     construct checked against an INDEPENDENT DuckDB derivation: the
     grouping key runs CH's value-mapping ``transform`` (vs a native
     CASE in the oracle); ``lower(hex(MD5(s)))`` must equal DuckDB's
@@ -7830,10 +7729,10 @@ def ch_dialect_funcs_wave3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: ClickHouse hex/bin/MD5/SHA*/transform/
     arrayDifference/arrayIntersect/fromUnixTimestamp/toStartOfInterval
-    semantics per MIGRATION.md's r15 wave-3 rows."""
+    semantics per their MIGRATION.md rows."""
     return ch_sql(spark, sf_dir, _CH_FUNCS3_QUERY)
 
-# r16 wave 4 end-to-end: the comparison/LIKE function spellings, the
+# the comparison/LIKE function spellings end-to-end, the
 # bankers'-rounding and integer-exponential names, the float
 # classification family (whose isNaN/isFinite lowerings must propagate
 # NULL like CH's Nullable rule — Spark's bare isnan(NULL) is false),
@@ -7941,7 +7840,8 @@ _CH_FUNCS4_ORACLE = """
 
 @query("ch_dialect_funcs_wave4", _CH_FUNCS4_ORACLE)
 def ch_dialect_funcs_wave4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r16 wave 4 end-to-end over one grouped lineitem scan, each
+    """Comparison, float-classification and vector functions end-to-end
+    over one grouped lineitem scan, each
     construct checked against an INDEPENDENT DuckDB derivation: the
     grouping key and the map lambdas run CH's comparison FUNCTION
     spellings (``greaterOrEquals``/``greater`` vs native operators in
@@ -7965,10 +7865,10 @@ def ch_dialect_funcs_wave4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: ClickHouse comparison-function / roundBankers /
     intExp / float-classification / vector-distance / map-lambda
-    semantics per MIGRATION.md's r16 wave-4 rows."""
+    semantics per their MIGRATION.md rows."""
     return ch_sql(spark, sf_dir, _CH_FUNCS4_QUERY)
 
-# r16 wave 5 end-to-end: zero-divisor arithmetic variants, NULL-guarded
+# zero-divisor arithmetic variants end-to-end, NULL-guarded
 # binary max/min, the date constructors/projections (ISO year, month
 # end, half-hour slots, interval arithmetic), map merge, normalized
 # vectors, Lp folds, range-checked casts, the guarded regex pair, and
@@ -8091,7 +7991,8 @@ _CH_FUNCS5_ORACLE = """
 
 @query("ch_dialect_funcs_wave5", _CH_FUNCS5_ORACLE)
 def ch_dialect_funcs_wave5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r16 wave 5 end-to-end over one grouped lineitem scan, each
+    """Arithmetic variants, date projections and map merges end-to-end
+    over one grouped lineitem scan, each
     construct checked against an INDEPENDENT DuckDB derivation:
     ``intDivOrZero``/``moduloOrZero`` exercise BOTH arms (line number 1
     divides by zero -> 0) vs explicit guard CASEs; ``max2``/``min2`` vs
@@ -8116,6 +8017,6 @@ def ch_dialect_funcs_wave5(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, no UDFs.
 
     Reference parity: ClickHouse arithmetic-variant / date-projection /
-    map-merge / vector / checked-cast semantics per MIGRATION.md's r16
-    wave-5 rows."""
+    map-merge / vector / checked-cast semantics per their MIGRATION.md
+    rows."""
     return ch_sql(spark, sf_dir, _CH_FUNCS5_QUERY)

@@ -2613,13 +2613,13 @@ def test_ch_dialect_least_greatest_null_propagation(spark):
     # (stage order: datetime diff first, guard after)
     both = translate("SELECT dateDiff('day', least(a, b), c) FROM t")
     assert "timestampdiff(DAY" in both and both.count("CASE WHEN") == 1
-    # a least/greatest argument inside an _ARG-based rewrite refuses
-    # AFTER the guard expands (r11 translated these with Spark's
-    # skip-NULL semantics — silently wrong; the refusal names the fix)
-    with _pytest.raises(UnsupportedClickHouseSQL, match="subquery/CTE"):
-        translate("SELECT sumIf(least(a, b), c > 0) FROM t")
-    with _pytest.raises(UnsupportedClickHouseSQL, match="subquery/CTE"):
-        translate("SELECT quantileExact(0.5)(least(a, b)) FROM t")
+    # a least/greatest argument of an entry with the one-paren budget
+    # keeps its NULL guard: the budget reads the argument as written and
+    # the guard is applied inside it (values checked on lg_t below)
+    assert translate("SELECT sumIf(least(a, b), c > 0) FROM t") == (
+        "SELECT sum((CASE WHEN (a) IS NULL OR (b) IS NULL THEN NULL "
+        "ELSE least((a), (b)) END)) FILTER (WHERE c > 0) FROM t"
+    )
     # literals stay data; the quantile clamp's own greatest/least (a
     # LATER rewrite stage's output) is not wrapped
     lit = "SELECT 'least(a, b) here' AS s FROM t"
@@ -2641,6 +2641,20 @@ def test_ch_dialect_least_greatest_null_propagation(spark):
     # CH semantics: any NULL argument -> NULL (Spark bare would give
     # (5,5,5) / (3,3,3) on the first two rows)
     assert got == [(None, None, None), (None, None, None), (2, 7, 7)]
+    # inside aggregates and range(): least(x, y) is NULL, NULL, 2, so
+    # sumIf over id > 1 is 2 and the exact median is 2 (skip-NULL
+    # least would give 5 and 3); range(NULL) is NULL, range(2) [0, 1]
+    agg = spark.sql(
+        translate(
+            "SELECT sumIf(least(x, y), id > 1) AS s, "
+            "quantileExact(0.5)(least(x, y)) AS q FROM lg_t"
+        )
+    ).collect()[0]
+    assert (agg["s"], agg["q"]) == (2, 2)
+    ranges = spark.sql(
+        translate("SELECT range(least(x, y)) AS r FROM lg_t ORDER BY id")
+    ).collect()
+    assert [r["r"] for r in ranges] == [None, None, [0, 1]]
 
 
 def test_ch_dialect_datetime_diff_semantics(spark):
@@ -3100,6 +3114,8 @@ def test_ch_dialect_byte_position_and_null_value_lookups(spark):
     NULL-as-a-value rule. reverse REFUSES (CH reverses bytes; Spark's
     reverse is code-point even over BINARY, measured); reverseUTF8 and
     substringIndex translate."""
+    import pytest as _pytest
+
     from clickhouse_data_rebalance_spark.plans.ch_dialect import (
         UnsupportedClickHouseSQL,
         translate,
@@ -3132,6 +3148,19 @@ def test_ch_dialect_byte_position_and_null_value_lookups(spark):
     assert rows["habs"] is False                  # not NULL (array_contains
     assert rows["hyes"] is True                   # would say NULL for habs)
     assert rows["inull"] == 2 and rows["iabs"] == 0
+    casts = spark.sql(
+        translate(
+            "SELECT toUInt32(has(a, NULL)) AS h1, toUInt32(has(b, 2)) AS h0 "
+            "FROM (SELECT array(1, NULL, 3) AS a, array(NULL, 1) AS b)"
+        )
+    ).collect()[0]
+    assert (casts["h1"], casts["h0"]) == (1, 0)  # CH's UInt8 0/1
+    # intDiv over has()'s boolean fails Spark's analysis loudly, as
+    # intDiv(equals(a, b), 7) does (comparisons lower to booleans)
+    with _pytest.raises(Exception, match="DATATYPE_MISMATCH"):
+        spark.sql(
+            translate("SELECT intDiv(has(a, 1), 7) AS d FROM (SELECT array(1) AS a)")
+        ).collect()
     assert rows["si"] == "a.b" and rows["sin"] == "c"
     assert rows["rev"] == "ba-рп"                 # code-point reversal
 
@@ -5042,7 +5071,7 @@ def test_escape_whitelist_and_wave2_guards(spark):
 
     # (2) past-_ARG range() refuses loudly; numbers() emission exempt
     with _pytest.raises(UnsupportedClickHouseSQL, match="range"):
-        translate("SELECT range(least(a, b)) FROM t")
+        translate("SELECT range(least(f(a), b)) FROM t")
     assert "FROM range(7)" in translate("SELECT number FROM numbers(7)")
     # isIPv4String translates at one level and refuses past-_ARG
     assert "RLIKE" in translate("SELECT isIPv4String(s) FROM t")

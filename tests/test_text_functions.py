@@ -200,3 +200,37 @@ def test_gram5_stats_matches_jvm_form_on_edge_texts(spark):
     want = [(r["n"], r["d"] if r["n"] > 0 else 0) for r in jvm]
     assert pairs[: len(texts)] == want
     assert pairs[len(texts) :] == [want[texts.index("")]] * 2
+
+
+def test_text_quality_scores_an_empty_document_like_the_oracle(spark, tmp_path):
+    # an empty document has no characters: the punctuation ratio divides
+    # by its length, where ANSI Spark raises DIVIDE_BY_ZERO and the
+    # DuckDB oracle returns NULL (the row's logit and keep flag too)
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_data_rebalance_spark.registry import ORACLES, QUERIES, load_all
+
+    from .conftest import SF_SMALL
+    from .oracle_harness import TABLE_NAMES, compare, duck_connection
+
+    load_all()
+    docs = pq.read_table(os.path.join(SF_SMALL, "documents.parquet"))
+    empty = pa.table(
+        {"doc_id": [10_000], "text": [""], "lang": ["en"], "source": ["src0"], "n_chars": [0]},
+        schema=docs.schema,
+    )
+    sf = tmp_path / "sf_empty_doc"
+    sf.mkdir()
+    pq.write_table(pa.concat_tables([docs, empty]), sf / "documents.parquet")
+    for t in TABLE_NAMES:
+        if t != "documents":
+            os.symlink(os.path.join(SF_SMALL, f"{t}.parquet"), sf / f"{t}.parquet")
+    con = duck_connection(str(sf))
+    for name in ("text_quality", "quality_classifier_score"):
+        df = QUERIES[name](spark, str(sf))
+        compare(df, con, ORACLES[name])
+        row = df.where("doc_id = 10000").collect()[0].asDict()
+        assert None in row.values(), row

@@ -8,9 +8,10 @@ while these run in one process:
 - the tier-1 tests in tests/test_properties.py and
   tests/test_ch_namespace_walk.py;
 - every registered ``ch_dialect_*`` query, built at sf0.001;
-- the hand-written edge cases below for the eight call-site rewrite
-  families (heads inside string literals, 40 and 200 siblings, nesting
-  at cap - 1, cap and cap + 1, unbalanced parentheses, wrong arity).
+- the hand-written edge cases below for the eight raw-argument call
+  families of the call walk (heads inside string literals, 40 and 200
+  siblings, nesting at cap - 1, cap and cap + 1, unbalanced parentheses,
+  wrong arity).
 
 For each input it records ``sha256`` of the output or the exact refusal
 message (``error``). Record on the commit whose behaviour is to be
@@ -127,10 +128,10 @@ def edge_cases() -> list[tuple[str, str, str]]:
         cases.append((f"{fam}/unbalanced", f"SELECT {unbalanced} FROM t"))
         cases.append((f"{fam}/arity", f"SELECT {arity} FROM t"))
     # the concatWithSeparator guard doubles per level, so at depth 15-16
-    # it emits megabytes that the later translate() passes take 10-40 s
-    # to walk: those two run through the family pass alone
+    # it emits megabytes that translate()'s residual checks take seconds
+    # to scan: those two run through the call walk alone
     return [
-        (cid, sql, "_rewrite_concat_with_separator")
+        (cid, sql, "_rewrite_table_calls")
         if cid in ("concatWithSeparator/depth_15", "concatWithSeparator/depth_16")
         else (cid, sql, "translate")
         for cid, sql in cases
