@@ -154,7 +154,9 @@ Function calls go through one name-keyed table (`_CALLS`) applied in
 one walk over the call sites, arguments first. Its templates bind only
 arguments at most one paren level deep; deeper calls inside such a
 function should be pre-flattened (the translator raises rather than
-mistranslating when it cannot bind them).
+mistranslating when it cannot bind them). Refused function names are
+the rows of one name table (`_REFUSED_CALLS`), checked once per call
+head; a name `_CALLS` translates is never refused by name.
 """
 
 from __future__ import annotations
@@ -179,8 +181,9 @@ class UnsupportedClickHouseSQL(ValueError):
     native operator to use instead."""
 
 
-# constructs we refuse (instead of silently mistranslating), with the
-# package-native replacement the error message points at
+# clause and argument shapes we refuse (instead of silently
+# mistranslating), with the package-native replacement the error message
+# points at; translate() searches the whole statement for each
 _REFUSALS: list[tuple[re.Pattern[str], str]] = [
     # bare translate() is pure-textual and cannot know the non-sort
     # columns' types (CH fills them with TYPE DEFAULTS); ch_sql() DOES
@@ -191,68 +194,6 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "run via ch_sql (schema-aware simple-form fill) or time_gap_fill",
     ),
     (re.compile(r"\bSAMPLE\s+[\d.]", re.I), "use sample_fraction (C33)"),
-    # the quantile SKETCH combinators (BFloat16/TDigest/Timing/
-    # Deterministic/Interpolated/GK/DD): each changes the sketch, so a
-    # textual map would silently change the numbers. The EXACT-semantics
-    # family IS translated (see _aggregate_call): plain
-    # quantile(s)/median -> percentile (CH's reservoir is
-    # EXACT-interpolating for groups <= 8192 and nondeterministic above
-    # — the deterministic exact value is the faithful refinement),
-    # quantile(s)Exact/medianExact -> CH's own nearest-rank formula
-    # (floor(p*n), 0-based, clamped) spelled over
-    # array_sort(collect_list), quantile(s)ExactWeighted /
-    # medianExactWeighted -> the cumulative-weight crossing, and the
-    # four exact RANK-RULE variants quantile(s)ExactLow/
-    # ExactHigh/ExactInclusive/ExactExclusive (+ medianExactLow/High)
-    # over the same sorted-array machinery (_exact_rank_rule_expr).
-    # the lookahead admits exactly those completions followed by `(` —
-    # any other completion refuses. (alternatives are longest-first so a
-    # shorter prefix can't satisfy the lookahead by backtracking and
-    # false-positive the refusal)
-    (
-        re.compile(
-            r"\bquantile"
-            r"(?!(?:sExactInclusive|sExactExclusive|sExactWeighted"
-            r"|ExactInclusive|ExactExclusive|ExactWeighted"
-            r"|sExactHigh|sExactLow|ExactHigh|ExactLow"
-            r"|sExact|Exact|s)?\s*\()"
-            r"\w*\s*\(",
-            re.I,
-        ),
-        "quantile sketch combinators (TDigest/BFloat16/Timing/"
-        "Deterministic/...) change the sketch — use quantile/"
-        "quantileExact[Weighted|Low|High|Inclusive|Exclusive] "
-        "(translated) or approx_quantiles / median_exact / "
-        "quantile_state_merge",
-    ),
-    (
-        re.compile(
-            r"\bmedian"
-            r"(?!(?:ExactWeighted|ExactHigh|ExactLow|Exact)?\s*\()"
-            r"\w*\s*\(",
-            re.I,
-        ),
-        "median sketch combinators change the sketch — use median/"
-        "medianExact/medianExactWeighted/medianExactLow/medianExactHigh "
-        "(translated) or approx_quantiles / median_exact",
-    ),
-    # topKWeighted(N)(x, w) translates (exact weight-sum
-    # frequencies — see _topk_weighted_expr); any OTHER topK suffix
-    # still falls to the residual check and refuses.
-    # locate()'s argument order FLIPPED in ClickHouse 24.1 — older
-    # servers take (haystack, needle), newer default to MySQL's
-    # (needle, haystack) behind function_locate_has_mysql_compatible_
-    # argument_order — and Spark's locate(substr, str) parses either
-    # spelling without complaint, silently searching swapped operands
-    # for half of migrating users. position(haystack, needle) is
-    # version-stable and translates.
-    (
-        re.compile(r"\blocate\s*\(", re.I),
-        "locate's argument order is ClickHouse-version-dependent "
-        "(flipped to MySQL order in 24.1) and Spark would accept either "
-        "silently — write position(haystack, needle) instead "
-        "(translated)",
-    ),
     (re.compile(r"\bON\s+CLUSTER\b", re.I), "cluster DDL is Spark-global (A4)"),
     # FROM t FINAL forces the engine's merge-collapse at read time; the
     # correct translation needs the table's engine family, ORDER BY key
@@ -282,62 +223,6 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         re.compile(r"\bASOF\s+(?:LEFT\s+|RIGHT\s+|FULL\s+|INNER\s+|OUTER\s+|CROSS\s+)*JOIN\b", re.I),
         "run via ch_sql (lateral-top-1 rewrite) or use asof_join / "
         "asof_join_tolerance / asof_join_forward",
-    ),
-    # the rest of the parametric-aggregate zoo: each points at the
-    # native operator that computes the same thing deterministically
-    (
-        re.compile(r"\b(sum|min|max)Map\s*\(", re.I),
-        "use map_funcs / explode + groupBy (C30) — Spark aggregates maps "
-        "via entries, not a Map-combinator",
-    ),
-    (
-        re.compile(r"\bhistogram\s*\(", re.I),
-        "use histogram_agg (CH's adaptive-bin sketch has no Spark twin)",
-    ),
-    (re.compile(r"\bwindowFunnel\s*\(", re.I), "use window_funnel_levels"),
-    (
-        re.compile(r"\bsequence(Match|Count)\s*\(", re.I),
-        "use sequence_count_pattern / sequence_match_funnel3",
-    ),
-    (re.compile(r"\bretention\s*\(", re.I), "use retention_conditions"),
-    (
-        re.compile(r"\b(runningAccumulate|runningDifference|neighbor)\s*\(", re.I),
-        "use window functions (lag / lead / running sums, C15-C17) — "
-        "block-local semantics don't survive distribution anyway",
-    ),
-    (
-        # the rest of the hash-family refusal: xxHash64/32 is the
-        # WORST of the class — the name RESOLVES in Spark
-        # (case-insensitive xxhash64) but Spark's xxhash64 is seed-42
-        # over the Catalyst row encoding while CH's is seed-0 over the
-        # raw bytes, so it previously PASSED THROUGH and returned
-        # silently different values; intHash/metroHash/murmurHash*/
-        # javaHash* have no Spark implementation (were opaque
-        # unresolved errors)
-        re.compile(
-            r"\b((city|sip|farm|xx|int|metro)Hash\d+|halfMD5"
-            r"|murmurHash[23]_\d+|javaHash(UTF16LE)?|farmFingerprint64"
-            r"|hiveHash|wyHash64|xxh3|kostikConsistentHash"
-            r")\s*\(",
-            re.I,
-        ),
-        "hash FAMILIES differ between engines (Spark's same-named "
-        "xxhash64 is seed-42 over the Catalyst row encoding — values "
-        "silently disagree) — recompute both sides with Spark "
-        "xxhash64 / md5 / sha2, or use the engine's md5-based "
-        "fingerprint operators",
-    ),
-    (
-        # Spark's trunc/truncate is DATE truncation (trunc(expr, fmt));
-        # CH's is numeric — trunc(x, 2) resolved in Spark and returned
-        # silent NULLs (the fmt '2' parses as an invalid unit with ANSI
-        # off). Numeric truncation toward zero spells as
-        # sign(x) * floor(abs(x) * pow(10, n)) / pow(10, n).
-        re.compile(r"\btrunc(ate)?\s*\(", re.I),
-        "ClickHouse trunc/truncate is NUMERIC truncation but Spark's "
-        "same-named trunc is DATE truncation (silent NULL with ANSI "
-        "off) — spell it as sign(x) * floor(abs(x) * pow(10, n)) / "
-        "pow(10, n) (toward zero), or CAST(x AS BIGINT) for scale 0",
     ),
     (
         # CH hex/bin of a FLOAT emit the raw little-endian IEEE-754
@@ -371,226 +256,10 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "sort rows by a derived key column, or sort bare values with "
         "arraySort(arr)",
     ),
-    (
-        re.compile(r"\barray(Reverse)?Fill\s*\(", re.I),
-        "arrayFill/arrayReverseFill's carry-forward scan — use the "
-        "window-fill operators (time_gap_fill / last_value "
-        "IGNORE NULLS) on exploded rows",
-    ),
-    (
-        # CH lagInFrame/leadInFrame respect the window FRAME; Spark's
-        # lag/lead ignore frames entirely — and under CH's DEFAULT
-        # frame (RANGE UNBOUNDED PRECEDING..CURRENT ROW) leadInFrame
-        # always returns the default value, so a bare rename would be
-        # silently wrong in both directions
-        re.compile(r"\b(lag|lead)InFrame\s*\(", re.I),
-        "Spark's lag/lead ignore window frames (CH's InFrame variants "
-        "respect them; leadInFrame under CH's default frame always "
-        "yields the default) — use lag/lead with an explicit ROWS "
-        "BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING intent, "
-        "spelled without the frame",
-    ),
-    (
-        re.compile(r"\bformatReadable\w+\s*\(", re.I),
-        "presentation-layer formatting — format client-side",
-    ),
-    (
-        re.compile(r"\buniqTheta\s*\(", re.I),
-        "use theta_set_ops / approx_count_distinct",
-    ),
-    # arrayReduce's agg name is a runtime string; arraySum/Avg/CumSum
-    # preserve CH integer-sum typing a lambda rewrite would silently
-    # widen (arrayCompact carries no typing hazard and TRANSLATES —
-    # consecutive dedup via an index-lambda filter, entry below)
-    (
-        re.compile(
-            r"\b(arrayReduce|array(Sum|Avg|CumSum\w*)"
-            r"|(sum|avg|min|max|count|uniq\w*|groupArray)Array)\s*\(",
-            re.I,
-        ),
-        "use an aggregate()/filter() lambda (C29 array_lambda_funcs)",
-    ),
-    # bit shifts/rotates: Java (and therefore Spark) masks the shift
-    # count modulo the value's bit width — 1 << 65 = 2, MEASURED — so a
-    # count at or beyond the width silently wraps instead of shifting
-    # out; no textual rewrite can know the value's width to guard it
-    (
-        re.compile(r"\bbit(Shift|Rotate)(Left|Right)\s*\(", re.I),
-        "Spark masks shift counts modulo the value's bit width "
-        "(1 << 65 = 2, measured) — bound the count yourself and use "
-        "the << / >> operators",
-    ),
-    # bitCount: Spark's bit_count counts the SIGN-EXTENDED 64-bit
-    # pattern for narrow negative inputs (bit_count(CAST(-1 AS
-    # TINYINT)) = 64, measured), so popcounts of negative narrow ints
-    # are width-dependent between engines; non-negative domains agree
-    (
-        re.compile(r"\bbitCount\s*\(", re.I),
-        "negative narrow-int popcounts are width-dependent between "
-        "engines (Spark's bit_count sign-extends to 64 bits, measured) "
-        "— use bit_count directly when the value domain is non-negative",
-    ),
-    (
-        re.compile(r"\bbitTest\w*\s*\(", re.I),
-        "use shifts and masks (& >> <<) with the bit index bounded to "
-        "the value's width",
-    ),
-    # bare reverse(): ClickHouse reverses BYTES of a String (reverseUTF8
-    # is its code-point form) while Spark's reverse reverses code points
-    # even over BINARY input (MEASURED: reverse(CAST('aпb' AS BINARY))
-    # round-trips to 'bпa', not the byte-reversed invalid-UTF-8 run CH
-    # produces) — no Spark spelling is byte-true, and the same name also
-    # reverses ARRAYS in both engines, so the intent is ambiguous
-    # textually. reverseUTF8 -> reverse translates (exact); arrayReverse
-    # -> reverse translates (exact).
-    (
-        re.compile(r"\breverse\s*\(", re.I),
-        "ClickHouse reverse reverses STRING BYTES (Spark's reverses "
-        "code points, measured even over BINARY) — use reverseUTF8 "
-        "(translated) for code-point reversal or arrayReverse "
-        "(translated) for arrays",
-    ),
-    # URL extractors: ClickHouse's URL parser accepts scheme-less and
-    # otherwise-lenient URLs ('ex.com/a' has a domain there) while
-    # Spark's parse_url returns NULL for them (MEASURED:
-    # parse_url('ex.com/a/b', 'HOST') is NULL) — a textual map would
-    # silently NULL every scheme-less row, common in logs; the pointer
-    # names the exact parse_url part for well-formed absolute URLs
-    (
-        re.compile(
-            r"\b(domain|domainWithoutWWW|topLevelDomain|protocol|path"
-            r"|pathFull|queryString|fragment|netloc"
-            r"|extractURLParameter(Names|s)?|cutQueryString\w*"
-            r"|cutFragment|cutWWW|decodeURLComponent|encodeURLComponent"
-            r"|port|(cutTo)?[fF]irstSignificantSubdomain\w*"
-            r"|URL(Path)?Hierarchy|cutURLParameter)\s*\(",
-            re.I,
-        ),
-        "ClickHouse's URL parser accepts scheme-less/lenient URLs where "
-        "Spark's parse_url returns NULL (measured) — for well-formed "
-        "absolute URLs use parse_url(url, 'HOST'|'PROTOCOL'|'PATH'|"
-        "'QUERY'|'REF'[, key]) directly",
-    ),
-    (
-        re.compile(r"\btoFixedString\s*\(", re.I),
-        "Spark has no fixed-width string type — use rpad/CAST(x AS "
-        "STRING) (byte-true padding via the leftPad/rightPad lowering)",
-    ),
-    (
-        re.compile(r"\btupleElement\s*\(", re.I),
-        "positional tuple access has no Spark spelling — use named "
-        "struct fields (named_struct / col.field)",
-    ),
-    # ---- pointered refusals for names that would otherwise reach
-    # Spark as OPAQUE unresolved-function errors ----
-    (
-        re.compile(r"\bparseDateTimeBestEffort\w*\s*\(", re.I),
-        "Spark has no lenient datetime parser — try_cast(x AS "
-        "TIMESTAMP) accepts ISO-ish forms, or parseDateTime(x, "
-        "'<format>') translates for explicit formats",
-    ),
-    (
-        re.compile(r"\btoTimeZone\s*\(", re.I),
-        "Spark TIMESTAMP rendering follows spark.sql.session.timeZone "
-        "(one per session), not a per-expression zone — use "
-        "from_utc_timestamp/to_utc_timestamp knowing they SHIFT the "
-        "instant rather than re-label it",
-    ),
-    (
-        re.compile(r"\barrayZip\s*\(", re.I),
-        "CH arrayZip makes arrays of TUPLES (positional access, not "
-        "translated) — use arrays_zip (STRUCT elements) or the "
-        "multi-array ARRAY JOIN zip lowering",
-    ),
-    (
-        re.compile(r"\bdateName\s*\(", re.I),
-        "per-part output forms are engine-defined — monthName "
-        "translates; otherwise use date_format(x, '<pattern>') "
-        "directly",
-    ),
-    (
-        re.compile(r"\binitcap(UTF8)?\s*\(", re.I),
-        "word-boundary rules diverge: ClickHouse starts a word at any "
-        "non-alphanumeric boundary ('foo-bar' -> 'Foo-Bar') while "
-        "Spark's initcap splits on whitespace only ('Foo-bar', "
-        "measured) — a silent same-name collision; use Spark initcap "
-        "if whitespace-word semantics are acceptable",
-    ),
-    (
-        re.compile(r"\b(normalizeUTF8\w+|toValidUTF8)\s*\(", re.I),
-        "Spark has no UTF-8 normalization/repair builtins — normalize "
-        "upstream or in an Arrow-batched pandas UDF",
-    ),
-    (
-        re.compile(r"\b(base58|base32)(Encode|Decode)\s*\(", re.I),
-        "Spark has no base58/base32 codec (base64Encode/Decode "
-        "translate)",
-    ),
-    (
-        re.compile(r"\banyHeavy\s*\(", re.I),
-        "engine-defined heavy-hitter selection — use the native "
-        "heavy_hitters / topk_state_merge operators",
-    ),
-    (
-        re.compile(
-            r"\b(greatCircle(Distance|Angle)|geoDistance|pointInPolygon"
-            r"|geohash(Encode|Decode|esInBox)|h3\w+|s2\w+|geoToH3"
-            r"|stringToH3|polygon\w+|wkt\w*|readWKT\w+)\s*\(",
-            re.I,
-        ),
-        "use the native geo_distance operator (haversine spelled in "
-        "SQL); polygon tests need a geospatial library",
-    ),
-    (
-        re.compile(r"\bIPv6\w+\s*\(", re.I),
-        "IPv6 textual forms have no Spark builtins (the IPv4 family "
-        "translates to exact integer arithmetic)",
-    ),
-    (
-        re.compile(r"\b(editDistance|levenshteinDistance)\s*\(", re.I),
-        "ClickHouse's bare editDistance counts BYTES — "
-        "editDistanceUTF8/levenshteinDistanceUTF8 translate to Spark's "
-        "code-point levenshtein (identical on ASCII)",
-    ),
-    # regex/class-based splitters: pattern dialects (RE2 vs Java) and
-    # engine-defined whitespace/alpha classes make a textual map
-    # silently divergent — Spark's split already takes a Java pattern
-    (
-        re.compile(
-            r"\b(splitByRegexp|splitByWhitespace|splitByNonAlpha"
-            r"|alphaTokens)\s*\(",
-            re.I,
-        ),
-        "pattern/class dialects diverge between engines (RE2 vs Java; "
-        "engine-defined whitespace/alpha sets) — use Spark split(s, "
-        "'<java pattern>') directly",
-    ),
-    # arrayFirst/arrayLast (+Index variants): when nothing matches, CH
-    # returns the element type's DEFAULT (0 / '' / ...), which the SQL
-    # text cannot know — a filter(...)[1] lowering would yield NULL
-    # there, silently different rows
-    (
-        re.compile(r"\barray(First|Last)(Index)?\s*\(", re.I),
-        "ClickHouse returns the element type's DEFAULT when no element "
-        "matches — unknowable textually; use "
-        "element_at(filter(arr, f), 1|-1) / array_position accepting "
-        "NULL, or coalesce(...) with your default",
-    ),
     # client-side file sink clause — Spark sinks are explicit
     (
         re.compile(r"\bINTO\s+OUTFILE\b", re.I),
         "sinks are explicit — df.write / sink_partitioned_parquet (C1)",
-    ),
-    # external dictionaries are broadcast dimension joins in this
-    # engine; ch_sql DOES translate dictGet/dictGetOrDefault/dictHas
-    # (+ String/[U]Int*/Float* typed forms) when the CREATE DICTIONARY
-    # is passed via ddls= (see _apply_dict_get, which rewrites before
-    # reaching here) — anything left over refuses with this pointer
-    (
-        re.compile(r"\bdict(Get|Has)\w*\s*\(", re.I),
-        "run via ch_sql(..., ddls=['CREATE DICTIONARY ...']) (lowers to "
-        "a broadcast dimension lookup) or join the dim table directly "
-        "(C6 join_broadcast_dims)",
     ),
     # recursive CTEs have no Spark SQL spelling (iterative DataFrame op)
     (
@@ -610,17 +279,6 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "scalar WITH has no Spark spelling — inline the constant or "
         "use a CTE subquery (WITH c AS (SELECT 5 AS v))",
     ),
-    # ---- width, nondeterminism and sketch-state refusals ----
-    # intExp10 returns UInt64 in CH — 10^19 exceeds BIGINT's signed
-    # max, so no width-true Spark integer target exists (the
-    # toUInt*Or* precedent); CAST(pow(10, x) AS BIGINT) is exact only
-    # for 0 <= x <= 15 and the caller must choose that trade
-    (
-        re.compile(r"\bintExp10\s*\(", re.I),
-        "intExp10 returns UInt64 (up to 10^19 — past BIGINT's signed "
-        "max) — spell CAST(pow(10, x) AS BIGINT) where 0 <= x <= 15 "
-        "is known, or compute at DOUBLE with pow(10, x)",
-    ),
     # intExp2 lowers to shiftleft(1L, x) below, exact for 0 <= x <= 62;
     # x = 63 flips sign (UInt64 2^63 has no signed home) and Spark's
     # shift is mod-64 where CH errors. A LITERAL argument outside the
@@ -637,12 +295,335 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
         "shift count mod 64 where ClickHouse errors; compute at DOUBLE "
         "with pow(2, x)",
     ),
+    # (multi-array ARRAY JOIN — the positional zip form — is TRANSLATED
+    # by _rewrite_array_join_zip: one zip_with struct + one
+    # inline, never two cross-producting LATERAL VIEWs; unparseable
+    # operand lists raise inside that rewrite with the same pointer)
+]
+
+# function names we refuse, as (name pattern, hint) rows: translate()
+# fullmatches the name of every call head that is not a _CALLS key
+# against them, so a name the call table translates is never refused
+_REFUSED_CALLS: list[tuple[str, str]] = [
+    # the quantile SKETCH combinators (BFloat16/TDigest/Timing/
+    # Deterministic/Interpolated/GK/DD): each changes the sketch, so a
+    # textual map would silently change the numbers. The EXACT-semantics
+    # family IS translated (see _aggregate_call): plain
+    # quantile(s)/median -> percentile (CH's reservoir is
+    # EXACT-interpolating for groups <= 8192 and nondeterministic above
+    # — the deterministic exact value is the faithful refinement),
+    # quantile(s)Exact/medianExact -> CH's own nearest-rank formula
+    # (floor(p*n), 0-based, clamped) spelled over
+    # array_sort(collect_list), quantile(s)ExactWeighted /
+    # medianExactWeighted -> the cumulative-weight crossing, and the
+    # four exact RANK-RULE variants quantile(s)ExactLow/
+    # ExactHigh/ExactInclusive/ExactExclusive (+ medianExactLow/High)
+    # over the same sorted-array machinery (_exact_rank_rule_expr).
+    # Those names are _CALLS keys; any other completion refuses.
+    (
+        r"quantile\w*",
+        "quantile sketch combinators (TDigest/BFloat16/Timing/"
+        "Deterministic/...) change the sketch — use quantile/"
+        "quantileExact[Weighted|Low|High|Inclusive|Exclusive] "
+        "(translated) or approx_quantiles / median_exact / "
+        "quantile_state_merge",
+    ),
+    (
+        r"median\w*",
+        "median sketch combinators change the sketch — use median/"
+        "medianExact/medianExactWeighted/medianExactLow/medianExactHigh "
+        "(translated) or approx_quantiles / median_exact",
+    ),
+    # topKWeighted(N)(x, w) translates (exact weight-sum
+    # frequencies — see _topk_weighted_expr); any OTHER topK suffix
+    # still falls to the residual check and refuses.
+    # locate()'s argument order FLIPPED in ClickHouse 24.1 — older
+    # servers take (haystack, needle), newer default to MySQL's
+    # (needle, haystack) behind function_locate_has_mysql_compatible_
+    # argument_order — and Spark's locate(substr, str) parses either
+    # spelling without complaint, silently searching swapped operands
+    # for half of migrating users. position(haystack, needle) is
+    # version-stable and translates.
+    (
+        r"locate",
+        "locate's argument order is ClickHouse-version-dependent "
+        "(flipped to MySQL order in 24.1) and Spark would accept either "
+        "silently — write position(haystack, needle) instead "
+        "(translated)",
+    ),
+    # the rest of the parametric-aggregate zoo: each points at the
+    # native operator that computes the same thing deterministically
+    (
+        r"(sum|min|max)Map",
+        "use map_funcs / explode + groupBy (C30) — Spark aggregates maps "
+        "via entries, not a Map-combinator",
+    ),
+    (
+        r"histogram",
+        "use histogram_agg (CH's adaptive-bin sketch has no Spark twin)",
+    ),
+    (r"windowFunnel", "use window_funnel_levels"),
+    (
+        r"sequence(Match|Count)",
+        "use sequence_count_pattern / sequence_match_funnel3",
+    ),
+    (r"retention", "use retention_conditions"),
+    (
+        r"runningAccumulate|runningDifference|neighbor",
+        "use window functions (lag / lead / running sums, C15-C17) — "
+        "block-local semantics don't survive distribution anyway",
+    ),
+    (
+        # the rest of the hash-family refusal: xxHash64/32 is the
+        # WORST of the class — the name RESOLVES in Spark
+        # (case-insensitive xxhash64) but Spark's xxhash64 is seed-42
+        # over the Catalyst row encoding while CH's is seed-0 over the
+        # raw bytes, so it previously PASSED THROUGH and returned
+        # silently different values; intHash/metroHash/murmurHash*/
+        # javaHash* have no Spark implementation (were opaque
+        # unresolved errors)
+        r"(city|sip|farm|xx|int|metro)Hash\d+|halfMD5"
+        r"|murmurHash[23]_\d+|javaHash(UTF16LE)?|farmFingerprint64"
+        r"|hiveHash|wyHash64|xxh3|kostikConsistentHash",
+        "hash FAMILIES differ between engines (Spark's same-named "
+        "xxhash64 is seed-42 over the Catalyst row encoding — values "
+        "silently disagree) — recompute both sides with Spark "
+        "xxhash64 / md5 / sha2, or use the engine's md5-based "
+        "fingerprint operators",
+    ),
+    (
+        # Spark's trunc/truncate is DATE truncation (trunc(expr, fmt));
+        # CH's is numeric — trunc(x, 2) resolved in Spark and returned
+        # silent NULLs (the fmt '2' parses as an invalid unit with ANSI
+        # off). Numeric truncation toward zero spells as
+        # sign(x) * floor(abs(x) * pow(10, n)) / pow(10, n).
+        r"trunc(ate)?",
+        "ClickHouse trunc/truncate is NUMERIC truncation but Spark's "
+        "same-named trunc is DATE truncation (silent NULL with ANSI "
+        "off) — spell it as sign(x) * floor(abs(x) * pow(10, n)) / "
+        "pow(10, n) (toward zero), or CAST(x AS BIGINT) for scale 0",
+    ),
+    (
+        r"array(Reverse)?Fill",
+        "arrayFill/arrayReverseFill's carry-forward scan — use the "
+        "window-fill operators (time_gap_fill / last_value "
+        "IGNORE NULLS) on exploded rows",
+    ),
+    (
+        # CH lagInFrame/leadInFrame respect the window FRAME; Spark's
+        # lag/lead ignore frames entirely — and under CH's DEFAULT
+        # frame (RANGE UNBOUNDED PRECEDING..CURRENT ROW) leadInFrame
+        # always returns the default value, so a bare rename would be
+        # silently wrong in both directions
+        r"(lag|lead)InFrame",
+        "Spark's lag/lead ignore window frames (CH's InFrame variants "
+        "respect them; leadInFrame under CH's default frame always "
+        "yields the default) — use lag/lead with an explicit ROWS "
+        "BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING intent, "
+        "spelled without the frame",
+    ),
+    (
+        r"formatReadable\w+",
+        "presentation-layer formatting — format client-side",
+    ),
+    (
+        r"uniqTheta",
+        "use theta_set_ops / approx_count_distinct",
+    ),
+    # arrayReduce's agg name is a runtime string; arraySum/Avg/CumSum
+    # preserve CH integer-sum typing a lambda rewrite would silently
+    # widen (arrayCompact carries no typing hazard and TRANSLATES —
+    # consecutive dedup via an index-lambda filter, entry below)
+    (
+        r"arrayReduce|array(Sum|Avg|CumSum\w*)"
+        r"|(sum|avg|min|max|count|uniq\w*|groupArray)Array",
+        "use an aggregate()/filter() lambda (C29 array_lambda_funcs)",
+    ),
+    # bit shifts/rotates: Java (and therefore Spark) masks the shift
+    # count modulo the value's bit width — 1 << 65 = 2, MEASURED — so a
+    # count at or beyond the width silently wraps instead of shifting
+    # out; no textual rewrite can know the value's width to guard it
+    (
+        r"bit(Shift|Rotate)(Left|Right)",
+        "Spark masks shift counts modulo the value's bit width "
+        "(1 << 65 = 2, measured) — bound the count yourself and use "
+        "the << / >> operators",
+    ),
+    # bitCount: Spark's bit_count counts the SIGN-EXTENDED 64-bit
+    # pattern for narrow negative inputs (bit_count(CAST(-1 AS
+    # TINYINT)) = 64, measured), so popcounts of negative narrow ints
+    # are width-dependent between engines; non-negative domains agree
+    (
+        r"bitCount",
+        "negative narrow-int popcounts are width-dependent between "
+        "engines (Spark's bit_count sign-extends to 64 bits, measured) "
+        "— use bit_count directly when the value domain is non-negative",
+    ),
+    (
+        r"bitTest\w*",
+        "use shifts and masks (& >> <<) with the bit index bounded to "
+        "the value's width",
+    ),
+    # bare reverse(): ClickHouse reverses BYTES of a String (reverseUTF8
+    # is its code-point form) while Spark's reverse reverses code points
+    # even over BINARY input (MEASURED: reverse(CAST('aпb' AS BINARY))
+    # round-trips to 'bпa', not the byte-reversed invalid-UTF-8 run CH
+    # produces) — no Spark spelling is byte-true, and the same name also
+    # reverses ARRAYS in both engines, so the intent is ambiguous
+    # textually. reverseUTF8 -> reverse translates (exact); arrayReverse
+    # -> reverse translates (exact).
+    (
+        r"reverse",
+        "ClickHouse reverse reverses STRING BYTES (Spark's reverses "
+        "code points, measured even over BINARY) — use reverseUTF8 "
+        "(translated) for code-point reversal or arrayReverse "
+        "(translated) for arrays",
+    ),
+    # URL extractors: ClickHouse's URL parser accepts scheme-less and
+    # otherwise-lenient URLs ('ex.com/a' has a domain there) while
+    # Spark's parse_url returns NULL for them (MEASURED:
+    # parse_url('ex.com/a/b', 'HOST') is NULL) — a textual map would
+    # silently NULL every scheme-less row, common in logs; the pointer
+    # names the exact parse_url part for well-formed absolute URLs
+    (
+        r"domain|domainWithoutWWW|topLevelDomain|protocol|path"
+        r"|pathFull|queryString|fragment|netloc"
+        r"|extractURLParameter(Names|s)?|cutQueryString\w*"
+        r"|cutFragment|cutWWW|decodeURLComponent|encodeURLComponent"
+        r"|port|(cutTo)?[fF]irstSignificantSubdomain\w*"
+        r"|URL(Path)?Hierarchy|cutURLParameter",
+        "ClickHouse's URL parser accepts scheme-less/lenient URLs where "
+        "Spark's parse_url returns NULL (measured) — for well-formed "
+        "absolute URLs use parse_url(url, 'HOST'|'PROTOCOL'|'PATH'|"
+        "'QUERY'|'REF'[, key]) directly",
+    ),
+    (
+        r"toFixedString",
+        "Spark has no fixed-width string type — use rpad/CAST(x AS "
+        "STRING) (byte-true padding via the leftPad/rightPad lowering)",
+    ),
+    (
+        r"tupleElement",
+        "positional tuple access has no Spark spelling — use named "
+        "struct fields (named_struct / col.field)",
+    ),
+    # ---- pointered refusals for names that would otherwise reach
+    # Spark as OPAQUE unresolved-function errors ----
+    (
+        r"parseDateTimeBestEffort\w*",
+        "Spark has no lenient datetime parser — try_cast(x AS "
+        "TIMESTAMP) accepts ISO-ish forms, or parseDateTime(x, "
+        "'<format>') translates for explicit formats",
+    ),
+    (
+        r"toTimeZone",
+        "Spark TIMESTAMP rendering follows spark.sql.session.timeZone "
+        "(one per session), not a per-expression zone — use "
+        "from_utc_timestamp/to_utc_timestamp knowing they SHIFT the "
+        "instant rather than re-label it",
+    ),
+    (
+        r"arrayZip",
+        "CH arrayZip makes arrays of TUPLES (positional access, not "
+        "translated) — use arrays_zip (STRUCT elements) or the "
+        "multi-array ARRAY JOIN zip lowering",
+    ),
+    (
+        r"dateName",
+        "per-part output forms are engine-defined — monthName "
+        "translates; otherwise use date_format(x, '<pattern>') "
+        "directly",
+    ),
+    (
+        r"initcap(UTF8)?",
+        "word-boundary rules diverge: ClickHouse starts a word at any "
+        "non-alphanumeric boundary ('foo-bar' -> 'Foo-Bar') while "
+        "Spark's initcap splits on whitespace only ('Foo-bar', "
+        "measured) — a silent same-name collision; use Spark initcap "
+        "if whitespace-word semantics are acceptable",
+    ),
+    (
+        r"normalizeUTF8\w+|toValidUTF8",
+        "Spark has no UTF-8 normalization/repair builtins — normalize "
+        "upstream or in an Arrow-batched pandas UDF",
+    ),
+    (
+        r"(base58|base32)(Encode|Decode)",
+        "Spark has no base58/base32 codec (base64Encode/Decode "
+        "translate)",
+    ),
+    (
+        r"anyHeavy",
+        "engine-defined heavy-hitter selection — use the native "
+        "heavy_hitters / topk_state_merge operators",
+    ),
+    (
+        r"greatCircle(Distance|Angle)|geoDistance|pointInPolygon"
+        r"|geohash(Encode|Decode|esInBox)|h3\w+|s2\w+|geoToH3"
+        r"|stringToH3|polygon\w+|wkt\w*|readWKT\w+",
+        "use the native geo_distance operator (haversine spelled in "
+        "SQL); polygon tests need a geospatial library",
+    ),
+    (
+        r"IPv6\w+",
+        "IPv6 textual forms have no Spark builtins (the IPv4 family "
+        "translates to exact integer arithmetic)",
+    ),
+    (
+        r"editDistance|levenshteinDistance",
+        "ClickHouse's bare editDistance counts BYTES — "
+        "editDistanceUTF8/levenshteinDistanceUTF8 translate to Spark's "
+        "code-point levenshtein (identical on ASCII)",
+    ),
+    # regex/class-based splitters: pattern dialects (RE2 vs Java) and
+    # engine-defined whitespace/alpha classes make a textual map
+    # silently divergent — Spark's split already takes a Java pattern
+    (
+        r"splitByRegexp|splitByWhitespace|splitByNonAlpha"
+        r"|alphaTokens",
+        "pattern/class dialects diverge between engines (RE2 vs Java; "
+        "engine-defined whitespace/alpha sets) — use Spark split(s, "
+        "'<java pattern>') directly",
+    ),
+    # arrayFirst/arrayLast (+Index variants): when nothing matches, CH
+    # returns the element type's DEFAULT (0 / '' / ...), which the SQL
+    # text cannot know — a filter(...)[1] lowering would yield NULL
+    # there, silently different rows
+    (
+        r"array(First|Last)(Index)?",
+        "ClickHouse returns the element type's DEFAULT when no element "
+        "matches — unknowable textually; use "
+        "element_at(filter(arr, f), 1|-1) / array_position accepting "
+        "NULL, or coalesce(...) with your default",
+    ),
+    # external dictionaries are broadcast dimension joins in this
+    # engine; ch_sql DOES translate dictGet/dictGetOrDefault/dictHas
+    # (+ String/[U]Int*/Float* typed forms) when the CREATE DICTIONARY
+    # is passed via ddls= (see _apply_dict_get, which rewrites before
+    # reaching here) — anything left over refuses with this pointer
+    (
+        r"dict(Get|Has)\w*",
+        "run via ch_sql(..., ddls=['CREATE DICTIONARY ...']) (lowers to "
+        "a broadcast dimension lookup) or join the dim table directly "
+        "(C6 join_broadcast_dims)",
+    ),
+    # ---- width, nondeterminism and sketch-state refusals ----
+    # intExp10 returns UInt64 in CH — 10^19 exceeds BIGINT's signed
+    # max, so no width-true Spark integer target exists (the
+    # toUInt*Or* precedent); CAST(pow(10, x) AS BIGINT) is exact only
+    # for 0 <= x <= 15 and the caller must choose that trade
+    (
+        r"intExp10",
+        "intExp10 returns UInt64 (up to 10^19 — past BIGINT's signed "
+        "max) — spell CAST(pow(10, x) AS BIGINT) where 0 <= x <= 15 "
+        "is known, or compute at DOUBLE with pow(10, x)",
+    ),
     # mapApply's lambda returns a CH TUPLE (k2, v2) — Spark's
     # map-lambda surface is transform_keys/transform_values (one side
     # at a time) and a textual rewrite cannot split the tuple body;
     # the map sorts have no Spark equivalent at all (maps are unordered)
     (
-        re.compile(r"\bmap(Apply|Sort|ReverseSort|PartialSort)\s*\(", re.I),
+        r"map(Apply|Sort|ReverseSort|PartialSort)",
         "mapApply/mapSort* — Spark maps are unordered and its lambda "
         "surface is one-sided: spell key/value rewrites with "
         "transform_keys / transform_values, and sorts on map_entries "
@@ -653,288 +634,281 @@ _REFUSALS: list[tuple[re.Pattern[str], str]] = [
     # unresolved-function error, or worse, resolve to different
     # semantics) ----
     (
-        re.compile(r"\b(gcd|lcm)\s*\(", re.I),
+        r"gcd|lcm",
         "no Spark builtin — compute in an Arrow-batched pandas UDF or "
         "spell Euclid's reduction explicitly",
     ),
     (
-        re.compile(r"\breinterpretAs\w+\s*\(", re.I),
+        r"reinterpretAs\w+",
         "byte reinterpretation is width/endianness-defined — use "
         "explicit CAST/unhex/encode spellings for the bytes you mean",
     ),
     (
-        re.compile(r"\btoTime\s*\(", re.I),
+        r"toTime",
         "ClickHouse toTime rebases to 1970-01-02 — extract the clock "
         "parts (hour/minute/second) or date_format(x, 'HH:mm:ss')",
     ),
     (
-        re.compile(r"\bto(Year)?Week\s*\(", re.I),
+        r"to(Year)?Week",
         "toWeek's mode parameter selects among 10 week-numbering "
         "conventions — toISOWeek translates (ISO); spell others with "
         "date_format/extract",
     ),
     (
-        re.compile(r"\b(to|from)(Modified)?JulianDay\w*\s*\(", re.I),
+        r"(to|from)(Modified)?JulianDay\w*",
         "no Spark Julian-day builtin — datediff against DATE'1858-11-17' "
         "spells the modified form",
     ),
     (
-        re.compile(r"\btoRelative\w+Num\s*\(", re.I),
+        r"toRelative\w+Num",
         "epoch-origin and timezone conventions are engine-defined — "
         "spell with datediff/unix_timestamp against an explicit origin",
     ),
     (
-        re.compile(r"\bextractTextFromHTML\s*\(", re.I),
+        r"extractTextFromHTML",
         "no Spark HTML parser — use an Arrow-batched pandas UDF",
     ),
     (
-        re.compile(r"\bfirstLine\s*\(", re.I),
+        r"firstLine",
         "CH splits on \\n, \\r and \\r\\n — substring_index(x, '\\n', 1) "
         "covers LF-only text; spell the CRLF form explicitly",
     ),
     (
-        re.compile(r"\b(ngrams|tokens)\s*\(", re.I),
+        r"ngrams|tokens",
         "use the corpus tokenizer operators (operators/llm_text.py: "
         "token_count / ngram machinery) or split + transform lambdas",
     ),
     (
-        re.compile(r"\bhasToken\w*\s*\(", re.I),
+        r"hasToken\w*",
         "token-boundary search — spell as rlike with explicit "
         "non-alphanumeric boundary classes around the literal token",
     ),
     (
-        re.compile(r"\bhasSubstr\s*\(", re.I),
+        r"hasSubstr",
         "consecutive-subsequence test has no Spark builtin — use an "
         "aggregate() scan or the exists/filter lambdas",
     ),
     (
-        re.compile(r"\barrayResize\s*\(", re.I),
+        r"arrayResize",
         "the pad element's default is TYPE-dependent (unknowable "
         "textually) — spell slice(...) + concat(..., array_repeat(pad, "
         "n)) with an explicit pad",
     ),
     (
-        re.compile(r"\barray(PartialSort|(Reverse)?Split)\s*\(", re.I),
+        r"array(PartialSort|(Reverse)?Split)",
         "partial sorts and lambda splits have no Spark array builtin — "
         "sort/split rows instead (explode + window), or a pandas UDF",
     ),
     (
-        re.compile(r"\barrayEnumerate(Dense|Uniq)\w*\s*\(", re.I),
+        r"arrayEnumerate(Dense|Uniq)\w*",
         "per-value occurrence numbering — explode and use ROW_NUMBER "
         "over (value) windows, or dense_rank for the Dense form",
     ),
     (
-        re.compile(r"\barrayAUC\s*\(", re.I),
+        r"arrayAUC",
         "use the native analytics operators over exploded rows (window "
         "rank + aggregation spells AUC exactly)",
     ),
     (
-        re.compile(r"\barray(Rotate|Shift)(Left|Right)\s*\(", re.I),
+        r"array(Rotate|Shift)(Left|Right)",
         "spell with slice + concat (rotate: concat(slice(a, n+1, N), "
         "slice(a, 1, n)); shifts need an explicit pad element)",
     ),
     (
-        re.compile(r"\bmapPopulateSeries\s*\(", re.I),
+        r"mapPopulateSeries",
         "series densification — use sequence() + transform into "
         "map_from_arrays, or the time_gap_fill operator for rows",
     ),
     (
-        re.compile(r"\bmap(Update|Concat)\s*\(", re.I),
+        r"map(Update|Concat)",
         "Spark's map_concat duplicate-key behavior follows the session "
         "conf spark.sql.mapKeyDedupPolicy (EXCEPTION by default, "
         "LAST_WIN to mimic mapUpdate) — set it explicitly and use "
         "map_concat directly",
     ),
     (
-        re.compile(r"\bJSON(Has|Length|Type)\s*\(", re.I),
+        r"JSON(Has|Length|Type)",
         "use get_json_object(x, '$.path') IS NOT NULL (json-null rows "
         "differ: CH counts a null VALUE as present), "
         "json_object_keys/json_array_length (both translated from "
         "JSONExtractKeys/JSONArrayLength), or schema_of_json",
     ),
     (
-        re.compile(r"\bJSON_(VALUE|QUERY|EXISTS)\s*\(", re.I),
+        r"JSON_(VALUE|QUERY|EXISTS)",
         "CH's SQL/JSON forms return ''/wrapped-array/1 where Spark's "
         "nearest (get_json_object) returns NULL/bare/boolean — use "
         "get_json_object(x, path) and spell the empty/wrap handling",
     ),
     (
-        re.compile(r"\b(simpleJSON|visitParam)\w+\s*\(", re.I),
+        r"(simpleJSON|visitParam)\w+",
         "simpleJSON*/visitParam* scan for the FIRST key occurrence at "
         "ANY nesting depth (sloppy-scan semantics) — the JSONExtract* "
         "lowerings parse properly; use those",
     ),
     (
-        re.compile(r"\bround(ToExp2|Duration|Age)\s*\(", re.I),
+        r"round(ToExp2|Duration|Age)",
         "legacy fixed-bucket helpers — spell the documented bucket "
         "edges as an explicit CASE (or width_bucket for uniform grids)",
     ),
     (
-        re.compile(r"\b(erfc?|[lt]gamma)\s*\(", re.I),
+        r"erfc?|[lt]gamma",
         "no Spark builtin — use an Arrow-batched pandas UDF "
         "(scipy.special) or a polynomial approximation in SQL",
     ),
     (
-        re.compile(r"\bunbin\s*\(", re.I),
+        r"unbin",
         "no Spark binary-string decoder — conv(x, 2, 10) yields the "
         "integer; unhex the hex form for bytes",
     ),
     (
-        re.compile(r"\bbitmaskTo(List|Array)\s*\(", re.I),
+        r"bitmaskTo(List|Array)",
         "spell with filter(sequence(0, 62), b -> (x >> b) & 1 = 1) and "
         "shiftleft for the powers",
     ),
     (
-        re.compile(r"\b(toIPv[46]\w*|isIPv6String|IPv4ToIPv6|cutIPv6"
-                   r"|MACNumToString|MACStringTo\w+)\s*\(", re.I),
+        r"toIPv[46]\w*|isIPv6String|IPv4ToIPv6|cutIPv6"
+        r"|MACNumToString|MACStringTo\w+",
         "typed IPv4/IPv6/MAC domains have no Spark twin — "
         "IPv4NumToString/IPv4StringToNum/isIPv4String translate; keep "
         "addresses as STRING/BIGINT otherwise",
     ),
     (
-        # (generateUUIDv4 TRANSLATES to uuid() — the rewrite below;
-        # refusals run first, so it must stay out of this alternation)
-        re.compile(r"\b(toUUID\w*|UUID(StringToNum|NumToString)"
-                   r"|generateUUIDv[0-35-9]|serverUUID)\s*\(", re.I),
+        r"toUUID\w*|UUID(StringToNum|NumToString)"
+        r"|generateUUIDv\d|serverUUID",
         "Spark has uuid() for generation only — keep UUIDs as STRING "
         "(toString/CAST both ways is the identity there)",
     ),
     (
-        re.compile(r"\bbit(HammingDistance|Slice)\s*\(", re.I),
+        r"bit(HammingDistance|Slice)",
         "width-dependent bit views (the bitCount sign-extension class) "
         "— bound the domain and spell with ^ and bit_count, or "
         "substr on hex(x) for slices",
     ),
     (
-        re.compile(
-            r"\b(hostName|visibleWidth|blockSize|ignore|sleep(EachRow)?"
-            r"|uptime|rowNumberIn\w+|bar|getSetting|byteSize|indexHint"
-            r"|countDigits|parseTimeDelta|untuple"
-            r"|(finalize|initialize)Aggregation)\s*\(",
-            re.I,
-        ),
+        r"hostName|visibleWidth|blockSize|ignore|sleep(EachRow)?"
+        r"|uptime|rowNumberIn\w+|bar|getSetting|byteSize|indexHint"
+        r"|countDigits|parseTimeDelta|untuple"
+        r"|(finalize|initialize)Aggregation",
         "server/block introspection has no Spark analog — these "
         "describe ClickHouse execution state, not data; drop them or "
         "read the Spark UI/metrics instead",
     ),
     (
-        re.compile(
-            r"\b(deltaSum(Timestamp)?|exponentialMovingAverage"
-            r"|groupArray(InsertAt|Sample|Moving(Avg|Sum)))\s*\(",
-            re.I,
-        ),
+        r"deltaSum(Timestamp)?|exponentialMovingAverage"
+        r"|groupArray(InsertAt|Sample|Moving(Avg|Sum))",
         "ORDER-dependent aggregates — Spark aggregation is unordered; "
         "use window functions over an explicit ORDER BY (the "
         "delta_sum_running / stream_ema_state operators)",
     ),
     (
-        re.compile(r"\b(groupBitmap\w*|bitmap\w+)\s*\(", re.I),
+        r"groupBitmap\w*|bitmap\w+",
         "roaring-bitmap states are engine-internal — use the sketch "
         "state operators (uniq_state_merge / theta_set_ops) or exact "
         "count(DISTINCT ...)",
     ),
     (
-        re.compile(r"\brankCorr\s*\(", re.I),
+        r"rankCorr",
         "Spearman = Pearson over ranks: corr(rank() OVER (ORDER BY x), "
         "rank() OVER (ORDER BY y)) spells it exactly",
     ),
     (
-        re.compile(r"\b(kurt|skew)Samp\s*\(", re.I),
+        r"(kurt|skew)Samp",
         "Spark's builtins are the POPULATION moments (kurtPop/skewPop "
         "translate) — spell the sample corrections explicitly",
     ),
     (
-        re.compile(r"\bsumWithOverflow\s*\(", re.I),
+        r"sumWithOverflow",
         "deliberate wraparound vs ANSI overflow errors — CAST to "
         "BIGINT and accept the error, or mask into the wrap width",
     ),
     (
-        re.compile(
-            r"\b(uniq\w*|topK\w*|quantile\w*|avg|sum|count|min|max|any"
-            r"|groupArray)(State|Merge)\s*\(",
-            re.I,
-        ),
+        r"(uniq\w*|topK\w*|quantile\w*|avg|sum|count|min|max|any"
+        r"|groupArray)(State|Merge)",
         "-State/-Merge combinators are engine-internal sketch states — "
         "use the mergeable sketch operators (uniq_state_merge, "
         "topk_state_merge, agg_state_merge)",
     ),
     (
-        re.compile(r"\breplaceRegexpOne\s*\(", re.I),
+        r"replaceRegexpOne",
         "Java's regexp_replace replaces ALL matches — no "
         "first-match-only Spark spelling (replaceRegexpAll translates; "
         "replaceOne translates for plain substrings)",
     ),
     (
-        re.compile(r"\btoTypeName\s*\(", re.I),
+        r"toTypeName",
         "type NAMES differ between engines ('Int64' vs 'bigint') — "
         "Spark typeof(x) reports the Spark name; comparisons against "
         "ClickHouse type strings would silently never match",
     ),
     (
-        re.compile(r"\bformat\s*\(", re.I),
+        r"format",
         "ClickHouse format uses {}-placeholders; Spark format_string "
         "is printf-style — rewrite the template (format_string('%s', "
         "...)) or use concat",
     ),
     # ---- more namespace-walk refusals ----
     (
-        re.compile(
-            r"\b(damerauLevenshteinDistance|jaro(Winkler)?Similarity"
-            r"|stringJaccardIndex\w*|byteHammingDistance)\s*\(",
-            re.I,
-        ),
+        r"damerauLevenshteinDistance|jaro(Winkler)?Similarity"
+        r"|stringJaccardIndex\w*|byteHammingDistance",
         "string-similarity variants beyond levenshtein have no Spark "
         "builtin — editDistanceUTF8/levenshteinDistanceUTF8 translate; "
         "others need an Arrow-batched pandas UDF",
     ),
     (
-        re.compile(
-            r"\b((student|welch)TTest|mannWhitneyUTest|meanZTest"
-            r"|largestTriangleThreeBuckets|cramersV\w*|theilsU"
-            r"|contingency|categoricalInformationValue)\s*\(",
-            re.I,
-        ),
+        r"(student|welch)TTest|mannWhitneyUTest|meanZTest"
+        r"|largestTriangleThreeBuckets|cramersV\w*|theilsU"
+        r"|contingency|categoricalInformationValue",
         "statistical-test aggregates have no Spark builtin — compute "
         "the moments with stddev/avg/count and form the statistic, or "
         "use an Arrow-batched pandas UDAF",
     ),
     (
-        re.compile(r"\barrayShingles\s*\(", re.I),
+        r"arrayShingles",
         "use the shingle machinery in the dedup operators "
         "(operators/llm_dedup.py) or transform over sequence indexes",
     ),
     (
-        re.compile(r"\b(from|to)UnixTimestamp64Nano\s*\(", re.I),
+        r"(from|to)UnixTimestamp64Nano",
         "Spark timestamps top out at MICROSECONDS — a nano form would "
         "silently truncate; keep nanos as BIGINT and divide explicitly",
     ),
     (
-        re.compile(r"\btoStartOfISOYear\s*\(", re.I),
+        r"toStartOfISOYear",
         "ISO-year start needs the ISO week-date calendar — derive from "
         "extract(YEAROFWEEK ...) (toISOYear translates) and make_date",
     ),
     (
-        re.compile(
-            r"\b(UTCTimestamp|nowInBlock|serverTimeZone|timezoneOf)\s*\(",
-            re.I,
-        ),
+        r"UTCTimestamp|nowInBlock|serverTimeZone|timezoneOf",
         "per-expression/server timezone state has no Spark spelling "
         "(the toTimeZone class) — now() translates; "
         "spark.sql.session.timeZone owns rendering",
     ),
     (
-        re.compile(
-            r"\b(snowflakeToDateTime\w*|dateTime(64)?ToSnowflake\w*)\s*\(",
-            re.I,
-        ),
+        r"snowflakeToDateTime\w*|dateTime(64)?ToSnowflake\w*",
         "snowflake-ID epoch packing — spell the shift/mask arithmetic "
         "explicitly on BIGINT",
     ),
-    # (multi-array ARRAY JOIN — the positional zip form — is TRANSLATED
-    # by _rewrite_array_join_zip: one zip_with struct + one
-    # inline, never two cross-producting LATERAL VIEWs; unparseable
-    # operand lists raise inside that rewrite with the same pointer)
 ]
+# the rows as one alternation; the row of a match is its group r<index>
+_REFUSED_CALL = re.compile(
+    "|".join(f"(?P<r{i}>{p})" for i, (p, _) in enumerate(_REFUSED_CALLS)), re.I
+).fullmatch
+
+
+def _refusal(masked: str) -> tuple["re.Match[str]", str] | None:
+    """The first refused construct of a literal-masked statement as
+    (match, hint): the _REFUSALS shapes in order, then the call heads in
+    text order whose name is no _CALLS key and matches a _REFUSED_CALLS
+    row; None when nothing is refused."""
+    for pat, hint in _REFUSALS:
+        if m := pat.search(masked):
+            return m, hint
+    for m in _CALL_HEAD.finditer(masked):
+        name = m.group(1)
+        if name.lower() not in _CALLS and (r := _REFUSED_CALL(name)):
+            return m, _REFUSED_CALLS[int(r.lastgroup[1:])][1]
+    return None
+
 
 # an argument: non-paren/comma text, allowing single-quoted literals
 # (whose internal commas/parens are opaque) and one level of nested
@@ -1612,27 +1586,37 @@ def _lg_leaves(name: str, arg: str) -> list[str]:
     # flatten SAME-function nesting: least(a, least(b, c)) has exactly
     # least(a, b, c)'s semantics in CH (min of all, NULL if any NULL),
     # and the pre-variadic ClickHouse idiom chains 2-arg calls — without
-    # flattening, the guard's double-embedding grows 2^depth. Iterative
-    # (explicit work stack): a machine-generated 1000-deep chain must
-    # flatten, not blow Python's recursion limit.
+    # flattening, the guard's double-embedding grows 2^depth. One bracket
+    # scan of ``arg`` serves every level, and an explicit work stack of
+    # spans walks them: a machine-generated 1000-deep chain flattens in
+    # linear time, never past Python's recursion limit.
+    try:
+        close, commas = _bracket_scan(arg)
+    except UnsupportedClickHouseSQL:
+        return [arg]  # not a call: a call's brackets pair
     out: list[str] = []
-    stack = [arg]
+    stack = [(0, len(arg))]
     while stack:
-        a = stack.pop()
-        m = _CALL_HEAD.match(a)
-        if m and m.group(1).lower() == name and a.endswith(")"):
-            try:
-                pieces = _split_top_level_args(a[m.end() : -1])
-            except UnsupportedClickHouseSQL:
-                out.append(a)  # trailing ')' closes something else
-                continue
-            if len(pieces) >= 2:
-                stack.extend(p.strip() for p in reversed(pieces))
+        start, end = stack.pop()
+        m = _CALL_HEAD.match(arg, start, end)
+        # a same-name call whose '(' pairs with the span's last ')'
+        if m and m.group(1).lower() == name and arg[end - 1] == ")" and (
+            close[m.end() - 1] == end - 1
+        ):
+            cuts = [m.end() - 1, *commas[m.end() - 1], end - 1]
+            if len(cuts) > 2:
+                for a, b in reversed(list(zip(cuts, cuts[1:]))):
+                    a += 1
+                    while a < b and arg[a].isspace():
+                        a += 1
+                    while b > a and arg[b - 1].isspace():
+                        b -= 1
+                    stack.append((a, b))
                 continue
             # a 1-arg same-name call is not valid CH — keep it intact
             # so it reaches Spark's loud arity error instead of being
             # silently legalized by the flatten
-        out.append(a)
+        out.append(arg[start:end])
     return out
 
 
@@ -2131,7 +2115,7 @@ def _replace_regexp_all(args: list[str]) -> str | None:
 
 # ---- quantile / median / topK family (parametric aggregates) ----
 # Accepted forms and their Spark spellings (every other member of the
-# family refuses via _REFUSALS, and any surviving spelling via
+# family refuses via _REFUSED_CALLS, and any surviving spelling via
 # _RESIDUALS):
 #
 #   quantile(p)(x), quantile(x), median(x)   -> percentile(x, p)  [p=0.5]
@@ -2907,7 +2891,7 @@ _CALLS: dict = {
     # scalar bitwise ops: two's-complement AND/OR/XOR/NOT are
     # width-independent (both engines promote to a common integer type
     # and the bit patterns agree), so the operator spellings are exact.
-    # bitShift*/bitRotate*/bitCount/bitTest* refuse in _REFUSALS —
+    # bitShift*/bitRotate*/bitCount/bitTest* refuse in _REFUSED_CALLS —
     # shift-count masking and sign-extension make those width-dependent.
     "bitand": "(({0}) & ({1}))",
     "bitor": "(({0}) | ({1}))",
@@ -3378,10 +3362,10 @@ _CALLS: dict = {
     # round-trip is needed.
     "substringindex": "substring_index(",
     # reverseUTF8 = code-point reversal = Spark's reverse on strings
-    # (bare reverse refuses in _REFUSALS — CH's is byte-level)
+    # (bare reverse refuses in _REFUSED_CALLS — CH's is byte-level)
     "reverseutf8": "reverse(",
     # code-point edit distance: CH's UTF8 forms == Spark levenshtein
-    # (the bare byte forms refuse in _REFUSALS)
+    # (the bare byte forms refuse in _REFUSED_CALLS)
     "editdistanceutf8": "levenshtein(",
     "levenshteindistanceutf8": "levenshtein(",
     # suffix/prefix equality is encoding-agnostic — the UTF8 spellings
@@ -3655,10 +3639,11 @@ _CLAUSES: list[tuple[re.Pattern[str], str]] = [
 ]
 
 
-# any surviving ClickHouse-only name means a rewrite failed to match
-# (nested arguments past the _ARG budget, wrong arity, a non-literal
+# any surviving call of a ClickHouse-only name means a rewrite failed to
+# match (nested arguments past the _ARG budget, wrong arity, a non-literal
 # argument an entry needs as a literal) — refuse rather than ship wrong
-# SQL. The call table's emissions spell none of these names.
+# SQL. The call table's emissions spell none of these names. Matched
+# against whole call-head names.
 _RESIDUALS = re.compile(
     # \w* tails on the converter families: the signed-Int/Float
     # OrZero/OrNull/OrDefault suffixes translate, so what reaches this
@@ -3667,7 +3652,7 @@ _RESIDUALS = re.compile(
     # divergence), and Or-calls whose arguments nest too deep for _ARG —
     # refuse with the pointer instead of an opaque unresolved-function
     # error
-    r"\b(toU?Int\d+\w*|toFloat\d+\w*|toDate\w+|toString|toStartOf\w+|toYYYYMM(DD)?|sumIf|avgIf"
+    r"toU?Int\d+\w*|toFloat\d+\w*|toDate\w+|toString|toStartOf\w+|toYYYYMM(DD)?|sumIf|avgIf"
     r"|avgWeighted"
     r"|minIf|maxIf|uniqExact|arrayJoin|notEmpty|multiIf|intDiv"
     r"|splitByChar|splitByString"
@@ -3690,12 +3675,12 @@ _RESIDUALS = re.compile(
     # the concatWithSeparator scanner rewrites every nesting level, so
     # a surviving spelling is a typo'd suffix
     r"|concatWithSeparator\w*"
-    # isIPv4String spelled explicitly: \bIPv4\w+ can't fire
-    # mid-identifier (no word boundary inside isIPv4String). range()
-    # survivors get a dedicated check in translate() — the numbers()
-    # entry itself emits Spark's `FROM range(n)` table function, which
-    # must not trip the expression-position refusal; MD5/SHA and
-    # hex/bin survivors likewise (their entries emit the same names).
+    # isIPv4String spelled explicitly: IPv4\w+ matches whole names
+    # only. range() survivors get a dedicated check in translate() — the
+    # numbers() entry itself emits Spark's `FROM range(n)` table
+    # function, which must not trip the expression-position refusal;
+    # MD5/SHA and hex/bin survivors likewise (their entries emit the
+    # same names).
     r"|parseDateTime\w*|IPv4\w+|isIPv4String"
     r"|base64(Encode|Decode)|tryBase64Decode"
     r"|monthName|generateUUIDv4"
@@ -3722,9 +3707,9 @@ _RESIDUALS = re.compile(
     r"|toInterval\w+|countMatches|regexpExtract|timeSlot"
     r"|arrayJaccardIndex|arrayFold|arrayRandomSample"
     r"|(from|to)UnixTimestamp64(Milli|Micro)|(add|sub)Date"
-    r"|JSONExtract\w+|quantiles?\w*|median\w*|topK\w*)\s*\(",
+    r"|JSONExtract\w+|quantiles?\w*|median\w*|topK\w*",
     re.I,
-)
+).fullmatch
 
 
 # ClickHouse's signature `LIMIT n BY cols` clause: keep the first n rows
@@ -3790,41 +3775,44 @@ def _rewrite_limit_ties(sql: str) -> str:
     )
 
 
-def _split_top_level_args(s: str) -> list[str]:
-    """Split an argument list on commas at bracket depth 0 — parens AND
-    square brackets (ClickHouse array literals like [1,2,3] carry
-    top-level-looking commas) — treating single-quoted literals as
-    opaque. Returns the raw (unstripped) pieces; raises on unbalanced
-    brackets / unterminated quotes."""
-    args: list[str] = []
-    depth = 0
-    buf: list[str] = []
+def _bracket_scan(s: str) -> tuple[dict[int, int], dict[int, list[int]]]:
+    """One pass over ``s`` that pairs its brackets — parens AND square
+    brackets, one depth count (ClickHouse array literals like [1,2,3]
+    carry top-level-looking commas) — treating single-quoted literals as
+    opaque: the index of the bracket closing each opening one, and the
+    commas directly inside each opening bracket (key -1: the commas at
+    depth 0). Raises on unbalanced brackets / unterminated quotes."""
+    close: dict[int, int] = {}
+    commas: dict[int, list[int]] = {-1: []}
+    open_at = [-1]
     i, n = 0, len(s)
     while i < n:
         c = s[i]
         if c == "'":
-            j = s.find("'", i + 1)
-            if j < 0:
+            i = s.find("'", i + 1) + 1
+            if not i:
                 raise UnsupportedClickHouseSQL("unterminated string literal")
-            buf.append(s[i : j + 1])
-            i = j + 1
             continue
         if c in "([":
-            depth += 1
+            open_at.append(i)
+            commas[i] = []
         elif c in ")]":
-            depth -= 1
-            if depth < 0:
+            if len(open_at) == 1:
                 raise UnsupportedClickHouseSQL("unbalanced brackets")
-        if c == "," and depth == 0:
-            args.append("".join(buf))
-            buf = []
-        else:
-            buf.append(c)
+            close[open_at.pop()] = i
+        elif c == ",":
+            commas[open_at[-1]].append(i)
         i += 1
-    if depth != 0:
+    if len(open_at) != 1:
         raise UnsupportedClickHouseSQL("unbalanced brackets")
-    args.append("".join(buf))
-    return args
+    return close, commas
+
+
+def _split_top_level_args(s: str) -> list[str]:
+    """Split an argument list on its depth-0 commas (see _bracket_scan).
+    Returns the raw (unstripped) pieces."""
+    cuts = [-1, *_bracket_scan(s)[1][-1], len(s)]
+    return [s[a + 1 : b] for a, b in zip(cuts, cuts[1:])]
 
 
 def _scan_to_close(masked: str, start: int) -> int | None:
@@ -4358,11 +4346,12 @@ def translate(ch_sql: str) -> str:
                 "escape, and spell regex classes like \\d as [0-9]"
             )
     masked_in = _mask_literals(ch_sql)
-    for pat, hint in _REFUSALS:
-        if pat.search(masked_in):
-            raise UnsupportedClickHouseSQL(
-                f"{pat.pattern!r} has no textual Spark equivalent — {hint}"
-            )
+    if refused := _refusal(masked_in):
+        m, hint = refused
+        raise UnsupportedClickHouseSQL(
+            f"{ch_sql[m.start() : m.end()]!r} has no textual Spark "
+            f"equivalent — {hint}"
+        )
     # tuple element access t.1 has no Spark spelling (structs are
     # accessed by field name) — refuse before it reaches the parser as
     # an opaque error. [A-Za-z_]\w* base so decimals (1.5) never match.
@@ -4504,7 +4493,7 @@ def translate(ch_sql: str) -> str:
                 "lower to the CASE chain it denotes; precompute "
                 "dynamic mappings with a join or map literal"
             )
-    residual = _RESIDUALS.search(masked)
+    residual = next((m for m, _ in heads if _RESIDUALS(m.group(1))), None)
     if residual:
         hint = (
             "flatten the call, precompute nested expressions as "
@@ -6096,10 +6085,12 @@ def translate_ddl(ch_ddl: str) -> str:
     the declared column order can bind wrong — use by-name inserts
     (``INSERT INTO t (cols…) SELECT``), which both dialects support.
     """
+    masked = _mask_literals(ch_ddl)
     for pat, hint in _DDL_REFUSALS:
-        if pat.search(ch_ddl):
+        if m := pat.search(masked):
             raise UnsupportedClickHouseSQL(
-                f"{pat.pattern!r} has no one-line Spark DDL equivalent — {hint}"
+                f"{ch_ddl[m.start() : m.end()]!r} has no one-line Spark DDL "
+                f"equivalent — {hint}"
             )
     s = " ".join(ch_ddl.split())
     s = re.sub(r"\s+ON\s+CLUSTER\s+'?\{?\w+\}?'?", "", s, flags=re.I)

@@ -611,6 +611,29 @@ def test_ch_ddl_refusals():
             translate_ddl(ddl)
 
 
+def test_ch_ddl_refusals_skip_string_literals():
+    import pytest as _pytest
+
+    from clickhouse_data_rebalance_spark.plans.ch_dialect import (
+        UnsupportedClickHouseSQL,
+        translate_ddl,
+    )
+
+    # a refusal keyword inside a string literal is data, not a clause
+    out = translate_ddl(
+        "CREATE TABLE t (k UInt64, note String DEFAULT 'no TTL here') "
+        "ENGINE = MergeTree() ORDER BY k"
+    )
+    assert "note STRING DEFAULT 'no TTL here'" in out
+    # and the refusal quotes the clause it refused
+    with _pytest.raises(UnsupportedClickHouseSQL) as exc:
+        translate_ddl(
+            "CREATE TABLE t (k UInt64) ENGINE = MergeTree() ORDER BY k "
+            "TTL d + INTERVAL 1 DAY"
+        )
+    assert str(exc.value).startswith("'TTL' has no one-line Spark DDL equivalent")
+
+
 def test_ch_dialect_extended_rewrites():
     from clickhouse_data_rebalance_spark.plans.ch_dialect import translate
 

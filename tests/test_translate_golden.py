@@ -13,7 +13,9 @@ the ones listed below:
   function table became one name-keyed call table applied in one walk;
 - _BUDGET_AS_WRITTEN and _HINTS: cases that moved when every function
   call, the raw-argument families included, became an entry of that
-  walk, so the one-paren argument budget reads the arguments as written.
+  walk, so the one-paren argument budget reads the arguments as written;
+- _NO_TEXTUAL: a refusal quotes the statement text it refused, where the
+  record quotes the refusing regex (same hint).
 """
 
 from __future__ import annotations
@@ -115,6 +117,10 @@ _HINTS = {
     "nesting budget — flattening alone will not help there)": "",
     "translate since r13 (": "translate (",
 }
+# "'<refused text>' has no textual Spark equivalent — <hint>": the record
+# quotes the refusing regex's source; the text quoted now is the input at
+# the span the refusal matched
+_NO_TEXTUAL = re.compile(r"(.+?) has no textual Spark equivalent — (.*)", re.S)
 # the concatWithSeparator depth 15/16 cases were recorded through the
 # family's own pass; they replay through the one walk
 _ENTRIES = {"_rewrite_concat_with_separator": "_rewrite_table_calls"}
@@ -153,6 +159,12 @@ def test_translate_matches_golden():
                 if "error" in want:
                     want["error"] = want["error"].replace(recorded, now)
         got = _result(case["sql"], _ENTRIES.get(case["entry"], case["entry"]))
+        was = _NO_TEXTUAL.fullmatch(want.get("error", ""))
+        is_ = _NO_TEXTUAL.fullmatch(got.get("error", ""))
+        if was and is_ and was[2] == is_[2]:
+            quoted = ast.literal_eval(is_[1])
+            if quoted and quoted in case["sql"]:
+                continue
         if got != want:
             mismatches.append((case["id"], case["source"], want, got))
     assert not mismatches, f"{len(mismatches)} golden mismatches: {mismatches[:5]}"
@@ -252,6 +264,50 @@ def test_nesting_cap_refuses_instead_of_crashing(family, cap, wrap, too_deep):
         assert str(exc.value) == too_deep
 
 
+def test_same_name_chain_flattens_in_one_scan(monkeypatch):
+    # a 2000-deep least(least(...), k) chain flattens with every
+    # character scanned a bounded number of times; re-splitting the rest
+    # of the chain at each level was quadratic (1000 deep: 1.4 s)
+    chain = "x"
+    for k in range(2000):
+        chain = f"least({chain}, k{k})"
+    scanned = []
+
+    def spy(scan):
+        def counted(s):
+            scanned.append(len(s))
+            return scan(s)
+
+        return counted
+
+    for name in ("_split_top_level_args", "_bracket_scan"):
+        if hasattr(ch_dialect, name):
+            monkeypatch.setattr(ch_dialect, name, spy(getattr(ch_dialect, name)))
+    leaves = ch_dialect._lg_leaves("least", chain)
+    assert leaves == ["x", *(f"k{k}" for k in range(2000))]
+    assert 0 < sum(scanned) <= 2 * len(chain)
+
+
+@pytest.mark.parametrize(
+    "sql,quoted",
+    [
+        ("SELECT cityHash64 (s) FROM t", "cityHash64 ("),
+        ("SELECT quantileTDigest(0.5)(x) FROM t", "quantileTDigest("),
+        ("SELECT generateUUIDv7() FROM t", "generateUUIDv7("),
+        ("SELECT 'format(' AS q, FORMAT(s) FROM t", "FORMAT("),
+        ("SELECT x FROM t SAMPLE 0.1", "SAMPLE 0"),
+    ],
+)
+def test_refusal_quotes_the_refused_text(sql, quoted):
+    with pytest.raises(UnsupportedClickHouseSQL) as exc:
+        translate(sql)
+    assert str(exc.value).startswith(f"{quoted!r} has no textual Spark equivalent — ")
+
+
+def test_no_call_table_name_is_refused_by_name():
+    assert not [k for k in ch_dialect._CALLS if ch_dialect._refusal(f"{k}(x)")]
+
+
 def _regex_head(node: ast.expr) -> str:
     """The literal text a regex argument starts with (f-strings up to
     their first placeholder, concatenations by their left operand)."""
@@ -280,18 +336,21 @@ def _calls_to(tree: ast.AST, name: str) -> list[ast.Call]:
 def test_the_call_table_is_the_only_call_rewriter():
     """No regex in ch_dialect.py heads on a call-table name — a second
     per-name rewrite growing back beside the table — except the refusal
-    lists, which refuse such names on purpose; translate() loops over no
-    (pattern, replacement) list but the clause list, makes one call walk
-    and otherwise runs only the clause passes; the walk has one caller;
-    and _sub_outside_literals runs only in the clause loop and in the
-    dictGet rewrite."""
+    lists, which refuse such names on purpose; function names are refused
+    through the one name table, so _REFUSALS keeps at most 12 clause and
+    argument shapes and none of them is a bare call head; translate()
+    loops over no (pattern, replacement) list but the clause list, makes
+    one call walk and otherwise runs only the clause passes; the walk has
+    one caller; and _sub_outside_literals runs only in the clause loop
+    and in the dictGet rewrite."""
     with open(ch_dialect.__file__) as f:
         tree = ast.parse(f.read())
+    refusal_lists = {"_REFUSALS", "_REFUSED_CALLS", "_RESIDUALS"}
     refusal_lines = set()
     for node in tree.body:
         if isinstance(node, (ast.Assign, ast.AnnAssign)):
             targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-            if {getattr(t, "id", None) for t in targets} & {"_REFUSALS", "_RESIDUALS"}:
+            if {getattr(t, "id", None) for t in targets} & refusal_lists:
                 refusal_lines |= set(range(node.lineno, node.end_lineno + 1))
     head = re.compile(r"\\b\(?(?:\?:)?((?:\w+\|)*\w+)\)?\\s\*\\\(")
     named = {}
@@ -308,6 +367,9 @@ def test_the_call_table_is_the_only_call_rewriter():
                 if name.lower() in ch_dialect._CALLS:
                     named[name] = node.lineno
     assert not named, f"per-name call regexes beside the call table: {named}"
+    assert len(ch_dialect._REFUSALS) <= 12
+    heads = [p.pattern for p, _ in ch_dialect._REFUSALS if p.pattern.endswith(r"\s*\(")]
+    assert not heads, f"call-name refusals beside _REFUSED_CALLS: {heads}"
 
     translate_def = next(
         n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "translate"
@@ -322,7 +384,7 @@ def test_the_call_table_is_the_only_call_rewriter():
             for e in getattr(ch_dialect, n.iter.id, [None])
         )
     }
-    assert pair_lists == {"_CLAUSES", "_REFUSALS"}
+    assert pair_lists == {"_CLAUSES"}
     assert len(ch_dialect._CLAUSES) <= 10
     clause_loop = next(
         n
