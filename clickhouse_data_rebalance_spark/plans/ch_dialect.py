@@ -154,9 +154,11 @@ Function calls go through one name-keyed table (`_CALLS`) applied in
 one walk over the call sites, arguments first. Its templates bind only
 arguments at most one paren level deep; deeper calls inside such a
 function should be pre-flattened (the translator raises rather than
-mistranslating when it cannot bind them). Refused function names are
-the rows of one name table (`_REFUSED_CALLS`), checked once per call
-head; a name `_CALLS` translates is never refused by name.
+mistranslating when it cannot bind them): the walk reports every call
+it keeps as written, and translate() refuses the ClickHouse-only names
+among them. Refused function names are the rows of one name table
+(`_REFUSED_CALLS`), checked once per call head; a name `_CALLS`
+translates is never refused by name.
 """
 
 from __future__ import annotations
@@ -1033,23 +1035,26 @@ def _check_split_sep_literal(sep: str, *, by_string: bool, name: str) -> None:
 #     shape);
 #   - a _Family: an emitter that reads its arguments as written, before
 #     any call inside them is rewritten, and rewrites the ones it keeps
-#     through `recurse` — least/greatest flattens same-name nesting and
-#     translate checks its literal from/to that way. Each family has its
-#     own nesting cap and refusal texts. The parametric family (quantile,
-#     median, topK, avgWeighted, uniqUpTo) also reads ClickHouse's
-#     `f(params)(args)` shape: its emitter gets the parameter list too,
-#     or None for a plain `f(args)` call.
+#     through `recurse` — least/greatest flattens same-name nesting,
+#     translate checks its literal from/to and hex/bin look at their
+#     rewritten argument that way. Each family has its own nesting cap
+#     and refusal texts. The parametric family (quantile, median, topK,
+#     avgWeighted, uniqUpTo) also reads ClickHouse's `f(params)(args)`
+#     shape: its emitter gets the parameter list too, or None for a
+#     plain `f(args)` call.
 # Templates, emitters and the parametric family bind only calls whose
 # every argument fits the one-paren-level _ARG budget as written; a call
-# that fails the budget or its arity keeps its text, calls inside its
-# arguments are still rewritten, and the residual checks in translate()
-# refuse the ClickHouse-only names left over. An empty argument list is
-# no arguments; a template or emitter call that no form accepts without
-# arguments refuses (head renames keep it as written). Arguments are
-# rewritten before their call, lose their leading whitespace and keep
-# their trailing whitespace (a _Family gets them stripped); emitters
-# strip both where they say so. Emitted text is never scanned again, so
-# no entry's output can be rewritten by another entry.
+# that fails the budget or its arity keeps its text, and calls inside
+# its arguments are still rewritten. The walk reports every call head
+# it keeps as written, with its argument pieces, and translate() refuses
+# the ClickHouse-only names among them (_RESIDUALS). An empty argument
+# list is no arguments; a template or emitter call that no form accepts
+# without arguments refuses (head renames keep it as written). Arguments
+# are rewritten before their call, lose their leading whitespace and
+# keep their trailing whitespace (a _Family gets them stripped);
+# emitters strip both where they say so. Emitted text is never scanned
+# again — not by another entry and not by translate()'s checks — so an
+# entry may spell any name, ClickHouse-only or not.
 
 
 @dataclass(frozen=True, eq=False)
@@ -1067,6 +1072,19 @@ class _Family:
     too_deep: str
     unbalanced: str | None = "unbalanced parentheses in {}()"
     parametric: bool = False
+
+
+_TOO_DEEP = (
+    "function calls nested more than 32 levels deep — "
+    "precompute inner expressions as subquery/CTE columns"
+)
+
+
+def _without_arguments(name: str) -> UnsupportedClickHouseSQL:
+    return UnsupportedClickHouseSQL(
+        f"{name}() without arguments — ClickHouse rejects the call; "
+        "pass the argument(s) the function takes"
+    )
 
 
 def _translate_call(name: str, args: list[str], recurse) -> str:
@@ -1292,8 +1310,8 @@ def _transform_map(args: list[str]) -> str | None:
     when from/to are array LITERALS (bracket or array() spelling).
     The 3-arg form keeps x unmatched (CH contract); x is spliced per
     branch — row-local multiple evaluation, the least/greatest caveat
-    class. Non-literal from/to arrays refuse via the post-pass check
-    in translate()."""
+    class. Non-literal from/to arrays keep the call, which translate()
+    refuses by its arity."""
     if len(args) not in (3, 4):
         return None
     shapes = [_ARRAY_LITERAL_ARG.fullmatch(_mask_literals(a)) for a in args[1:3]]
@@ -1432,22 +1450,32 @@ def _replace_one(args: list[str]) -> str | None:
     )
 
 
-def _padded_digits(fn: str, width: int):
-    """hex/bin padded to a multiple of ``width`` digits (the hex/bin
-    entries say why). hex over BINARY — the digest entries' unhex(..) —
-    is already the CH value (Spark hex of bytes is even-length
-    uppercase), so that call is kept as written."""
-
-    def emit(args: list[str]) -> str | None:
-        if len(args) != 1 or re.match(r"unhex\s*\(", args[0], re.I):
-            return None
-        x = args[0]
-        return (
-            f"lpad({fn}({x}), CAST(ceil(char_length({fn}({x})) / {width})"
-            f" * {width} AS INT), '0')"
+def _padded_digits_call(name: str, args: list[str], recurse) -> str | None:
+    """hex/bin padded to whole bytes (the hex/bin entries say why),
+    decided on the rewritten argument. hex over BINARY — an unhex(..)
+    call, which is also what every digest entry emits — is already the
+    CH value (Spark hex of bytes is even-length uppercase), so it stays
+    a plain call. Any other argument nested past the one-paren _ARG
+    budget refuses here: keeping the call as written would make the walk
+    rewrite its argument a second time, twice per nested hex level."""
+    if not args:
+        raise _without_arguments(name)
+    if len(args) != 1:
+        return None
+    x = recurse(args[0])
+    if re.match(r"unhex\s*\(", x, re.I):
+        return f"{name}({x})"
+    if not _within_budget(args):
+        raise UnsupportedClickHouseSQL(
+            f"could not rewrite '{name}(' (nested arguments?) — "
+            f"{_RESIDUAL_HINTS['digits']}"
         )
-
-    return emit
+    fn = name.lower()
+    width = 2 if fn == "hex" else 8
+    return (
+        f"lpad({fn}({x}), CAST(ceil(char_length({fn}({x})) / {width})"
+        f" * {width} AS INT), '0')"
+    )
 
 
 def _to_start_of_week(args: list[str]) -> str | None:
@@ -2546,7 +2574,7 @@ def _quantile_shape(key: str, params: list[str] | None, args: list[str]):
     return stem == "quantiles", form[2] is not None, rule, params
 
 
-def _fused_weighted_levels(sql: str) -> dict:
+def _fused_weighted_levels(sql: str, masked: str) -> dict:
     """Cross-expression fusion plan for the ExactWeighted family, read
     through the call walk's scanner before the walk: when a statement
     carries TWO OR MORE weighted-quantile calls over the same (x, w)
@@ -2567,8 +2595,8 @@ def _fused_weighted_levels(sql: str) -> dict:
     argument spellings simply don't fuse (not an error).
 
     Returns {(x, w): (ordered Decimal values, ordered level literals)}
-    for keys with >= 2 occurrences."""
-    masked = _mask_literals(sql)
+    for keys with >= 2 occurrences; ``masked`` is ``sql`` with its
+    literals masked."""
     slots: dict = {}
     occurrences: dict = {}
     for m in _CALL_HEAD.finditer(masked):
@@ -3438,10 +3466,11 @@ _CALLS: dict = {
     # argument is evaluated twice — row-local, the least/greatest caveat
     # class. CH hex of FLOAT arguments (raw IEEE bytes, little-endian)
     # stays divergent for typed COLUMNS (documented in MIGRATION.md);
-    # float LITERAL arguments refuse in _REFUSALS; nested-call arguments
-    # past _ARG's budget refuse via the post-pass check in translate().
-    "hex": _padded_digits("hex", 2),
-    "bin": _padded_digits("bin", 8),
+    # float LITERAL arguments refuse in _REFUSALS; other arguments past
+    # _ARG's budget refuse in the entry.
+    **dict.fromkeys(
+        ("hex", "bin"), _Family(_padded_digits_call, 32, _TOO_DEEP, unbalanced=None)
+    ),
     # dotted-quad <-> UInt32 integer arithmetic (exact)
     "ipv4numtostring": (
         "concat(CAST((({0}) DIV 16777216) % 256 AS STRING), '.',"
@@ -3565,14 +3594,7 @@ _CALLS: dict = {
                                            "exactweighted")),
             "topk", "topkweighted", "avgweighted", "uniqupto",
         ),
-        _Family(
-            _aggregate_call,
-            32,
-            "function calls nested more than 32 levels deep — "
-            "precompute inner expressions as subquery/CTE columns",
-            unbalanced=None,
-            parametric=True,
-        ),
+        _Family(_aggregate_call, 32, _TOO_DEEP, unbalanced=None, parametric=True),
     ),
 }
 
@@ -3639,12 +3661,16 @@ _CLAUSES: list[tuple[re.Pattern[str], str]] = [
 ]
 
 
-# any surviving call of a ClickHouse-only name means a rewrite failed to
-# match (nested arguments past the _ARG budget, wrong arity, a non-literal
-# argument an entry needs as a literal) — refuse rather than ship wrong
-# SQL. The call table's emissions spell none of these names. Matched
-# against whole call-head names.
+# a call of a ClickHouse-only name that the walk kept as written means a
+# rewrite failed to match (nested arguments past the _ARG budget, wrong
+# arity, a non-literal argument an entry needs as a literal) — refuse
+# rather than ship wrong SQL. Fullmatched against the names of the call
+# heads the walk reports, never against emitted text. The named groups
+# are names Spark resolves too (a range table function, minimal-digit
+# hex/bin, hex-STRING digests), so a survivor would run with Spark's
+# meaning; they refuse with their _RESIDUAL_HINTS entry.
 _RESIDUALS = re.compile(
+    r"(?P<range>range)|(?P<digits>hex|bin)|(?P<digest>md5|sha\d+)|"
     # \w* tails on the converter families: the signed-Int/Float
     # OrZero/OrNull/OrDefault suffixes translate, so what reaches this
     # check is the still-refused remainder — toUInt*Or* (no unsigned
@@ -3675,12 +3701,7 @@ _RESIDUALS = re.compile(
     # the concatWithSeparator scanner rewrites every nesting level, so
     # a surviving spelling is a typo'd suffix
     r"|concatWithSeparator\w*"
-    # isIPv4String spelled explicitly: IPv4\w+ matches whole names
-    # only. range() survivors get a dedicated check in translate() — the
-    # numbers() entry itself emits Spark's `FROM range(n)` table
-    # function, which must not trip the expression-position refusal;
-    # MD5/SHA and hex/bin survivors likewise (their entries emit the
-    # same names).
+    # isIPv4String spelled explicitly: IPv4\w+ matches whole names only
     r"|parseDateTime\w*|IPv4\w+|isIPv4String"
     r"|base64(Encode|Decode)|tryBase64Decode"
     r"|monthName|generateUUIDv4"
@@ -3710,6 +3731,17 @@ _RESIDUALS = re.compile(
     r"|JSONExtract\w+|quantiles?\w*|median\w*|topK\w*",
     re.I,
 ).fullmatch
+_RESIDUAL_HINTS = {
+    None: "flatten the call, precompute nested expressions as "
+    "subquery/CTE columns, or use the DataFrame API",
+    "range": "flatten the call or precompute nested expressions as "
+    "subquery/CTE columns",
+    "digits": "CH pads numbers to the type's byte width where Spark emits "
+    "minimal digits; flatten the argument into a subquery/CTE column",
+    "digest": "Spark's same-named digest returns a hex STRING where "
+    "ClickHouse returns the digest BYTES; flatten the argument into a "
+    "subquery/CTE column",
+}
 
 
 # ClickHouse's signature `LIMIT n BY cols` clause: keep the first n rows
@@ -3855,14 +3887,6 @@ def _call_site(sql: str, masked: str, start: int, parametric: bool = False):
     return close, params, _arg_list(sql[start : close - 1])
 
 
-def _arity_at(masked: str, head: "re.Match[str]") -> int:
-    """Top-level argument count of the call ``head`` matched on the
-    literal-masked text (0 when it never closes); raises on unbalanced
-    brackets."""
-    close = _scan_to_close(masked, head.end())
-    return 0 if close is None else len(_arg_list(masked[head.end() : close - 1]))
-
-
 def _emit_call(name: str, pieces: list[str], recurse) -> str | None:
     """Rewrite one call through its plain _CALLS value (a head rename, a
     template or an emitter — see the table's header); None keeps it as
@@ -3881,26 +3905,22 @@ def _emit_call(name: str, pieces: list[str], recurse) -> str | None:
             (t.format(*args) for t in templates if _arity(t) == len(args)), None
         )
     if text is None and not args:
-        raise UnsupportedClickHouseSQL(
-            f"{name}() without arguments — ClickHouse rejects the call; "
-            "pass the argument(s) the function takes"
-        )
+        raise _without_arguments(name)
     return text
 
 
 # the plain table entries: one depth group, raw argument pieces
-_TABLE = _Family(
-    _emit_call,
-    32,
-    "function calls nested more than 32 levels deep — "
-    "precompute inner expressions as subquery/CTE columns",
-    unbalanced=None,
-)
+_TABLE = _Family(_emit_call, 32, _TOO_DEEP, unbalanced=None)
 
 
-def _rewrite_calls(sql: str, fused: dict) -> str:
+def _rewrite_calls(sql: str, masked: str, fused: dict) -> tuple[str, list]:
     """The one call walk behind translate(): every call site whose name
     is a _CALLS key is rewritten through its entry, arguments first.
+    Returns the rewritten text and the call heads kept as written, in
+    the order the walk met them: ``(head, pieces)`` pairs, ``head`` the
+    match on the literal-masked text around it and ``pieces`` the
+    argument pieces (None when the name is no _CALLS key or the call
+    never closes). No head an entry emits is reported.
 
     Calls are found on the literal-masked copy, so a call spelled inside
     a string literal is data and never rewritten. The emission is
@@ -3910,13 +3930,18 @@ def _rewrite_calls(sql: str, fused: dict) -> str:
     and the search goes on inside it. Each _Family (the plain entries
     share _TABLE) counts its own nesting: recursing into the arguments
     of a call nested deeper than its cap refuses with its ``too_deep``.
-    ``fused`` is the statement's weighted-quantile fusion plan, handed to
-    the parametric family."""
+    ``masked`` is ``sql`` with its literals masked; ``fused`` is the
+    statement's weighted-quantile fusion plan, handed to the parametric
+    family."""
+    kept: list = []
 
-    def walk(sql: str, depth: dict, family: _Family | None = None) -> str:
+    def walk(
+        sql: str, depth: dict, family: _Family | None = None, masked: str | None = None
+    ) -> str:
         if family is not None and depth[family] > family.cap:
             raise UnsupportedClickHouseSQL(family.too_deep)
-        masked = _mask_literals(sql)
+        if masked is None:
+            masked = _mask_literals(sql)
         out: list[str] = []
         pos = scan = 0
         while m := _CALL_HEAD.search(masked, scan):
@@ -3924,11 +3949,13 @@ def _rewrite_calls(sql: str, fused: dict) -> str:
             name = m.group(1)
             spec = _CALLS.get(name.lower())
             if spec is None:
+                kept.append((m, None))
                 continue
             fam = spec if isinstance(spec, _Family) else _TABLE
             site = _call_site(sql, masked, scan, fam.parametric)
             if site is None:
                 if fam.unbalanced is None:
+                    kept.append((m, None))
                     continue
                 raise UnsupportedClickHouseSQL(fam.unbalanced.format(name))
             close, params, pieces = site
@@ -3939,18 +3966,21 @@ def _rewrite_calls(sql: str, fused: dict) -> str:
             )
             extra = (params, fused) if fam.parametric else ()
             text = fam.emit(name, pieces, recurse, *extra)
-            if text is not None:
+            if text is None:
+                kept.append((m, pieces))
+            else:
                 out += [sql[pos : m.start()], text]
                 pos = scan = close
         out.append(sql[pos:])
         return "".join(out)
 
-    return walk(sql, {})
+    return walk(sql, {}, masked=masked), kept
 
 
-def _rewrite_table_calls(sql: str) -> str:
-    """Apply the call table to every call site in one walk."""
-    return _rewrite_calls(sql, _fused_weighted_levels(sql))
+def _rewrite_table_calls(sql: str, masked: str) -> tuple[str, list]:
+    """Apply the call table to every call site in one walk (see
+    _rewrite_calls); ``masked`` is ``sql`` with its literals masked."""
+    return _rewrite_calls(sql, masked, _fused_weighted_levels(sql, masked))
 
 
 _IDX_BASE = re.compile(r"([A-Za-z_][\w]*(?:\.[A-Za-z_][\w]*)*)\s*$")
@@ -4367,39 +4397,7 @@ def translate(ch_sql: str) -> str:
     out = _rewrite_array_join_zip(out)
     for pat, repl in _CLAUSES:
         out = _sub_outside_literals(pat, repl, out)
-    out = _rewrite_table_calls(out)
     masked = _mask_literals(out)
-    # call survivors _RESIDUALS cannot list: names Spark spells too, or
-    # that an entry's own emission spells
-    heads = [(m, m.group(1).lower()) for m in _CALL_HEAD.finditer(masked)]
-    # a comma-form extract PARSES in Spark as ANSI datetime extraction
-    # (wrong semantics); the ANSI `EXTRACT(f FROM x)` form has no
-    # top-level comma and passes
-    for _xm, fn in heads:
-        if fn != "extract":
-            continue
-        try:
-            comma = _arity_at(masked, _xm) > 1
-        except UnsupportedClickHouseSQL:
-            comma = False  # unbalanced brackets — not a well-formed call
-        if comma:
-            raise UnsupportedClickHouseSQL(
-                "could not rewrite a comma-form extract(haystack, pattern) "
-                "(non-literal or quote-bearing pattern?) — Spark would "
-                "parse it as ANSI datetime EXTRACT; use regexp_extract "
-                "directly"
-            )
-    # a unit-literal dateDiff/age left over (4-arg timezone form, nested
-    # arguments) would hit an opaque arg-count error
-    for _dm, fn in heads:
-        if fn in ("datediff", "date_diff", "age") and (
-            masked[_dm.end() :].lstrip().startswith("'")
-        ):
-            raise UnsupportedClickHouseSQL(
-                "could not rewrite dateDiff/age (4-arg timezone form or "
-                "nested arguments?) — flatten the call; the 3-arg "
-                "unit-literal form translates"
-            )
     if re.search(r"\bWITH\s+TOTALS\b", masked, re.I):
         raise UnsupportedClickHouseSQL(
             "WITH TOTALS over a non-bare-column GROUP BY — rewrite the "
@@ -4428,64 +4426,36 @@ def translate(ch_sql: str) -> str:
             "SETTINGS in a non-tail position (subquery / before UNION) — "
             "remove it; session confs own execution advice here"
         )
-    # range() survivors: the entry's _ARG budget is one paren level, so
-    # range(f(g(x))) would reach Spark as an opaque unresolved-function
-    # error. Expression-position range( refuses here; table-position
-    # `FROM range(` is exempt because the numbers(n) entry emits exactly
-    # that Spark table function.
-    for _rm, fn in heads:
-        if fn == "range" and not (
-            masked[: _rm.start()].rstrip().upper().endswith("FROM")
+    out, kept = _rewrite_table_calls(out, masked)
+    # the calls the walk kept as written: names Spark spells too refuse
+    # by argument shape, ClickHouse-only names (_RESIDUALS) by name
+    for head, pieces in kept:
+        fn, arity = head.group(1).lower(), len(pieces or ())
+        if fn == "extract" and arity > 1:
+            # a comma-form extract PARSES in Spark as ANSI datetime
+            # extraction (wrong semantics); the ANSI `EXTRACT(f FROM x)`
+            # form has no top-level comma and passes
+            raise UnsupportedClickHouseSQL(
+                "could not rewrite a comma-form extract(haystack, pattern) "
+                "(non-literal or quote-bearing pattern?) — Spark would "
+                "parse it as ANSI datetime EXTRACT; use regexp_extract "
+                "directly"
+            )
+        elif fn in ("datediff", "date_diff", "age") and (
+            arity and pieces[0].lstrip().startswith("'")
         ):
+            # a unit-literal dateDiff/age left over (4-arg timezone form,
+            # nested arguments) would hit an opaque arg-count error
             raise UnsupportedClickHouseSQL(
-                "could not rewrite 'range(' (nested arguments?) — "
-                "flatten the call or precompute nested expressions as "
-                "subquery/CTE columns"
+                "could not rewrite dateDiff/age (4-arg timezone form or "
+                "nested arguments?) — flatten the call; the 3-arg "
+                "unit-literal form translates"
             )
-    # hex/bin survivors: the padding entry's _ARG budget is one paren
-    # level, so a deeper-nested numeric argument would ride Spark's
-    # MINIMAL-digit hex/bin unpadded — refuse instead. The entry's own
-    # emission is exempt: it spells hex( after `lpad(` and after
-    # `char_length(`.
-    for _hm, fn in heads:
-        if fn not in ("hex", "bin"):
-            continue
-        _pre = masked[: _hm.start()].rstrip().lower()
-        if re.match(r"\s*unhex\s*\(", masked[_hm.end() :], re.I):
-            # hex over BINARY (the digest compositions: hex(MD5(s))
-            # arrives here as hex(unhex(md5(s)))) is already the CH
-            # value — Spark hex of bytes is even-length uppercase —
-            # so the padding is moot and the passthrough exact
-            continue
-        if not (_pre.endswith("lpad(") or _pre.endswith("char_length(")):
-            raise UnsupportedClickHouseSQL(
-                f"could not rewrite '{_hm.group(1)}(' (nested "
-                "arguments?) — CH pads numbers to the type's byte "
-                "width where Spark emits minimal digits; flatten the "
-                "argument into a subquery/CTE column"
-            )
-    # digest survivors: a deeper-nested MD5/SHA* argument would RESOLVE
-    # to Spark's same-named md5/sha1 and return the hex STRING where CH
-    # returns digest BYTES — silent. The entry's own emission is exempt:
-    # it always spells the digest after `unhex(`.
-    for _dm, fn in heads:
-        if re.fullmatch(r"md5|sha1|sha\d+", fn) and not (
-            masked[: _dm.start()].rstrip().lower().endswith("unhex(")
-        ):
-            raise UnsupportedClickHouseSQL(
-                f"could not rewrite '{_dm.group(1)}(' (nested "
-                "arguments?) — Spark's same-named digest returns a hex "
-                "STRING where ClickHouse returns the digest BYTES; "
-                "flatten the argument into a subquery/CTE column"
-            )
-    # transform survivors with 3+ top-level args are CH's value-
-    # mapping form with NON-LITERAL from/to arrays — Spark's
-    # same-named transform is the (array, lambda) higher-order
-    # function, so passing through would be an opaque arity error
-    for _tm, fn in heads:
-        if fn != "transform":
-            continue
-        if _arity_at(masked, _tm) >= 3:
+        elif fn == "transform" and arity >= 3:
+            # CH's value-mapping form with NON-LITERAL from/to arrays —
+            # Spark's same-named transform is the (array, lambda)
+            # higher-order function, so passing through would be an
+            # opaque arity error
             raise UnsupportedClickHouseSQL(
                 "transform(x, from, to[, default]) with non-literal "
                 "from/to arrays — the mapping must be spelled with "
@@ -4493,29 +4463,25 @@ def translate(ch_sql: str) -> str:
                 "lower to the CASE chain it denotes; precompute "
                 "dynamic mappings with a join or map literal"
             )
-    residual = next((m for m, _ in heads if _RESIDUALS(m.group(1))), None)
-    if residual:
-        hint = (
-            "flatten the call, precompute nested expressions as "
-            "subquery/CTE columns, or use the DataFrame API"
-        )
-        if re.search(r"Or(Zero|Null|Default)\s*\($", residual.group(0)):
-            hint = (
-                "signed to{Int,Float}*Or{Null,Zero,Default} translate "
-                "(flatten deep-nested arguments into a "
-                "subquery column if this one did not match); toUInt*Or* "
-                "refuses — Spark has no unsigned domain, so CH values in "
-                "[2^(w-1), 2^w) have no width-true target (a wider "
-                "signed try_cast would silently change the "
-                "out-of-range -> default boundary) — and toDate*/"
-                "toDecimal* Or-forms refuse on date-parsing/scale "
-                "divergence; spell those as try_cast(x AS <type>) "
-                "accepting its lenient parse"
+        if residual := _RESIDUALS(head.group(1)):
+            hint = _RESIDUAL_HINTS[residual.lastgroup]
+            if re.search(r"Or(Zero|Null|Default)\s*\($", head.group(0)):
+                hint = (
+                    "signed to{Int,Float}*Or{Null,Zero,Default} translate "
+                    "(flatten deep-nested arguments into a "
+                    "subquery column if this one did not match); toUInt*Or* "
+                    "refuses — Spark has no unsigned domain, so CH values in "
+                    "[2^(w-1), 2^w) have no width-true target (a wider "
+                    "signed try_cast would silently change the "
+                    "out-of-range -> default boundary) — and toDate*/"
+                    "toDecimal* Or-forms refuse on date-parsing/scale "
+                    "divergence; spell those as try_cast(x AS <type>) "
+                    "accepting its lenient parse"
+                )
+            raise UnsupportedClickHouseSQL(
+                f"could not rewrite {head.group(0)!r} (nested arguments?) "
+                f"— {hint}"
             )
-        raise UnsupportedClickHouseSQL(
-            f"could not rewrite {residual.group(0)!r} (nested arguments?) "
-            f"— {hint}"
-        )
     return out
 
 

@@ -5349,6 +5349,45 @@ def test_ch_dialect_wave3_funcs(spark):
         assert spark.sql(translate(nested)).collect()[0][0] == want, nested
 
 
+def test_ch_dialect_survivors_refuse_at_any_depth(spark):
+    """A hex/bin or digest call the call walk keeps as written refuses
+    wherever it sits. The refusal once read the text around a surviving
+    head, and user text that looked like an entry's own emission exempted
+    it, so one more nesting level changed the answer: char_length(hex(
+    abs(abs(x)))) ran as 1 where ClickHouse gives 2, and the lpad and
+    unhex(MD5(..)) spellings below likewise ran with Spark's meaning. The
+    compositions the entries do rewrite keep ClickHouse's value."""
+    import pytest as _pytest
+
+    from clickhouse_data_rebalance_spark.plans.ch_dialect import (
+        UnsupportedClickHouseSQL,
+        translate,
+    )
+
+    spark.createDataFrame([("ab12", 10)], "s string, x int").createOrReplaceTempView(
+        "cdr_survivors"
+    )
+
+    def one(ch):
+        return spark.sql(translate(ch + " FROM cdr_survivors")).collect()[0][0]
+
+    assert one("SELECT char_length(hex(abs(x)))") == 2
+    assert one("SELECT lpad(hex(abs(x)), 1, '0')") == "0"
+    for deep, msg in (
+        ("SELECT char_length(hex(abs(abs(x))))", "byte width"),
+        ("SELECT lpad(hex(abs(abs(x))), 1, '0')", "byte width"),
+        ("SELECT hex(unhex(MD5(lower(upper(s)))))", "digest BYTES"),
+    ):
+        with _pytest.raises(UnsupportedClickHouseSQL, match=msg):
+            translate(deep + " FROM cdr_survivors")
+    assert one("SELECT hex(unhex(lower(upper(s))))") == "AB12"
+    assert one("SELECT lower(hex(MD5(MD5(s))))") == (
+        hashlib.md5(hashlib.md5(b"ab12").digest()).hexdigest()
+    )
+    rows = spark.sql(translate("SELECT number FROM numbers(7)")).collect()
+    assert sorted(r.number for r in rows) == list(range(7))
+
+
 def test_ch_dialect_wave3b_array_mutations(spark):
     """r15 wave 3b: the array-mutation family (previously opaque
     unresolved errors) and the keyed-sort guard. arraySort's OLD bare

@@ -5,7 +5,9 @@ tests, the namespace walk and the registry's ch_dialect_* queries feed
 translate(), plus edge cases for the eight raw-argument call families,
 each with sha256(output) or the exact refusal message. It was recorded
 by tools/record_translate_golden.py before the families shared one
-call-site walker; every case must still give the same result, except
+call-site walker. Every case replays through translate() — the
+concatWithSeparator depth 15/16 cases too, which were recorded through
+their family's pass alone — and must still give the same result, except
 the ones listed below:
 
 - _CAPPED: translate and multiIf gained the 32-level cap;
@@ -121,14 +123,11 @@ _HINTS = {
 # quotes the refusing regex's source; the text quoted now is the input at
 # the span the refusal matched
 _NO_TEXTUAL = re.compile(r"(.+?) has no textual Spark equivalent — (.*)", re.S)
-# the concatWithSeparator depth 15/16 cases were recorded through the
-# family's own pass; they replay through the one walk
-_ENTRIES = {"_rewrite_concat_with_separator": "_rewrite_table_calls"}
 
 
-def _result(sql: str, entry: str) -> dict:
+def _result(sql: str) -> dict:
     try:
-        out = getattr(ch_dialect, entry)(sql)
+        out = translate(sql)
     except UnsupportedClickHouseSQL as e:
         return {"error": str(e)}
     except Exception as e:  # noqa: BLE001 — compared against the record
@@ -158,7 +157,7 @@ def test_translate_matches_golden():
             for recorded, now in _HINTS.items():
                 if "error" in want:
                     want["error"] = want["error"].replace(recorded, now)
-        got = _result(case["sql"], _ENTRIES.get(case["entry"], case["entry"]))
+        got = _result(case["sql"])
         was = _NO_TEXTUAL.fullmatch(want.get("error", ""))
         is_ = _NO_TEXTUAL.fullmatch(got.get("error", ""))
         if was and is_ and was[2] == is_[2]:
@@ -251,12 +250,11 @@ def _nested(wrap, depth: int) -> str:
     "family,cap,wrap,too_deep", _FAMILIES, ids=[f[0] for f in _FAMILIES]
 )
 def test_nesting_cap_refuses_instead_of_crashing(family, cap, wrap, too_deep):
-    # at the cap the call walk rewrites every level (through the walk
-    # alone: the concatWithSeparator guard's 2^16 expansion would take
-    # the rest of translate() tens of seconds); one level past it
-    # translate() refuses with the family's exact message, and so does a
-    # 2000-deep chain — never a RecursionError
-    out = ch_dialect._rewrite_table_calls(_nested(wrap, cap))
+    # at the cap translate() rewrites every level (the concatWithSeparator
+    # guard's 2^16 expansion included: nothing rescans emitted text); one
+    # level past it translate() refuses with the family's exact message,
+    # and so does a 2000-deep chain — never a RecursionError
+    out = translate(_nested(wrap, cap))
     assert out.startswith("SELECT ") and out.endswith(" FROM t")
     for depth in (cap + 1, 2000):
         with pytest.raises(UnsupportedClickHouseSQL) as exc:
@@ -416,6 +414,39 @@ def test_the_call_table_is_the_only_call_rewriter():
     walks = _calls_to(tree, "_rewrite_calls")
     table_calls = {id(n) for n in ast.walk(defs["_rewrite_table_calls"])}
     assert len(walks) == 1 and id(walks[0]) in table_calls
+
+
+def test_survivor_rules_read_the_walk_record():
+    """After the call walk, translate() reads only the calls the walk
+    reports as kept: it makes no _CALL_HEAD scan and no _mask_literals
+    call over its own output, and no survivor rule looks at the text
+    before a head (a slice of the text, or a match's start offset) — the
+    walk already knows which calls it emitted."""
+    with open(ch_dialect.__file__) as f:
+        tree = ast.parse(f.read())
+    translate_def = next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "translate"
+    )
+    (walk,) = _calls_to(translate_def, "_rewrite_table_calls")
+    after = [
+        n
+        for n in ast.walk(translate_def)
+        if getattr(n, "lineno", 0) > walk.end_lineno
+    ]
+    rescans = [
+        n.lineno
+        for n in after
+        if isinstance(n, ast.Name) and n.id in ("_CALL_HEAD", "_mask_literals")
+    ]
+    assert not rescans, f"translate() rescans its output at lines {rescans}"
+    peeks = [
+        n.lineno
+        for n in after
+        if isinstance(n, ast.Slice)
+        or isinstance(n, ast.Attribute)
+        and n.attr in ("start", "span")
+    ]
+    assert not peeks, f"survivor rules read text around a head at lines {peeks}"
 
 
 @pytest.mark.parametrize(

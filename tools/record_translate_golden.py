@@ -114,9 +114,8 @@ def nested(family: str, depth: int) -> str:
     return f"SELECT {e} FROM t"
 
 
-def edge_cases() -> list[tuple[str, str, str]]:
-    """(id, sql, entry) triples; ``entry`` is the ch_dialect function the
-    case runs through."""
+def edge_cases() -> list[tuple[str, str]]:
+    """(id, sql) pairs."""
     cases = []
     for fam, (cap, _, call, unbalanced, arity, in_literal) in FAMILIES.items():
         cases.append((f"{fam}/literal_head", f"SELECT {in_literal} FROM t"))
@@ -127,20 +126,12 @@ def edge_cases() -> list[tuple[str, str, str]]:
             cases.append((f"{fam}/depth_{d}", nested(fam, d)))
         cases.append((f"{fam}/unbalanced", f"SELECT {unbalanced} FROM t"))
         cases.append((f"{fam}/arity", f"SELECT {arity} FROM t"))
-    # the concatWithSeparator guard doubles per level, so at depth 15-16
-    # it emits megabytes that translate()'s residual checks take seconds
-    # to scan: those two run through the call walk alone
-    return [
-        (cid, sql, "_rewrite_table_calls")
-        if cid in ("concatWithSeparator/depth_15", "concatWithSeparator/depth_16")
-        else (cid, sql, "translate")
-        for cid, sql in cases
-    ]
+    return cases
 
 
-def result(sql: str, entry: str = "translate") -> dict:
+def result(sql: str) -> dict:
     try:
-        out = getattr(ch_dialect, entry)(sql)
+        out = ch_dialect.translate(sql)
     except ch_dialect.UnsupportedClickHouseSQL as e:
         return {"error": str(e)}
     except Exception as e:  # noqa: BLE001 — the record keeps any crash
@@ -199,16 +190,14 @@ def main() -> None:
     args = ap.parse_args()
 
     cases = [
-        {"id": f"edge/{cid}", "source": "edge", "entry": entry, "sql": sql}
-        for cid, sql, entry in edge_cases()
+        {"id": f"edge/{cid}", "source": "edge", "sql": sql}
+        for cid, sql in edge_cases()
     ]
     captured = capture(args.sf_dir)
     for k, (sql, src) in enumerate(captured.items()):
-        cases.append(
-            {"id": f"captured/{k}", "source": src, "entry": "translate", "sql": sql}
-        )
+        cases.append({"id": f"captured/{k}", "source": src, "sql": sql})
     for c in cases:
-        c.update(result(c["sql"], c["entry"]))
+        c.update(result(c["sql"]))
     os.makedirs(os.path.dirname(args.out), exist_ok=True)
     with open(args.out, "w") as f:
         json.dump({"cases": cases}, f, indent=0, ensure_ascii=False)
