@@ -168,8 +168,8 @@ import re
 import string
 from dataclasses import dataclass
 from decimal import Decimal
-from functools import partial
-from typing import Callable
+from functools import lru_cache, partial
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -952,9 +952,8 @@ def _escape_divergence(content: str) -> str | None:
             i += 1
             continue
         if i + 1 >= n:
-            # lone trailing backslash: only reachable when the literal
-            # scanner already misparsed an escaped quote — the caller's
-            # odd-trailing-run check refuses first, but stay safe
+            # lone trailing backslash: the lexer never ends a literal
+            # on one, but a caller may pass content read another way
             return "\\<end>"
         nxt = content[i + 1]
         if nxt not in _AGREED_ESCAPES:
@@ -1618,10 +1617,10 @@ def _lg_leaves(name: str, arg: str) -> list[str]:
     # scan of ``arg`` serves every level, and an explicit work stack of
     # spans walks them: a machine-generated 1000-deep chain flattens in
     # linear time, never past Python's recursion limit.
-    try:
-        close, commas = _bracket_scan(arg)
-    except UnsupportedClickHouseSQL:
+    lex = _bracket_scan(arg)
+    if not lex.balanced:
         return [arg]  # not a call: a call's brackets pair
+    close, commas = lex.close, lex.commas
     out: list[str] = []
     stack = [(0, len(arg))]
     while stack:
@@ -2574,7 +2573,7 @@ def _quantile_shape(key: str, params: list[str] | None, args: list[str]):
     return stem == "quantiles", form[2] is not None, rule, params
 
 
-def _fused_weighted_levels(sql: str, masked: str) -> dict:
+def _fused_weighted_levels(lex: _Lex) -> dict:
     """Cross-expression fusion plan for the ExactWeighted family, read
     through the call walk's scanner before the walk: when a statement
     carries TWO OR MORE weighted-quantile calls over the same (x, w)
@@ -2595,18 +2594,14 @@ def _fused_weighted_levels(sql: str, masked: str) -> dict:
     argument spellings simply don't fuse (not an error).
 
     Returns {(x, w): (ordered Decimal values, ordered level literals)}
-    for keys with >= 2 occurrences; ``masked`` is ``sql`` with its
-    literals masked."""
+    for keys with >= 2 occurrences in the lexed statement."""
     slots: dict = {}
     occurrences: dict = {}
-    for m in _CALL_HEAD.finditer(masked):
+    for m in _CALL_HEAD.finditer(lex.masked):
         key = m.group(1).lower()
         if not key.endswith("exactweighted"):
             continue
-        try:
-            site = _call_site(sql, masked, m.end(), parametric=True)
-        except UnsupportedClickHouseSQL:
-            continue  # unbalanced brackets — not a well-formed call
+        site = _call_site(lex, m.end(), parametric=True)
         if site is None:
             continue
         args = [p.strip() for p in site[2]]
@@ -3807,59 +3802,120 @@ def _rewrite_limit_ties(sql: str) -> str:
     )
 
 
-def _bracket_scan(s: str) -> tuple[dict[int, int], dict[int, list[int]]]:
-    """One pass over ``s`` that pairs its brackets — parens AND square
-    brackets, one depth count (ClickHouse array literals like [1,2,3]
-    carry top-level-looking commas) — treating single-quoted literals as
-    opaque: the index of the bracket closing each opening one, and the
-    commas directly inside each opening bracket (key -1: the commas at
-    depth 0). Raises on unbalanced brackets / unterminated quotes."""
+class _Lex(NamedTuple):
+    """One lexing of ClickHouse SQL text (see _bracket_scan); every
+    index is valid in both texts and in the lexed input."""
+
+    text: str  # the input, comments blanked, "x" spelled `x`
+    masked: str  # text with literal and quoted-identifier contents blanked
+    close: dict[int, int]  # opening bracket -> its closing bracket
+    commas: dict[int, list[int]]  # opening bracket (-1: none) -> its commas
+    literals: list[tuple[int, int]]  # string literal spans, quotes included
+    balanced: bool
+
+
+# a string literal ('' and backslash escapes inside it are part of it),
+# a backquoted or double-quoted identifier, a -- or /* */ comment, a
+# bracket or a comma; a lone quote or /* opens a token that never ends
+_TOKEN = re.compile(
+    r"'[^'\\]*(?:(?:\\.|'')[^'\\]*)*'"
+    r"|`[^`\\]*(?:(?:\\.|``)[^`\\]*)*`"
+    r'|"[^"\\]*(?:(?:\\.|"")[^"\\]*)*"'
+    r"|--[^\n]*|/\*[\s\S]*?\*/"
+    r"|['`\"]|/\*|[()\[\],]",
+    re.S,
+)
+
+
+@lru_cache(maxsize=64)
+def _bracket_scan(s: str) -> _Lex:
+    """The one lexer of ClickHouse SQL text: one pass over ``s`` that
+    tells code from data. String literals, backquoted and double-quoted
+    identifiers and comments are opaque; their contents are blanked in
+    ``masked`` (a comment wholly, in ``text`` too), so a search of
+    ``masked`` never fires on data and its spans index the raw text.
+    Parens and square brackets pair on one stack (ClickHouse array
+    literals like [1,2,3] carry top-level-looking commas): ``close``
+    maps each opening bracket that closes to its closing one and
+    ``commas`` lists the commas directly inside each opening bracket
+    (key -1: the commas outside every bracket). An unclosed or stray
+    bracket only clears ``balanced``; an unterminated token raises.
+
+    The passes of translate() hand each other text that is often
+    unchanged, so recent lexings are kept: callers share the returned
+    maps and must not change them."""
+    text: list[str] = []
+    masked: list[str] = []
     close: dict[int, int] = {}
     commas: dict[int, list[int]] = {-1: []}
+    literals: list[tuple[int, int]] = []
     open_at = [-1]
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            i = s.find("'", i + 1) + 1
-            if not i:
-                raise UnsupportedClickHouseSQL("unterminated string literal")
-            continue
-        if c in "([":
-            open_at.append(i)
-            commas[i] = []
-        elif c in ")]":
+    balanced, pos = True, 0
+    for m in _TOKEN.finditer(s):
+        tok, a = m[0], m.start()
+        if tok in "([":
+            open_at.append(a)
+            commas[a] = []
+        elif tok in ")]":
             if len(open_at) == 1:
-                raise UnsupportedClickHouseSQL("unbalanced brackets")
-            close[open_at.pop()] = i
-        elif c == ",":
-            commas[open_at[-1]].append(i)
-        i += 1
-    if len(open_at) != 1:
-        raise UnsupportedClickHouseSQL("unbalanced brackets")
-    return close, commas
+                balanced = False
+            else:
+                close[open_at.pop()] = a
+        elif tok == ",":
+            commas[open_at[-1]].append(a)
+        elif tok in ("'", "`", '"', "/*"):
+            what = {"'": "string literal", "/*": "comment"}.get(tok, "quoted identifier")
+            raise UnsupportedClickHouseSQL(f"unterminated {what}")
+        else:
+            b = m.end()
+            if tok[0] in "-/":
+                kept = blank = " " * (b - a)
+            else:
+                quote = "`" if tok[0] == '"' else tok[0]
+                kept = quote + tok[1:-1] + quote
+                blank = quote + " " * (b - a - 2) + quote
+                if tok[0] == "'":
+                    literals.append((a, b))
+                elif tok[0] == '"' and re.search(r'["`\\]', tok[1:-1]):
+                    raise UnsupportedClickHouseSQL(
+                        f"double-quoted identifier {tok} holds a quote or "
+                        "backslash — spell it with backquotes"
+                    )
+            text += [s[pos:a], kept]
+            masked += [s[pos:a], blank]
+            pos = b
+    text.append(s[pos:])
+    masked.append(s[pos:])
+    balanced = balanced and len(open_at) == 1
+    return _Lex("".join(text), "".join(masked), close, commas, literals, balanced)
+
+
+def _pieces(lex: _Lex, open_at: int) -> list[str]:
+    """The raw pieces between the commas directly inside the bracket
+    opening at ``open_at`` (-1: the whole text); no pieces when the
+    brackets hold only whitespace."""
+    end = lex.close[open_at] if open_at >= 0 else len(lex.text)
+    if not lex.text[open_at + 1 : end].strip():
+        return []
+    cuts = [open_at, *lex.commas[open_at], end]
+    return [lex.text[a + 1 : b] for a, b in zip(cuts, cuts[1:])]
+
+
+def _literal_split(lex: _Lex) -> list[str]:
+    """The lexed text cut at its string literals: pieces of code and
+    literals alternate, code first."""
+    cuts = [0, *(i for span in lex.literals for i in span), len(lex.text)]
+    return [lex.text[a:b] for a, b in zip(cuts, cuts[1:])]
 
 
 def _split_top_level_args(s: str) -> list[str]:
     """Split an argument list on its depth-0 commas (see _bracket_scan).
-    Returns the raw (unstripped) pieces."""
-    cuts = [-1, *_bracket_scan(s)[1][-1], len(s)]
-    return [s[a + 1 : b] for a, b in zip(cuts, cuts[1:])]
-
-
-def _scan_to_close(masked: str, start: int) -> int | None:
-    """Index just past the ')' closing the '(' that precedes ``start``,
-    scanning the literal-MASKED copy (masked literal contents carry no
-    parens); None when it never closes."""
-    depth, i = 1, start
-    while i < len(masked) and depth:
-        c = masked[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        i += 1
-    return None if depth else i
+    Returns the raw (unstripped) pieces, one empty piece for an empty
+    list."""
+    lex = _bracket_scan(s)
+    if not lex.balanced:
+        raise UnsupportedClickHouseSQL("unbalanced brackets")
+    return _pieces(lex, -1) or [lex.text]
 
 
 _CALL_HEAD = re.compile(r"\b(\w+)\s*\(")
@@ -3867,24 +3923,20 @@ _NEXT_PAREN = re.compile(r"\s*\(")
 _WITHIN_BUDGET = re.compile(_ARG).fullmatch
 
 
-def _arg_list(s: str) -> list[str]:
-    return _split_top_level_args(s) if s.strip() else []
-
-
-def _call_site(sql: str, masked: str, start: int, parametric: bool = False):
-    """The call whose '(' ends at ``start`` (``masked`` is ``sql`` with
-    its literals masked): ``(index past its ')', params, pieces)``, with
-    the raw argument pieces and, for a ``parametric`` call spelled
-    ``f(params)(args)``, the stripped parameter list (else None); an
-    empty list is no arguments. None when the call never closes."""
-    close = _scan_to_close(masked, start)
+def _call_site(lex: _Lex, start: int, parametric: bool = False):
+    """The call whose '(' ends at ``start`` in the lexed text: ``(index
+    past its ')', params, pieces)``, with the raw argument pieces and,
+    for a ``parametric`` call spelled ``f(params)(args)``, the stripped
+    parameter list (else None); an empty list is no arguments. None
+    when the call never closes."""
+    close = lex.close.get(start - 1)
     params = None
-    if parametric and close is not None and (o := _NEXT_PAREN.match(masked, close)):
-        params = [p.strip() for p in _arg_list(sql[start : close - 1])]
-        start, close = o.end(), _scan_to_close(masked, o.end())
+    if parametric and close is not None and (o := _NEXT_PAREN.match(lex.masked, close + 1)):
+        params = [p.strip() for p in _pieces(lex, start - 1)]
+        start, close = o.end(), lex.close.get(o.end() - 1)
     if close is None:
         return None
-    return close, params, _arg_list(sql[start : close - 1])
+    return close + 1, params, _pieces(lex, start - 1)
 
 
 def _emit_call(name: str, pieces: list[str], recurse) -> str | None:
@@ -3913,7 +3965,7 @@ def _emit_call(name: str, pieces: list[str], recurse) -> str | None:
 _TABLE = _Family(_emit_call, 32, _TOO_DEEP, unbalanced=None)
 
 
-def _rewrite_calls(sql: str, masked: str, fused: dict) -> tuple[str, list]:
+def _rewrite_calls(lex: _Lex, fused: dict) -> tuple[str, list]:
     """The one call walk behind translate(): every call site whose name
     is a _CALLS key is rewritten through its entry, arguments first.
     Returns the rewritten text and the call heads kept as written, in
@@ -3922,29 +3974,29 @@ def _rewrite_calls(sql: str, masked: str, fused: dict) -> tuple[str, list]:
     argument pieces (None when the name is no _CALLS key or the call
     never closes). No head an entry emits is reported.
 
-    Calls are found on the literal-masked copy, so a call spelled inside
-    a string literal is data and never rewritten. The emission is
+    Calls are found on the masked text and closed through the pair map
+    of one lexing per text walked, so a call spelled inside a string
+    literal is data and never rewritten. The emission is
     spliced into the raw text and the search resumes past the call, so
     emitted text — which may spell the same function name — is never
     matched again. When an entry returns None the call keeps its text
     and the search goes on inside it. Each _Family (the plain entries
     share _TABLE) counts its own nesting: recursing into the arguments
     of a call nested deeper than its cap refuses with its ``too_deep``.
-    ``masked`` is ``sql`` with its literals masked; ``fused`` is the
-    statement's weighted-quantile fusion plan, handed to the parametric
-    family."""
+    ``lex`` is the lexed statement; ``fused`` is its weighted-quantile
+    fusion plan, handed to the parametric family."""
     kept: list = []
 
     def walk(
-        sql: str, depth: dict, family: _Family | None = None, masked: str | None = None
+        sql: str, depth: dict, family: _Family | None = None, lex: _Lex | None = None
     ) -> str:
         if family is not None and depth[family] > family.cap:
             raise UnsupportedClickHouseSQL(family.too_deep)
-        if masked is None:
-            masked = _mask_literals(sql)
+        if lex is None:
+            lex = _bracket_scan(sql)
         out: list[str] = []
         pos = scan = 0
-        while m := _CALL_HEAD.search(masked, scan):
+        while m := _CALL_HEAD.search(lex.masked, scan):
             scan = m.end()
             name = m.group(1)
             spec = _CALLS.get(name.lower())
@@ -3952,7 +4004,7 @@ def _rewrite_calls(sql: str, masked: str, fused: dict) -> tuple[str, list]:
                 kept.append((m, None))
                 continue
             fam = spec if isinstance(spec, _Family) else _TABLE
-            site = _call_site(sql, masked, scan, fam.parametric)
+            site = _call_site(lex, scan, fam.parametric)
             if site is None:
                 if fam.unbalanced is None:
                     kept.append((m, None))
@@ -3974,16 +4026,19 @@ def _rewrite_calls(sql: str, masked: str, fused: dict) -> tuple[str, list]:
         out.append(sql[pos:])
         return "".join(out)
 
-    return walk(sql, {}, masked=masked), kept
+    return walk(lex.text, {}, lex=lex), kept
 
 
-def _rewrite_table_calls(sql: str, masked: str) -> tuple[str, list]:
-    """Apply the call table to every call site in one walk (see
-    _rewrite_calls); ``masked`` is ``sql`` with its literals masked."""
-    return _rewrite_calls(sql, masked, _fused_weighted_levels(sql, masked))
+def _rewrite_table_calls(lex: _Lex) -> tuple[str, list]:
+    """Apply the call table to every call site of the lexed statement in
+    one walk (see _rewrite_calls)."""
+    return _rewrite_calls(lex, _fused_weighted_levels(lex))
 
 
-_IDX_BASE = re.compile(r"([A-Za-z_][\w]*(?:\.[A-Za-z_][\w]*)*)\s*$")
+# a '[' with what leads it: the identifier chain before it (an indexed
+# base, or a word like IN or SELECT), else the one character before it;
+# never a '[', which must be matched as a bracket of its own
+_BRACKET_LEAD = re.compile(r"(?:([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)|([^\s\[]))?\s*\[")
 
 # a bracket after one of these words starts an array LITERAL, not an
 # index into an identifier named "select"/"then"/...
@@ -4011,20 +4066,30 @@ def _rewrite_brackets(sql: str) -> str:
       rewritten to ``array(a, b, c)``; after ``IN`` it becomes the
       parenthesized list Spark's IN grammar requires.
 
-    Innermost-first loop (the LAST ``[`` never contains another), with
-    quoted strings masked for position finding so data like
-    ``'a[1]'`` is untouched."""
-    while True:
-        masked = _mask_literals(sql)
-        pos = masked.rfind("[")
-        if pos < 0:
-            return sql
-        end = masked.find("]", pos + 1)
-        if end < 0:
+    One lexing finds the brackets (data like ``'a[1]'`` is untouched);
+    they are rewritten right to left, so a bracket's inner brackets are
+    rewritten before it and the text left of it is still as written.
+    Each rewrite is an edit of the raw text; an edit absorbs the edits
+    inside it, and the edits left at the end are spliced in."""
+    lex = _bracket_scan(sql)
+    edits: list[tuple[int, int, str]] = []  # (start, end, text), start descending
+
+    def spliced(at: int, end: int) -> str:
+        # sql[at:end] with the edits inside it applied (and absorbed)
+        parts = []
+        while edits and edits[-1][0] < end:
+            a, b, text = edits.pop()
+            parts += [sql[at:a], text]
+            at = b
+        return "".join(parts) + sql[at:end]
+
+    leads = {m.end() - 1: m for m in _BRACKET_LEAD.finditer(lex.masked)}
+    for pos, m in reversed(leads.items()):
+        end = lex.close.get(pos)
+        if end is None or lex.masked[end] != "]":
             raise UnsupportedClickHouseSQL("unbalanced '[' in expression")
-        inner = sql[pos + 1 : end]
-        before = sql[:pos].rstrip()
-        if before.endswith((")", "]", "'")):
+        inner = spliced(pos + 1, end)
+        if m[2] in (")", "]", "'"):
             # ')'/']': computed base (f(x)[1], a[1][2]); "'": a string
             # literal base ('abc'[1]) — neither has a textually bindable
             # identifier, and falling through would emit the garbage
@@ -4033,18 +4098,12 @@ def _rewrite_brackets(sql: str) -> str:
                 "bracket indexing on a computed or literal base — rewrite "
                 "as element_at(expr, i) (1-based, as in ClickHouse)"
             )
-        m = _IDX_BASE.search(before)
-        word = m.group(1).lower() if m else ""
-        if m and word not in _NOT_INDEX_BASES:
-            base = m.group(1)
+        word = (m[1] or "").lower()
+        if m[1] and word not in _NOT_INDEX_BASES:
             # nullif(..., 0): try_element_at covers out-of-range but
             # still throws INVALID_INDEX_OF_ZERO on index 0 — CH
             # returns the type default there, DuckDB NULL; NULL it is
-            sql = (
-                sql[: len(before) - len(base)]
-                + f"try_element_at({base}, nullif({inner}, 0))"
-                + sql[end + 1 :]
-            )
+            start, text = m.start(1), f"try_element_at({m[1]}, nullif({inner}, 0))"
         elif word == "end":
             # CASE ... END[1]: indexing a computed CASE result — no
             # textually bindable base, same refusal as f(x)[1]
@@ -4055,9 +4114,11 @@ def _rewrite_brackets(sql: str) -> str:
         elif word == "in":
             # x IN [1,2]: Spark's IN grammar needs a parenthesized
             # list, not an array expression
-            sql = sql[:pos] + f"({inner})" + sql[end + 1 :]
+            start, text = pos, f"({inner})"
         else:
-            sql = sql[:pos] + f"array({inner})" + sql[end + 1 :]
+            start, text = pos, f"array({inner})"
+        edits.append((start, end + 1, text))
+    return spliced(0, len(sql))
 
 
 _TOTALS_TOKEN = re.compile(r"\bWITH\s+TOTALS\b", re.I)
@@ -4128,48 +4189,35 @@ _ARRAY_JOIN_OPERAND = re.compile(
 )
 
 
-def _array_join_operand_end(masked: str, start: int) -> int:
+_ARRAY_JOIN_SCAN = re.compile(r"[()\[\];]|[^\W\d]\w*")
+
+
+def _array_join_operand_end(lex: _Lex, start: int) -> int:
     """End index (exclusive) of an ARRAY JOIN operand list starting at
-    ``start``: scan the literal-masked text tracking bracket depth; the
-    list ends at a depth-0 clause keyword, a ';', or the enclosing
-    subquery's ')' (depth would go negative).
+    ``start`` in the lexed text: the list ends at a clause keyword or a
+    ';' outside its brackets (each opening bracket jumps to its close),
+    or at the enclosing subquery's ')'.
 
     Keyword classification needs syntactic context:
     a stop keyword immediately after ``AS`` is an operand ALIAS
     (``ys AS any``), and LEFT/RIGHT followed by ``(`` are the string
     FUNCTIONS (``left(xs, 2) AS a``) — neither ends the list."""
-    depth = 0
-    i, n = start, len(masked)
-    prev_word = None
-    while i < n:
-        c = masked[i]
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            if depth == 0:
-                return i
-            depth -= 1
-            prev_word = None
-        elif depth == 0:
-            if c == ";":
-                return i
-            if c.isalpha() or c == "_":
-                j = i
-                while j < n and (masked[j].isalnum() or masked[j] == "_"):
-                    j += 1
-                word = masked[i:j]
-                m = _ARRAY_JOIN_STOP.match(masked, i)
-                if m and m.end() == j:  # the WHOLE word is the keyword
-                    after = masked[j:].lstrip()
-                    is_alias = prev_word is not None and prev_word.upper() == "AS"
-                    is_func = word.upper() in ("LEFT", "RIGHT") and after.startswith("(")
-                    if not is_alias and not is_func:
-                        return i
-                prev_word = word
-                i = j
-                continue
-        i += 1
-    return n
+    prev_word = ""
+    while m := _ARRAY_JOIN_SCAN.search(lex.masked, start):
+        tok, start = m.group(), m.end()
+        if tok in "([":
+            if m.start() not in lex.close:
+                break
+            start, prev_word = lex.close[m.start()] + 1, ""
+        elif tok in ")];":
+            return m.start()
+        else:
+            is_alias = prev_word.upper() == "AS"
+            is_func = tok.upper() in ("LEFT", "RIGHT") and _NEXT_PAREN.match(lex.masked, start)
+            if _ARRAY_JOIN_STOP.fullmatch(tok) and not is_alias and not is_func:
+                return m.start()
+            prev_word = tok
+    return len(lex.masked)
 
 
 def _zip_struct_expr(exprs: list[str], aliases: list[str], depth: int = 0) -> str:
@@ -4206,11 +4254,11 @@ def _rewrite_array_join_zip(sql: str) -> str:
     NULL-padded rows instead of failing. Every operand needs an ``AS``
     alias (the alias-less form shadows the source column — refused, as
     in the single-array rewrite)."""
-    masked = _mask_literals(sql)
+    lex = _bracket_scan(sql)
     out = sql
     spans = []
-    for m in _ARRAY_JOIN_START.finditer(masked):
-        spans.append((m, _array_join_operand_end(masked, m.end())))
+    for m in _ARRAY_JOIN_START.finditer(lex.masked):
+        spans.append((m, _array_join_operand_end(lex, m.end())))
     for m, end in reversed(spans):
         raw_list = out[m.end() : end]
         pieces = _split_top_level_args(raw_list)
@@ -4285,15 +4333,10 @@ def _rewrite_limit_by(sql: str) -> str:
     )
 
 
-_LITERAL = re.compile(r"'[^']*'")
-
-
 def _mask_literals(sql: str) -> str:
-    """Blank out single-quoted string CONTENTS (quotes kept, length
-    preserved) so refusal/residual keyword checks never fire on data —
-    `WHERE note = 'GLOBAL SALES'` is translatable SQL, not a surviving
-    GLOBAL modifier."""
-    return _LITERAL.sub(lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", sql)
+    """``sql`` with literal, quoted-identifier and comment contents
+    blanked, length preserved (see _bracket_scan)."""
+    return _bracket_scan(sql).masked
 
 
 _TMPL_REF = re.compile(r"\\(\d)")
@@ -4348,24 +4391,12 @@ def translate(ch_sql: str) -> str:
     # 'Z', comparison literals shifted. ('\\d+' — escaped backslash
     # then d — decodes identically in both engines and passes: the
     # pairwise walk in _escape_divergence, not a regex search, makes
-    # that distinction.) Only _AGREED_ESCAPES pass. An
-    # ODD trailing-backslash run means the closing quote was actually
-    # an escaped quote (\\') — both engines read the literal past it,
-    # but this translator's length-preserving literal scanner splits
-    # there and every downstream rewrite would see data as code, so
-    # refuse loudly with the ''-doubling pointer.
-    for _lm in _LITERAL.finditer(ch_sql):
-        _content = _lm.group(0)[1:-1]
-        if (len(_content) - len(_content.rstrip("\\"))) % 2 == 1:
+    # that distinction.) Only _AGREED_ESCAPES pass.
+    lex = _bracket_scan(ch_sql)
+    for start, end in lex.literals:
+        if (div := _escape_divergence(lex.text[start + 1 : end - 1])) is not None:
             raise UnsupportedClickHouseSQL(
-                "string literal contains an escaped quote (\\') — the "
-                "translator's literal scanner splits there and would "
-                "rewrite data as code; double the quote ('') instead"
-            )
-        _div = _escape_divergence(_content)
-        if _div is not None:
-            raise UnsupportedClickHouseSQL(
-                f"string literal escape {_div} — ClickHouse and Spark "
+                f"string literal escape {div} — ClickHouse and Spark "
                 "decode differently (only \\t \\n \\r \\b \\0 \\\\ "
                 "and doubled quotes are decoded identically; "
                 "\\xHH/octal/\\a/\\v/\\f/\\e are bytes in CH but "
@@ -4375,7 +4406,7 @@ def translate(ch_sql: str) -> str:
                 "would silently change; spell the byte via an agreed "
                 "escape, and spell regex classes like \\d as [0-9]"
             )
-    masked_in = _mask_literals(ch_sql)
+    masked_in = lex.masked
     if refused := _refusal(masked_in):
         m, hint = refused
         raise UnsupportedClickHouseSQL(
@@ -4390,14 +4421,15 @@ def translate(ch_sql: str) -> str:
             "tuple element access (t.1) — use named struct fields "
             "(named_struct / col.field)"
         )
-    out = _rewrite_limit_by(ch_sql)
+    out = _rewrite_limit_by(lex.text)
     out = _rewrite_limit_ties(out)
     out = _rewrite_brackets(out)
     out = _rewrite_totals(out)
     out = _rewrite_array_join_zip(out)
     for pat, repl in _CLAUSES:
         out = _sub_outside_literals(pat, repl, out)
-    masked = _mask_literals(out)
+    lex = _bracket_scan(out)
+    masked = lex.masked
     if re.search(r"\bWITH\s+TOTALS\b", masked, re.I):
         raise UnsupportedClickHouseSQL(
             "WITH TOTALS over a non-bare-column GROUP BY — rewrite the "
@@ -4426,7 +4458,7 @@ def translate(ch_sql: str) -> str:
             "SETTINGS in a non-tail position (subquery / before UNION) — "
             "remove it; session confs own execution advice here"
         )
-    out, kept = _rewrite_table_calls(out, masked)
+    out, kept = _rewrite_table_calls(lex)
     # the calls the walk kept as written: names Spark spells too refuse
     # by argument shape, ClickHouse-only names (_RESIDUALS) by name
     for head, pieces in kept:
@@ -4824,11 +4856,22 @@ _MT_COL_SKIP = re.compile(
 )
 
 
+def _ddl_lex(ch_ddl: str) -> _Lex:
+    """The lexing of a DDL with each whitespace run outside its string
+    literals collapsed to one space and the ends stripped (a literal
+    keeps its spaces: it may be a default value). The collapse moves
+    every offset, so the collapsed text is lexed again."""
+    parts = _literal_split(_bracket_scan(ch_ddl))
+    parts[::2] = [re.sub(r"\s+", " ", p) for p in parts[::2]]
+    return _bracket_scan("".join(parts).strip())
+
+
 def merge_tree_meta(ch_ddl: str) -> dict:
     """Parse the FINAL-relevant metadata out of a ClickHouse CREATE
     TABLE: table name, MergeTree engine family, engine parameters,
     declared (column, CH type) pairs, and the ORDER BY sort key."""
-    s = " ".join(ch_ddl.split())
+    lex = _ddl_lex(ch_ddl)
+    s = lex.text
     m = re.search(
         r"\bCREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)", s, re.I
     )
@@ -4837,23 +4880,15 @@ def merge_tree_meta(ch_ddl: str) -> dict:
     name = m.group(1)
     if "." in name:
         name = name.split(".")[-1]
-    # column block: balanced-paren span from the first '(' after the name
-    i = s.find("(", m.end())
+    # column block: the bracket pair opening first after the name
+    i = lex.masked.find("(", m.end())
     if i < 0:
         raise UnsupportedClickHouseSQL("CREATE TABLE without a column list")
-    depth, j = 0, i
-    while j < len(s):
-        if s[j] == "(":
-            depth += 1
-        elif s[j] == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        j += 1
-    if depth != 0:
+    if i not in lex.close:
         raise UnsupportedClickHouseSQL("unbalanced column list")
+    j = lex.close[i]
     cols: list[tuple[str, str]] = []
-    for piece in _split_top_level_args(s[i + 1 : j]):
+    for piece in _pieces(lex, i):
         piece = piece.strip()
         if not piece or _MT_COL_SKIP.match(piece):
             continue
@@ -5054,42 +5089,24 @@ def dictionary_meta(ch_ddl: str) -> dict:
     CLICKHOUSE(TABLE '...') source table. Composite keys, non-table
     sources, and attributes with defaults this parser cannot state
     refuse — never guess a lookup's miss value."""
-    s = " ".join(ch_ddl.split())
+    lex = _ddl_lex(ch_ddl)
+    s = lex.text
     m = re.search(
         r"\bCREATE\s+DICTIONARY\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)", s, re.I
     )
     if not m:
         raise UnsupportedClickHouseSQL("not a CREATE DICTIONARY DDL")
     name = m.group(1).split(".")[-1]
-    i = s.find("(", m.end())
+    i = lex.masked.find("(", m.end())
     if i < 0:
         raise UnsupportedClickHouseSQL(
             "CREATE DICTIONARY without an attribute list"
         )
-    # quote-aware balanced-paren scan: a paren inside a DEFAULT string
-    # literal (DEFAULT '(n/a)') must not move the depth counter
-    depth, j = 0, i
-    while j < len(s):
-        c = s[j]
-        if c == "'":
-            j += 1
-            while j < len(s) and s[j] != "'":
-                j += 1
-            if j >= len(s):
-                raise UnsupportedClickHouseSQL(
-                    "unterminated string literal in CREATE DICTIONARY"
-                )
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        j += 1
-    if depth != 0:
+    if i not in lex.close:
         raise UnsupportedClickHouseSQL("unbalanced attribute list")
+    j = lex.close[i]
     attrs: dict[str, tuple[str, str]] = {}
-    for piece in _split_top_level_args(s[i + 1 : j]):
+    for piece in _pieces(lex, i):
         piece = piece.strip()
         if not piece:
             continue
@@ -5189,8 +5206,10 @@ def _apply_dict_get(
         return [a.lower() for a in meta["attrs"]]
 
     def check_capture(meta: dict, expr: str, what: str) -> None:
-        masked_expr = re.sub(r"'[^']*'", "''", expr)
-        idents = {i.lower() for i in re.findall(r"[A-Za-z_]\w*", masked_expr)}
+        # the code between the literals: a quoted identifier still names
+        # its column
+        code = " ".join(_literal_split(_bracket_scan(expr))[::2])
+        idents = {i.lower() for i in re.findall(r"[A-Za-z_]\w*", code)}
         hit = sorted(idents & set(source_columns(meta)))
         if hit:
             raise UnsupportedClickHouseSQL(
@@ -5631,9 +5650,11 @@ def _point_views(
     spark: SparkSession, sf_dir: str, sql: str, ddls: list[str] | None
 ) -> None:
     """Point the fixture views a ch_sql query reads at ``sf_dir``: the
-    names in its literal-masked text, and in its DDLs unmasked — a
-    dictionary names its source table in a literal."""
-    point_views(spark, sf_dir, _mask_literals(sql), *(ddls or []))
+    names in its code outside string literals (quoted identifiers
+    included), and in its DDLs unmasked — a dictionary names its source
+    table in a literal."""
+    code = _literal_split(_bracket_scan(sql))[::2]
+    point_views(spark, sf_dir, *code, *(ddls or []))
 
 
 def ch_sql(
@@ -6051,41 +6072,44 @@ def translate_ddl(ch_ddl: str) -> str:
     the declared column order can bind wrong — use by-name inserts
     (``INSERT INTO t (cols…) SELECT``), which both dialects support.
     """
-    masked = _mask_literals(ch_ddl)
+    lex = _ddl_lex(ch_ddl)
     for pat, hint in _DDL_REFUSALS:
-        if m := pat.search(masked):
+        if m := pat.search(lex.masked):
             raise UnsupportedClickHouseSQL(
-                f"{ch_ddl[m.start() : m.end()]!r} has no one-line Spark DDL "
+                f"{lex.text[m.start() : m.end()]!r} has no one-line Spark DDL "
                 f"equivalent — {hint}"
             )
-    s = " ".join(ch_ddl.split())
-    s = re.sub(r"\s+ON\s+CLUSTER\s+'?\{?\w+\}?'?", "", s, flags=re.I)
+    s = re.sub(r"\s+ON\s+CLUSTER\s+'?\{?\w+\}?'?", "", lex.text, flags=re.I)
+    # types and clauses are code: a literal (a DEFAULT) keeps its text
+    parts = _literal_split(_bracket_scan(s))
     for pat, repl in _CH_TYPE_MAP:
-        s = pat.sub(repl, s)
+        parts[::2] = [pat.sub(repl, p) for p in parts[::2]]
+    s = "".join(parts)
+
+    def cut(pattern: str, repl: str = "") -> str | None:
+        # splice repl over the clause found outside the literals and
+        # return its group as written; None when there is no such clause
+        nonlocal s
+        if m := re.search(pattern, _mask_literals(s), re.I):
+            group = s[m.start(1) : m.end(1)]
+            s = s[: m.start()] + repl + s[m.end() :]
+            return group
+        return None
+
     # ORDER BY (sort key) -> comment; PARTITION BY col -> PARTITIONED BY
-    sort_key = None
-    m = re.search(r"\bORDER\s+BY\s+(\([^)]*\)|[\w.]+)", s, flags=re.I)
-    if m:
-        sort_key = m.group(1).strip("()")
-        s = s[: m.start()] + s[m.end() :]
-    part = None
-    m = re.search(r"\bPARTITION\s+BY\s+(\w+)", s, flags=re.I)
-    if m:
-        part = m.group(1)
-        s = s[: m.start()] + s[m.end() :]
-    m = re.search(r"\bENGINE\s*=\s*\w*MergeTree\s*(\([^)]*\))?", s, flags=re.I)
-    if not m:
+    sort_key = cut(r"\bORDER\s+BY\s+(\([^)]*\)|[\w.]+)")
+    part = cut(r"\bPARTITION\s+BY\s+(\w+)")
+    if cut(r"\bENGINE\s*=\s*\w*MergeTree(?:\s*(\([^)]*\)))?", "USING parquet") is None:
         raise UnsupportedClickHouseSQL(
             "only *MergeTree engines translate (Distributed tables are "
             "Spark-meaningless: every table is cluster-global, SURVEY A4)"
         )
-    s = s[: m.start()] + "USING parquet" + s[m.end() :]
-    s = re.sub(r"\bSETTINGS\s+.*$", "", s, flags=re.I)
+    cut(r"\bSETTINGS\s+(.*)$")
     if part:
         s += f" PARTITIONED BY ({part})"
-    s = " ".join(s.split())
+    s = _ddl_lex(s).text
     if sort_key:
-        s += f" /* MergeTree sort key: {sort_key} — apply at write time */"
+        s += f" /* MergeTree sort key: {sort_key.strip('()')} — apply at write time */"
     return s
 
 

@@ -1702,6 +1702,13 @@ def test_ch_dialect_bracket_rewrites():
     assert translate("SELECT [1,2,3] AS xs FROM t") == (
         "SELECT array(1,2,3) AS xs FROM t"
     )
+    # a '[' right after another opens an array literal at every depth
+    assert translate("SELECT [[[1,2]]] AS xs FROM t") == (
+        "SELECT array(array(array(1,2))) AS xs FROM t"
+    )
+    assert translate("SELECT [[ [1]]] AS xs FROM t") == (
+        "SELECT array(array( array(1))) AS xs FROM t"
+    )
     # r13 wave 4: has carries CH's NULL-as-a-value rule via a <=> lambda
     assert translate("SELECT has([1,2], x) FROM t") == (
         "SELECT exists(array(1,2), cdr_h_ -> cdr_h_ <=> (x)) FROM t"
@@ -3770,6 +3777,8 @@ def test_dictionary_meta_and_dict_get_rewrite(spark):
     # literal-masked: a dictGet spelling inside a string is data
     lit = "SELECT 'dictGet(''d'', ''s'', x)' AS s FROM t"
     assert _apply_dict_get(lit, dicts) == lit
+    out = _apply_dict_get("SELECT dictGet('d', 's', 'it\\'s k') FROM t", dicts)
+    assert "FROM src WHERE k = ('it\\'s k')" in out
 
     for bad_ddl in (
         # composite key
@@ -3813,6 +3822,11 @@ def test_dictionary_meta_and_dict_get_rewrite(spark):
         # key expr naming a SOURCE column would bind to the subquery's
         # inner scope and silently return the global max — refuse
         ("SELECT dictGet('d', 's', k + 1) FROM t", "INNER scope"),
+        ("SELECT dictGet('d', 's', `k`) FROM t", "INNER scope"),
+        # an escaped quote must not pair the key's literals wrongly and
+        # hide k between them
+        ("SELECT dictGet('d', 's', multiIf(o = 'a\\'', k, o = 'b', 2, 3)) FROM t",
+         "INNER scope"),
         # key nested beyond one paren level: a TARGETED shape error,
         # not the misleading pass-the-ddls pointer
         ("SELECT dictGet('d', 's', f(g(x))) FROM t", "shape"),
@@ -5194,8 +5208,7 @@ def test_global_input_literal_escape_guard():
     drops the backslash from unknown escapes, CH preserves it),
     replaceAll('\\Z', ...) replaced U+001A instead of 'Z'. translate()
     now refuses any literal whose escapes are outside the
-    measured-identical set, and refuses escaped-quote literals (\\')
-    whose misparse would let downstream rewrites see data as code."""
+    measured-identical set; an escaped quote (\\') is one of them."""
     import pytest as _pytest
 
     from clickhouse_data_rebalance_spark.plans.ch_dialect import (
@@ -5213,10 +5226,10 @@ def test_global_input_literal_escape_guard():
     ):
         with _pytest.raises(UnsupportedClickHouseSQL, match="decode differently"):
             translate(bad)
-    with _pytest.raises(UnsupportedClickHouseSQL, match="double the quote"):
-        translate("SELECT 'it\\'s' FROM t")
-    # agreed escapes, '' doubling, and backslash-free regexes pass
+    # agreed escapes (an escaped quote among them), '' doubling, and
+    # backslash-free regexes pass
     for ok in (
+        "SELECT 'it\\'s' FROM t",
         "SELECT 'it''s' FROM t",
         "SELECT 'a\\\\' FROM t",
         "SELECT match(s, '[0-9]+') FROM t",

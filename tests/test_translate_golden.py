@@ -17,7 +17,9 @@ the ones listed below:
   call, the raw-argument families included, became an entry of that
   walk, so the one-paren argument budget reads the arguments as written;
 - _NO_TEXTUAL: a refusal quotes the statement text it refused, where the
-  record quotes the refusing regex (same hint).
+  record quotes the refusing regex (same hint);
+- _ESCAPED_QUOTE: a refusal that went when one lexer began to read a
+  backslash-escaped quote as part of its literal.
 """
 
 from __future__ import annotations
@@ -110,6 +112,12 @@ _BUDGET_AS_WRITTEN = {
     "captured/470": "d5d97e0b86dcfb8e5d423290dc5270fe529cb76163b667047251c3d0a282b240",
     "captured/664": "28655376ce1d0402ea0bf032de1f166ed64e0d67b7beed6b66336e1c713ef5af",
 }
+# The escaped-quote refusal (the literal scanner split 'it\'s' at the
+# escaped quote) is gone: the lexer reads \' inside the literal, an
+# escape both engines decode to a quote. id -> sha256 now.
+_ESCAPED_QUOTE = {
+    "captured/679": "1e1440ac100302bfb1a582bc385a94f5a812c024b7cb0068742eef627bb9f036",
+}
 # Refusal texts that changed in every recorded case carrying them: the
 # residual hint no longer says a guarded least/greatest argument defeats
 # the budget (it no longer does), and the Or-converter hint lost its
@@ -149,9 +157,9 @@ def test_translate_matches_golden():
         elif case["id"] in _REPLACE_ONE_FIXED:
             assert "sha256" in case, case["id"]
             want = {"sha256": _REPLACE_ONE_FIXED[case["id"]]}
-        elif case["id"] in _BUDGET_AS_WRITTEN:
+        elif case["id"] in _BUDGET_AS_WRITTEN | _ESCAPED_QUOTE:
             assert "error" in case, case["id"]
-            want = {"sha256": _BUDGET_AS_WRITTEN[case["id"]]}
+            want = {"sha256": (_BUDGET_AS_WRITTEN | _ESCAPED_QUOTE)[case["id"]]}
         else:
             want = {k: case[k] for k in ("sha256", "error", "crash") if k in case}
             for recorded, now in _HINTS.items():
@@ -284,6 +292,58 @@ def test_same_name_chain_flattens_in_one_scan(monkeypatch):
     leaves = ch_dialect._lg_leaves("least", chain)
     assert leaves == ["x", *(f"k{k}" for k in range(2000))]
     assert 0 < sum(scanned) <= 2 * len(chain)
+
+
+def test_bracket_rewrite_lexes_once(monkeypatch):
+    # the bracket rewrite reads every bracket off one lexing; re-masking
+    # the statement for each '[' made it quadratic in the index count
+    sql = "SELECT " + ", ".join(f"arr[{k}]" for k in range(1, 2001)) + " FROM t"
+    lexed = []
+    lex = ch_dialect._bracket_scan
+    monkeypatch.setattr(
+        ch_dialect, "_bracket_scan", lambda s: lexed.append(s) or lex(s)
+    )
+    out = ch_dialect._rewrite_brackets(sql)
+    assert lexed == [sql]
+    want = (f"try_element_at(arr, nullif({k}, 0))" for k in range(1, 2001))
+    assert out == "SELECT " + ", ".join(want) + " FROM t"
+
+
+def test_translate_lexes_unchanged_text_once():
+    # every pass of translate() reads a lexing; a pass that leaves the
+    # text as it was must not make the next one lex it again
+    ch_dialect._bracket_scan.cache_clear()
+    assert translate("SELECT a, b FROM t WHERE c = 'x' ORDER BY a") == (
+        "SELECT a, b FROM t WHERE c = 'x' ORDER BY a"
+    )
+    assert ch_dialect._bracket_scan.cache_info().misses == 1
+
+
+def test_one_lexer_reads_quotes_and_brackets():
+    """_bracket_scan is the one reader of quote and bracket syntax: the
+    literal regex and the paren scanner beside it are gone, and no other
+    function keeps a depth counter or compares a character to a quote
+    (_extract_group_index reads regex syntax, not SQL)."""
+    assert not hasattr(ch_dialect, "_LITERAL")
+    assert not hasattr(ch_dialect, "_scan_to_close")
+    with open(ch_dialect.__file__) as f:
+        tree = ast.parse(f.read())
+    readers = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef) or fn.name in (
+            "_bracket_scan",
+            "_extract_group_index",
+        ):
+            continue
+        for n in ast.walk(fn):
+            if isinstance(n, ast.AugAssign) and getattr(n.target, "id", "") == "depth":
+                readers.add(fn.name)
+            if isinstance(n, ast.Compare) and any(
+                isinstance(x, ast.Constant) and x.value == "'"
+                for x in (n.left, *n.comparators)
+            ):
+                readers.add(fn.name)
+    assert not readers, f"scanners beside the lexer: {sorted(readers)}"
 
 
 @pytest.mark.parametrize(
